@@ -209,20 +209,7 @@ class _LoadState:
                 pa.field(self.cfg.load_ts_col, pa.timestamp("us"), nullable=True), col
             )
         self._ensure_table(data)
-        if self.cfg.load_timestamp:
-            # the audit column is force-evolved even when schema evolution
-            # is off (reference core/loader.py:156-160, "step 1.5") —
-            # otherwise cast_to_schema silently drops it on pre-existing
-            # tables created without it
-            from iceberg_loader_spark.types import arrow_to_spark as _a2s
-
-            ts_field = data.schema.field(self.cfg.load_ts_col)
-            self.table.add_columns(
-                [T.StructField(self.cfg.load_ts_col, _a2s(ts_field.type), True)]
-            )
-        if self.cfg.schema_evolution:
-            self._evolve(data)
-        table_schema = self.table.schema()
+        table_schema = self._evolve(data)
         arrow_target = pa.schema(
             [
                 pa.field(f.name, spark_to_arrow(f.dataType), nullable=True)
@@ -299,15 +286,29 @@ class _LoadState:
         )
         self.new_table_created = True
 
-    def _evolve(self, data: pa.Table) -> None:
-        table_cols = {f.name for f in self.table.schema().fields}
-        new = [
-            T.StructField(f.name, arrow_to_spark(f.type), True)
-            for f in data.schema
-            if f.name not in table_cols
-        ]
+    def _evolve(self, data: pa.Table) -> T.StructType:
+        """Add the flush's missing columns in at most one commit; return
+        the schema the flush is cast to.
+
+        The audit column is force-evolved even when schema evolution is
+        off (reference core/loader.py:156-160, "step 1.5") — otherwise
+        cast_to_schema silently drops it on pre-existing tables created
+        without it. It goes first, ahead of any new data columns."""
+        snap = self.table.snapshot()
+        have = set(T.StructType.fromJson(snap.schema_json).names)
+        wanted = []
+        if self.cfg.load_timestamp:
+            wanted.append(data.schema.field(self.cfg.load_ts_col))
+        if self.cfg.schema_evolution:
+            wanted.extend(data.schema)
+        new = {
+            f.name: T.StructField(f.name, arrow_to_spark(f.type), True)
+            for f in wanted
+            if f.name not in have
+        }
         if new:
-            self.table.add_columns(new)
+            snap = self.table.add_columns(list(new.values()))
+        return T.StructType.fromJson(snap.schema_json)
 
     def _write(self, df: DataFrame):
         spark = self.loader.spark

@@ -83,11 +83,7 @@ from pyspark.sql.datasource import (
 
 from iceberg_loader_spark.tables.catalog import Warehouse
 from iceberg_loader_spark.tables.filters import Term, file_may_match
-from iceberg_loader_spark.tables.format import (
-    DEFAULT_TABLE_PROPERTIES,
-    CommitConflict,
-    new_snapshot,
-)
+from iceberg_loader_spark.tables.format import CommitConflict
 from iceberg_loader_spark.tables.partitioning import PartitionField
 
 FORMAT_NAME = "sparkberg"
@@ -390,6 +386,8 @@ def _entry_for_file(root: str, rel_path: str):
 
 class SparkbergWriter(DataSourceArrowWriter):
     def __init__(self, schema: T.StructType, options, overwrite: bool):
+        from iceberg_loader_spark.tables.table import _codec, _schema
+
         self._overwrite = overwrite
         # .option("branch", name): commits land on the branch's metadata
         # chain (Iceberg's write-to-branch / spark.wap.branch pattern) —
@@ -403,15 +401,13 @@ class SparkbergWriter(DataSourceArrowWriter):
         if self._branch is not None:
             table = table.branch(self._branch)
         self._root = table.root
-        spec = table.partition_spec()
-        if spec:
+        head = table.snapshot()
+        if head.partition_spec:
             raise NotImplementedError(
                 "sparkberg writer supports unpartitioned tables; use "
                 "Table.append for partition-transform writes"
             )
-        table_schema = [
-            (f.name, f.dataType) for f in table.schema().fields
-        ]
+        table_schema = [(f.name, f.dataType) for f in _schema(head).fields]
         df_schema = [(f.name, f.dataType) for f in schema.fields]
         if df_schema != table_schema:
             raise ValueError(
@@ -419,10 +415,7 @@ class SparkbergWriter(DataSourceArrowWriter):
                 f"schema {table_schema} (a name- or type-mismatched "
                 f"append would poison every later read)"
             )
-        self._codec = table.properties().get(
-            "write.parquet.compression-codec",
-            DEFAULT_TABLE_PROPERTIES["write.parquet.compression-codec"],
-        )
+        self._codec = _codec(head)
         self._staging_rel = f"data/ds-{uuid.uuid4().hex}"
 
     def _commit_table(self):
@@ -472,50 +465,17 @@ class SparkbergWriter(DataSourceArrowWriter):
         return _WriteMessage(rel_paths=(rel,))
 
     def commit(self, messages) -> None:
-        from iceberg_loader_spark.tables.table import _stamp_sequence
+        from iceberg_loader_spark.tables.table import (
+            _append_build,
+            _overwrite_build,
+        )
 
         committed = [
             p for m in messages if m is not None for p in m.rel_paths
         ]
         entries = [_entry_for_file(self._root, p) for p in committed]
-        added_rows = sum(e.rows for e in entries)
-        table = self._commit_table()
-        overwrite = self._overwrite
-
-        def build(parent):
-            _stamp_sequence(entries, parent.version + 1)
-            if overwrite:
-                return new_snapshot(
-                    parent,
-                    "overwrite",
-                    parent.schema_json,
-                    parent.partition_spec,
-                    entries,
-                    parent.properties,
-                    {
-                        "added-files": len(entries),
-                        "added-records": added_rows,
-                        "removed-files": len(parent.files),
-                        "total-records": added_rows,
-                    },
-                    delete_predicates=[],
-                    delete_files=[],
-                )
-            return new_snapshot(
-                parent,
-                "append",
-                parent.schema_json,
-                parent.partition_spec,
-                parent.files + entries,
-                parent.properties,
-                {
-                    "added-files": len(entries),
-                    "added-records": added_rows,
-                    "total-records": parent.total_rows + added_rows,
-                },
-            )
-
-        table._commit_with_retry(build)
+        build = _overwrite_build if self._overwrite else _append_build
+        self._commit_table()._commit_with_retry(build(entries))
         self._sweep_staging(keep={p for p in committed})
 
     def abort(self, messages) -> None:
@@ -569,7 +529,7 @@ class SparkbergStreamWriter(SparkbergWriter, DataSourceStreamArrowWriter):
         )
 
     def commit(self, messages, batchId) -> None:  # type: ignore[override]
-        from iceberg_loader_spark.tables.table import _stamp_sequence
+        from iceberg_loader_spark.tables.table import _append_build
 
         committed = [
             p for m in messages if m is not None for p in m.rel_paths
@@ -586,26 +546,9 @@ class SparkbergStreamWriter(SparkbergWriter, DataSourceStreamArrowWriter):
                     pass
             return
         entries = [_entry_for_file(self._root, p) for p in committed]
-        added_rows = sum(e.rows for e in entries)
-
-        def build(parent):
-            _stamp_sequence(entries, parent.version + 1)
-            return new_snapshot(
-                parent,
-                "append",
-                parent.schema_json,
-                parent.partition_spec,
-                parent.files + entries,
-                {**parent.properties, self._MARKER_PROP: str(batchId)},
-                {
-                    "added-files": len(entries),
-                    "added-records": added_rows,
-                    "total-records": parent.total_rows + added_rows,
-                    "streaming-batch-id": batchId,
-                },
-            )
-
-        table._commit_with_retry(build)
+        table._commit_with_retry(
+            _append_build(entries, {self._MARKER_PROP: str(batchId)})
+        )
 
     def abort(self, messages, batchId) -> None:  # type: ignore[override]
         for m in messages:

@@ -360,7 +360,11 @@ class TableMetadata:
     def _resolve_manifest(self, version: int) -> dict:
         """Read a manifest, reconstructing the full file list from the
         delta encoding (base + added/removed) when present."""
-        payload = self.backend.read_manifest(version)
+        return self._resolve_payload(self.backend.read_manifest(version))
+
+    def _resolve_payload(self, payload: dict) -> dict:
+        """Full form of an already-read manifest payload (reads only the
+        delta chain below it)."""
         if "files_base" not in payload:
             return payload
         base = self._resolve_manifest(payload["files_base"])
@@ -438,7 +442,7 @@ class TableMetadata:
             return payload
         try:
             parent_raw = self.backend.read_manifest(parent_version)
-            parent_full = self._resolve_manifest(parent_version)
+            parent_full = self._resolve_payload(parent_raw)
         except Exception:
             return payload
         depth = parent_raw.get("files_delta_depth", 0)

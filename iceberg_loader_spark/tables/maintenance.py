@@ -33,7 +33,7 @@ from iceberg_loader_spark.tables.format import (
     Snapshot,
     new_snapshot,
 )
-from iceberg_loader_spark.tables.table import Table
+from iceberg_loader_spark.tables.table import Table, _sort_order, _spec
 
 log = logging.getLogger(__name__)
 
@@ -215,18 +215,18 @@ def rewrite_data_files(
     """
     if sort_by and zorder_by:
         raise ValueError("sort_by and zorder_by are mutually exclusive")
+    snap = table.snapshot()
     if not sort_by and not zorder_by:
         # a standing write.sort-order keeps its clustering through
         # compaction without the caller restating it
-        sort_by = table._sort_order()
-    snap = table.snapshot()
+        sort_by = _sort_order(snap)
     if not snap.files:
         return {"rewritten": 0, "added": 0}
     total_bytes = sum(f.bytes for f in snap.files)
     target = target_files or max(
         1, round(total_bytes / (target_file_mb * 1024 * 1024))
     )
-    spec = table.partition_spec()
+    spec = _spec(snap)
     df = table.scan(spark, version=snap.version)
     if zorder_by:
         if spec:
@@ -309,7 +309,7 @@ def rewrite_data_files(
     # destroyed. Within each partition the rows are then sort-clustered,
     # giving tight per-file min/max on the sort columns.
     entries = table._write_data_files(
-        df, spec, table._codec(), sort_within=sort_by if spec else None
+        df, spec, snap, sort_within=sort_by if spec else None
     )
     # Only the files we actually scanned are replaced. A writer that
     # commits between the scan and the commit (or during a conflict
@@ -594,7 +594,7 @@ def convert_equality_deletes(
                 entries = [
                     e
                     for e in table._write_data_files(
-                        out, [], table._codec(),
+                        out, [], snap,
                         sort_within=["file_path", "pos"],
                     )
                     if e.rows > 0
@@ -758,7 +758,7 @@ def rewrite_delete_files(
     else:
         merged = merged.coalesce(1)
     entries = table._write_data_files(
-        merged, [], table._codec(), sort_within=["file_path", "pos"]
+        merged, [], snap, sort_within=["file_path", "pos"]
     )
     entries = [e for e in entries if e.rows > 0]  # dangling-only shards
     rows_after = sum(e.rows for e in entries)

@@ -398,3 +398,48 @@ def test_mor_merge_supersedes_concurrent_append(spark, tmp_path):
     rows = {(r["id"], r["v"]) for r in out.collect()}
     # both the original and the concurrent id=1 versions are superseded
     assert rows == {(1, 99), (2, 20)}
+
+
+# ---------------------------------------------------------------------------
+# concurrent schema evolution
+# ---------------------------------------------------------------------------
+
+
+def test_concurrent_add_columns_commits_one_evolution(tmp_path):
+    """Two writers adding the same column converge to ONE evolve-schema
+    snapshot: the loser's rebase finds the column on its refreshed
+    parent and commits nothing."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", _schema())
+    extra = T.StructField("extra", T.StringType())
+    _inject_before_commit(t, lambda: wh.load_table("db.t").add_columns([extra]))
+
+    snap = t.add_columns([extra])
+
+    evolutions = [s for s in t.history() if s.operation == "evolve-schema"]
+    assert [s.version for s in evolutions] == [snap.version]
+    assert t.schema().names == ["id", "extra"]
+
+
+def test_append_keeps_concurrently_added_column(spark, tmp_path):
+    """An append whose head predates a concurrent add_columns commits on
+    the evolved parent: the column survives and both writers' rows scan
+    back."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", _schema())
+    extra = T.StructField("extra", T.StringType())
+
+    def concurrent_evolve_and_append():
+        other = wh.load_table("db.t")
+        other.add_columns([extra])
+        other.append(spark.createDataFrame([(2, "x")], other.schema()))
+
+    _inject_before_commit(t, concurrent_evolve_and_append)
+    t.append(spark.createDataFrame([(1,)], _schema()))
+
+    out = wh.load_table("db.t")
+    assert out.schema().names == ["id", "extra"]
+    assert sorted(tuple(r) for r in out.scan(spark).collect()) == [
+        (1, None),
+        (2, "x"),
+    ]

@@ -692,9 +692,10 @@ def test_delta_manifests_delete_and_merge_chain(spark, tmp_path):
 
 
 def test_manifest_collection_distributed_matches_driver(spark, tmp_path, monkeypatch):
-    """Executor-side manifest stats (SPARK_GRAFT_MANIFEST=distributed)
-    must produce byte-identical entries, in the same order, as the
-    driver-side footer loop — the commit metadata is mode-independent."""
+    """Executor-side manifest stats (footer reads distributed from one
+    file up) must produce byte-identical entries, in the same order, as
+    the driver-side footer loop — commit metadata does not depend on
+    where the footers were read."""
     from iceberg_loader_spark.tables import table as table_mod
 
     wh = Warehouse(str(tmp_path))
@@ -713,7 +714,7 @@ def test_manifest_collection_distributed_matches_driver(spark, tmp_path, monkeyp
         [(i, f"g{i % 5}") for i in range(200)], schema=schema
     )
 
-    monkeypatch.setattr(table_mod, "_MANIFEST_MODE", "distributed")
+    monkeypatch.setattr(table_mod, "_MANIFEST_DISTRIBUTE_MIN", 1)
     snap = t.append(df)
     assert sum(e.rows for e in snap.files) == 200
     # partition values survived the executor round-trip
@@ -721,11 +722,11 @@ def test_manifest_collection_distributed_matches_driver(spark, tmp_path, monkeyp
         f"g{i}" for i in range(5)
     }
 
-    # re-collect the SAME staged files in both modes: identical entries
+    # re-collect the SAME staged files both ways: identical entries
     staging_rel = "/".join(snap.files[0].path.split("/")[:2])  # data/<uuid>
     staging_abs = os.path.join(t.root, staging_rel)
     dist = t._collect_entries(staging_abs, staging_rel, spark=spark)
-    monkeypatch.setattr(table_mod, "_MANIFEST_MODE", "driver")
+    monkeypatch.setattr(table_mod, "_MANIFEST_DISTRIBUTE_MIN", 10**9)
     drv = t._collect_entries(staging_abs, staging_rel, spark=spark)
     assert [e.to_json() for e in dist] == [e.to_json() for e in drv]
     assert len(drv) == len(snap.files)
@@ -760,3 +761,53 @@ def test_partitions_metadata_table(spark, tmp_path):
     u.append(spark.createDataFrame([(1, "x")], schema=schema))
     urows = wh.load_table("db.unpart").partitions_df(spark).collect()
     assert len(urows) == 1 and urows[0].partition_json == "{}"
+
+
+def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
+    """Metadata-read budget: a write resolves the head once, and its
+    commit re-reads only the parent. A change that adds a
+    ``load_snapshot`` call to one of these paths fails here."""
+    from datetime import datetime
+
+    from iceberg_loader_spark.tables.format import TableMetadata
+    from iceberg_loader_spark.tables.maintenance import rewrite_data_files
+
+    def rows(lo):
+        return [
+            {"id": i, "ts": f"2024-01-0{1 + i % 3} 10:00:00"}
+            for i in range(lo, lo + 20)
+        ]
+
+    wh = Warehouse(str(tmp_path))
+    loader = SparkLoader(spark, wh)
+    cfg = LoaderConfig(partition_by="day(ts)")
+    loader.load_data(rows(0), "db.t", cfg)
+    t = wh.load_table("db.t")
+    schema = t.schema()
+    new_rows = spark.createDataFrame(
+        [{"id": 100, "ts": datetime(2024, 1, 2, 9)}], schema
+    )
+    updates = spark.createDataFrame(
+        [{"id": 1, "ts": datetime(2024, 1, 2, 11)}], schema
+    )
+
+    calls = []
+    orig = TableMetadata.load_snapshot
+
+    def counting(self, version=None):
+        calls.append(version)
+        return orig(self, version)
+
+    monkeypatch.setattr(TableMetadata, "load_snapshot", counting)
+
+    def reads(op) -> int:
+        calls.clear()
+        op()
+        return len(calls)
+
+    assert reads(lambda: loader.load_data(rows(20), "db.t", cfg)) <= 3
+    assert reads(lambda: t.append(new_rows)) <= 2
+    assert reads(lambda: t.merge(spark, updates, ["id"])) <= 2
+    assert reads(lambda: rewrite_data_files(t, spark)) <= 3
+    monkeypatch.undo()
+    assert t.scan(spark).count() == 41
