@@ -14,10 +14,13 @@ engines evaluate identically.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from iceberg_loader_spark.sources.tables import load_table
+from iceberg_loader_spark.tables.materialize import materialize
 
 QUERIES = {}
 ORACLES = {}
@@ -117,7 +120,7 @@ def _spread(df: DataFrame, key: str = "doc_id") -> DataFrame:
     Guide §2.5 (input skew / few splits): a pure map-side pipeline
     inherits the scan's split count — a single-row-group parquet file
     (the test data) or a skewed/unsplittable input at 100 TB runs the
-    WHOLE hash pipeline inside one task, and every ``_materialize`` of
+    WHOLE hash pipeline inside one task, and every ``materialize`` of
     it hands its consumers the same single partition. One narrow
     exchange of the raw rows ahead of the transform spreads that CPU
     across the cluster — the pattern ``_simhash_from_grams`` proved
@@ -211,63 +214,6 @@ def _gram_expr(n: int) -> F.Column:
             lambda a, b: F.concat(a, F.lit(" "), b),
         )
     return cur
-
-
-# Materialization mode for frames read by both sides of a self-join.
-#   "local_checkpoint"  — executor block storage, lineage truncated. Fastest
-#                         in local mode, but blocks are executor-local: an
-#                         executor death loses them with no recompute path.
-#   "persist"           — StorageLevel.MEMORY_AND_DISK with lineage kept:
-#                         the cluster-safe spelling (lost blocks recompute
-#                         from lineage; disk spill bounds memory).
-# Switch via set_materialize_mode() or the
-# SPARK_GRAFT_MATERIALIZE=persist|local_checkpoint env var. Both modes are
-# oracle-green (tests/test_queries_oracle.py runs minhash under "persist").
-import os as _os
-
-
-def _validated_mode(mode: str) -> str:
-    if mode not in ("local_checkpoint", "persist"):
-        raise ValueError(
-            f"unknown materialize mode: {mode!r} "
-            "(expected 'local_checkpoint' or 'persist')"
-        )
-    return mode
-
-
-# Fail loudly at import on a bad env value — a typo silently falling back
-# to local_checkpoint would run the mode that is unsafe on executor loss.
-_MATERIALIZE_MODE = _validated_mode(
-    _os.environ.get("SPARK_GRAFT_MATERIALIZE", "local_checkpoint")
-)
-
-
-def set_materialize_mode(mode: str) -> None:
-    global _MATERIALIZE_MODE
-    _MATERIALIZE_MODE = _validated_mode(mode)
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a frame both sides of a self-join will read.
-
-    Catalyst does not reuse the exchange between the two aliased sides of
-    a self-join (the subtrees differ by alias pre-AQE), so the whole
-    upstream — tokenize, hash, aggregate — would execute twice.
-    ``localCheckpoint`` computes it once into executor block storage and
-    truncates the lineage (measured 3.6× on minhash at sf0.1); ``persist``
-    (MEMORY_AND_DISK) is the cluster-scale mode — recomputable on executor
-    loss, spillable, one computation shared by both join sides.
-    """
-    if _MATERIALIZE_MODE == "persist":
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()  # eager: populate the cache before both sides read it
-        return df
-    return df.localCheckpoint(eager=True)
-
-
-_MATERIALIZE_REAL = _materialize
 
 
 # DuckDB twins (1-based list indexing).
@@ -393,13 +339,14 @@ def _shared_artifact(
     * the cache key pins the dataset fingerprint (every part file's
       name/size/mtime), so a changed input rebuilds instead of serving
       stale pairs;
-    * when ``_materialize`` is monkeypatched (the plan-fingerprint
-      harness swaps it for identity to fingerprint the full declarative
-      pipeline) the artifact is BYPASSED entirely — the fingerprint
-      covers the real pipeline, and a patched build never pollutes the
-      cache.
+    * inside ``tables.materialize.no_materialize`` (the plan-fingerprint
+      seam) the artifact is BYPASSED entirely — the fingerprint covers
+      the full declarative pipeline, and an unmaterialized build never
+      pollutes the cache.
     """
-    if globals()["_materialize"] is not _MATERIALIZE_REAL:
+    import iceberg_loader_spark.tables.materialize as mz
+
+    if mz._BYPASS:
         return build()
     import tempfile
 
@@ -408,13 +355,13 @@ def _shared_artifact(
     from iceberg_loader_spark.tables import Warehouse
     from iceberg_loader_spark.tables.table import Table
 
-    # _MATERIALIZE_MODE is in the key so the persist-mode parity test
+    # the materialize mode is in the key so the persist-mode parity test
     # really exercises a persist-mode build instead of reusing the
     # localCheckpoint-mode artifact (values are identical either way).
     key = (
         name,
         sf_dir,
-        _MATERIALIZE_MODE,
+        mz._MODE,
         _path_fingerprint(f"{sf_dir}/documents.parquet"),
     )
     root = _ARTIFACT_ROOTS.get(key)
@@ -515,7 +462,7 @@ def _minhash_scored_pairs_build(
     # single task; the cap bounds any bucket's pair fan-out while
     # provably not triggering at test scale (buckets ≪ cap), and the
     # bucket-size aggregate is partial-aggregated (counts, not rows).
-    bands = _materialize(bands)  # signature pipeline runs ONCE
+    bands = materialize(bands)  # signature pipeline runs ONCE
     # The HOT set is tiny by construction (≤ 4n / cap ≈ 40 buckets), so
     # it broadcasts as a left-anti side — same pattern as the n-gram DF
     # cap below; a semi-join against the near-complete OK list would
@@ -533,7 +480,7 @@ def _minhash_scored_pairs_build(
         )
         .select("band_id", "k1", "k2")
     )
-    bands = _materialize(
+    bands = materialize(
         bands.join(F.broadcast(hot), ["band_id", "k1", "k2"], "left_anti")
     )
     n_match = F.aggregate(
@@ -646,7 +593,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_assign_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = _minhash_scored_pairs(spark, sf_dir).select("a_id", "b_id")
-    edges = _materialize(
+    edges = materialize(
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst")).unionAll(
             pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))
         )
@@ -654,7 +601,7 @@ def _cluster_assign_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Seed with the 1-hop neighborhood min (edges are symmetric, so every
     # node appears as dst) — this fuses the init and the first propagation
     # round into one aggregate.
-    labels = _materialize(
+    labels = materialize(
         edges.groupBy("dst")
         .agg(F.min("src").alias("m"))
         .select(
@@ -680,7 +627,7 @@ def _cluster_assign_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same total propagation distance (25+ hops available).
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     for _ in range(13):
-        labels = _materialize(_hop(_hop(labels)))
+        labels = materialize(_hop(_hop(labels)))
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
             break
@@ -851,7 +798,7 @@ def simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("h"),
     ).select("doc_id", "simhash", "h.half_id", "h.half_key")
-    halves = _materialize(halves)
+    halves = materialize(halves)
     pairs = (
         halves.alias("a")
         .join(
@@ -959,7 +906,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         (F.col("n_chars") / F.lit(100)).cast("bigint").alias("len_band"),
     )
-    flat = _materialize(
+    flat = materialize(
         _gram_rows(docs, 2, spread=True).join(F.broadcast(dims), "doc_id")
     )
     # Hot-gram cap: rows in `flat` are distinct (doc_id, gram), so a plain
@@ -975,7 +922,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("gram")
     )
-    kept = _materialize(flat.join(F.broadcast(hot), "gram", "left_anti"))
+    kept = materialize(flat.join(F.broadcast(hot), "gram", "left_anti"))
     sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     inter = (
         kept.alias("a")
@@ -1055,7 +1002,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # materialized once: train and eval below both read this frame, and
     # without it each side re-runs the whole tokenize+shingle+md5 pipeline
-    grams = _materialize(
+    grams = materialize(
         _token_arrays(docs, spread=True)
         .filter(F.size("ts") >= 5)
         .select(
@@ -1138,7 +1085,7 @@ def repeated_span_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    spans = _materialize(
+    spans = materialize(
         ts.select("doc_id", F.explode(F.array_distinct(span_arr)).alias("h"))
     )
     freq = spans.groupBy("h").agg(F.count("*").alias("nd"))
@@ -1255,7 +1202,7 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # need (tokenize gate + content digest); the funnel stages then run
     # over this narrow materialized frame — text is touched again only by
     # the simhash and 5-gram pipelines, which genuinely need it.
-    flags = _materialize(
+    flags = materialize(
         docs.select(
             "doc_id",
             "lang",
@@ -1273,13 +1220,13 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MIN instead of a Window(row_number): the exchange carries one
     # (h, doc_id) pair per group, unsorted, and downstream stages only
     # ever read e's doc_id / row count
-    e = _materialize(l.groupBy("h").agg(F.min("doc_id").alias("doc_id")))
+    e = materialize(l.groupBy("h").agg(F.min("doc_id").alias("doc_id")))
     sh = _simhash_df(docs.join(e.select("doc_id"), "doc_id"))
     keepers = sh.groupBy("simhash").agg(
         F.min("doc_id").alias("doc_id")
     ).select("doc_id")
-    nd = _materialize(e.join(keepers, "doc_id"))
-    grams = _materialize(
+    nd = materialize(e.join(keepers, "doc_id"))
+    grams = materialize(
         _token_arrays(docs, spread=True)
         .filter(F.size("ts") >= 5)
         .select(
@@ -1298,7 +1245,7 @@ def curation_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .distinct()
     )
-    d = _materialize(
+    d = materialize(
         nd.filter(F.col("doc_id") % 10 != 0).join(
             contam, "doc_id", "left_anti"
         )
@@ -1391,10 +1338,10 @@ def minhash_jaccard_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-hash sketch's error; the oracle recomputes both sides from scratch,
     so a drifting hash recipe or a broken band join turns the row red."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _materialize(
+    pairs = materialize(
         _minhash_scored_pairs(spark, sf_dir).select("a_id", "b_id", "n_match")
     )
-    grams = _materialize(
+    grams = materialize(
         _gram_rows(docs.join(
             pairs.select(F.col("a_id").alias("doc_id"))
             .unionByName(pairs.select(F.col("b_id").alias("doc_id")))
@@ -1502,7 +1449,7 @@ def dedup_canonical_per_cluster(
         "mh_clusters",
         lambda: _cluster_assign_build(spark, sf_dir),
     ).select("doc_id", "cluster_id")
-    j = _materialize(assign.join(docs, "doc_id"))
+    j = materialize(assign.join(docs, "doc_id"))
     w = W.partitionBy("cluster_id").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
     )
@@ -1578,7 +1525,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard misses. Integer-exact threshold and basis-point score."""
     docs = load_table(spark, sf_dir, "documents")
     langs = docs.select("doc_id", "lang")
-    flat = _materialize(
+    flat = materialize(
         _gram_rows(docs, 2, spread=True).join(F.broadcast(langs), "doc_id")
     )
     n_docs = docs.groupBy().agg(F.count("*").alias("n_docs"))
@@ -1592,7 +1539,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("gram")
     )
-    kept = _materialize(flat.join(F.broadcast(hot), "gram", "left_anti"))
+    kept = materialize(flat.join(F.broadcast(hot), "gram", "left_anti"))
     sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     inter = (
         kept.alias("a")
@@ -1843,7 +1790,7 @@ def incremental_minhash_candidates(
         "is_new", F.lit(0)
     )
     inc_sigs = sig_cols(inc).withColumn("is_new", F.lit(1))
-    all_sigs = _materialize(hist_sigs.unionByName(inc_sigs))
+    all_sigs = materialize(hist_sigs.unionByName(inc_sigs))
 
     bands = all_sigs.select(
         "doc_id",
@@ -1879,7 +1826,7 @@ def incremental_minhash_candidates(
         )
         .select("band_id", "k1", "k2")
     )
-    bands = _materialize(
+    bands = materialize(
         bands.join(F.broadcast(hot), ["band_id", "k1", "k2"], "left_anti")
     )
     # new-side-driving join: the left frame is ONLY the incoming batch's
@@ -2106,7 +2053,7 @@ def _xspan_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h"),
         ),
     )
-    sp = _materialize(
+    sp = materialize(
         ts.select("doc_id", F.explode(anchors).alias("s")).select(
             "doc_id", F.col("s.pos").alias("pos"), F.col("s.h").alias("h")
         )
@@ -2117,7 +2064,7 @@ def _xspan_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nd") > _XSPAN_CAP)
         .select("h")
     )
-    spc = _materialize(sp.join(hot, "h", "left_anti"))
+    spc = materialize(sp.join(hot, "h", "left_anti"))
     m = (
         spc.alias("a")
         .join(
@@ -2245,7 +2192,7 @@ def _winnowing_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.array_min(F.slice(F.col("hs"), i, F.lit(_WN_W))),
         )
     )
-    fpx = _materialize(
+    fpx = materialize(
         with_h.select("doc_id", F.explode(fp).alias("p"))
     )
     hot = (
@@ -2254,7 +2201,7 @@ def _winnowing_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("nd") > _WN_CAP)
         .select("p")
     )
-    fpc = _materialize(fpx.join(F.broadcast(hot), "p", "left_anti"))
+    fpc = materialize(fpx.join(F.broadcast(hot), "p", "left_anti"))
     shared = (
         fpc.alias("a")
         .join(
@@ -2498,14 +2445,14 @@ def incremental_winnowing_candidates(
         spark, "wn_index", _winnowing_prints(hist)
     ).withColumn("is_new", F.lit(0))
     new_fp = _winnowing_prints(inc).withColumn("is_new", F.lit(1))
-    fpx = _materialize(hist_fp.unionByName(new_fp))
+    fpx = materialize(hist_fp.unionByName(new_fp))
     hot = (
         fpx.groupBy("p")
         .agg(F.count("*").alias("nd"))
         .filter(F.col("nd") > _WN_CAP)
         .select("p")
     )
-    fpc = _materialize(fpx.join(F.broadcast(hot), "p", "left_anti"))
+    fpc = materialize(fpx.join(F.broadcast(hot), "p", "left_anti"))
     # new-side-driving join: the left frame is ONLY the incoming batch's
     # prints, so old×old buckets are never enumerated; pairs re-orient
     # to (least, greatest) and DISTINCT collapses the double-counted
@@ -2638,14 +2585,14 @@ def incremental_span_candidates(
         spark, "sp_index", _span_anchors(hist)
     ).withColumn("is_new", F.lit(0))
     new_sp_raw = _span_anchors(inc).withColumn("is_new", F.lit(1))
-    sp = _materialize(hist_sp.unionByName(new_sp_raw))
+    sp = materialize(hist_sp.unionByName(new_sp_raw))
     hot = (
         sp.groupBy("h")
         .agg(F.countDistinct("doc_id").alias("nd"))
         .filter(F.col("nd") > _XSPAN_CAP)
         .select("h")
     )
-    spc = _materialize(sp.join(F.broadcast(hot), "h", "left_anti"))
+    spc = materialize(sp.join(F.broadcast(hot), "h", "left_anti"))
     new_sp = spc.filter(F.col("is_new") == 1)
     # new-side-driving seed join; matches re-orient so the (pair, diag,
     # ap) geometry is identical to the full-corpus operator regardless
@@ -2748,8 +2695,8 @@ def incremental_simhash_candidates(
         "is_new", F.lit(0)
     )
     inc_sh = _simhash_df(inc).withColumn("is_new", F.lit(1))
-    sh = _materialize(hist_sh.unionByName(inc_sh))
-    halves = _materialize(
+    sh = materialize(hist_sh.unionByName(inc_sh))
+    halves = materialize(
         sh.select(
             "doc_id",
             "simhash",
@@ -2841,7 +2788,7 @@ def _jaccard_truth_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs/10, mirrored in every consuming oracle). The ground-truth
     side of the LSH recall and band-tradeoff audits."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = _materialize(_gram_rows(docs, 3, spread=True))
+    grams = materialize(_gram_rows(docs, 3, spread=True))
     n_docs = docs.groupBy().agg(F.count("*").alias("n_docs"))
     hot = (
         grams.groupBy("gram")
@@ -2853,7 +2800,7 @@ def _jaccard_truth_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("gram")
     )
-    kept = _materialize(grams.join(F.broadcast(hot), "gram", "left_anti"))
+    kept = materialize(grams.join(F.broadcast(hot), "gram", "left_anti"))
     sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (
         kept.alias("a")
@@ -3112,8 +3059,8 @@ def minhash_band_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same signature, against the persisted exact-Jaccard truth
     artifact — all integer basis points, oracle-recomputed from scratch."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = _materialize(_minhash_sig_frame(docs))
-    true_pairs = _materialize(
+    sigs = materialize(_minhash_sig_frame(docs))
+    true_pairs = materialize(
         _jaccard_truth_pairs(spark, sf_dir)
         .filter(F.lit(2) * F.col("i_cnt") >= F.col("u_cnt"))
         .select("a_id", "b_id")
@@ -3300,7 +3247,7 @@ class MinHashStreamIndexer:
             .scan(self.spark)
             .withColumn("is_batch", F.lit(0))
         )
-        alls = _materialize(
+        alls = materialize(
             idx.unionByName(batch_sigs.withColumn("is_batch", F.lit(1)))
         )
         bands = alls.select(
@@ -3346,7 +3293,7 @@ class MinHashStreamIndexer:
                 "diverge from the global-cap batch semantics — reprocess "
                 "with incremental_minhash_candidates"
             )
-        bands = _materialize(
+        bands = materialize(
             bands.join(F.broadcast(hot), ["band_id", "k1", "k2"], "left_anti")
         )
         n_match = sum(
@@ -3395,7 +3342,7 @@ class MinHashStreamIndexer:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         from iceberg_loader_spark.tables.table import Table
 
-        batch_sigs = _materialize(
+        batch_sigs = materialize(
             _stream_sig_frame(batch_df).withColumn("is_inc", F.lit(1))
         )
         pairs_done = self.wh.table_exists("db.mh_spairs") and batch_id <= int(
@@ -3604,7 +3551,7 @@ def incremental_curation_funnel_counts(
             lambda t: F.length(t) > 0,
         )
     )
-    flags = _materialize(
+    flags = materialize(
         inc.select(
             "doc_id",
             "lang",
@@ -3620,7 +3567,7 @@ def incremental_curation_funnel_counts(
     # min-doc_id keepers as partial-aggregating MINs (no Window sort;
     # the exchange carries one pair per group) — downstream reads only
     # e's doc_id / row count
-    e = _materialize(
+    e = materialize(
         l.join(fp_idx, "h", "left_anti")
         .groupBy("h")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -3632,8 +3579,8 @@ def incremental_curation_funnel_counts(
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    nd = _materialize(e.join(keepers, "doc_id"))
-    g_inc = _materialize(_grams5(inc))
+    nd = materialize(e.join(keepers, "doc_id"))
+    g_inc = materialize(_grams5(inc))
     ev_all = (
         ev_idx.select("g")
         .unionByName(g_inc.filter(F.col("doc_id") % 10 == 0).select("g"))
@@ -3645,7 +3592,7 @@ def incremental_curation_funnel_counts(
         .select("doc_id")
         .distinct()
     )
-    d = _materialize(
+    d = materialize(
         nd.filter(F.col("doc_id") % 10 != 0).join(contam, "doc_id", "left_anti")
     )
     split = d.select("doc_id", _doc_bucket_col().alias("bucket"))
@@ -3739,12 +3686,12 @@ def simhash_threshold_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch; the production threshold (6) sits between the audited
     extremes so the choice is a measured decision."""
     docs = load_table(spark, sf_dir, "documents")
-    truth = _materialize(
+    truth = materialize(
         _jaccard_truth_pairs(spark, sf_dir)
         .filter(F.lit(2) * F.col("i_cnt") >= F.col("u_cnt"))
         .select("a_id", "b_id")
     )
-    sh = _materialize(_simhash_df(docs))
+    sh = materialize(_simhash_df(docs))
     j = truth.join(
         sh.select(F.col("doc_id").alias("a_id"), F.col("simhash").alias("sh_a")),
         "a_id",
@@ -3898,8 +3845,8 @@ def winnowing_window_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_join(F.slice(F.col("ts"), i, F.lit(_WN_K)), " ")
         ),
     )
-    with_h = _materialize(ts.select("doc_id", hs.alias("hs")))
-    true_pairs = _materialize(
+    with_h = materialize(ts.select("doc_id", hs.alias("hs")))
+    true_pairs = materialize(
         _jaccard_truth_pairs(spark, sf_dir)
         .filter(F.lit(2) * F.col("i_cnt") >= F.col("u_cnt"))
         .select("a_id", "b_id")
@@ -3914,7 +3861,7 @@ def winnowing_window_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda i: F.array_min(F.slice(F.col("hs"), i, F.lit(w))),
             )
         )
-        fpx = _materialize(
+        fpx = materialize(
             eligible.select("doc_id", F.explode(fp).alias("p"))
         )
         n_hashes_frame = eligible.agg(
@@ -4139,7 +4086,7 @@ class CurationStreamFunnel:
         # micro-batch arrives as ONE file = one partition, so without
         # the exchange every downstream 5-gram md5 transform over this
         # checkpoint would run serially (guide §2.5).
-        flags = _materialize(
+        flags = materialize(
             _spread(batch_df).select(
                 "doc_id",
                 "lang",
@@ -4197,7 +4144,7 @@ class CurationStreamFunnel:
         # within-batch keeper = MIN(doc_id) per hash as a partial
         # aggregate (no Window sort); downstream reads only
         # (h, doc_id, _inc)
-        e_all = _materialize(
+        e_all = materialize(
             l.groupBy("h")
             .agg(F.min("doc_id").alias("doc_id"))
             .join(inc_fp, "h", "left")
@@ -4221,7 +4168,7 @@ class CurationStreamFunnel:
             .groupBy("simhash")
             .agg(F.min("doc_id").alias("_inc"))
         )
-        kept_sh = _materialize(
+        kept_sh = materialize(
             sh_b.groupBy("simhash")
             .agg(F.min("doc_id").alias("doc_id"))
             .join(inc_sh, "simhash", "left")
@@ -4235,7 +4182,7 @@ class CurationStreamFunnel:
         g5 = F.explode(
             F.array_distinct(F.transform(_gram_expr(5), F.md5))
         ).alias("g")
-        ev_b = _materialize(
+        ev_b = materialize(
             flags.filter(
                 (F.col("doc_id") % 10 == 0) & (F.size("ts") >= 5)
             )
@@ -4244,7 +4191,7 @@ class CurationStreamFunnel:
             .distinct()
         )
         ev_known = self._idx("cf_ev", batch_id).select("g").unionByName(ev_b)
-        g_nd = _materialize(
+        g_nd = materialize(
             flags.join(
                 nd.filter(F.col("doc_id") % 10 != 0).select("doc_id"),
                 "doc_id",
@@ -4253,7 +4200,7 @@ class CurationStreamFunnel:
             .select("doc_id", g5)
         )
         contam = g_nd.join(ev_known.distinct(), "g").select("doc_id").distinct()
-        d_b = _materialize(
+        d_b = materialize(
             nd.filter(F.col("doc_id") % 10 != 0)
             .join(contam, "doc_id", "left_anti")
             .select("doc_id")
@@ -4492,12 +4439,12 @@ def _run_stream_funnel(
     for i, part in enumerate(parts):
         pdir = f"{src}/part_{i}"
         part.coalesce(1).write.mode("overwrite").parquet(pdir)
-        for fn in sorted(_os.listdir(pdir)):
+        for fn in sorted(os.listdir(pdir)):
             if fn.endswith(".parquet"):
                 fp = f"{pdir}/{fn}"
                 dst = f"{src}/b{i}.parquet"
-                _os.replace(fp, dst)
-                _os.utime(dst, (base_t + arrival[i], base_t + arrival[i]))
+                os.replace(fp, dst)
+                os.utime(dst, (base_t + arrival[i], base_t + arrival[i]))
         import shutil as _sh
 
         _sh.rmtree(pdir)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from iceberg_loader_spark.sources.tables import load_table
+from iceberg_loader_spark.tables.materialize import materialize
 
 QUERIES = {}
 ORACLES = {}
@@ -96,8 +97,6 @@ def _duck_pr_round(n: int, prev: str) -> str:
     """,
 )
 def pagerank_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     ev = load_table(spark, sf_dir, "events")
     w_lag = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -111,14 +110,14 @@ def pagerank_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("w"))
     )
-    nodes = _materialize(
+    nodes = materialize(
         ev.select(F.col("event_type").alias("node")).distinct()
     )
     outs = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("wout"))
     # materialize once: every iteration (and the final degree join) reads
     # the edge frame — without this the lag window + aggregate lineage
     # re-executes per iteration
-    edges = _materialize(edges.join(outs, "src"))
+    edges = materialize(edges.join(outs, "src"))
     outs = edges.select("src", "wout").distinct()
 
     # the teleport term needs |V| — the one scalar any PageRank collects
@@ -182,15 +181,13 @@ def pagerank_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     ev = load_table(spark, sf_dir, "events")
     w_lag = W.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "event_type",
         F.lag("event_type").over(w_lag).alias("prev_type"),
     )
-    edges = _materialize(  # read by both the in- and out-degree aggregates
+    edges = materialize(  # read by both the in- and out-degree aggregates
         seq.filter(F.col("prev_type").isNotNull())
         .groupBy(
             F.col("prev_type").alias("src"), F.col("event_type").alias("dst")
@@ -263,8 +260,6 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def triangle_count_nation_trade(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey"
     )
@@ -279,7 +274,7 @@ def triangle_count_nation_trade(
     )
     cn = F.col("c_nationkey")
     sn = F.col("s_nationkey")
-    pairs = _materialize(
+    pairs = materialize(
         li.join(F.broadcast(orders), F.col("o_orderkey") == F.col("l_orderkey"))
         .join(F.broadcast(cust), F.col("c_custkey") == F.col("o_custkey"))
         .join(F.broadcast(sup), F.col("s_suppkey") == F.col("l_suppkey"))

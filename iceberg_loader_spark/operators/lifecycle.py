@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from iceberg_loader_spark.sources.tables import load_table
 from iceberg_loader_spark.tables.catalog import Warehouse
+from iceberg_loader_spark.tables.materialize import materialize, release_blocks
 from iceberg_loader_spark.tables.table import Table
 
 QUERIES = {}
@@ -1548,8 +1549,6 @@ def apply_mv_delta(
     merge(). Touches only affected keys: the current MV is semi-filtered
     with a BROADCAST of the delta's key set before the combine join.
     """
-    from iceberg_loader_spark.tables.materialize import materialize
-
     mv = wh.load_table(mv_name)
     cur_aff = mv.scan(spark).join(
         F.broadcast(delta.select(key)), key, "left_semi"
@@ -1558,7 +1557,7 @@ def apply_mv_delta(
     # without this the zero-check, the key delete, and the merge would
     # each replay the whole changelog pipeline (and its compounded
     # lineage would ride every downstream task binary)
-    combined, _release = materialize(
+    combined = materialize(
         delta.alias("d")
         .join(cur_aff.alias("c"), key, "left")
         .select(
@@ -1579,7 +1578,7 @@ def apply_mv_delta(
             mv = wh.load_table(mv_name)
         mv.merge(spark, combined.filter(F.col(n_col) > 0), [key])
     finally:
-        _release()
+        release_blocks(combined)
 
 
 # --------------------------------------------------------------------------

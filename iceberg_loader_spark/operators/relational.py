@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from iceberg_loader_spark.sources.tables import load_table
+from iceberg_loader_spark.tables.materialize import materialize
 
 QUERIES = {}
 ORACLES = {}
@@ -1284,11 +1285,10 @@ def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         F.explode(F.split(F.lower("text"), " ")).alias("tok")
     ).filter(F.col("tok") != "")
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # counts feeds the total AND the share join — materialize so the
     # token explode+aggregate runs once
-    counts = _materialize(
+    counts = materialize(
         toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     )
     tot = counts.agg(F.sum("cnt").alias("t"))
@@ -2619,9 +2619,8 @@ def weighted_median_price_by_flag(
         .alias("cents"),
         F.col("l_quantity").cast("bigint").alias("w"),
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    x = _materialize(x)  # read by totals and the ranking window
+    x = materialize(x)  # read by totals and the ranking window
     tot = x.groupBy("flag").agg(
         F.sum("w").alias("tw"), F.count("*").alias("n")
     )
@@ -2734,9 +2733,8 @@ def profile_columns_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             _minmax(c, k, F.min).alias(f"{c}__min"),
             _minmax(c, k, F.max).alias(f"{c}__max"),
         ]
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    row = _materialize(li.agg(*aggs))  # one pass; 11 projections read it
+    row = materialize(li.agg(*aggs))  # one pass; 11 projections read it
     dists = [
         li.select(c)
         .agg(F.countDistinct(c).alias("n_distinct"))
@@ -2969,12 +2967,10 @@ def bloom_prefilter_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             % _BF_M
         )
 
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     # build feeds 4 consumers (3 bit projections + members) and bits
     # feeds 3 — materialize each once so customer is scanned once, not 4x
-    build = _materialize(build)
-    bits = _materialize(
+    build = materialize(build)
+    bits = materialize(
         build.select(
             F.explode(
                 F.array(*[_bit(i, F.col("c_custkey")) for i in range(_BF_K)])

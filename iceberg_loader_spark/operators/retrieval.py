@@ -33,18 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from iceberg_loader_spark.operators import dedup as _dedup
 from iceberg_loader_spark.operators.dedup import _token_rows
 from iceberg_loader_spark.sources.tables import load_table
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    # Resolve through the dedup MODULE at call time — never bind the
-    # function at import. Tooling (plan fingerprints, oracle tests)
-    # patches ``dedup._materialize``; a name bound here at import would
-    # make that patch take effect only when this module happens to be
-    # imported inside the patch window (a real order-dependent flake).
-    return _dedup._materialize(df)
+from iceberg_loader_spark.tables.materialize import materialize, release_blocks
 
 QUERIES = {}
 ORACLES = {}
@@ -200,7 +191,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _token_rows(docs).select("doc_id", "tok")
     # dl feeds both the corpus stats and the scoring join — materialize so
     # tokenize + per-doc count runs once.
-    dl = _materialize(toks.groupBy("doc_id").agg(F.count("*").alias("dl")))
+    dl = materialize(toks.groupBy("doc_id").agg(F.count("*").alias("dl")))
     stats = dl.agg(
         F.count("*").alias("n_docs"),
         F.expr("(SUM(dl) * 1000) div COUNT(*)").alias("avgdl_m"),
@@ -208,7 +199,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # qtf feeds both the per-term df counts and the scoring join —
     # materialize (it is |docs matching a query term| rows, tiny relative
     # to the corpus) so the corpus-wide explode+filter runs once.
-    qtf = _materialize(
+    qtf = materialize(
         toks.filter(F.col("tok").isin(*_BM25_TERMS))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
@@ -251,7 +242,7 @@ def bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the driver — no global sort, no unpartitioned window), then the rank
     # column is derived over the 10 survivors with a broadcast "count of
     # rows ahead of me" self-join — O(k²) on k=10, never data-sized.
-    top = _materialize(
+    top = materialize(
         scored.orderBy(F.desc("bm25_m"), F.asc("doc_id")).limit(10)
     )
     ahead = top.select(
@@ -312,7 +303,7 @@ def unigram_rarity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # toks is read twice (model + scoring) — materialize the exploded
     # frame once; the model aggregate is partial map-side.
-    toks = _materialize(_token_rows(docs).select("doc_id", "tok"))
+    toks = materialize(_token_rows(docs).select("doc_id", "tok"))
     model = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = model.agg(F.sum("cnt").alias("total_toks"))
     return (
@@ -431,7 +422,7 @@ def _rank_bounded(
     broadcast count-ahead self-join over the k survivors — O(k²) on a
     constant k, never data-sized, and no `WindowExec: No Partition
     Defined` single-task sort at any input size."""
-    top = _materialize(df.orderBy(F.desc(score), F.asc(ident)).limit(k))
+    top = materialize(df.orderBy(F.desc(score), F.asc(ident)).limit(k))
     ahead = top.select(
         F.col(score).alias("_b_s"), F.col(ident).alias("_b_i")
     )
@@ -808,7 +799,7 @@ def _pc_feature_frame(labeled: DataFrame) -> DataFrame:
     bias = labeled.select(
         "doc_id", F.lit(_PC_B).cast("bigint").alias("bucket")
     )
-    return _materialize(
+    return materialize(
         presence.unionByName(bias)
         .withColumn("cnt", F.lit(1).cast("bigint"))
         .join(labeled.select("doc_id", "y"), "doc_id")
@@ -838,14 +829,12 @@ def _pc_train(
     margins at all.
 
     Superseded round weights are released eagerly: round r+1's
-    ``_materialize`` consumes round r's weight blocks at build time, so
+    ``materialize`` consumes round r's weight blocks at build time, so
     freeing them immediately keeps the query's peak block storage O(1)
     in rounds instead of O(rounds) — materialization hygiene for the
     most checkpoint-dense query family in the registry.
     """
-    from iceberg_loader_spark.tables.materialize import release_blocks
-
-    w = _materialize(
+    w = materialize(
         fl.groupBy("bucket").agg(F.sum(F.col("y") * F.col("cnt")).alias("w"))
     )
     margins: list[DataFrame] = []
@@ -853,7 +842,7 @@ def _pc_train(
         m = _pc_margins(fl, w)
         last = rnd == _PC_ROUNDS
         if report_margins:
-            margins.append(m if last else _materialize(m))
+            margins.append(m if last else materialize(m))
         if last:
             break
         miss = (margins[-1] if report_margins else m).filter(
@@ -865,7 +854,7 @@ def _pc_train(
             .agg(F.sum(F.col("y") * F.col("cnt")).alias("d"))
         )
         prev_w = w
-        w = _materialize(
+        w = materialize(
             prev_w.join(upd, "bucket", "left").select(
                 "bucket",
                 (
@@ -877,7 +866,7 @@ def _pc_train(
         # the eager materialize above just consumed prev_w; no later
         # consumer reads it (margins for this round were materialized or
         # fully folded into `upd`), so free its blocks now (a no-op when
-        # _materialize is identity-patched: nothing was pinned)
+        # inside no_materialize: nothing was pinned)
         release_blocks(prev_w)
     return w, margins
 
@@ -1055,9 +1044,9 @@ def _register_retrieval_funnel() -> None:
         # ONE BM25 pass feeds both the pool count and the RRF lexical
         # channel (the corpus tokenize+explode is the funnel's biggest
         # single cost; running it twice doubled it)
-        lexpool = _materialize(_bm25_scored(spark, sf_dir))
+        lexpool = materialize(_bm25_scored(spark, sf_dir))
         emb = load_table(spark, sf_dir, "embeddings")
-        fused = _materialize(_rrf_fused(spark, sf_dir, scored=lexpool))
+        fused = materialize(_rrf_fused(spark, sf_dir, scored=lexpool))
         fp = emb.select(
             "vec_id", "label", _fixed_point(F.col("embedding")).alias("e")
         ).withColumn("nsq", _dot(F.col("e"), F.col("e")))
@@ -1085,7 +1074,7 @@ def _register_retrieval_funnel() -> None:
             ).alias("cosine"),
         )
         w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("neg_id"))
-        negs = _materialize(
+        negs = materialize(
             npairs.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= 3)
             .select("q_id", "neg_id")
@@ -1254,7 +1243,6 @@ def score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from iceberg_loader_spark.operators.dedup import (
         _shared_artifact,
-        _materialize as _mz,
     )
     from iceberg_loader_spark.operators.text import _bucket_col
 
@@ -1281,16 +1269,16 @@ def incremental_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count("*").cast("bigint").alias("dl")),
     )
-    post_b = _mz(_postings(inc))
+    post_b = materialize(_postings(inc))
     dl_b = post_b.groupBy("doc_id").agg(
         F.sum("tf").cast("bigint").alias("dl")
     )
-    dl = _mz(dl_idx.unionByName(dl_b))
+    dl = materialize(dl_idx.unionByName(dl_b))
     stats = dl.agg(
         F.count("*").alias("n_docs"),
         F.expr("(SUM(dl) * 1000) div COUNT(*)").alias("avgdl_m"),
     )
-    qtf = _mz(
+    qtf = materialize(
         post_idx.unionByName(post_b).filter(F.col("tok").isin(*_BM25_TERMS))
     )
     qdf = qtf.groupBy("tok").agg(F.count("*").alias("df"))
@@ -1312,7 +1300,9 @@ def incremental_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_m").cast("bigint").alias("bm25_m"),
         F.count("*").cast("bigint").alias("n_terms_hit"),
     )
-    top = _mz(scored.orderBy(F.desc("bm25_m"), F.asc("doc_id")).limit(10))
+    top = materialize(
+        scored.orderBy(F.desc("bm25_m"), F.asc("doc_id")).limit(10)
+    )
     ahead = top.select(
         F.col("doc_id").alias("b_doc"), F.col("bm25_m").alias("b_score")
     )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from iceberg_loader_spark.sources.tables import load_table
+from iceberg_loader_spark.tables.materialize import materialize
 
 QUERIES = {}
 ORACLES = {}
@@ -158,10 +159,9 @@ def _lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.sum(bit).alias("sig"))
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # both sides of the bucket self-join read this frame — materialize once
-    return _materialize(fp.join(sigs, "vec_id"))
+    return materialize(fp.join(sigs, "vec_id"))
 
 
 # --------------------------------------------------------------------------
@@ -261,10 +261,9 @@ def _lsh_bucketed_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "table_id")
         .agg(F.sum(bit).alias("sig"))
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # both sides of the bucket self-join read this frame — materialize once
-    return _materialize(fp.join(sigs, "vec_id"))
+    return materialize(fp.join(sigs, "vec_id"))
 
 
 # --------------------------------------------------------------------------
@@ -495,7 +494,6 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = fp.filter(F.col("vec_id") < _N_CENTROIDS).select(
         F.col("vec_id").alias("c_id"), F.col("e").alias("c_e")
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     assigned = _group_argmin(
         fp.join(F.broadcast(centroids)),
@@ -510,7 +508,7 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("nsq", F.col("nsq")),
         ],
     )
-    return _materialize(
+    return materialize(
         assigned.select("vec_id", "label", "e", "nsq", "c_id")
     )
 
@@ -960,10 +958,8 @@ _KM_ORACLE = f"""
 def _kmeans_final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, e, cluster, dist) after 3 Lloyd rounds — shared by the
     kmeans query and the cluster-balanced sampler."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = _materialize(
+    fp = materialize(
         emb.select("vec_id", _fixed_point(F.col("embedding")).alias("e"))
     )
     cents = fp.filter(F.col("vec_id") < _KM_K).select(
@@ -1383,8 +1379,6 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, s, code, d2): every vector's nearest sub-centroid per
     subspace — broadcast codebook, map-side expansion, argmin window.
     Materialized once (pq_encode_vectors and pq_adc_topk both read it)."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     emb = load_table(spark, sf_dir, "embeddings")
     fp = emb.select("vec_id", _fixed_point(F.col("embedding")).alias("e"))
     cb = fp.filter(F.col("vec_id") < _PQ_K).select(
@@ -1395,7 +1389,7 @@ def _pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "s", "c_id", _pq_sub_d2().alias("d2")
     )
     w = W.partitionBy("vec_id", "s").orderBy("d2", "c_id")
-    return _materialize(
+    return materialize(
         pairs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", "s", F.col("c_id").alias("code"), "d2")
@@ -1793,10 +1787,9 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nsq").alias("q_nsq"),
         F.col("tnsq").alias("q_tnsq"),
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # both rank windows read the joined frame — materialize it once
-    pairs = _materialize(
+    pairs = materialize(
         norms.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
             "q_id",
             F.col("vec_id").alias("n_id"),
@@ -2007,8 +2000,6 @@ def _beam_oracle() -> str:
 
 @_register("graph_ann_beam_search", _beam_oracle())
 def graph_ann_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     bucketed = _lsh_bucketed(spark, sf_dir)
     corpus = bucketed.select("vec_id", "e", "nsq")
 
@@ -2020,7 +2011,7 @@ def graph_ann_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # offline: K-out kNN graph inside LSH buckets (equi-join on sig)
     a, b = bucketed.alias("a"), bucketed.alias("b")
     edge_w = W.partitionBy("src").orderBy(F.desc("ecos"), F.asc("dst"))
-    edges = _materialize(
+    edges = materialize(
         a.join(
             b,
             (F.col("a.sig") == F.col("b.sig"))
@@ -2085,7 +2076,7 @@ def graph_ann_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # frontier stays tiny (NQ×B rows); localCheckpoint/persist keeps
         # the per-round plan shallow instead of R-deep
-        frontier = _materialize(
+        frontier = materialize(
             scored.withColumn("rnk", F.row_number().over(beam_w))
             .filter(F.col("rnk") <= _BEAM_B)
             .select("q_id", "node")
@@ -2198,8 +2189,6 @@ def graph_ann_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ann_recall_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     assigned = _ivf_assigned(spark, sf_dir)
     codes = _pq_codes(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2225,7 +2214,7 @@ def ann_recall_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.sqrt(F.col("nsq").cast("double"))
     )
     w_cos = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("n_id"))
-    exact3 = _materialize(
+    exact3 = materialize(
         assigned.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
         .select("q_id", F.col("vec_id").alias("n_id"), cosine.alias("cosine"))
         .withColumn("rnk", F.row_number().over(w_cos))
@@ -2267,7 +2256,7 @@ def ann_recall_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("vec_id") != F.col("q_id")),
     ).select("q_id", "probe_rank", F.col("vec_id").alias("n_id"))
     dtab = dtab.withColumnRenamed("q_id", "dq_id")
-    adc = _materialize(
+    adc = materialize(
         cand.join(codes, cand.n_id == codes.vec_id)
         .join(
             F.broadcast(dtab),
@@ -2375,7 +2364,6 @@ def incremental_embedding_neardup(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from iceberg_loader_spark.operators.dedup import (
-        _materialize,
         _persisted_index,
     )
 
@@ -2415,7 +2403,7 @@ def incremental_embedding_neardup(
         "is_new", F.lit(0)
     )
     new_sigs = signed(inc).withColumn("is_new", F.lit(1))
-    idx = _materialize(hist_idx.unionByName(new_sigs))
+    idx = materialize(hist_idx.unionByName(new_sigs))
     new_idx = idx.filter(F.col("is_new") == 1)
     lo_first = F.col("a.vec_id") < F.col("b.vec_id")
     cand = (
@@ -2583,20 +2571,16 @@ def _register_ann_recall_audits() -> None:
 
     @_register("ann_recall_lsh", lsh_oracle)
     def ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from iceberg_loader_spark.operators.dedup import _materialize
-
         approx3 = ann_lsh_cosine(spark, sf_dir).select("q_id", "n_id")
         return _recall_frame(
-            _materialize(_exact3(spark, sf_dir, 20)), approx3
+            materialize(_exact3(spark, sf_dir, 20)), approx3
         )
 
     @_register("ann_recall_graph", graph_oracle)
     def ann_recall_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from iceberg_loader_spark.operators.dedup import _materialize
-
         approx3 = graph_ann_beam_search(spark, sf_dir).select("q_id", "n_id")
         return _recall_frame(
-            _materialize(_exact3(spark, sf_dir, _BEAM_NQ)), approx3
+            materialize(_exact3(spark, sf_dir, _BEAM_NQ)), approx3
         )
 
 
@@ -2744,11 +2728,10 @@ def ivf_staleness_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer recipe trained on the full corpus vs only the historical
     half — the measured retrain-or-not decision for incremental IVF
     index maintenance."""
-    from iceberg_loader_spark.operators.dedup import _materialize as _mz
     from iceberg_loader_spark.operators.text import _bucket_col
 
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = _mz(
+    fp = materialize(
         emb.select(
             "vec_id", _fixed_point(F.col("embedding")).alias("e")
         ).withColumn(
@@ -2826,7 +2809,7 @@ def ivf_staleness_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("cluster").alias("c_id"), "c_e")
         )
 
-    exact3 = _mz(
+    exact3 = materialize(
         norms.filter(F.col("vec_id") < 20)
         .select(
             F.col("vec_id").alias("q_id"),
@@ -2863,8 +2846,8 @@ def ivf_staleness_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("full", fp.select("vec_id", "e")),
         ("hist", fp.filter(F.col("bucket") < 50).select("vec_id", "e")),
     ):
-        cents = _mz(_train(pool))
-        cells = _mz(
+        cents = materialize(_train(pool))
+        cells = materialize(
             _group_argmin(
                 fp.select("vec_id", "e").join(F.broadcast(cents)),
                 "vec_id",
@@ -3047,14 +3030,12 @@ def embedding_lsh_planes_tradeoff(
     mass as the corpus grows. Every exact-cosine evaluation is bounded
     to a fixed 30-anchor sample; the full-corpus candidate count is a
     narrow sig-only join."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = _materialize(
+    fp = materialize(
         emb.select("vec_id", _fixed_point(F.col("embedding")).alias("e"))
         .withColumn("nsq", _dot(F.col("e"), F.col("e")))
     )
-    anchors = _materialize(
+    anchors = materialize(
         fp.filter(F.col("vec_id") % _LSH_ANCHOR_MOD == 0)
         .orderBy("vec_id")
         .limit(_LSH_N_ANCHORS)
@@ -3087,7 +3068,7 @@ def embedding_lsh_planes_tradeoff(
             _dot(F.col("e"), F.col("p_e")) >= 0,
             F.expr("shiftleft(cast(1 as bigint), cast(plane_id as int))"),
         ).otherwise(F.lit(0).cast("bigint"))
-        sigs = _materialize(
+        sigs = materialize(
             fp.join(F.broadcast(planes))
             .groupBy("vec_id")
             .agg(F.sum(bit).alias("sig"))
@@ -3261,14 +3242,12 @@ def embedding_lsh_ortables_tradeoff(
     for full-corpus candidate volume and anchored confirmation/recall
     against the exact cosine truth. T=1 equals the plane-count
     tradeoff's P=6 row by construction."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     emb = load_table(spark, sf_dir, "embeddings")
-    fp = _materialize(
+    fp = materialize(
         emb.select("vec_id", _fixed_point(F.col("embedding")).alias("e"))
         .withColumn("nsq", _dot(F.col("e"), F.col("e")))
     )
-    anchors = _materialize(
+    anchors = materialize(
         fp.filter(F.col("vec_id") % _LSH_ANCHOR_MOD == 0)
         .orderBy("vec_id")
         .limit(_LSH_N_ANCHORS)
@@ -3306,7 +3285,7 @@ def embedding_lsh_ortables_tradeoff(
             F.expr("shiftleft(cast(1 as bigint), cast(plane_id as int))"),
         ).otherwise(F.lit(0).cast("bigint"))
         sigs_by_t.append(
-            _materialize(
+            materialize(
                 fp.join(F.broadcast(planes))
                 .groupBy("vec_id")
                 .agg(F.sum(bit).alias("sig"))
@@ -3468,16 +3447,14 @@ def embedding_lsh_adaptive_recall(
     the production embedding_neardup_lsh operator runs at this scale —
     the measured cost of adaptivity. Exact-cosine work is bounded to the
     fixed 30-anchor sample; the full-corpus count is sig-only."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     emb = load_table(spark, sf_dir, "embeddings")
     n_corpus = emb.count()
     p, t = _adaptive_lsh_params(n_corpus)
-    fp = _materialize(
+    fp = materialize(
         emb.select("vec_id", _fixed_point(F.col("embedding")).alias("e"))
         .withColumn("nsq", _dot(F.col("e"), F.col("e")))
     )
-    anchors = _materialize(
+    anchors = materialize(
         fp.filter(F.col("vec_id") % _LSH_ANCHOR_MOD == 0)
         .orderBy("vec_id")
         .limit(_LSH_N_ANCHORS)
@@ -3511,7 +3488,7 @@ def embedding_lsh_adaptive_recall(
         _dot(F.col("e"), F.col("p_e")) >= 0,
         F.expr("shiftleft(cast(1 as bigint), cast(bit_pos as int))"),
     ).otherwise(F.lit(0).cast("bigint"))
-    sigs = _materialize(
+    sigs = materialize(
         fp.join(F.broadcast(planes))
         .groupBy("vec_id", "table_id")
         .agg(F.sum(bit).alias("sig"))

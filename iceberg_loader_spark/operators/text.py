@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from iceberg_loader_spark.operators.dedup import _token_rows
 from iceberg_loader_spark.sources.tables import load_table
+from iceberg_loader_spark.tables.materialize import materialize
 
 QUERIES = {}
 ORACLES = {}
@@ -594,11 +595,10 @@ def repetition_filter_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # g feeds the corpus totals AND the weight join — materialize so the
     # documents aggregate runs once
-    g = _materialize(
+    g = materialize(
         docs.groupBy("source", "lang").agg(
             F.count("*").alias("n_docs"),
             F.sum("n_chars").alias("n_chars_total"),
@@ -677,8 +677,6 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tfidf_top5_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     docs = load_table(spark, sf_dir, "documents")
     toks = _token_rows(docs).select("doc_id", "tok")
     # tf is read twice (df derivation + the scoring join) — materialize so
@@ -686,7 +684,7 @@ def tfidf_top5_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf already has one row per (doc, tok), so COUNT(*) per tok IS the
     # document frequency, and the second shuffle carries the aggregated
     # frame instead of re-exploding every token occurrence.
-    tf = _materialize(
+    tf = materialize(
         toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     )
     df = tf.groupBy("tok").agg(F.count("*").alias("df"))
@@ -758,11 +756,10 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text") * 10
         + F.floor((stop_hits * 1000) / n_words).cast("bigint")
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # scored feeds both the threshold aggregate and the gate join —
     # materialize so the text scoring pass runs once, not twice
-    scored = _materialize(
+    scored = materialize(
         docs.select("doc_id", "lang", score.alias("score_fp"))
     )
     thresholds = scored.groupBy("lang").agg(
@@ -1086,12 +1083,10 @@ def token_diversity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def bigram_coverage_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     docs = load_table(spark, sf_dir, "documents")
     ts = F.filter(F.split(F.lower("text"), " "), lambda t: t != "")
     toks = docs.select("doc_id", ts.alias("ts"))
-    bigrams = _materialize(
+    bigrams = materialize(
         toks.select(
             "doc_id",
             F.explode(
@@ -1194,8 +1189,6 @@ _DSIR_BUCKETS = 256
     """,
 )
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     docs = load_table(spark, sf_dir, "documents")
     ts = F.filter(F.split(F.lower("text"), " "), lambda t: t != "")
     toks = docs.select("doc_id", "lang", ts.alias("ts"))
@@ -1206,7 +1199,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grams feeds both the bucket model and the per-doc scorer —
     # materialize the exploded frame once (same trade unigram_rarity
     # makes; at 100 TB swap for an intermediate table or recompute).
-    grams = _materialize(
+    grams = materialize(
         toks.filter(F.size("ts") >= 2)
         .select(
             "doc_id",
@@ -1315,15 +1308,13 @@ def pmi_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 adjacent-bigram collocations by integer-exact lift
     (monotone in PMI). Reference has no text analytics; this extends the
     B27 family with the classic collocation-mining shape."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     docs = load_table(spark, sf_dir, "documents")
     ts = F.filter(F.split(F.lower("text"), " "), lambda t: t != "")
-    toks = _materialize(docs.select(ts.alias("ts")))  # uni + bi read it
+    toks = materialize(docs.select(ts.alias("ts")))  # uni + bi read it
     uni = toks.select(F.explode("ts").alias("tok"))
-    ucnt = _materialize(uni.groupBy("tok").agg(F.count("*").alias("c")))
+    ucnt = materialize(uni.groupBy("tok").agg(F.count("*").alias("c")))
     utot = ucnt.agg(F.sum("c").alias("n_uni"))
-    bi = _materialize(
+    bi = materialize(
         toks.filter(F.size("ts") >= 2).select(
             F.explode(
                 F.transform(
@@ -1446,10 +1437,8 @@ def ttr_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-duplicate share per source (corpus-wide hash collisions)."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     docs = load_table(spark, sf_dir, "documents")
-    fps = _materialize(
+    fps = materialize(
         docs.select("source", F.md5("text").alias("fp"))
     )  # read by both the count model and the join probe
     cnt = fps.groupBy("fp").agg(F.count("*").alias("n"))
@@ -1924,10 +1913,8 @@ def _bpe_vocab_frames(
 ) -> tuple[DataFrame, DataFrame]:
     """(wsrc, vocab): per-(source, word) counts and the global
     (tok, freq, sym) training vocabulary, both materialized."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     docs = load_table(spark, sf_dir, "documents")
-    wsrc = _materialize(
+    wsrc = materialize(
         docs.select(
             "source",
             F.explode(
@@ -1943,7 +1930,7 @@ def _bpe_vocab_frames(
         .groupBy("source", "tok")
         .agg(F.count("*").alias("freq"))
     )
-    vocab = _materialize(
+    vocab = materialize(
         wsrc.groupBy("tok")
         .agg(F.sum("freq").alias("freq"))
         .select(
@@ -1973,8 +1960,6 @@ def _bpe_rounds(
     round's merge — callers that only consume the merge table never pay
     for the final vocab rewrite; they get the second-to-last vocab back.
     """
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     rounds = _BPE_ROUNDS if n_rounds is None else n_rounds
 
     def _pairs(w: DataFrame) -> DataFrame:
@@ -1994,13 +1979,13 @@ def _bpe_rounds(
     merges: list[DataFrame] = []
     words = vocab
     for r in range(1, rounds + 1):
-        top = _materialize(
+        top = materialize(
             _pairs(words).orderBy(F.desc("cnt"), F.asc("a"), F.asc("b")).limit(1)
         )
         merges.append(top)
         if r == rounds and not apply_last:
             break
-        words = _materialize(
+        words = materialize(
             words.join(F.broadcast(top.select("a", "b"))).select(
                 "tok",
                 "freq",
@@ -2240,13 +2225,11 @@ def source_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dataset_card_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(
         F.filter(F.split(F.lower("text"), " "), lambda t: t != "")
     ).cast("bigint")
-    per_doc = _materialize(
+    per_doc = materialize(
         docs.select(
             "doc_id",
             "source",

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from iceberg_loader_spark.sources.tables import load_table
+from iceberg_loader_spark.tables.materialize import materialize
 
 QUERIES = {}
 ORACLES = {}
@@ -89,9 +90,8 @@ def gapfill_hourly_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
     ).agg(F.count("*").alias("n_events"), F.sum(cents).alias("sum_cents"))
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    hourly = _materialize(hourly)  # read by spine, types, and the join
+    hourly = materialize(hourly)  # read by spine, types, and the join
     spine = (
         hourly.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
         .select(
@@ -164,9 +164,8 @@ def cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_weeks = ev.select(
         "user_id", week.alias("week")
     ).distinct()
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    user_weeks = _materialize(user_weeks)  # feeds cohorts AND the join
+    user_weeks = materialize(user_weeks)  # feeds cohorts AND the join
     cohorts = user_weeks.groupBy("user_id").agg(
         F.min("week").alias("cohort_week")
     )
@@ -467,9 +466,8 @@ def gapfill_hourly_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
     ).agg(F.count("*").alias("n_events"), F.sum(cents).alias("sum_cents"))
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    hourly = _materialize(hourly)
+    hourly = materialize(hourly)
     spine = (
         hourly.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
         .select(
@@ -630,9 +628,8 @@ def rolling_7d_distinct_users(
         )
         .distinct()
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    ud = _materialize(ud)  # read by bounds and the interval explode
+    ud = materialize(ud)  # read by bounds and the interval explode
     w = W.partitionBy("user_id").orderBy("d")
     iv = ud.select(
         "d",
@@ -729,9 +726,8 @@ def cusum_shift_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = ev.groupBy(
         "event_type", F.date_trunc("hour", "ts").alias("h")
     ).agg(F.sum(cents).alias("s"), F.count("*").alias("n"))
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    hourly = _materialize(hourly)  # read by both x and ref
+    hourly = materialize(hourly)  # read by both x and ref
     x = hourly.select(
         "event_type", "h", F.expr("s div n").alias("x_cents")
     )
@@ -1034,9 +1030,8 @@ def winsorize_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    x = _materialize(x)  # read by the ranking and the final aggregate
+    x = materialize(x)  # read by the ranking and the final aggregate
     wr = W.partitionBy("event_type").orderBy("c")
     wn = W.partitionBy("event_type")
     ranked = x.select(
@@ -1128,9 +1123,8 @@ def new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from iceberg_loader_spark.operators.dedup import _materialize
 
-    ud = _materialize(ud)  # read by first_day and the join
+    ud = materialize(ud)  # read by first_day and the join
     first_day = ud.groupBy("user_id").agg(F.min("d").alias("d0"))
     return (
         ud.join(first_day, "user_id")
@@ -1278,13 +1272,11 @@ def ks_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned two-level prefix scan — no unpartitioned window. The oracle
     replays the ECDF with a plain global window (same rows; DuckDB is
     single-node so the physical shape doesn't matter there)."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
     cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    vals = _materialize(
+    vals = materialize(
         ev.groupBy(cents.alias("cents")).agg(
             F.count_if(F.col("event_type") == "view").alias("c1"),
             F.count_if(F.col("event_type") == "purchase").alias("c2"),
@@ -1442,10 +1434,8 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def event_type_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise exact Jaccard overlap of per-event-type user sets."""
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     ev = load_table(spark, sf_dir, "events")
-    tu = _materialize(
+    tu = materialize(
         ev.select("event_type", "user_id").distinct()
     )  # read by sizes and both join legs
     sizes = tu.groupBy("event_type").agg(F.count("*").alias("n"))
@@ -1915,13 +1905,11 @@ def chi2_type_hour_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mannwhitney_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from iceberg_loader_spark.operators.dedup import _materialize
-
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
     cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    vals = _materialize(
+    vals = materialize(
         ev.groupBy(cents.alias("cents"))
         .agg(
             F.count_if(F.col("event_type") == "view").alias("c1"),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from iceberg_loader_spark.sources.tables import load_table
+from iceberg_loader_spark.tables.materialize import materialize
 
 QUERIES = {}
 ORACLES = {}
@@ -777,12 +778,11 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     sup = load_table(spark, sf_dir, "supplier")
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # (l_orderkey, l_suppkey, late) feeds the semi, anti AND outer side of
     # the self-joins — materialize so the lineitem⋈orders join runs once,
     # not three times (Catalyst can't share the aliased subtrees pre-AQE)
-    l = _materialize(
+    l = materialize(
         li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(
             "l_orderkey",
@@ -915,11 +915,10 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     sup = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # pos feeds BOTH the scalar total and the threshold filter join —
     # materialize so the lineitem join+aggregate runs once, not twice
-    pos = _materialize(
+    pos = materialize(
         li.join(F.broadcast(sup), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(nation), F.col("n_nationkey") == F.col("s_nationkey"))
         .groupBy("n_name", "l_partkey")
@@ -980,11 +979,10 @@ def q20_excess_share_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     sup = load_table(spark, sf_dir, "supplier")
-    from iceberg_loader_spark.operators.dedup import _materialize
 
     # shipped feeds BOTH the per-part totals and the share join —
     # materialize so the lineitem aggregate runs once
-    shipped = _materialize(
+    shipped = materialize(
         li.groupBy("l_partkey", "l_suppkey").agg(
             F.sum(_dec("l_quantity")).alias("supp_qty")
         )

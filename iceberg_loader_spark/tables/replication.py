@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from iceberg_loader_spark.tables.materialize import materialize, release_blocks
 from iceberg_loader_spark.tables.table import Table
 
 
@@ -49,8 +50,6 @@ def apply_changelog(
         # the insert is the surviving state
         F.when(F.col("_change_type") == "insert", 0).otherwise(1),
     )
-    from iceberg_loader_spark.tables.materialize import materialize
-
     # Materialize AND truncate lineage (see tables/materialize.py). The
     # changelog plan compounds per commit (each changes() leg is an
     # exceptAll over that commit's churned files), and the apply legs
@@ -59,7 +58,7 @@ def apply_changelog(
     # task binary, and a long commit range deserializes MBs of nested
     # closures PER TASK (observed: a 4.9 MiB task binary OOMing a
     # default-1g-heap session).
-    winners, _release = materialize(
+    winners = materialize(
         changes.withColumn("_rnk", F.row_number().over(w))
         .filter(F.col("_rnk") == 1)
         .drop("_rnk")
@@ -87,5 +86,5 @@ def apply_changelog(
             ).select(*key_cols)
             target.delete_by_keys(spark, deletes, key_cols)
     finally:
-        _release()
+        release_blocks(winners)
     return {"upserted_keys": n_upserts, "deleted_keys": n_deletes}

@@ -159,6 +159,33 @@ def _stamp_sequence(entries, version: int) -> None:
         e.sequence = version
 
 
+def _eq_delete_ops(
+    key_entries: list[DataFile],
+    key_cols: list[str],
+    version: int,
+    probes: dict[str, list[list[int]]],
+) -> list[dict]:
+    """Equality-delete records for freshly written key files, at the
+    sequence ``version`` they commit at; ``probes`` is
+    ``Table._key_probe_hashes`` of the same files."""
+    return [
+        {
+            "path": e.path,
+            "equality_cols": list(key_cols),
+            "sequence": version,
+            "rows": e.rows,
+            "bytes": e.bytes,
+            # key min/max from the parquet footer: lets readers skip
+            # the anti-join for key-range-disjoint files
+            "stats": {
+                c: e.stats[c] for c in key_cols if e.stats.get(c) is not None
+            },
+            **({"probe": probes[e.path]} if e.path in probes else {}),
+        }
+        for e in key_entries
+    ]
+
+
 # ---- what a write derives from the head snapshot it resolved once --------
 
 
@@ -1468,28 +1495,9 @@ class Table:
         def build(parent: Snapshot) -> Snapshot:
             v = parent.version + 1
             _stamp_sequence(entries, v)
-            dels = parent.delete_files + [
-                {
-                    "path": e.path,
-                    "equality_cols": list(join_cols),
-                    "sequence": v,
-                    "rows": e.rows,
-                    "bytes": e.bytes,
-                    # key min/max from the parquet footer: lets readers
-                    # skip the anti-join for key-range-disjoint files
-                    "stats": {
-                        c: e.stats[c]
-                        for c in join_cols
-                        if e.stats.get(c) is not None
-                    },
-                    **(
-                        {"probe": probes[e.path]}
-                        if e.path in probes
-                        else {}
-                    ),
-                }
-                for e in key_entries
-            ]
+            dels = parent.delete_files + _eq_delete_ops(
+                key_entries, join_cols, v, probes
+            )
             return new_snapshot(
                 parent,
                 "merge",
@@ -1527,27 +1535,9 @@ class Table:
         probes = self._key_probe_hashes(key_entries, key_cols)
 
         def build(parent: Snapshot) -> Snapshot:
-            v = parent.version + 1
-            dels = parent.delete_files + [
-                {
-                    "path": e.path,
-                    "equality_cols": list(key_cols),
-                    "sequence": v,
-                    "rows": e.rows,
-                    "bytes": e.bytes,
-                    "stats": {
-                        c: e.stats[c]
-                        for c in key_cols
-                        if e.stats.get(c) is not None
-                    },
-                    **(
-                        {"probe": probes[e.path]}
-                        if probes.get(e.path) is not None
-                        else {}
-                    ),
-                }
-                for e in key_entries
-            ]
+            dels = parent.delete_files + _eq_delete_ops(
+                key_entries, key_cols, parent.version + 1, probes
+            )
             return new_snapshot(
                 parent,
                 "delete",

@@ -59,11 +59,11 @@ def test_bad_load_ts_col_rejected():
 def test_materialize_mode_env_validation():
     """SPARK_GRAFT_MATERIALIZE typos must fail loudly, not silently fall
     back to the executor-loss-unsafe localCheckpoint mode."""
-    from iceberg_loader_spark.operators import dedup
+    from iceberg_loader_spark.tables.materialize import _validated_mode
 
-    assert dedup._validated_mode("persist") == "persist"
-    assert dedup._validated_mode("local_checkpoint") == "local_checkpoint"
+    assert _validated_mode("persist") == "persist"
+    assert _validated_mode("local_checkpoint") == "local_checkpoint"
     with pytest.raises(ValueError, match="unknown materialize mode"):
-        dedup._validated_mode("PERSIST")
+        _validated_mode("PERSIST")
     with pytest.raises(ValueError, match="unknown materialize mode"):
-        dedup._validated_mode("presist")
+        _validated_mode("presist")

@@ -62,7 +62,8 @@ def test_output_schemas_are_canonicalizable(spark):
     query."""
     from pyspark.sql import types as T
 
-    from iceberg_loader_spark.operators import all_queries, dedup
+    from iceberg_loader_spark.operators import all_queries
+    from iceberg_loader_spark.tables.materialize import no_materialize
 
     banned = (
         T.ArrayType,
@@ -71,10 +72,8 @@ def test_output_schemas_are_canonicalizable(spark):
         T.BinaryType,
         T.DateType,
     )
-    orig = dedup._materialize
-    dedup._materialize = lambda df: df
-    try:
-        offenders = {}
+    offenders = {}
+    with no_materialize():
         for name, fn in all_queries().items():
             schema = fn(spark, SF_SMOKE).schema
             bad = [
@@ -84,8 +83,6 @@ def test_output_schemas_are_canonicalizable(spark):
             ]
             if bad:
                 offenders[name] = bad
-    finally:
-        dedup._materialize = orig
     assert offenders == {}, (
         f"non-canonicalizable output columns: {offenders}"
     )

@@ -8,6 +8,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 from iceberg_loader_spark.sources.tables import load_table
+from iceberg_loader_spark.tables.materialize import no_materialize
 from tests.conftest import SF_SMOKE
 
 QUERIES = entrymod.queries()
@@ -118,14 +119,8 @@ def test_tfidf_df_from_aggregated_tf(spark):
     frame, not re-explode raw tokens: with materialization disabled the
     logical plan shows ONE posexplode generator feeding both branches'
     aggregates."""
-    from iceberg_loader_spark.operators import dedup
-
-    orig = dedup._materialize
-    dedup._materialize = lambda df: df
-    try:
+    with no_materialize():
         plan = plan_of(QUERIES["tfidf_top5_per_doc"](spark, SF_SMOKE))
-    finally:
-        dedup._materialize = orig
     # raw-token explodes: one per read of `toks`; tf is read twice but
     # df's aggregate consumes tf, so the explode count stays at 2 (the
     # two tf reads), NOT 3 (a third raw-token scan for df)
@@ -150,17 +145,11 @@ def test_pack_sequences_windows_are_per_source(spark):
 def test_ngram_jaccard_hot_gram_cap_in_plan(spark):
     """The document-frequency cap must appear as a broadcast LEFT ANTI
     join against the (tiny) hot-gram set BEFORE the pair self-join —
-    the 100 TB skew guard for stopword bigrams. ``_materialize``
+    the 100 TB skew guard for stopword bigrams. ``materialize``
     (localCheckpoint) truncates lineage, so inspect the logical pipeline
     with materialization disabled."""
-    from iceberg_loader_spark.operators import dedup
-
-    orig = dedup._materialize
-    dedup._materialize = lambda df: df
-    try:
+    with no_materialize():
         plan = plan_of(QUERIES["ngram_jaccard_pairs"](spark, SF_SMOKE))
-    finally:
-        dedup._materialize = orig
     assert "LeftAnti" in plan, "hot-gram cap (anti join) missing from plan"
     # the hot set is broadcast, never shuffled
     anti_idx = plan.index("LeftAnti")
@@ -275,14 +264,12 @@ def test_fingerprint_hash_builds_spread_below_the_transform(spark):
     single-row-group file (this testdata; a skewed input at scale) the
     map-side-tokenize shape otherwise serializes the whole fingerprint
     pipeline (VERDICT r10 §1). Assert on the declarative build plans
-    (materialize identity-patched, the plan_fingerprint convention):
+    (inside ``no_materialize``, the plan_fingerprint convention):
     the exchange is present, and the only thing pushed below it is the
     cheap token-length gate — never an md5 recompute."""
     from iceberg_loader_spark.operators import dedup
 
-    orig = dedup._materialize
-    dedup._materialize = lambda df: df
-    try:
+    with no_materialize():
         builds = {
             "winnowing": dedup._winnowing_pairs_build(spark, SF_SMOKE),
             "minhash_sigs": dedup._minhash_sig_cols(
@@ -301,5 +288,3 @@ def test_fingerprint_hash_builds_spread_below_the_transform(spark):
             assert "md5" not in scan_part.split("Exchange")[0], (
                 f"{name}: md5 recompute pushed into the scan fragment"
             )
-    finally:
-        dedup._materialize = orig

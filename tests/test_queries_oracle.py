@@ -94,17 +94,19 @@ def test_oracle_match(spark, duck, name):
         assert len(a) > 0, "vacuous pass: 0 rows from both engines"
 
 
-def test_minhash_oracle_match_under_persist_materialize(spark, duck):
+def test_minhash_oracle_match_under_persist_materialize(
+    spark, duck, monkeypatch
+):
     """The cluster-scale persist materialize mode produces identical
-    results to the default localCheckpoint mode (flag-switched seam,
-    operators/dedup.py set_materialize_mode)."""
-    from iceberg_loader_spark.operators import dedup
+    results to the default localCheckpoint mode (the mode chosen once by
+    SPARK_GRAFT_MATERIALIZE in tables/materialize.py)."""
+    import iceberg_loader_spark.tables.materialize as mz
 
-    dedup.set_materialize_mode("persist")
+    monkeypatch.setattr(mz, "_MODE", "persist")
     try:
         sdf = QUERIES["minhash_lsh_candidates"](spark, SF_SMOKE).toPandas()
     finally:
-        dedup.set_materialize_mode("local_checkpoint")
+        monkeypatch.undo()
         # the persist-mode frames live in the session CacheManager, and
         # Catalyst substitutes cached subtrees into every LATER plan of
         # the same fragments — leaking them changes other tests'

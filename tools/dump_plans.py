@@ -8,13 +8,13 @@ the judge checks plan-shape claims (Exchange counts, join strategies,
 PushedFilters) against these files, so they are captured from the same
 session shape the bench uses (``get_spark``).
 
-``--full`` identity-patches ``_materialize`` (the plan_fingerprint.py
-convention): localCheckpoint/persist truncate lineage and the shared
-artifacts hide their build pipelines behind a table scan, so the
-executed-shape dump bottoms out at ``Scan ExistingRDD`` exactly where
-the interesting build stages live (the r10 verdict's evidence gap).
-With the patch the dump shows the WHOLE declarative pipeline, including
-every exchange inside builds.
+``--full`` runs inside ``tables.materialize.no_materialize`` (the
+plan_fingerprint.py convention): localCheckpoint/persist truncate
+lineage and the shared artifacts hide their build pipelines behind a
+table scan, so the executed-shape dump bottoms out at ``Scan
+ExistingRDD`` exactly where the interesting build stages live (the r10
+verdict's evidence gap). With ``--full`` the dump shows the WHOLE
+declarative pipeline, including every exchange inside builds.
 """
 
 from __future__ import annotations
@@ -23,22 +23,23 @@ import io
 import os
 import sys
 import traceback
-from contextlib import redirect_stdout
+from contextlib import nullcontext, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from iceberg_loader_spark import get_spark  # noqa: E402
 from iceberg_loader_spark.operators import all_queries  # noqa: E402
+from iceberg_loader_spark.tables.materialize import (  # noqa: E402
+    no_materialize,
+)
 
 
 def main() -> None:
     round_dir, suffix = sys.argv[1], sys.argv[2]
     keys = sys.argv[3:]
-    if "--full" in keys:
+    full = "--full" in keys
+    if full:
         keys.remove("--full")
-        from iceberg_loader_spark.operators import dedup
-
-        dedup._materialize = lambda df: df
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -50,23 +51,24 @@ def main() -> None:
     qs = all_queries()
     if not keys:
         keys = list(qs)
-    for key in keys:
-        if key not in qs:
-            print(f"?? unknown key {key}", file=sys.stderr)
-            continue
-        path = os.path.join(out_root, f"{key}_{suffix}.txt")
-        try:
-            df = qs[key](spark, sf_dir)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            with open(path, "w") as f:
-                f.write(buf.getvalue())
-            print(f"ok {key}")
-        except Exception:
-            with open(path, "w") as f:
-                f.write("EXPLAIN FAILED\n" + traceback.format_exc())
-            print(f"FAIL {key}", file=sys.stderr)
+    with no_materialize() if full else nullcontext():
+        for key in keys:
+            if key not in qs:
+                print(f"?? unknown key {key}", file=sys.stderr)
+                continue
+            path = os.path.join(out_root, f"{key}_{suffix}.txt")
+            try:
+                df = qs[key](spark, sf_dir)
+                buf = io.StringIO()
+                with redirect_stdout(buf):
+                    df.explain("formatted")
+                with open(path, "w") as f:
+                    f.write(buf.getvalue())
+                print(f"ok {key}")
+            except Exception:
+                with open(path, "w") as f:
+                    f.write("EXPLAIN FAILED\n" + traceback.format_exc())
+                print(f"FAIL {key}", file=sys.stderr)
 
 
 if __name__ == "__main__":

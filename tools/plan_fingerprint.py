@@ -66,15 +66,14 @@ def fingerprint(plan: str) -> dict[str, int]:
 def compute_all(
     spark, sf_dir: str, only: set[str] | None = None
 ) -> dict[str, dict[str, int]]:
-    from iceberg_loader_spark.operators import all_queries, dedup
+    from iceberg_loader_spark.operators import all_queries
+    from iceberg_loader_spark.tables.materialize import no_materialize
 
-    orig = dedup._materialize
-    dedup._materialize = lambda df: df
     # fingerprints must be session-state-independent: Catalyst substitutes
     # any CacheManager entry (e.g. a persist()'d frame a previous caller
     # left behind) into matching plan subtrees, changing explain output
     spark.catalog.clearCache()
-    try:
+    with no_materialize():
         out = {}
         for name, fn in sorted(all_queries().items()):
             if only is not None and name not in only:
@@ -85,8 +84,6 @@ def compute_all(
             )
             out[name] = fingerprint(plan)
         return out
-    finally:
-        dedup._materialize = orig
 
 
 def main() -> int:
