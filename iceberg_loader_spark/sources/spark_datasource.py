@@ -40,12 +40,14 @@ Write path
 * ``mode("append")`` / ``mode("overwrite")`` on UNPARTITIONED tables
   (partitioned writes need the engine's transform evaluation — use
   ``Table.append``); auto-creates the table when the root has none.
-* executors stream Arrow batches straight to parquet files in a
-  per-write staging directory under the table root (zstd by default,
-  honoring ``write.parquet.compression-codec``); the driver commit
-  reads ONLY the files named in successful task commit messages (so
-  speculative/failed task leftovers are ignored and swept), builds
-  manifest entries with footer min/max stats, and commits through the
+* executors stream Arrow batches straight to parquet files in the
+  engine's per-write ``data/<uuid>/`` directory (``new_data_dir``), so
+  row lineage sees them like engine files (zstd by default, honoring
+  ``write.parquet.compression-codec``). Each task folds its writer's
+  returned metadata into the manifest entry (``data_file_entry``, the
+  engine's fold) and sends it in its commit message — the driver reads
+  no footer. It commits ONLY entries from successful task commit
+  messages (speculative/failed task leftovers are swept) through the
   table's optimistic CAS retry loop — a concurrent engine-side append
   and a connector write serialize cleanly.
 
@@ -130,27 +132,23 @@ def _table_root(options) -> str:
 
 def _resolve_snapshot(root: str, options):
     table = _open_table(root)
-    version = options.get("version")
-    tag = options.get("tag")
-    as_of = options.get("as_of_ms")
-    branch = options.get("branch")
-    if sum(x is not None for x in (version, tag, as_of, branch)) > 1:
-        raise ValueError(
-            "version, tag, as_of_ms and branch are mutually exclusive"
-        )
-    if branch is not None:
+    version, tag, as_of = (options.get(k) for k in ("version", "tag", "as_of_ms"))
+    if options.get("branch") is not None:
+        if any(x is not None for x in (version, tag, as_of)):
+            raise ValueError(
+                "version, tag, as_of_ms and branch are mutually exclusive"
+            )
         # branch refs share the data area; the branch chain's head is a
         # plain snapshot, so the scan path is identical. branch_version
         # is the schema()-pinned resolution (internal — set below), kept
         # separate from `version` because it indexes the BRANCH chain.
-        shadow = table.branch(branch)
-        bv = options.get("branch_version")
-        return shadow, shadow.snapshot(None if bv is None else int(bv))
-    if tag is not None:
-        return table, table.snapshot(table.resolve_tag(tag))
-    if as_of is not None:
-        return table, table.meta.snapshot_as_of(int(as_of))
-    return table, table.snapshot(None if version is None else int(version))
+        table = table.branch(options.get("branch"))
+        version = options.get("branch_version")
+    return table, table.resolve_ref(
+        None if version is None else int(version),
+        tag,
+        None if as_of is None else int(as_of),
+    )
 
 
 _FILTER_OPS = {
@@ -257,60 +255,6 @@ class SparkbergReaderNoPushdown(_SparkbergReaderBase):
 
 # ---- streaming tail --------------------------------------------------------
 
-# snapshots that change bytes/metadata but never rows — safe to skip in
-# an append-tail walk (same set Table.scan_incremental skips)
-_ROW_PRESERVING_OPS = {
-    "create",
-    "replace",
-    "evolve-schema",
-    "evolve-partition",
-    "set-ref",
-}
-
-
-def _appended_files(table, from_v: int, to_v: int) -> list:
-    """Data files ADDED by append snapshots in (from_v, to_v] — the
-    file-diff walk of Table.scan_incremental, metadata-only."""
-    out = []
-    versions = sorted(
-        v for v in table.meta.list_versions() if from_v < v <= to_v
-    )
-    for v in versions:
-        snap = table.snapshot(v)
-        if snap.operation in _ROW_PRESERVING_OPS:
-            continue
-        if snap.operation == "branch-fork":
-            # a branch chain's seed: its files ARE the backfill batch
-            # (its parent_version points into MAIN's chain, which this
-            # handle cannot resolve — and must not: the fork content is
-            # exactly what a from-zero branch tail should emit first)
-            out.extend(snap.files)
-            continue
-        if snap.operation != "append":
-            raise ValueError(
-                f"sparkberg stream reads an append-only tail; snapshot "
-                f"{v} is '{snap.operation}' — consume row-level changes "
-                f"via Table.changes (CDC) instead"
-            )
-        if snap.parent_version is None:
-            parent_paths: set[str] = set()
-        else:
-            try:
-                parent_paths = {
-                    f.path
-                    for f in table.snapshot(snap.parent_version).files
-                }
-            except FileNotFoundError:
-                raise ValueError(
-                    f"sparkberg stream: history expired — parent manifest "
-                    f"v{snap.parent_version} of snapshot {v} was removed by "
-                    f"expire_snapshots; restart the stream from a retained "
-                    f"snapshot (starting_version >= {v}) or 'latest'"
-                ) from None
-        out.extend(f for f in snap.files if f.path not in parent_paths)
-    return out
-
-
 class SparkbergStreamReader(DataSourceStreamReader):
     """``spark.readStream.format("sparkberg")`` — the table's append log
     as a Structured Streaming source. Offsets are SNAPSHOT VERSIONS:
@@ -357,8 +301,7 @@ class SparkbergStreamReader(DataSourceStreamReader):
         return {"version": self._table().meta.current_version()}
 
     def partitions(self, start: dict, end: dict):
-        table = self._table()
-        files = _appended_files(table, start["version"], end["version"])
+        files = self._table().appended_files(start["version"], end["version"])
         return [
             _FilePartition(os.path.join(self._root, f.path)) for f in files
         ]
@@ -372,21 +315,16 @@ class SparkbergStreamReader(DataSourceStreamReader):
 
 @dataclass
 class _WriteMessage(WriterCommitMessage):
-    rel_paths: tuple  # files THIS successful task wrote (root-relative)
+    entries: tuple  # manifest entries of the files THIS successful task wrote
 
 
-def _entry_for_file(root: str, rel_path: str):
-    """Footer-read one written file into a manifest entry — the SAME
-    fold the engine write path uses (tables/table.py:entry_from_footer),
-    so connector- and engine-written files carry identical stats."""
-    from iceberg_loader_spark.tables.table import entry_from_footer
-
-    return entry_from_footer(os.path.join(root, rel_path), rel_path)
+def _entries(messages) -> list:
+    return [e for m in messages if m is not None for e in m.entries]
 
 
 class SparkbergWriter(DataSourceArrowWriter):
     def __init__(self, schema: T.StructType, options, overwrite: bool):
-        from iceberg_loader_spark.tables.table import _codec, _schema
+        from iceberg_loader_spark.tables.table import _codec, _schema, new_data_dir
 
         self._overwrite = overwrite
         # .option("branch", name): commits land on the branch's metadata
@@ -416,7 +354,7 @@ class SparkbergWriter(DataSourceArrowWriter):
                 f"append would poison every later read)"
             )
         self._codec = _codec(head)
-        self._staging_rel = f"data/ds-{uuid.uuid4().hex}"
+        self._staging_rel = new_data_dir()
 
     def _commit_table(self):
         """The table handle commits go through — the branch chain when
@@ -440,6 +378,8 @@ class SparkbergWriter(DataSourceArrowWriter):
     def write(self, iterator) -> _WriteMessage:
         import pyarrow.parquet as pq
 
+        from iceberg_loader_spark.tables.table import data_file_entry
+
         # stream batch-by-batch into the parquet writer — peak memory is
         # one Arrow batch, never the whole task partition
         writer = None
@@ -461,8 +401,12 @@ class SparkbergWriter(DataSourceArrowWriter):
             if writer is not None:
                 writer.close()
         if rows == 0:
-            return _WriteMessage(rel_paths=())
-        return _WriteMessage(rel_paths=(rel,))
+            return _WriteMessage(entries=())
+        # the closed writer's metadata IS the footer it just wrote
+        entry = data_file_entry(
+            writer.writer.metadata, rel, os.path.getsize(abs_path)
+        )
+        return _WriteMessage(entries=(entry,))
 
     def commit(self, messages) -> None:
         from iceberg_loader_spark.tables.table import (
@@ -470,13 +414,10 @@ class SparkbergWriter(DataSourceArrowWriter):
             _overwrite_build,
         )
 
-        committed = [
-            p for m in messages if m is not None for p in m.rel_paths
-        ]
-        entries = [_entry_for_file(self._root, p) for p in committed]
+        entries = _entries(messages)
         build = _overwrite_build if self._overwrite else _append_build
         self._commit_table()._commit_with_retry(build(entries))
-        self._sweep_staging(keep={p for p in committed})
+        self._sweep_staging(keep={e.path for e in entries})
 
     def abort(self, messages) -> None:
         shutil.rmtree(
@@ -505,16 +446,16 @@ class SparkbergStreamWriter(SparkbergWriter, DataSourceStreamArrowWriter):
 
     Exactly-once recipe (same as the foreachBatch sink): the micro-batch
     id is committed into the table's properties ATOMICALLY with the data
-    snapshot; ``commit`` compares the incoming batch id against the last
-    committed marker and a replayed batch deletes its own staged files
-    and commits nothing. Task files are staged under unique names, so
+    snapshot; every commit attempt compares it against its parent's
+    marker, and a replayed batch (even one a concurrent run committed
+    first) deletes its own staged files and commits nothing. Task files are staged under unique names, so
     speculative/failed tasks never collide; files not referenced by any
     commit message are orphans the maintenance sweep removes.
 
     Scale: identical write path to the batch writer — executors stream
-    Arrow batches straight into parquet (one batch in memory per task),
-    the driver folds footers into manifest entries, and the marker is
-    O(1) table-property metadata per micro-batch.
+    Arrow batches straight into parquet (one batch in memory per task)
+    and return each file's manifest entry, and the marker is O(1)
+    table-property metadata per micro-batch.
     """
 
     def __init__(self, schema: T.StructType, options):
@@ -529,37 +470,25 @@ class SparkbergStreamWriter(SparkbergWriter, DataSourceStreamArrowWriter):
         )
 
     def commit(self, messages, batchId) -> None:  # type: ignore[override]
-        from iceberg_loader_spark.tables.table import _append_build
-
-        committed = [
-            p for m in messages if m is not None for p in m.rel_paths
-        ]
-        table = self._commit_table()
-        last = int(table.properties().get(self._MARKER_PROP, "-1"))
-        if batchId <= last:
-            # replayed micro-batch: its rows are already in the table —
-            # drop the duplicate staged files, commit nothing
-            for rel in committed:
-                try:
-                    os.unlink(os.path.join(self._root, rel))
-                except OSError:
-                    pass
-            return
-        entries = [_entry_for_file(self._root, p) for p in committed]
-        table._commit_with_retry(
-            _append_build(entries, {self._MARKER_PROP: str(batchId)})
+        from iceberg_loader_spark.tables.table import (
+            _marked_append_build,
+            _NothingToCommit,
+            discard_files,
         )
 
-    def abort(self, messages, batchId) -> None:  # type: ignore[override]
-        for m in messages:
-            if m is None:
-                continue
-            for rel in m.rel_paths:
-                try:
-                    os.unlink(os.path.join(self._root, rel))
-                except OSError:
-                    pass
+        entries = _entries(messages)
+        try:
+            self._commit_table()._commit_with_retry(
+                _marked_append_build(entries, self._MARKER_PROP, batchId)
+            )
+        except _NothingToCommit:
+            # replayed micro-batch: its rows are already in the table
+            discard_files(self._root, [e.path for e in entries])
 
+    def abort(self, messages, batchId) -> None:  # type: ignore[override]
+        from iceberg_loader_spark.tables.table import discard_files
+
+        discard_files(self._root, [e.path for e in _entries(messages)])
 
 
 class SparkbergDataSource(DataSource):

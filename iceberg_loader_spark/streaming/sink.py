@@ -8,14 +8,15 @@ SAME micro-batch (same ``batch_id``) is re-executed. A plain
 :class:`IdempotentTableSink` closes the gap with the standard
 transactional-sink recipe (the same one Spark's DSv2 + Iceberg use): the
 batch id is committed into the table's properties ATOMICALLY with the
-data (one snapshot), and every sink invocation first compares the
-incoming ``batch_id`` against the last committed one — a replayed batch
-is detected and skipped, so each micro-batch lands exactly once no
-matter how many times the engine retries it.
+data (one snapshot), and every commit attempt compares the incoming
+``batch_id`` against its parent's marker — a replayed batch, even one a
+concurrent run committed first, is skipped and its staged files are
+deleted, so each micro-batch lands exactly once.
 
 Scale notes: the progress marker is one table property (O(1) metadata);
-the guard adds one metadata read per micro-batch and zero data-plane
-work. Distinct streams writing one table isolate via ``marker_key``.
+the guard reads only the commit's own parent, so a replay still pays
+its data write. Distinct streams writing one table isolate via
+``marker_key``.
 """
 
 from __future__ import annotations
@@ -26,7 +27,13 @@ from pyspark.sql import DataFrame
 
 from iceberg_loader_spark.tables.catalog import Warehouse
 from iceberg_loader_spark.tables.partitioning import PartitionField
-from iceberg_loader_spark.tables.table import Table
+from iceberg_loader_spark.tables.table import (
+    Table,
+    _marked_append_build,
+    _NothingToCommit,
+    _spec,
+    discard_files,
+)
 
 log = logging.getLogger(__name__)
 
@@ -62,17 +69,6 @@ class IdempotentTableSink:
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.warehouse.table_exists(self.identifier):
             table = self.warehouse.load_table(self.identifier)
-            last = int(table.properties().get(self.marker_prop, "-1"))
-            if batch_id <= last:
-                self.skipped_batches += 1
-                log.info(
-                    "skipping replayed micro-batch %d for %s "
-                    "(last committed: %d)",
-                    batch_id,
-                    self.identifier,
-                    last,
-                )
-                return
         else:
             table = Table.create(
                 self.warehouse,
@@ -81,9 +77,22 @@ class IdempotentTableSink:
                 partition_spec=self.partition_spec,
                 properties=self.properties,
             )
-        table.append(
-            batch_df, extra_properties={self.marker_prop: str(batch_id)}
-        )
+        head = table.snapshot()
+        entries = table._write_data_files(batch_df, _spec(head), head)
+        try:
+            table._commit_with_retry(
+                _marked_append_build(entries, self.marker_prop, batch_id)
+            )
+        except _NothingToCommit as done:
+            discard_files(table.root, [e.path for e in entries])
+            self.skipped_batches += 1
+            log.info(
+                "skipping replayed micro-batch %d for %s "
+                "(last committed: %s)",
+                batch_id,
+                self.identifier,
+                done.snapshot.properties.get(self.marker_prop),
+            )
 
 
 class FanOutSink:

@@ -7,6 +7,11 @@ micro-batch source: each ``next_batch`` returns exactly the rows
 committed since the last pulled version, via
 :meth:`~iceberg_loader_spark.tables.table.Table.scan_incremental` — so a
 consumer's cost per poll is proportional to the DELTA, never the table.
+The walk is the table's own append-log walk
+(:meth:`~iceberg_loader_spark.tables.table.Table.appended_files`, shared
+with the ``sparkberg`` stream source): row-preserving snapshots,
+``create`` included, are skipped, so tailing from version 0 (the
+default) delivers every appended row.
 Progress is an integer snapshot version: checkpointable, replayable
 (pass the same version again to re-read a batch), and composable with
 :class:`~iceberg_loader_spark.streaming.sink.IdempotentTableSink` for an

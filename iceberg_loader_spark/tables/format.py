@@ -3,7 +3,9 @@
 Layout of one table::
 
     <table_root>/
-      data/                  parquet data files (written by Spark executors)
+      data/<uuid>/           parquet data files, one directory per write
+                             (tables/table.py new_data_dir; both the engine's
+                             Spark writer and the sparkberg connector)
       _meta/
         v000000001.json      snapshot manifest, one per commit
         _current             text file holding the current version number

@@ -7,10 +7,11 @@ Spark-first execution shape:
   row-group pruning. File-level pruning happens before Spark ever sees the
   plan, from manifest partition values + min/max stats (metadata-only, no
   listing).
-* **Append** — executors write parquet into a fresh per-commit staging dir
-  (`data/<uuid>/…`, optionally `partitionBy` the derived transform
-  columns); the driver then reads ONLY footers to build manifest entries
-  and commits one snapshot. O(new files) driver work, like Iceberg.
+* **Append** — executors write parquet into a fresh per-commit directory
+  (`new_data_dir()`: `data/<uuid>/…`, optionally `partitionBy` the derived
+  transform columns); the driver then reads ONLY footers to build manifest
+  entries (`data_file_entry`) and commits one snapshot. O(new files)
+  driver work, like Iceberg.
 * **Delete / Merge** — copy-on-write at file granularity: candidate files
   are chosen from metadata (partition/stats for DELETE, a key semi-join
   for MERGE), only those are rewritten; every other file carries over by
@@ -126,10 +127,16 @@ def _op_applies(f: DataFile, o: dict) -> bool:
 # within that file. Reserved names — never part of a table schema.
 _LINEAGE_FILE = "__ils_file"
 _LINEAGE_POS = "__ils_pos"
-# data files always live at <root>/data/<32-hex-uuid>/...; extracting that
-# suffix is deterministic per absolute path, so writer and reader agree
-# even if the root path itself ever matched the pattern.
-_LINEAGE_RE = r"(data/[0-9a-f]{32}/.*)$"
+# Both writers (the engine's and the sparkberg connector's) put data files
+# under new_data_dir(), <root>/data/<32-hex-uuid>/; extracting that suffix
+# is deterministic per absolute path, so writer and reader agree. The
+# optional prefix matches the directories older connector writes used.
+_LINEAGE_RE = rf"({DATA_DIR}/(?:ds-)?[0-9a-f]{{32}}/.*)$"
+
+
+def new_data_dir() -> str:
+    """Root-relative directory for one write's new data files."""
+    return f"{DATA_DIR}/{uuid.uuid4().hex}"
 
 
 def _with_lineage(df: DataFrame) -> DataFrame:
@@ -235,6 +242,13 @@ def _bloom_keys(snap: Snapshot) -> list[str] | None:
     return _column_property(snap, "write.bloom.keys")
 
 
+# Operations that change bytes or metadata but never rows: the append-log
+# walk (Table.appended_files) and the changelog (Table.changes) skip them.
+ROW_PRESERVING_OPS = frozenset(
+    {"create", "replace", "evolve-schema", "evolve-partition", "set-ref"}
+)
+
+
 # ---- commit builders shared by Table and the sparkberg connector --------
 
 
@@ -291,6 +305,25 @@ def _overwrite_build(entries: list[DataFile]):
     return build
 
 
+def _marked_append_build(
+    entries: list[DataFile], marker_prop: str, batch_id: int
+):
+    """``build(parent)`` for an exactly-once sink: append ``entries``
+    with ``marker_prop = batch_id`` in the same snapshot, unless the
+    commit parent's marker already covers ``batch_id`` — then the batch
+    is a replay and the build raises :class:`_NothingToCommit`. The
+    check runs on every attempt's parent, so a replay that commits
+    between this writer's attempts is caught by the retry."""
+    append = _append_build(entries, {marker_prop: str(batch_id)})
+
+    def build(parent: Snapshot) -> Snapshot:
+        if int(parent.properties.get(marker_prop, "-1")) >= batch_id:
+            raise _NothingToCommit(parent)
+        return append(parent)
+
+    return build
+
+
 def _stat_value(v):
     """Parquet footer stat → JSON-encodable, comparison-stable value."""
     if isinstance(v, datetime):
@@ -309,16 +342,16 @@ def _stat_value(v):
 _MANIFEST_DISTRIBUTE_MIN = 16
 
 
-def entry_from_footer(
-    abs_path: str, rel_path: str, partition: dict | None = None
+def data_file_entry(
+    md: pq.FileMetaData, rel_path: str, size: int, partition: dict | None = None
 ) -> DataFile:
-    """Footer-read ONE written parquet file into a manifest entry: row
+    """One written parquet file's metadata -> its manifest entry: row
     count, byte size, and the per-column min/max fold across row groups
     (a single chunk without usable stats poisons that column — a partial
-    range would wrongly prune files). Shared by the engine write path
-    and the Spark-format connector so manifest stats stay identical
-    regardless of which writer produced the file."""
-    md = pq.ParquetFile(abs_path).metadata
+    range would wrongly prune files). ``md`` is either a footer read
+    (``entry_from_footer``) or the metadata the pyarrow writer returns on
+    close (the sparkberg connector's tasks), so manifest stats are
+    identical regardless of which writer produced the file."""
     stats: dict[str, list] = {}
     for rg_i in range(md.num_row_groups):
         rg = md.row_group(rg_i)
@@ -345,10 +378,28 @@ def entry_from_footer(
     return DataFile(
         path=rel_path.replace(os.sep, "/"),
         rows=md.num_rows,
-        bytes=os.path.getsize(abs_path),
+        bytes=size,
         partition=partition or {},
         stats={k: v for k, v in stats.items() if v is not None},
     )
+
+
+def entry_from_footer(
+    abs_path: str, rel_path: str, partition: dict | None = None
+) -> DataFile:
+    """Footer-read ONE written parquet file into its manifest entry."""
+    md = pq.ParquetFile(abs_path).metadata
+    return data_file_entry(md, rel_path, os.path.getsize(abs_path), partition)
+
+
+def discard_files(root: str, paths) -> None:
+    """Best-effort removal of freshly written files no commit references
+    (a skipped replay's or a refused write's output)."""
+    for rel in paths:
+        try:
+            os.unlink(os.path.join(root, rel))
+        except OSError:
+            pass
 
 
 class _NothingToCommit(Exception):
@@ -446,18 +497,11 @@ class Table:
         ``where`` is optional; when given it is BOTH used to drop files
         whose metadata proves they can't match AND applied as a row filter
         (so semantics never depend on pruning quality). ``tag`` reads the
-        snapshot a named tag points at (mutually exclusive with
-        ``version``/``as_of_timestamp_ms``).
+        snapshot a named tag points at; at most one of ``version``,
+        ``tag`` and ``as_of_timestamp_ms`` may be given.
         """
         ensure_compat(spark)
-        if tag is not None:
-            if version is not None or as_of_timestamp_ms is not None:
-                raise ValueError("tag is exclusive with version/timestamp")
-            snap = self.snapshot(self.resolve_tag(tag))
-        elif as_of_timestamp_ms is not None:
-            snap = self.meta.snapshot_as_of(as_of_timestamp_ms)
-        else:
-            snap = self.snapshot(version)
+        snap = self.resolve_ref(version, tag, as_of_timestamp_ms)
         files, _ = prune_files(where, snap.files, _spec(snap))
         df = self._read_files_mor(
             spark, files, _schema(snap), snap.delete_predicates, snap.delete_files
@@ -465,6 +509,24 @@ class Table:
         if where:
             df = df.filter(F.expr(to_spark_sql(where)))
         return df
+
+    def resolve_ref(
+        self,
+        version: int | None = None,
+        tag: str | None = None,
+        as_of_timestamp_ms: int | None = None,
+    ) -> Snapshot:
+        """The snapshot a read selects: a version, a tag, the one current
+        at a timestamp, or the head when none is given."""
+        if sum(x is not None for x in (version, tag, as_of_timestamp_ms)) > 1:
+            raise ValueError(
+                "version, tag and as-of timestamp are mutually exclusive"
+            )
+        if tag is not None:
+            return self.snapshot(self.resolve_tag(tag))
+        if as_of_timestamp_ms is not None:
+            return self.meta.snapshot_as_of(as_of_timestamp_ms)
+        return self.snapshot(version)
 
     def _read_files_mor(
         self,
@@ -557,6 +619,59 @@ class Table:
             out = df if out is None else out.unionByName(df)
         return out
 
+    def _row_changing_snapshots(self, from_version: int, to_version: int):
+        """Snapshots in (from_version, to_version], oldest first, minus
+        the row-preserving ones (``ROW_PRESERVING_OPS``)."""
+        for v in sorted(
+            v
+            for v in self.meta.list_versions()
+            if from_version < v <= to_version
+        ):
+            snap = self.snapshot(v)
+            if snap.operation not in ROW_PRESERVING_OPS:
+                yield snap
+
+    def _parent_of(self, snap: Snapshot) -> Snapshot | None:
+        if snap.parent_version is None:
+            return None
+        try:
+            return self.snapshot(snap.parent_version)
+        except FileNotFoundError:
+            raise ValueError(
+                f"snapshot history expired: parent manifest "
+                f"v{snap.parent_version} of snapshot {snap.version} was "
+                f"removed by expire_snapshots; restart from a retained "
+                f"snapshot (version >= {snap.version}) or rescan the table"
+            ) from None
+
+    def appended_files(self, from_version: int, to_version: int) -> list[DataFile]:
+        """Data files appended after ``from_version`` (exclusive) up to
+        ``to_version`` (inclusive) — the metadata-only append-log walk
+        behind :meth:`scan_incremental` and the sparkberg stream source.
+
+        Row-preserving snapshots (``create`` included) are skipped, so a
+        tail from version 0 works. A branch chain's ``branch-fork`` seed
+        emits its files: they are what a from-zero branch tail delivers
+        first (its parent points into main's chain, which a branch handle
+        cannot resolve). Any row-changing operation raises — a consumer
+        that needs those needs the CDC log, not a file diff.
+        """
+        out: list[DataFile] = []
+        for snap in self._row_changing_snapshots(from_version, to_version):
+            if snap.operation == "branch-fork":
+                out.extend(snap.files)
+                continue
+            if snap.operation != "append":
+                raise ValueError(
+                    f"append-only tail: snapshot {snap.version} is "
+                    f"'{snap.operation}' — consume row-level changes via "
+                    f"Table.changes (CDC) instead"
+                )
+            parent = self._parent_of(snap)
+            parent_paths = {f.path for f in parent.files} if parent else set()
+            out.extend(f for f in snap.files if f.path not in parent_paths)
+        return out
+
     def scan_incremental(
         self,
         spark: SparkSession,
@@ -566,66 +681,16 @@ class Table:
     ) -> DataFrame:
         """Rows appended after ``from_version`` (exclusive) up to
         ``to_version`` (inclusive) — the incremental append scan
-        (Iceberg's ``start-snapshot-id``/``end-snapshot-id`` read).
-
-        Only ``append`` snapshots may appear in the range; ``replace``
-        (compaction), ``evolve-schema`` and ``evolve-partition`` snapshots
-        are skipped because they change no rows (compaction rewrites
-        bytes, evolution only changes metadata — the file set is the
-        parent's, unchanged), and
-        any row-changing operation (overwrite/delete/merge) raises — a
-        consumer that needs those needs a CDC log, not a file diff. The
-        appended files are read directly, so an incremental consumer
-        never rescans the base table: cost is proportional to the delta,
-        not the table.
+        (Iceberg's ``start-snapshot-id``/``end-snapshot-id`` read) over
+        :meth:`appended_files`. The appended files are read directly, so
+        an incremental consumer never rescans the base table: cost is
+        proportional to the delta, not the table.
         """
         ensure_compat(spark)
         to_snap = self.snapshot(to_version)
-        versions = sorted(
-            v
-            for v in self.meta.list_versions()
-            if from_version < v <= to_snap.version
-        )
-        new_files: list[DataFile] = []
-        for v in versions:
-            snap = self.snapshot(v)
-            if snap.operation in (
-                "replace",
-                "evolve-schema",
-                "evolve-partition",
-                "set-ref",
-            ):
-                continue
-            if snap.operation != "append":
-                raise ValueError(
-                    f"incremental scan supports append-only history; "
-                    f"snapshot {v} is '{snap.operation}'"
-                )
-            if snap.parent_version is None:
-                parent_paths: set[str] = set()
-            else:
-                try:
-                    parent_paths = {
-                        f.path for f in self.snapshot(snap.parent_version).files
-                    }
-                except FileNotFoundError:
-                    raise ValueError(
-                        f"snapshot history expired: parent manifest "
-                        f"v{snap.parent_version} of snapshot {v} was removed "
-                        f"by expire_snapshots; incremental scan from "
-                        f"{from_version} is impossible — full rescan required"
-                    ) from None
-            new_files.extend(
-                f for f in snap.files if f.path not in parent_paths
-            )
-        schema = T.StructType.fromJson(to_snap.schema_json)
-        spec = [PartitionField.from_json(d) for d in to_snap.partition_spec]
-        files, _ = prune_files(where, new_files, spec)
-        if not files:
-            df = spark.createDataFrame([], schema)
-        else:
-            paths = [os.path.join(self.root, f.path) for f in files]
-            df = spark.read.schema(schema).parquet(*paths)
+        new_files = self.appended_files(from_version, to_snap.version)
+        files, _ = prune_files(where, new_files, _spec(to_snap))
+        df = self._read_files_mor(spark, files, _schema(to_snap), [])
         if where:
             df = df.filter(F.expr(to_spark_sql(where)))
         return df
@@ -646,8 +711,8 @@ class Table:
         rollback): each commit's change set is the multiset difference
         between the rows of its added and removed files, so rows a
         copy-on-write rewrite merely carried over cancel out exactly.
-        Row-preserving snapshots (``replace`` compaction, schema/partition
-        evolution) are skipped outright — no bytes read.
+        Row-preserving snapshots (``ROW_PRESERVING_OPS``) are skipped
+        outright — no bytes read.
 
         Scale: cost is proportional to the CHURNED files per commit
         (added + removed), never the table; the only shuffle is the
@@ -657,41 +722,15 @@ class Table:
         """
         ensure_compat(spark)
         to_snap = self.snapshot(to_version)
-        versions = sorted(
-            v
-            for v in self.meta.list_versions()
-            if from_version < v <= to_snap.version
-        )
         schema = T.StructType.fromJson(to_snap.schema_json)
 
         out: DataFrame | None = None
-        for v in versions:
-            snap = self.snapshot(v)
-            if snap.operation in (
-                "replace",
-                "evolve-schema",
-                "evolve-partition",
-                "set-ref",
-            ):
-                continue
-            if snap.parent_version is None:
-                parent_snap = None
-                parent_files: list[DataFile] = []
-                parent_preds: list[dict] = []
-                parent_dels: list[dict] = []
-            else:
-                try:
-                    parent_snap = self.snapshot(snap.parent_version)
-                except FileNotFoundError:
-                    raise ValueError(
-                        f"snapshot history expired: parent manifest "
-                        f"v{snap.parent_version} of snapshot {v} was "
-                        f"removed by expire_snapshots; changelog from "
-                        f"{from_version} is impossible"
-                    ) from None
-                parent_files = parent_snap.files
-                parent_preds = parent_snap.delete_predicates
-                parent_dels = parent_snap.delete_files
+        for snap in self._row_changing_snapshots(from_version, to_snap.version):
+            v = snap.version
+            parent = self._parent_of(snap)
+            parent_files = parent.files if parent else []
+            parent_preds = parent.delete_predicates if parent else []
+            parent_dels = parent.delete_files if parent else []
             snap_paths = {f.path for f in snap.files}
             parent_paths = {f.path for f in parent_files}
             added = [f for f in snap.files if f.path not in parent_paths]
@@ -852,7 +891,7 @@ class Table:
             # projections (e.g. equality-delete key files) may not carry
             # every table sort column — sort by the ones present
             sort_within = [c for c in sort_within if c in df.columns]
-        staging_rel = f"{DATA_DIR}/{uuid.uuid4().hex}"
+        staging_rel = new_data_dir()
         staging_abs = os.path.join(self.root, staging_rel)
         out = df
         pcols = []
@@ -1221,6 +1260,16 @@ class Table:
             # nothing — drop it from the commit
             if sum(e.rows for e in pos_entries) == 0:
                 pos_entries = []
+            # "" is a row whose file lineage could not name (outside
+            # new_data_dir()'s layout): committing it would delete the
+            # same position in every such file
+            if any(e.stats.get("file_path", [None])[0] == "" for e in pos_entries):
+                discard_files(self.root, [e.path for e in pos_entries])
+                raise ValueError(
+                    f"positional delete refused: a matching row's data "
+                    f"file lies outside {DATA_DIR}/<uuid>/, so its path "
+                    f"cannot be recorded; use mode='mor' or 'cow'"
+                )
         cand_paths = [f.path for f in candidates]
         dropped_paths = {f.path for f in dropped}
 

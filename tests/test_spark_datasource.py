@@ -290,8 +290,6 @@ def test_stream_tail_starting_latest(spark, wh, tmp_path):
 
 
 def test_stream_appended_files_rejects_row_changing_ops(spark, wh):
-    from iceberg_loader_spark.sources.spark_datasource import _appended_files
-
     root = wh.table_root("db.ds_stream_mix")
     spark.createDataFrame([(i,) for i in range(6)], "k int").write.format(
         "sparkberg"
@@ -299,7 +297,7 @@ def test_stream_appended_files_rejects_row_changing_ops(spark, wh):
     t = wh.load_table("db.ds_stream_mix")
     t.delete_where(spark, "k == 2")
     with pytest.raises(ValueError, match="append-only"):
-        _appended_files(t, 0, t.snapshot().version)
+        t.appended_files(0, t.snapshot().version)
 
 
 def test_warehouse_table_option_addressing(spark, wh):
@@ -354,7 +352,6 @@ def test_connector_vs_engine_concurrent_append(spark, wh):
 
 
 def test_stream_expired_history_clear_error(spark, wh):
-    from iceberg_loader_spark.sources.spark_datasource import _appended_files
     from iceberg_loader_spark.tables.maintenance import expire_snapshots
 
     root = wh.table_root("db.ds_stream_exp")
@@ -366,7 +363,7 @@ def test_stream_expired_history_clear_error(spark, wh):
     expire_snapshots(t, keep_last=2)
     t = wh.load_table("db.ds_stream_exp")
     with pytest.raises(ValueError, match="history expired"):
-        _appended_files(t, 0, t.snapshot().version)
+        t.appended_files(0, t.snapshot().version)
 
 
 def test_typed_roundtrip_timestamps_doubles_arrays(spark, wh):
@@ -637,3 +634,161 @@ def test_stream_read_from_branch(spark, wh, tmp_path):
         q.stop()
     # main never advanced
     assert spark.read.format("sparkberg").load(root).count() == 2
+
+
+def _arrow_batch(rows):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pylist(
+        [{"k": k} for k in rows], schema=pa.schema([("k", pa.int64())])
+    )
+
+
+def _table_rows(spark, wh, ident):
+    return sorted(r.k for r in wh.load_table(ident).scan(spark).collect())
+
+
+@pytest.mark.parametrize("legacy", [False, True])
+def test_positional_delete_on_connector_files(spark, wh, legacy):
+    """Connector files sit in the engine's data/<uuid>/ layout, so row
+    lineage names them and a positional delete removes exactly the
+    matching row — not the row at the same position in every other
+    connector file. A file in the older connector directory
+    (data/ds-<uuid>/) gets its real lineage path too."""
+    import os
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_loader_spark.tables.table import _append_build, entry_from_footer
+
+    root = wh.table_root("db.ds_posdel")
+    first = spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "id int, v int")
+    second = spark.createDataFrame([(4, 40), (5, 50), (6, 60)], "id int, v int")
+    second.coalesce(1).write.format("sparkberg").mode("append").save(root)
+    t = wh.load_table("db.ds_posdel")
+    if legacy:
+        rel = f"data/ds-{uuid.uuid4().hex}/task-{uuid.uuid4().hex}.parquet"
+        os.makedirs(os.path.dirname(os.path.join(t.root, rel)))
+        pq.write_table(
+            pa.table(
+                {
+                    "id": pa.array([1, 2, 3], pa.int32()),
+                    "v": pa.array([10, 20, 30], pa.int32()),
+                }
+            ),
+            os.path.join(t.root, rel),
+        )
+        entry = entry_from_footer(os.path.join(t.root, rel), rel)
+        t._commit_with_retry(_append_build([entry]))
+    else:
+        first.coalesce(1).write.format("sparkberg").mode("append").save(root)
+    assert len(t.snapshot().files) == 2
+
+    t.delete_where(spark, "v = 20", mode="mor-pos")
+    got = sorted(r.id for r in wh.load_table("db.ds_posdel").scan(spark).collect())
+    assert got == [1, 3, 4, 5, 6]
+
+
+def test_connector_entries_equal_footer_reads(spark, wh):
+    """Task-built manifest entries carry exactly what a footer read of
+    the same file gives: path, rows, bytes and per-column stats."""
+    import datetime
+    import os
+    import re
+
+    from iceberg_loader_spark.tables.table import entry_from_footer
+
+    root = wh.table_root("db.ds_entries")
+    rows = [
+        (1, datetime.datetime(2024, 3, 10, 6, 59, 59, 123456), 1.5, "a"),
+        (2, None, -0.25, None),
+        (3, datetime.datetime(2023, 1, 1), None, "zz"),
+    ]
+    df = spark.createDataFrame(rows, "k int, ts timestamp, x double, s string")
+    df.repartition(2).write.format("sparkberg").mode("append").save(root)
+    t = wh.load_table("db.ds_entries")
+    files = t.snapshot().files
+    assert files and sum(f.rows for f in files) == 3
+    for f in files:
+        assert re.fullmatch(r"data/[0-9a-f]{32}/task-[0-9a-f]{32}\.parquet", f.path)
+        footer = entry_from_footer(os.path.join(t.root, f.path), f.path)
+        assert (f.path, f.rows, f.bytes, f.stats) == (
+            footer.path,
+            footer.rows,
+            footer.bytes,
+            footer.stats,
+        )
+
+
+def test_connector_commit_reads_no_footer(wh, monkeypatch):
+    """The driver commit takes each file's entry from the task's commit
+    message: with every parquet footer read failing on the driver, the
+    commit still lands, and its entries equal a footer read."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from iceberg_loader_spark.sources.spark_datasource import SparkbergWriter
+    from iceberg_loader_spark.tables.table import entry_from_footer
+
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    w = SparkbergWriter(schema, {"path": wh.table_root("db.ds_nofooter")}, False)
+    messages = [
+        w.write(iter([_arrow_batch([1, 2])])),
+        w.write(iter([_arrow_batch([3])])),
+        w.write(iter([])),
+    ]
+
+    def no_footer(*_a, **_k):
+        raise AssertionError("driver read a parquet footer")
+
+    monkeypatch.setattr(pq, "ParquetFile", no_footer)
+    monkeypatch.setattr(pq, "read_metadata", no_footer)
+    w.commit(messages)
+    monkeypatch.undo()
+
+    t = wh.load_table("db.ds_nofooter")
+    assert t.snapshot().total_rows == 3
+    for f in t.snapshot().files:
+        footer = entry_from_footer(os.path.join(t.root, f.path), f.path)
+        assert (f.rows, f.bytes, f.stats) == (footer.rows, footer.bytes, footer.stats)
+
+
+def test_stream_writer_concurrent_replay_commits_once(spark, wh, monkeypatch):
+    """A run of the same micro-batch commits between this writer's task
+    writes and its commit: the marker is checked on the commit parent, so
+    this commit becomes a no-op and deletes its staged file, instead of
+    appending the batch twice."""
+    import os
+
+    from iceberg_loader_spark.sources.spark_datasource import (
+        SparkbergStreamWriter,
+    )
+
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    w = SparkbergStreamWriter(schema, {"path": wh.table_root("db.ds_race_eo")})
+    w.commit([w.write(iter([_arrow_batch([0])]))], 0)
+    replay = [w.write(iter([_arrow_batch([1, 2])]))]
+    winner = [w.write(iter([_arrow_batch([1, 2])]))]
+
+    orig = Table._commit_with_retry
+    fired = []
+
+    def racing(self, build):
+        if not fired:
+            fired.append(True)
+            w.commit(winner, 1)
+        return orig(self, build)
+
+    monkeypatch.setattr(Table, "_commit_with_retry", racing)
+    w.commit(replay, 1)
+    monkeypatch.undo()
+
+    t = wh.load_table("db.ds_race_eo")
+    assert _table_rows(spark, wh, "db.ds_race_eo") == [0, 1, 2]
+    marker = "streaming.sparkberg-writer.default.last-batch-id"
+    assert t.properties()[marker] == "1"
+    [staged] = replay[0].entries
+    assert not os.path.exists(os.path.join(t.root, staged.path))

@@ -5,19 +5,21 @@ form of the reference's commit-interval loop (core/loader.py:210-235)."""
 
 from __future__ import annotations
 
+import pytest
+
 from iceberg_loader_spark.config import LoaderConfig
 from iceberg_loader_spark.loader import SparkLoader
 from iceberg_loader_spark.streaming.windows import streaming_events
 from iceberg_loader_spark.tables import Warehouse
-from tests.conftest import SF_SMOKE
 
 
-def test_foreach_batch_ingest_snapshots_and_rows(spark, tmp_path):
+@pytest.mark.requires_testdata
+def test_foreach_batch_ingest_snapshots_and_rows(spark, sf_dir, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     loader = SparkLoader(spark, wh)
     cfg = LoaderConfig(commit_interval=100, load_timestamp=False)
 
-    stream = streaming_events(spark, SF_SMOKE).select(
+    stream = streaming_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
 
@@ -29,14 +31,15 @@ def test_foreach_batch_ingest_snapshots_and_rows(spark, tmp_path):
     q.stop()
 
     t = wh.load_table("db.events_sink")
-    src_rows = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
+    src_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert t.scan(spark).count() == src_rows
     # ≥1 snapshot per micro-batch, none lost
     assert len(t.history()) >= 1
     assert t.snapshot().total_rows == src_rows
 
 
-def test_idempotent_sink_exactly_once_under_replay(spark, tmp_path):
+@pytest.mark.requires_testdata
+def test_idempotent_sink_exactly_once_under_replay(spark, sf_dir, tmp_path):
     """IdempotentTableSink: a replayed micro-batch (foreachBatch's
     at-least-once recovery contract) must be skipped, a fresh batch must
     land, and the progress marker must ride the SAME snapshot as the
@@ -46,7 +49,7 @@ def test_idempotent_sink_exactly_once_under_replay(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"))
     sink = IdempotentTableSink(wh, "db.eo_sink")
 
-    stream = streaming_events(spark, SF_SMOKE).select(
+    stream = streaming_events(spark, sf_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
     q = stream.writeStream.foreachBatch(sink).start()
@@ -54,7 +57,7 @@ def test_idempotent_sink_exactly_once_under_replay(spark, tmp_path):
     q.stop()
 
     t = wh.load_table("db.eo_sink")
-    src_rows = spark.read.parquet(f"{SF_SMOKE}/events.parquet").count()
+    src_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert t.scan(spark).count() == src_rows
     n_snaps = len(t.history())
     last_batch = int(t.properties()["streaming.default.last-batch-id"])
@@ -79,7 +82,8 @@ def test_idempotent_sink_exactly_once_under_replay(spark, tmp_path):
     assert len(t.history()) == n_snaps + 1
 
 
-def test_table_tail_reader_offsets_and_replay(spark, tmp_path):
+@pytest.mark.requires_testdata
+def test_table_tail_reader_offsets_and_replay(spark, sf_dir, tmp_path):
     """TableTailReader: each poll returns exactly the delta; caught-up
     polls return None; rewinding the position replays a batch byte-for-
     byte (offset semantics); an end-to-end tail→sink pipeline is
@@ -91,7 +95,7 @@ def test_table_tail_reader_offsets_and_replay(spark, tmp_path):
 
     wh = Warehouse(str(tmp_path / "wh"))
     docs = (
-        spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "lang")
     )
     t = Table.create(wh, "db.tail", docs.schema)
@@ -125,8 +129,9 @@ def test_table_tail_reader_offsets_and_replay(spark, tmp_path):
     assert len(pulled) == 1 and pulled[0].count() == 0
 
 
+@pytest.mark.requires_testdata
 def test_fanout_sink_routes_exactly_once_with_partial_failure(
-    spark, tmp_path
+    spark, sf_dir, tmp_path
 ):
     """FanOutSink: one micro-batch routed to two tables; a replay after a
     PARTIAL failure (route A committed, crash before route B) must skip A
@@ -142,7 +147,7 @@ def test_fanout_sink_routes_exactly_once_with_partial_failure(
     b_route = lambda df: df.filter(F.col("event_id") % 2 == 1)  # noqa: E731
     fanout = FanOutSink([(a_route, a_sink), (b_route, b_sink)])
 
-    batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
+    batch = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", "event_type", "value"
     )
     n_even = batch.filter("event_id % 2 = 0").count()
@@ -197,7 +202,8 @@ def test_fanout_sink_rejects_duplicate_route_targets(tmp_path):
     )
 
 
-def test_streaming_sink_recovers_across_restart(spark, tmp_path):
+@pytest.mark.requires_testdata
+def test_streaming_sink_recovers_across_restart(spark, sf_dir, tmp_path):
     """Checkpoint recovery through the exactly-once sink: a stream is
     stopped mid-source, new files arrive, and a RESTARTED query on the
     same checkpoint must land exactly the missing rows — no re-ingest of
@@ -206,7 +212,7 @@ def test_streaming_sink_recovers_across_restart(spark, tmp_path):
 
     from iceberg_loader_spark.streaming import IdempotentTableSink
 
-    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet").select(
+    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", "event_type", "value"
     )
     first = events.filter(F.col("event_id") % 2 == 0)
@@ -249,3 +255,73 @@ def test_streaming_sink_recovers_across_restart(spark, tmp_path):
     assert got.select("event_id").distinct().count() == events.count()  # no dups
     marker2 = int(t.properties()["streaming.default.last-batch-id"])
     assert marker2 > marker1  # offsets resumed past the pre-restart batches
+
+
+def test_tail_from_version_zero_returns_every_appended_row(spark, tmp_path):
+    """The table's ``create`` snapshot is row-preserving: an incremental
+    scan from 0 and a tail reader at its default position deliver every
+    appended row instead of refusing the table's first snapshot."""
+    from pyspark.sql import types as T
+
+    from iceberg_loader_spark.streaming import TableTailReader
+    from iceberg_loader_spark.tables.table import Table
+
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    t = Table.create(Warehouse(str(tmp_path / "wh")), "db.tail0", schema)
+    t.append(spark.createDataFrame([(1,), (2,)], schema))
+    t.append(spark.createDataFrame([(3,)], schema))
+
+    assert sorted(r.k for r in t.scan_incremental(spark, 0).collect()) == [
+        1,
+        2,
+        3,
+    ]
+    reader = TableTailReader(t)
+    batch = reader.next_batch(spark)
+    assert sorted(r.k for r in batch.collect()) == [1, 2, 3]
+    assert reader.next_batch(spark) is None
+
+
+def test_idempotent_sink_concurrent_replay_commits_once(
+    spark, tmp_path, monkeypatch
+):
+    """Two runs of the SAME micro-batch race: the rival's commit lands
+    after this sink wrote its files but before its commit. The marker is
+    checked against the commit parent, so this sink skips — its staged
+    files are deleted and it counts the skip — instead of appending the
+    rows a second time."""
+    import os
+
+    from iceberg_loader_spark.streaming import IdempotentTableSink
+    from iceberg_loader_spark.tables.table import Table
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    sink = IdempotentTableSink(wh, "db.eo_race")
+    rival = IdempotentTableSink(wh, "db.eo_race")
+    sink(spark.createDataFrame([(0,)], "k long"), 0)
+    batch = spark.createDataFrame([(1,), (2,)], "k long")
+
+    orig = Table._commit_with_retry
+    fired = []
+
+    def racing(self, build):
+        if not fired:
+            fired.append(True)
+            rival(batch, 1)
+        return orig(self, build)
+
+    monkeypatch.setattr(Table, "_commit_with_retry", racing)
+    sink(batch, 1)
+    monkeypatch.undo()
+
+    t = wh.load_table("db.eo_race")
+    assert sorted(r.k for r in t.scan(spark).collect()) == [0, 1, 2]
+    assert t.properties()["streaming.default.last-batch-id"] == "1"
+    assert (sink.skipped_batches, rival.skipped_batches) == (1, 0)
+    on_disk = {
+        os.path.relpath(os.path.join(d, fn), t.root)
+        for d, _, fns in os.walk(os.path.join(t.root, "data"))
+        for fn in fns
+        if fn.endswith(".parquet")
+    }
+    assert on_disk == {f.path for f in t.snapshot().files}

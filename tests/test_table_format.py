@@ -811,3 +811,48 @@ def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
     assert reads(lambda: rewrite_data_files(t, spark)) <= 3
     monkeypatch.undo()
     assert t.scan(spark).count() == 41
+
+
+def test_scan_rejects_conflicting_snapshot_selectors(spark, tmp_path):
+    """version, tag and as_of_timestamp_ms each select a snapshot; giving
+    two is an error, never a silent pick of one."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", _schema())
+    t.append(spark.createDataFrame([(1,)], _schema()))
+    first = t.snapshot()
+    t.append(spark.createDataFrame([(2,)], _schema()))
+    t.set_tag("one", first.version)
+    latest_ms = t.snapshot().timestamp_ms
+    for selectors in (
+        {"version": first.version, "as_of_timestamp_ms": latest_ms},
+        {"version": first.version, "tag": "one"},
+        {"tag": "one", "as_of_timestamp_ms": latest_ms},
+    ):
+        with pytest.raises(ValueError, match="mutually exclusive"):
+            t.scan(spark, **selectors)
+    assert t.scan(spark, version=first.version).count() == 1
+    assert t.scan(spark, tag="one").count() == 1
+    assert t.scan(spark, as_of_timestamp_ms=latest_ms).count() == 2
+
+
+def test_positional_delete_refuses_file_outside_layout(spark, tmp_path):
+    """Row lineage only names files under data/<uuid>/: a positional
+    delete matching rows of any other file is refused instead of
+    committing an empty file_path that would hide the same positions in
+    every such file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_loader_spark.tables.table import _append_build, entry_from_footer
+
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", _schema())
+    rel = "imported/part-0.parquet"
+    os.makedirs(os.path.join(t.root, "imported"))
+    pq.write_table(pa.table({"id": [1, 2, 3]}), os.path.join(t.root, rel))
+    t._commit_with_retry(_append_build([entry_from_footer(os.path.join(t.root, rel), rel)]))
+    head = t.snapshot().version
+    with pytest.raises(ValueError, match="positional delete refused"):
+        t.delete_where(spark, "id = 2", mode="mor-pos")
+    assert t.snapshot().version == head
+    assert sorted(r.id for r in t.scan(spark).collect()) == [1, 2, 3]
