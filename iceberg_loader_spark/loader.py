@@ -51,6 +51,9 @@ from iceberg_loader_spark.types import (
 
 log = logging.getLogger(__name__)
 
+# in-memory Arrow bytes per output data file of a flush
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
 
 def _normalize_arrow_types(table: pa.Table) -> pa.Table:
     """Map every column through the type registry (uint64→decimal(20,0),
@@ -217,15 +220,21 @@ class _LoadState:
             ]
         )
         data = cast_to_schema(data, arrow_target)
-        df = spark.createDataFrame(data, schema=table_schema)
-        # size the write: ~128 MB in-memory bytes per output file, so small
-        # flushes produce one file instead of one near-empty file per core
-        target_parts = max(1, -(-data.nbytes // (128 * 1024 * 1024)))
-        if target_parts < df.rdd.getNumPartitions():
-            df = df.coalesce(target_parts)
-        snap = self._write(df)
+        rows = data.num_rows
+        # size the write: ~TARGET_FILE_BYTES in-memory bytes per output
+        # file, so small flushes produce one file (per partition value)
+        # instead of one near-empty file per core. A flush that fits one
+        # target file goes to the table as the Arrow table itself, which
+        # the table writes on the driver when its Arrow writer can; larger
+        # flushes, and upserts, keep Spark's parallel write.
+        target_parts = max(1, -(-data.nbytes // TARGET_FILE_BYTES))
+        if target_parts > 1 or self.cfg.join_cols:
+            data = spark.createDataFrame(data, schema=table_schema)
+            if target_parts < data.rdd.getNumPartitions():
+                data = data.coalesce(target_parts)
+        snap = self._write(data)
         self.snapshot_id = snap.snapshot_id
-        self.rows_loaded += data.num_rows
+        self.rows_loaded += rows
         self.is_first_write = False
 
     def _concat(self, buffer: list[pa.RecordBatch]) -> pa.Table:
@@ -310,7 +319,7 @@ class _LoadState:
             snap = self.table.add_columns(list(new.values()))
         return T.StructType.fromJson(snap.schema_json)
 
-    def _write(self, df: DataFrame):
+    def _write(self, data: DataFrame | pa.Table):
         spark = self.loader.spark
         cfg = self.cfg
         t = self.table
@@ -318,17 +327,17 @@ class _LoadState:
         # (reference core/strategies.py:84-99)
         if cfg.join_cols:
             return t.merge(
-                spark, df, list(cfg.join_cols), mode=cfg.row_level_mode
+                spark, data, list(cfg.join_cols), mode=cfg.row_level_mode
             )
         if cfg.replace_filter:
             if self.is_first_write:
                 t.delete_where(
                     spark, cfg.replace_filter, mode=cfg.row_level_mode
                 )
-            return t.append(df)
+            return t.append(data)
         if cfg.write_mode == "overwrite" and self.is_first_write:
-            return t.overwrite(df)
-        return t.append(df)
+            return t.overwrite(data)
+        return t.append(data)
 
     # ---- result ----------------------------------------------------------
 

@@ -376,12 +376,14 @@ class SparkbergWriter(DataSourceArrowWriter):
         return Table(wh, identifier)
 
     def write(self, iterator) -> _WriteMessage:
-        import pyarrow.parquet as pq
-
-        from iceberg_loader_spark.tables.table import data_file_entry
+        from iceberg_loader_spark.tables.table import (
+            data_file_entry,
+            open_parquet_writer,
+        )
 
         # stream batch-by-batch into the parquet writer — peak memory is
-        # one Arrow batch, never the whole task partition
+        # one Arrow batch, never the whole task partition; the first
+        # batch decides which columns are dictionary-encoded
         writer = None
         rel = f"{self._staging_rel}/task-{uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(self._root, rel)
@@ -391,10 +393,7 @@ class SparkbergWriter(DataSourceArrowWriter):
                 if b.num_rows == 0:
                     continue
                 if writer is None:
-                    os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-                    writer = pq.ParquetWriter(
-                        abs_path, b.schema, compression=self._codec
-                    )
+                    writer = open_parquet_writer(abs_path, b, self._codec)
                 writer.write_batch(b)
                 rows += b.num_rows
         finally:

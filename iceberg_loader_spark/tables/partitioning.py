@@ -14,13 +14,18 @@ Guard rails replicated: time transforms require a date/timestamp (or
 promotable string) column; identity on a timestamp warns; identity on the
 load-timestamp column is rejected at config time (see config.py).
 
-The write path materializes each transform as a derived column and uses
-Spark's ``partitionBy`` — giving directory-level data clustering exactly
-like Iceberg's hidden partitioning. ``python_eval`` mirrors the transform
-in pure Python over manifest partition values so the reader can prune
-files without Spark (bucket pruning uses the same murmur3 hash Spark's
-``F.hash`` uses via a recorded value — we only prune bucket partitions on
-equality of the derived value computed Spark-side at write).
+The Spark writer materializes each transform as a derived column
+(``spark_expr``) and uses Spark's ``partitionBy`` — giving directory-level
+data clustering exactly like Iceberg's hidden partitioning. The driver's
+Arrow writer computes the same partition strings with ``arrow_values``,
+the Arrow twin of each transform. ``bucket`` (Spark's murmur3), identity
+or ``truncate`` on a source other than string, integer, boolean or date,
+and time transforms on string sources have no exact twin and keep the
+Spark writer. ``python_eval`` mirrors the transform in pure Python over
+manifest partition values so the reader can prune files without Spark
+(bucket pruning uses the same murmur3 hash Spark's ``F.hash`` uses via a
+recorded value — we only prune bucket partitions on equality of the
+derived value computed Spark-side at write).
 """
 
 from __future__ import annotations
@@ -29,12 +34,17 @@ import datetime as dt
 import re
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 TIME_TRANSFORMS = ("year", "month", "day", "hour")
 PARAM_TRANSFORMS = ("bucket", "truncate")
 ALL_TRANSFORMS = TIME_TRANSFORMS + PARAM_TRANSFORMS + ("identity", "void")
+
+# the directory name Spark's partitionBy gives a null (or empty) value
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 _FUNC_RE = re.compile(r"^\s*([A-Za-z_]+)\s*\(\s*([^)]*)\s*\)\s*$")
 
@@ -127,6 +137,55 @@ def spark_expr(field: PartitionField) -> Column:
     if field.transform == "void":
         return F.lit(None).cast("string")
     raise PartitionError(f"unknown transform {field.transform}")
+
+
+# strftime patterns of the string-valued time transforms (spark_expr's
+# date_format patterns)
+_TIME_FORMATS = {"month": "%Y-%m", "day": "%Y-%m-%d", "hour": "%Y-%m-%d-%H"}
+
+
+def _as_text(t: pa.DataType) -> bool:
+    """Source types whose Arrow string cast is Spark's string cast."""
+    return (
+        pa.types.is_string(t)
+        or pa.types.is_integer(t)
+        or pa.types.is_boolean(t)
+        or pa.types.is_date(t)
+    )
+
+
+def arrow_values(
+    field: PartitionField, column: pa.Array | pa.ChunkedArray
+) -> pa.Array | pa.ChunkedArray | None:
+    """Arrow twin of ``spark_expr``: the partition-value strings Spark's
+    ``partitionBy`` records for ``column`` (``""`` and ``HIVE_NULL``
+    become null, as Spark's ``HIVE_NULL`` directory reads back), or
+    ``None`` when no exact twin exists and the write must go through
+    Spark."""
+    t = column.type
+    if field.transform == "void":
+        return pa.nulls(len(column), pa.string())
+    if field.transform == "identity":
+        if not _as_text(t):
+            return None
+        values = column.cast(pa.string())
+    elif field.transform in TIME_TRANSFORMS:
+        if pa.types.is_date(t):
+            column = column.cast(pa.timestamp("s"))
+        elif not (pa.types.is_timestamp(t) and t.tz is None):
+            return None
+        if field.transform == "year":
+            values = pc.year(column).cast(pa.string())
+        else:
+            values = pc.strftime(column, _TIME_FORMATS[field.transform])
+    elif field.transform == "truncate":
+        if not _as_text(t):
+            return None
+        values = pc.utf8_slice_codeunits(column.cast(pa.string()), 0, field.param)
+    else:  # bucket: Spark's murmur3 has no Arrow kernel
+        return None
+    hive_null = pc.is_in(values, pa.array(["", HIVE_NULL]))
+    return pc.if_else(hive_null, pa.scalar(None, pa.string()), values)
 
 
 def python_eval(field: PartitionField, value):

@@ -11,7 +11,9 @@ Spark-first execution shape:
   (`new_data_dir()`: `data/<uuid>/…`, optionally `partitionBy` the derived
   transform columns); the driver then reads ONLY footers to build manifest
   entries (`data_file_entry`) and commits one snapshot. O(new files)
-  driver work, like Iceberg.
+  driver work, like Iceberg. An Arrow table (a loader flush of one
+  target file) is written on the driver instead, in the same layout,
+  when that reproduces Spark's files exactly (`_write_arrow_files`).
 * **Delete / Merge** — copy-on-write at file granularity: candidate files
   are chosen from metadata (partition/stats for DELETE, a key semi-join
   for MERGE), only those are rewritten; every other file carries over by
@@ -34,10 +36,13 @@ import uuid
 from dataclasses import replace
 from datetime import date, datetime
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from iceberg_loader_spark.sources.tables import ensure_compat
@@ -58,12 +63,13 @@ from iceberg_loader_spark.tables.format import (
     new_snapshot,
 )
 from iceberg_loader_spark.tables.partitioning import (
+    HIVE_NULL,
     PartitionField,
+    arrow_values,
     spark_expr,
     validate_spec,
 )
 
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 def _op_applies(f: DataFile, o: dict) -> bool:
     """Does a merge-on-read delete op apply to this data file?
@@ -209,6 +215,29 @@ def _codec(snap: Snapshot) -> str:
         "write.parquet.compression-codec",
         DEFAULT_TABLE_PROPERTIES["write.parquet.compression-codec"],
     )
+
+
+# Spark's parquet codec names -> pyarrow's. pyarrow has no lzo writer,
+# and its "lz4" writes LZ4_RAW.
+_PYARROW_CODECS = {
+    "none": "none",
+    "uncompressed": "none",
+    "snappy": "snappy",
+    "gzip": "gzip",
+    "brotli": "brotli",
+    "lz4": "lz4",
+    "lz4_raw": "lz4",
+    "zstd": "zstd",
+}
+
+
+def _pyarrow_codec(codec: str) -> str | None:
+    """pyarrow's name for a ``write.parquet.compression-codec`` value,
+    or None when this pyarrow build cannot write it."""
+    name = _PYARROW_CODECS.get(codec.lower())
+    if name is None or (name != "none" and not pa.Codec.is_available(name)):
+        return None
+    return name
 
 
 def _column_property(snap: Snapshot, key: str) -> list[str] | None:
@@ -400,6 +429,120 @@ def discard_files(root: str, paths) -> None:
             os.unlink(os.path.join(root, rel))
         except OSError:
             pass
+
+
+def _dictionary_columns(rows) -> list[str]:
+    """Leaf column paths of ``rows`` (a table or batch) worth dictionary
+    encoding: at most one distinct value per two values. parquet-mr
+    falls back to PLAIN above that; dictionary-encoding every column made
+    pyarrow's files 20-42 % larger than Spark's."""
+    out: list[str] = []
+
+    def walk(path: str, values) -> None:
+        t = values.type
+        if pa.types.is_struct(t):
+            for f, child in zip(t, values.flatten()):
+                walk(f"{path}.{f.name}", child)
+        elif pa.types.is_map(t):
+            walk(f"{path}.key_value.key", values.keys)
+            walk(f"{path}.key_value.value", values.items)
+        elif pa.types.is_list(t) or pa.types.is_large_list(t):
+            walk(f"{path}.list.element", values.flatten())
+        elif 2 * pc.count_distinct(values).as_py() <= len(values):
+            out.append(path)
+
+    for name, col in zip(rows.schema.names, rows.columns):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        walk(name, col)
+    return out
+
+
+def open_parquet_writer(path: str, sample, codec: str) -> pq.ParquetWriter:
+    """The one pyarrow data-file writer (the driver's Arrow writer and
+    the sparkberg connector's tasks): ``codec`` is the table's Spark
+    codec name, the dictionary rule is applied to ``sample`` (the rows,
+    or a streaming writer's first batch), and no Arrow schema is
+    embedded in the footer."""
+    compression = _pyarrow_codec(codec)
+    if compression is None:
+        raise ValueError(
+            f"write.parquet.compression-codec {codec!r} has no pyarrow writer"
+        )
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    return pq.ParquetWriter(
+        path,
+        sample.schema,
+        compression=compression,
+        use_dictionary=_dictionary_columns(sample),
+        store_schema=False,
+    )
+
+
+# characters Spark's partitionBy escapes in a directory name (Hive's
+# escapePathName); every other character is kept as is
+_PATH_ESCAPES = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list('"#%\'*/:=?\\\x7f{[]^')
+)
+
+
+def _escape_path_name(value: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPES else c for c in value)
+
+
+def _float_bounds(entry: DataFile, rows: pa.Table) -> None:
+    """Give float columns the bounds parquet-mr, Spark's writer, records:
+    the values it saw, -0.0 below +0.0. parquet C++ widens a zero lower
+    bound to -0.0 and a zero upper bound to +0.0, and leaves an
+    all-infinite column's bound at the largest finite value."""
+    for name, bounds in entry.stats.items():
+        col = rows[name]
+        if not pa.types.is_floating(col.type):
+            continue
+        lo_hi = pc.min_max(col)
+        bounds[:] = [lo_hi["min"].as_py(), lo_hi["max"].as_py()]
+        if 0 not in bounds:
+            continue
+        signs = pc.divide(1.0, pc.filter(col, pc.equal(col, 0.0)))
+        if bounds[0] == 0:
+            bounds[0] = -0.0 if pc.any(pc.less(signs, 0)).as_py() else 0.0
+        if bounds[1] == 0:
+            bounds[1] = 0.0 if pc.any(pc.greater(signs, 0)).as_py() else -0.0
+
+
+def _has_utc_timestamp(t: T.DataType) -> bool:
+    if isinstance(t, T.StructType):
+        return any(_has_utc_timestamp(f.dataType) for f in t.fields)
+    if isinstance(t, T.ArrayType):
+        return _has_utc_timestamp(t.elementType)
+    if isinstance(t, T.MapType):
+        return _has_utc_timestamp(t.keyType) or _has_utc_timestamp(t.valueType)
+    return isinstance(t, T.TimestampType)
+
+
+def _arrow_partition_values(rows: pa.Table, snap: Snapshot) -> list | None:
+    """Each spec field's partition values when the driver's Arrow writer
+    reproduces the Spark writer's files exactly (same rows, partition
+    values, per-file stats and row order), else None. Not reproducible:
+    an empty table, a codec pyarrow cannot write, a UTC timestamp column
+    anywhere in the schema (Spark writes INT96 without stats), a NaN in a
+    float column (parquet-mr records NaN as a bound), a ``void`` field
+    under ``write.sort-order`` (Spark's planner folds the constant
+    partition column and its write loses the sort), and a transform
+    without an Arrow twin (``arrow_values``)."""
+    spec = _spec(snap)
+    if (
+        rows.num_rows == 0
+        or _pyarrow_codec(_codec(snap)) is None
+        or _has_utc_timestamp(_schema(snap))
+        or (_sort_order(snap) and any(pf.transform == "void" for pf in spec))
+    ):
+        return None
+    for col in rows.columns:
+        if pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py():
+            return None
+    values = [arrow_values(pf, rows[pf.source]) for pf in spec]
+    return None if any(v is None for v in values) else values
 
 
 class _NothingToCommit(Exception):
@@ -896,7 +1039,15 @@ class Table:
         out = df
         pcols = []
         for pf in spec:
-            out = out.withColumn(f"_p_{pf.name}", spark_expr(pf))
+            expr = spark_expr(pf)
+            if pf.transform == "truncate" or isinstance(
+                df.schema[pf.source].dataType, T.StringType
+            ):
+                # "" and the Hive default name share null's directory:
+                # as separate values they land in separate tasks (two
+                # files there) or in one task (a file-name clash)
+                expr = F.when(~expr.isin("", HIVE_NULL), expr)
+            out = out.withColumn(f"_p_{pf.name}", expr)
             pcols.append(f"_p_{pf.name}")
         writer_df = out
         if pcols:
@@ -920,26 +1071,108 @@ class Table:
         entries = self._collect_entries(
             staging_abs, staging_rel, spark=df.sparkSession
         )
-        bloom_cols = _bloom_keys(snap)
-        if bloom_cols and all(c in df.columns for c in bloom_cols):
-            # One column-pruned read-back of the staged files builds the
-            # per-file key blooms (bounded ≤m-position payload per file).
-            blooms = bloom_mod.compute_file_blooms(
-                df.sparkSession, staging_abs, bloom_cols
-            )
-            for e in entries:
-                rel = os.path.relpath(
-                    os.path.join(self.root, e.path), staging_abs
-                ).replace(os.sep, "/")
-                b64 = blooms.get(rel)
-                if b64 is not None:
-                    e.bloom = {
-                        "keys": list(bloom_cols),
-                        "m": bloom_mod.BLOOM_M,
-                        "k": bloom_mod.BLOOM_K,
-                        "b64": b64,
-                    }
+        self._attach_blooms(df.sparkSession, entries, staging_abs, df.columns, snap)
         return entries
+
+    def _write_arrow_files(
+        self, rows: pa.Table, spec: list[PartitionField], snap: Snapshot, values
+    ) -> list[DataFile]:
+        """The driver's twin of ``_write_data_files`` for an Arrow table
+        whose partition ``values`` (one array per spec field) have an
+        exact Arrow twin: one sort by partition values, then the
+        ``write.sort-order`` columns (ascending, nulls first, as
+        ``sortWithinPartitions``), one file per partition-value run, in
+        the Spark writer's directory layout. Entries come from the
+        writers' returned metadata: no Spark job, no footer read."""
+        staging_rel = new_data_dir()
+        staging_abs = os.path.join(self.root, staging_rel)
+        names = [f"_p_{pf.name}" for pf in spec]
+        keys = pa.table(
+            dict(zip(names, values))
+            | {c: rows[c] for c in _sort_order(snap) or []}
+        )
+        if keys.num_columns:
+            order = pc.sort_indices(
+                keys,
+                sort_keys=[(c, "ascending") for c in keys.column_names],
+                null_placement="at_start",
+            )
+            rows, keys = rows.take(order), keys.take(order)
+        keys = keys.select(names)
+        cuts = {0, rows.num_rows}  # where a partition-value run starts
+        for col in keys.columns:
+            col = col.combine_chunks()
+            a, b = col[:-1], col[1:]
+            same = pc.or_(
+                pc.and_(pc.is_null(a), pc.is_null(b)),
+                pc.fill_null(pc.equal(a, b), False),
+            )
+            cuts.update(i + 1 for i in pc.indices_nonzero(pc.invert(same)).to_pylist())
+        cuts = sorted(cuts)
+        codec, entries = _codec(snap), []
+        for start, end in zip(cuts, cuts[1:]):
+            chunk = rows.slice(start, end - start)
+            part = keys.slice(start, 1).to_pylist()[0] if names else {}
+            dirs = [
+                f"{k}={_escape_path_name(HIVE_NULL if v is None else v)}"
+                for k, v in part.items()
+            ]
+            rel = "/".join(
+                [staging_rel, *dirs, f"part-00000-{uuid.uuid4()}-c000.parquet"]
+            )
+            path = os.path.join(self.root, rel)
+            with open_parquet_writer(path, chunk, codec) as writer:
+                writer.write_table(chunk)
+            entry = data_file_entry(
+                writer.writer.metadata,
+                rel,
+                os.path.getsize(path),
+                {k[3:]: v for k, v in part.items()},
+            )
+            _float_bounds(entry, chunk)
+            entries.append(entry)
+        if _bloom_keys(snap):
+            spark = SparkSession.builder.getOrCreate()
+            self._attach_blooms(spark, entries, staging_abs, rows.column_names, snap)
+        return entries
+
+    def _write_rows(self, rows, snap: Snapshot) -> list[DataFile]:
+        """Write a DataFrame, or an Arrow table (cast to the table schema)
+        as one target file per partition value, into new data files.
+        An Arrow table goes through the driver's Arrow writer whenever
+        that reproduces the Spark writer's files, else through Spark."""
+        spec = _spec(snap)
+        if isinstance(rows, pa.Table):
+            schema = _schema(snap)
+            rows = rows.cast(to_arrow_schema(schema))
+            values = _arrow_partition_values(rows, snap)
+            if values is not None:
+                return self._write_arrow_files(rows, spec, snap, values)
+            spark = SparkSession.builder.getOrCreate()
+            rows = spark.createDataFrame(rows, schema=schema).coalesce(1)
+        return self._write_data_files(rows, spec, snap)
+
+    def _attach_blooms(
+        self, spark: SparkSession, entries, staging_abs: str, columns, snap
+    ) -> None:
+        bloom_cols = _bloom_keys(snap)
+        if not bloom_cols or not all(c in columns for c in bloom_cols):
+            return
+        # One column-pruned read-back of the staged files builds the
+        # per-file key blooms (bounded ≤m-position payload per file).
+        blooms = bloom_mod.compute_file_blooms(spark, staging_abs, bloom_cols)
+        for e in entries:
+            rel = os.path.relpath(
+                os.path.join(self.root, e.path), staging_abs
+            ).replace(os.sep, "/")
+            b64 = blooms.get(rel)
+            if b64 is not None:
+                e.bloom = {
+                    "keys": list(bloom_cols),
+                    "m": bloom_mod.BLOOM_M,
+                    "k": bloom_mod.BLOOM_K,
+                    "b64": b64,
+                }
 
     def _collect_entries(
         self, staging_abs: str, staging_rel: str, spark: SparkSession | None = None
@@ -971,7 +1204,7 @@ class Table:
                     if "=" in seg and seg.startswith("_p_"):
                         k, v = seg.split("=", 1)
                         v = urllib.parse.unquote(v)
-                        partition[k[3:]] = None if v == _HIVE_NULL else v
+                        partition[k[3:]] = None if v == HIVE_NULL else v
                 jobs.append((abs_path, rel_path, partition))
         if spark is None or len(jobs) < _MANIFEST_DISTRIBUTE_MIN:
             return [entry_from_footer(a, r, p) for a, r, p in jobs]
@@ -1046,23 +1279,28 @@ class Table:
     # ---- write strategies (SURVEY A7-A10) --------------------------------
 
     def append(
-        self, df: DataFrame, extra_properties: dict[str, str] | None = None
+        self,
+        df: DataFrame | pa.Table,
+        extra_properties: dict[str, str] | None = None,
     ) -> Snapshot:
         """A7: append — new snapshot = parent files + new files.
 
+        ``df`` is a DataFrame or an Arrow table; an Arrow table is
+        written as one file per partition value (``_write_rows``).
         ``extra_properties`` are merged into the snapshot's table
         properties ATOMICALLY with the data commit — the hook idempotent
         consumers (the exactly-once streaming sink) use to record their
         progress marker in the same transaction as the rows.
         """
         head = self.snapshot()
-        entries = self._write_data_files(df, _spec(head), head)
+        entries = self._write_rows(df, head)
         return self._commit_with_retry(_append_build(entries, extra_properties))
 
-    def overwrite(self, df: DataFrame) -> Snapshot:
-        """A8 (first flush): replace all table data with df's rows."""
+    def overwrite(self, df: DataFrame | pa.Table) -> Snapshot:
+        """A8 (first flush): replace all table data with df's rows (a
+        DataFrame or an Arrow table, as in ``append``)."""
         head = self.snapshot()
-        entries = self._write_data_files(df, _spec(head), head)
+        entries = self._write_rows(df, head)
         return self._commit_with_retry(_overwrite_build(entries))
 
     def delete_where(

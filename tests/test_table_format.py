@@ -806,11 +806,20 @@ def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
         return len(calls)
 
     assert reads(lambda: loader.load_data(rows(20), "db.t", cfg)) <= 3
+    # that steady small flush ran no Spark job: one target file's rows go
+    # from the driver's Arrow table straight to parquet
+    sc = spark.sparkContext
+    sc.setJobGroup("small-flush", "steady small loader flush")
+    try:
+        loader.load_data(rows(40), "db.t", cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("small-flush") == []
     assert reads(lambda: t.append(new_rows)) <= 2
     assert reads(lambda: t.merge(spark, updates, ["id"])) <= 2
     assert reads(lambda: rewrite_data_files(t, spark)) <= 3
     monkeypatch.undo()
-    assert t.scan(spark).count() == 41
+    assert t.scan(spark).count() == 61
 
 
 def test_scan_rejects_conflicting_snapshot_selectors(spark, tmp_path):
