@@ -37,6 +37,7 @@ from iceberg_loader_spark.sources.normalize import (
     create_record_batches_from_dicts,
 )
 from iceberg_loader_spark.sources.tables import ensure_compat
+from iceberg_loader_spark.tables import table as table_module
 from iceberg_loader_spark.tables.catalog import Warehouse
 from iceberg_loader_spark.tables.partitioning import (
     TIME_TRANSFORMS,
@@ -50,9 +51,6 @@ from iceberg_loader_spark.types import (
 )
 
 log = logging.getLogger(__name__)
-
-# in-memory Arrow bytes per output data file of a flush
-TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 def _normalize_arrow_types(table: pa.Table) -> pa.Table:
@@ -225,10 +223,10 @@ class _LoadState:
         # file, so small flushes produce one file (per partition value)
         # instead of one near-empty file per core. A flush that fits one
         # target file goes to the table as the Arrow table itself, which
-        # the table writes on the driver when its Arrow writer can; larger
-        # flushes, and upserts, keep Spark's parallel write.
-        target_parts = max(1, -(-data.nbytes // TARGET_FILE_BYTES))
-        if target_parts > 1 or self.cfg.join_cols:
+        # the table writes (and upserts) on the driver when its Arrow
+        # path can; larger flushes keep Spark's parallel write.
+        target_parts = max(1, -(-data.nbytes // table_module.TARGET_FILE_BYTES))
+        if target_parts > 1:
             data = spark.createDataFrame(data, schema=table_schema)
             if target_parts < data.rdd.getNumPartitions():
                 data = data.coalesce(target_parts)

@@ -15,10 +15,13 @@ Spark-first execution shape:
   target file) is written on the driver instead, in the same layout,
   when that reproduces Spark's files exactly (`_write_arrow_files`).
 * **Delete / Merge** — copy-on-write at file granularity: candidate files
-  are chosen from metadata (partition/stats for DELETE, a key semi-join
-  for MERGE), only those are rewritten; every other file carries over by
-  reference. At 100 TB this is the difference between rewriting a
-  partition and rewriting a table.
+  are chosen from metadata (partition/stats for DELETE; for MERGE, the
+  source keys' min/max and bloom probes against each file's stats, then
+  a key semi-join), only those are rewritten; every other file carries
+  over by reference. At 100 TB this is the difference between rewriting
+  a partition and rewriting a table. An Arrow-table merge source whose
+  candidates and rows fit one target file is merged on the driver in
+  Arrow and written by the Arrow writer (``_merge_rows_arrow``).
 
 Reference parity: write modes and their semantics mirror
 ``/root/reference src/iceberg_loader/core/strategies.py:28-99``; the
@@ -36,6 +39,7 @@ import uuid
 from dataclasses import replace
 from datetime import date, datetime
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -69,6 +73,23 @@ from iceberg_loader_spark.tables.partitioning import (
     spark_expr,
     validate_spec,
 )
+
+
+# in-memory Arrow bytes per output data file: a loader flush's write
+# sizing, and the most a merge may read and write on the driver
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def _delete_ops(preds: list[dict], eq_dels: list[dict]) -> list[dict]:
+    """A snapshot's pending merge-on-read deletes as ``_op_applies`` ops,
+    oldest first. Entries from delete_files default to equality;
+    positional delete ops carry their own "kind": "pos" marker, which
+    ``**d`` preserves."""
+    ops = [{"kind": "pred", **p} for p in (preds or [])] + [
+        {"kind": "eq", **d} for d in (eq_dels or [])
+    ]
+    ops.sort(key=lambda o: o["sequence"])
+    return ops
 
 
 def _op_applies(f: DataFile, o: dict) -> bool:
@@ -520,8 +541,10 @@ def _has_utc_timestamp(t: T.DataType) -> bool:
     return isinstance(t, T.TimestampType)
 
 
-def _arrow_partition_values(rows: pa.Table, snap: Snapshot) -> list | None:
-    """Each spec field's partition values when the driver's Arrow writer
+def _arrow_partition_values(
+    rows: pa.Table, snap: Snapshot, spec: list[PartitionField]
+) -> list | None:
+    """Each ``spec`` field's partition values when the driver's Arrow writer
     reproduces the Spark writer's files exactly (same rows, partition
     values, per-file stats and row order), else None. Not reproducible:
     an empty table, a codec pyarrow cannot write, a UTC timestamp column
@@ -530,7 +553,6 @@ def _arrow_partition_values(rows: pa.Table, snap: Snapshot) -> list | None:
     under ``write.sort-order`` (Spark's planner folds the constant
     partition column and its write loses the sort), and a transform
     without an Arrow twin (``arrow_values``)."""
-    spec = _spec(snap)
     if (
         rows.num_rows == 0
         or _pyarrow_codec(_codec(snap)) is None
@@ -543,6 +565,83 @@ def _arrow_partition_values(rows: pa.Table, snap: Snapshot) -> list | None:
             return None
     values = [arrow_values(pf, rows[pf.source]) for pf in spec]
     return None if any(v is None for v in values) else values
+
+
+def _null_safe_equal(a, b) -> pa.BooleanArray:
+    """Row-wise ``a <=> b``: two nulls are equal, a null and a value not."""
+    return pc.or_(
+        pc.and_(pc.is_null(a), pc.is_null(b)),
+        pc.fill_null(pc.equal(a, b), False),
+    )
+
+
+def _has_equal_kernel(t: pa.DataType) -> bool:
+    try:
+        pc.equal(pa.nulls(0, t), pa.nulls(0, t))
+    except pa.ArrowNotImplementedError:
+        return False
+    return True
+
+
+def _arrow_keys(schema: pa.Schema, join_cols: list[str]) -> bool:
+    """Can Arrow group and join on these key columns as Spark does?
+    Not for nested types, nor floats (Spark's join and distinct count
+    -0.0 and 0.0 as one key, Arrow's hash as two)."""
+    return all(
+        _has_equal_kernel(t) and not pa.types.is_floating(t)
+        for t in (schema.field(c).type for c in join_cols)
+    )
+
+
+def _check_unique_keys(source: pa.Table, join_cols: list[str]) -> None:
+    """The upsert source's duplicate-key check. Null keys form one
+    group, as in Spark's ``count_distinct(struct(...))``, so two rows
+    with the same null key are a duplicate."""
+    if source.group_by(join_cols).aggregate([]).num_rows != source.num_rows:
+        raise ValueError(f"duplicate join keys in upsert source on {join_cols}")
+
+
+def _key_range_op(source: pa.Table, join_cols: list[str], snap: Snapshot):
+    """A synthetic equality-delete op over the source's keys, so that
+    ``_op_applies`` keeps only the files that may hold one: the keys'
+    min/max in the manifest's stat encoding, plus bloom probes when
+    ``write.bloom.keys`` is the join key. None when every source row has
+    a null key (a null key never matches)."""
+    keys = source.select(join_cols).drop_null()
+    if keys.num_rows == 0:
+        return None
+    stats = {}
+    for c in join_cols:
+        lo_hi = pc.min_max(keys[c])
+        lo, hi = _stat_value(lo_hi["min"].as_py()), _stat_value(lo_hi["max"].as_py())
+        if lo is not None and hi is not None:
+            stats[c] = [lo, hi]
+    op = {
+        "kind": "eq",
+        "sequence": float("inf"),  # above every file's
+        "equality_cols": list(join_cols),
+        "stats": stats,
+    }
+    if _bloom_keys(snap) == list(join_cols):
+        tuples = list(zip(*[keys[c].to_pylist() for c in join_cols]))
+        op["probe"] = bloom_mod.probe_hashes_for_keys(tuples)
+    return op
+
+
+def _read_arrow_file(root: str, f: DataFile, schema: pa.Schema) -> pa.Table:
+    """One data file read by pyarrow in the table's schema: columns cast
+    to their current type, columns added after the file was written
+    filled with nulls, as the scan does."""
+    rows = pq.ParquetFile(os.path.join(root, f.path)).read()
+    return pa.table(
+        [
+            rows[fld.name].cast(fld.type)
+            if fld.name in rows.column_names
+            else pa.nulls(rows.num_rows, fld.type)
+            for fld in schema
+        ],
+        schema=schema,
+    )
 
 
 class _NothingToCommit(Exception):
@@ -696,12 +795,7 @@ class Table:
         key file is small — exactly the read-time cost Iceberg v2 pays.
         Compaction (`rewrite_data_files`) materializes + clears both
         kinds so neither list grows unboundedly."""
-        # entries from delete_files default to equality; positional delete
-        # ops carry their own "kind": "pos" marker which **d preserves
-        ops = [
-            {"kind": "pred", **p} for p in (preds or [])
-        ] + [{"kind": "eq", **d} for d in (eq_dels or [])]
-        ops.sort(key=lambda o: o["sequence"])
+        ops = _delete_ops(preds, eq_dels)
         if not files:
             df = spark.createDataFrame([], schema)
             if with_lineage:
@@ -1087,9 +1181,11 @@ class Table:
         staging_rel = new_data_dir()
         staging_abs = os.path.join(self.root, staging_rel)
         names = [f"_p_{pf.name}" for pf in spec]
+        # projections (equality-delete key files) may not carry every
+        # table sort column: sort by the ones present, as the Spark writer
         keys = pa.table(
             dict(zip(names, values))
-            | {c: rows[c] for c in _sort_order(snap) or []}
+            | {c: rows[c] for c in _sort_order(snap) or [] if c in rows.column_names}
         )
         if keys.num_columns:
             order = pc.sort_indices(
@@ -1102,11 +1198,7 @@ class Table:
         cuts = {0, rows.num_rows}  # where a partition-value run starts
         for col in keys.columns:
             col = col.combine_chunks()
-            a, b = col[:-1], col[1:]
-            same = pc.or_(
-                pc.and_(pc.is_null(a), pc.is_null(b)),
-                pc.fill_null(pc.equal(a, b), False),
-            )
+            same = _null_safe_equal(col[:-1], col[1:])
             cuts.update(i + 1 for i in pc.indices_nonzero(pc.invert(same)).to_pylist())
         cuts = sorted(cuts)
         codec, entries = _codec(snap), []
@@ -1136,16 +1228,20 @@ class Table:
             self._attach_blooms(spark, entries, staging_abs, rows.column_names, snap)
         return entries
 
-    def _write_rows(self, rows, snap: Snapshot) -> list[DataFile]:
-        """Write a DataFrame, or an Arrow table (cast to the table schema)
-        as one target file per partition value, into new data files.
-        An Arrow table goes through the driver's Arrow writer whenever
-        that reproduces the Spark writer's files, else through Spark."""
-        spec = _spec(snap)
+    def _write_rows(
+        self, rows, snap: Snapshot, spec: list[PartitionField] | None = None
+    ) -> list[DataFile]:
+        """Write a DataFrame, or an Arrow table (cast to the table schema
+        of its columns) as one target file per partition value, into new
+        data files. ``spec`` defaults to the table's. An Arrow table goes
+        through the driver's Arrow writer whenever that reproduces the
+        Spark writer's files, else through Spark."""
+        spec = _spec(snap) if spec is None else spec
         if isinstance(rows, pa.Table):
             schema = _schema(snap)
+            schema = T.StructType([schema[c] for c in rows.column_names])
             rows = rows.cast(to_arrow_schema(schema))
-            values = _arrow_partition_values(rows, snap)
+            values = _arrow_partition_values(rows, snap, spec)
             if values is not None:
                 return self._write_arrow_files(rows, spec, snap, values)
             spark = SparkSession.builder.getOrCreate()
@@ -1564,7 +1660,7 @@ class Table:
     def merge(
         self,
         spark: SparkSession,
-        source: DataFrame,
+        source: DataFrame | pa.Table,
         join_cols: list[str],
         mode: str = "cow",
     ) -> Snapshot:
@@ -1583,13 +1679,84 @@ class Table:
           is O(source); scans anti-join lower-sequence files against the
           key file until compaction materializes it. The write-optimized
           posture for high-frequency upserts at 100 TB.
+
+        ``source`` is a DataFrame or an Arrow table. An Arrow table whose
+        keys Arrow joins as Spark does is checked for duplicate keys in
+        Arrow, prunes the CoW candidates by its key range and blooms, and
+        is merged on the driver when that is eligible
+        (``_merge_rows_arrow``); anything else takes the Spark path.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode: {mode!r}")
         ensure_compat(spark)
-        if mode == "mor":
-            return self._merge_mor(spark, source, join_cols)
         snap = self.snapshot()
+        schema = _schema(snap)
+        missing = [c for c in join_cols if c not in schema.names]
+        if missing:
+            raise ValueError(f"join columns not in schema: {missing}")
+        if isinstance(source, pa.Table):
+            source = source.select(schema.names).cast(to_arrow_schema(schema))
+            if _arrow_keys(source.schema, join_cols):
+                _check_unique_keys(source, join_cols)
+            else:
+                source = spark.createDataFrame(source, schema=schema).coalesce(1)
+        if mode == "mor":
+            return self._merge_mor(spark, snap, source, join_cols)
+        rewrite, candidates = None, snap.files
+        if isinstance(source, pa.Table):
+            op = _key_range_op(source, join_cols, snap)
+            candidates = [f for f in snap.files if op and _op_applies(f, op)]
+            rewrite = self._merge_rows_arrow(snap, source, join_cols, candidates)
+            if rewrite is None:
+                source = spark.createDataFrame(source, schema=schema).coalesce(1)
+        if rewrite is None:
+            rewrite = self._merge_rows_spark(
+                spark, snap, source, join_cols, candidates
+            )
+        affected, new_entries, updated_rows = rewrite
+        affected_rel = {f.path for f in affected}
+        inserted_rows = (
+            sum(e.rows for e in new_entries)
+            - sum(f.rows for f in affected)
+        )
+
+        scanned_paths = {f.path for f in snap.files}
+
+        def build(parent: Snapshot) -> Snapshot:
+            # a concurrent append could hold rows with matching keys that
+            # the key semi-join never saw → duplicate keys after merge;
+            # fail validation like Iceberg rather than commit (ADVICE r1)
+            self._validate_cow_input(parent, scanned_paths, "merge")
+            remaining = [f for f in parent.files if f.path not in affected_rel]
+            _stamp_sequence(new_entries, parent.version + 1)
+            return new_snapshot(
+                parent,
+                "merge",
+                parent.schema_json,
+                parent.partition_spec,
+                remaining + new_entries,
+                parent.properties,
+                {
+                    "updated-records": updated_rows,
+                    "inserted-records": inserted_rows,
+                    "rewritten-files": len(affected),
+                    "total-records": parent.total_rows + inserted_rows,
+                },
+            )
+
+        return self._commit_with_retry(build)
+
+    def _merge_rows_spark(
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        source: DataFrame,
+        join_cols: list[str],
+        candidates: list[DataFile],
+    ) -> tuple[list[DataFile], list[DataFile], int]:
+        """The CoW merge's data path in Spark: the files among
+        ``candidates`` that hold a source key, the entries of their
+        rewrite plus the inserted rows, and the updated-row count."""
         schema = _schema(snap)
         spec = _spec(snap)
         cols = [f.name for f in schema.fields]
@@ -1614,8 +1781,8 @@ class Table:
 
         # locate affected files via key semi-join (metadata → file level)
         affected_rel: set[str] = set()
-        if snap.files:
-            paths = [os.path.join(self.root, f.path) for f in snap.files]
+        if candidates:
+            paths = [os.path.join(self.root, f.path) for f in candidates]
             tagged = spark.read.schema(schema).parquet(*paths).withColumn(
                 "_file", F.input_file_name()
             )
@@ -1625,14 +1792,16 @@ class Table:
                 .distinct()
                 .collect()
             )
-            root_uri_suffixes = {os.path.join(self.root, f.path): f.path for f in snap.files}
+            root_uri_suffixes = {
+                os.path.join(self.root, f.path): f.path for f in candidates
+            }
             for r in hits:
                 fpath = urllib.parse.unquote(urllib.parse.urlparse(r["_file"]).path)
                 rel = root_uri_suffixes.get(fpath)
                 if rel is None:
                     rel = os.path.relpath(fpath, self.root).replace(os.sep, "/")
                 affected_rel.add(rel)
-        affected = [f for f in snap.files if f.path in affected_rel]
+        affected = [f for f in candidates if f.path in affected_rel]
 
         updated_rows = 0
         new_entries: list[DataFile] = []
@@ -1685,36 +1854,73 @@ class Table:
                 new_entries = self._write_data_files(src, spec, snap)
             finally:
                 src.unpersist()
-        inserted_rows = (
-            sum(e.rows for e in new_entries)
-            - sum(f.rows for f in affected)
+        return affected, new_entries, updated_rows
+
+    def _merge_rows_arrow(
+        self,
+        snap: Snapshot,
+        source: pa.Table,
+        join_cols: list[str],
+        candidates: list[DataFile],
+    ) -> tuple[list[DataFile], list[DataFile], int] | None:
+        """The driver's twin of ``_merge_rows_spark`` for an Arrow source
+        in the table schema, or None when it is not eligible: the
+        candidates' manifest bytes plus the source exceed one target
+        file, a pending delete applies to a candidate, a non-key column
+        type has no Arrow equality, or the Arrow writer cannot reproduce
+        the Spark writer's files of the output
+        (``_arrow_partition_values``).
+
+        Only the key columns and row indexes are joined (Acero rejects
+        list payload columns). Taking rows by index reproduces Spark's
+        outer join: each matched target row takes its source row, also
+        when the target holds a key twice, and null keys never match."""
+        schema = source.schema
+        non_keys = [c for c in schema.names if c not in join_cols]
+        ops = _delete_ops(snap.delete_predicates, snap.delete_files)
+        if (
+            sum(f.bytes for f in candidates) + source.nbytes > TARGET_FILE_BYTES
+            or any(_op_applies(f, o) for f in candidates for o in ops)
+            or not all(_has_equal_kernel(schema.field(c).type) for c in non_keys)
+        ):
+            return None
+        reads = [_read_arrow_file(self.root, f, schema) for f in candidates]
+        target = pa.concat_tables([schema.empty_table(), *reads])
+        file_of = np.repeat(np.arange(len(reads)), [r.num_rows for r in reads])
+
+        def indexed(rows: pa.Table, name: str) -> pa.Table:
+            index = pa.array(np.arange(rows.num_rows, dtype=np.int64))
+            return rows.select(join_cols).append_column(name, index)
+
+        pairs = indexed(target, "__ils_t").join(
+            indexed(source, "__ils_s"), join_cols, join_type="inner"
         )
-
-        scanned_paths = {f.path for f in snap.files}
-
-        def build(parent: Snapshot) -> Snapshot:
-            # a concurrent append could hold rows with matching keys that
-            # the key semi-join never saw → duplicate keys after merge;
-            # fail validation like Iceberg rather than commit (ADVICE r1)
-            self._validate_cow_input(parent, scanned_paths, "merge")
-            remaining = [f for f in parent.files if f.path not in affected_rel]
-            _stamp_sequence(new_entries, parent.version + 1)
-            return new_snapshot(
-                parent,
-                "merge",
-                parent.schema_json,
-                parent.partition_spec,
-                remaining + new_entries,
-                parent.properties,
-                {
-                    "updated-records": updated_rows,
-                    "inserted-records": inserted_rows,
-                    "rewritten-files": len(affected),
-                    "total-records": parent.total_rows + inserted_rows,
-                },
-            )
-
-        return self._commit_with_retry(build)
+        t_rows = pairs["__ils_t"].to_numpy()
+        s_rows = pairs["__ils_s"].to_numpy()
+        hit = np.unique(file_of[t_rows])  # the candidates holding a key
+        kept = np.isin(file_of, hit)
+        kept[t_rows] = False
+        inserted = np.ones(source.num_rows, dtype=bool)
+        inserted[s_rows] = False
+        updates = source.take(pa.array(s_rows))
+        out = pa.concat_tables(
+            [
+                target.filter(pa.array(kept)),
+                updates,
+                source.filter(pa.array(inserted)),
+            ]
+        )
+        spec = _spec(snap)
+        values = _arrow_partition_values(out, snap, spec)
+        if values is None:
+            return None
+        matched = target.take(pa.array(t_rows))
+        same = pa.array(np.ones(len(t_rows), dtype=bool))
+        for c in non_keys:
+            same = pc.and_(same, _null_safe_equal(matched[c], updates[c]))
+        updated_rows = pc.sum(pc.invert(same)).as_py() or 0
+        entries = self._write_arrow_files(out, spec, snap, values)
+        return [candidates[i] for i in hit], entries, updated_rows
 
     def _key_probe_hashes(
         self, key_entries: list[DataFile], key_cols: list[str]
@@ -1744,10 +1950,17 @@ class Table:
         return probes
 
     def _merge_mor(
-        self, spark: SparkSession, source: DataFrame, join_cols: list[str]
+        self,
+        spark: SparkSession,
+        snap: Snapshot,
+        source: DataFrame | pa.Table,
+        join_cols: list[str],
     ) -> Snapshot:
         """Write-optimized MERGE: append source data files + one
         equality-delete file on the join keys; the target is never read.
+        An Arrow source (its keys already checked unique) is written as
+        an Arrow append is, and so is its key file: no Spark job when the
+        Arrow writer reproduces the Spark writer's files.
 
         Isolation note: like Flink's CDC writer, this commits under
         snapshot isolation — a row appended CONCURRENTLY with a matching
@@ -1755,28 +1968,29 @@ class Table:
         equality delete rather than aborting the merge. The CoW path
         keeps the stricter abort-on-conflict posture.
         """
-        snap = self.snapshot()
-        cols = _schema(snap).names
-        missing = [c for c in join_cols if c not in cols]
-        if missing:
-            raise ValueError(f"join columns not in schema: {missing}")
-
-        src = source.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            n_src, n_keys = src.agg(
-                F.count("*"),
-                F.count_distinct(F.struct(*[F.col(c) for c in join_cols])),
-            ).first()
-            if n_src != n_keys:
-                raise ValueError(
-                    f"duplicate join keys in upsert source on {join_cols}"
-                )
-            entries = self._write_data_files(src, _spec(snap), snap)
-            key_entries = self._write_data_files(
-                src.select(*join_cols), [], snap
+        if isinstance(source, pa.Table):
+            n_src = source.num_rows
+            entries = self._write_rows(source, snap)
+            key_entries = self._write_rows(source.select(join_cols), snap, spec=[])
+        else:
+            src = source.select(*_schema(snap).names).persist(
+                StorageLevel.MEMORY_AND_DISK
             )
-        finally:
-            src.unpersist()
+            try:
+                n_src, n_keys = src.agg(
+                    F.count("*"),
+                    F.count_distinct(F.struct(*[F.col(c) for c in join_cols])),
+                ).first()
+                if n_src != n_keys:
+                    raise ValueError(
+                        f"duplicate join keys in upsert source on {join_cols}"
+                    )
+                entries = self._write_data_files(src, _spec(snap), snap)
+                key_entries = self._write_data_files(
+                    src.select(*join_cols), [], snap
+                )
+            finally:
+                src.unpersist()
         probes = self._key_probe_hashes(key_entries, join_cols)
 
         def build(parent: Snapshot) -> Snapshot:

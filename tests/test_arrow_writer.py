@@ -22,11 +22,11 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
-from iceberg_loader_spark import loader as loader_module
 from iceberg_loader_spark.config import LoaderConfig
 from iceberg_loader_spark.loader import SparkLoader
 from iceberg_loader_spark.sources.spark_datasource import register
 from iceberg_loader_spark.tables import Warehouse
+from iceberg_loader_spark.tables import table as table_module
 from iceberg_loader_spark.tables.partitioning import (
     HIVE_NULL,
     PartitionField,
@@ -307,7 +307,7 @@ def test_loader_flush_bytes_and_entries_match_spark(spark, tmp_path, monkeypatch
     with _spark_writes() as calls:
         loader.load_data(_events(), "db.arrow", cfg)
     assert not calls
-    monkeypatch.setattr(loader_module, "TARGET_FILE_BYTES", 1024)
+    monkeypatch.setattr(table_module, "TARGET_FILE_BYTES", 1024)
     with _spark_writes() as calls:
         loader.load_data(_events(), "db.spark", cfg)
     assert calls

@@ -809,17 +809,31 @@ def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
     # that steady small flush ran no Spark job: one target file's rows go
     # from the driver's Arrow table straight to parquet
     sc = spark.sparkContext
-    sc.setJobGroup("small-flush", "steady small loader flush")
-    try:
-        loader.load_data(rows(40), "db.t", cfg)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("small-flush") == []
+
+    def spark_jobs(group, op) -> list:
+        sc.setJobGroup(group, group)
+        try:
+            op()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    assert spark_jobs("small-flush", lambda: loader.load_data(rows(40), "db.t", cfg)) == []
+    # a steady small loader upsert runs no Spark job either, in both
+    # modes: 2 updates and 3 inserts each
+    for mode, lo in (("cow", 58), ("mor", 61)):
+        upsert = LoaderConfig(
+            partition_by="day(ts)", join_cols=("id",), row_level_mode=mode
+        )
+        upsert_rows = rows(lo)[:5]
+        assert spark_jobs(
+            f"small-{mode}-upsert", lambda: loader.load_data(upsert_rows, "db.t", upsert)
+        ) == []
     assert reads(lambda: t.append(new_rows)) <= 2
     assert reads(lambda: t.merge(spark, updates, ["id"])) <= 2
     assert reads(lambda: rewrite_data_files(t, spark)) <= 3
     monkeypatch.undo()
-    assert t.scan(spark).count() == 61
+    assert t.scan(spark).count() == 67
 
 
 def test_scan_rejects_conflicting_snapshot_selectors(spark, tmp_path):
