@@ -31,8 +31,9 @@ md5 hex; h1 = hex[0:8], h2 = hex[8:16] | 1 (odd, so the k probe
 positions never collapse); position_i = (h1 + i*h2) mod m. Rows with a
 NULL in any key column are excluded on both sides — NULL keys never
 match a plain-equality anti-join, so they cannot affect applicability.
-Intended for id-like (integer / string) key columns, where Spark's
-CAST(x AS STRING) and Python's ``str`` agree.
+The two agree only for integer and string key columns, so keys of any
+other type are never probed (``probe_hashes_for_keys``): their files
+carry a bloom that range-only pruning ignores.
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ import hashlib
 import os
 import urllib.parse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -116,12 +118,25 @@ def compute_file_blooms(
     return out
 
 
-def probe_hashes_for_keys(rows: list[tuple]) -> list[list[int]] | None:
-    """Delete-op probe payload: [h1, h2] per key tuple, or None when the
-    key set exceeds PROBE_CAP (fall back to range-only pruning)."""
-    if len(rows) > PROBE_CAP:
+def _hash_agrees(t: pa.DataType) -> bool:
+    """Does Python's ``str`` of this type's values equal Spark's
+    CAST(x AS STRING)? Only for integers and strings: a boolean is
+    'True' against 'true', a timestamp '...00.500000' against '...00.5'."""
+    return pa.types.is_integer(t) or pa.types.is_string(t) or pa.types.is_large_string(t)
+
+
+def probe_hashes_for_keys(keys: pa.Table) -> list[list[int]] | None:
+    """Delete-op probe payload: [h1, h2] per key tuple of ``keys`` (one
+    column per key column) without a NULL, or None when there are more
+    than PROBE_CAP or a key type's hash would not match the write pass's
+    (fall back to range-only pruning)."""
+    if not all(_hash_agrees(t) for t in keys.schema.types):
         return None
-    return [list(hash_pair_py(t)) for t in rows]
+    keys = keys.drop_null()
+    if keys.num_rows > PROBE_CAP:
+        return None
+    tuples = zip(*[keys[c].to_pylist() for c in keys.column_names])
+    return [list(hash_pair_py(t)) for t in tuples]
 
 
 def bloom_may_contain_any(bloom_b64: str, probe: list[list[int]]) -> bool:

@@ -20,8 +20,9 @@ Spark-first execution shape:
   a key semi-join), only those are rewritten; every other file carries
   over by reference. At 100 TB this is the difference between rewriting
   a partition and rewriting a table. An Arrow-table merge source whose
-  candidates and rows fit one target file is merged on the driver in
-  Arrow and written by the Arrow writer (``_merge_rows_arrow``).
+  candidates' decoded rows and its own fit ``DRIVER_MERGE_BYTES`` is
+  merged on the driver in Arrow and written by the Arrow writer
+  (``_merge_rows_arrow``).
 
 Reference parity: write modes and their semantics mirror
 ``/root/reference src/iceberg_loader/core/strategies.py:28-99``; the
@@ -76,8 +77,16 @@ from iceberg_loader_spark.tables.partitioning import (
 
 
 # in-memory Arrow bytes per output data file: a loader flush's write
-# sizing, and the most a merge may read and write on the driver
+# sizing, so a flush of at most this much reaches the table as Arrow
 TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+# the most decoded Arrow bytes (the candidate files' rows plus the
+# source) a CoW merge reads on the driver; past it the merge runs in
+# Spark. The bound is on driver memory, not speed: the driver's merge
+# peaks at about 5.5 times its decoded bytes in Arrow memory (the
+# reads, their concatenation, the output and the writer's buffers),
+# and on 4 cores it still beat the Spark merge at 180 MB decoded.
+DRIVER_MERGE_BYTES = 64 * 1024 * 1024
 
 
 def _delete_ops(preds: list[dict], eq_dels: list[dict]) -> list[dict]:
@@ -623,8 +632,7 @@ def _key_range_op(source: pa.Table, join_cols: list[str], snap: Snapshot):
         "stats": stats,
     }
     if _bloom_keys(snap) == list(join_cols):
-        tuples = list(zip(*[keys[c].to_pylist() for c in join_cols]))
-        op["probe"] = bloom_mod.probe_hashes_for_keys(tuples)
+        op["probe"] = bloom_mod.probe_hashes_for_keys(keys)
     return op
 
 
@@ -1694,21 +1702,24 @@ class Table:
         missing = [c for c in join_cols if c not in schema.names]
         if missing:
             raise ValueError(f"join columns not in schema: {missing}")
+        arrow = False  # an Arrow source with keys Arrow checks as Spark does
         if isinstance(source, pa.Table):
             source = source.select(schema.names).cast(to_arrow_schema(schema))
-            if _arrow_keys(source.schema, join_cols):
+            arrow = _arrow_keys(source.schema, join_cols)
+            if arrow:
                 _check_unique_keys(source, join_cols)
-            else:
-                source = spark.createDataFrame(source, schema=schema).coalesce(1)
-        if mode == "mor":
-            return self._merge_mor(spark, snap, source, join_cols)
         rewrite, candidates = None, snap.files
-        if isinstance(source, pa.Table):
+        if arrow and mode == "cow":
             op = _key_range_op(source, join_cols, snap)
             candidates = [f for f in snap.files if op and _op_applies(f, op)]
             rewrite = self._merge_rows_arrow(snap, source, join_cols, candidates)
-            if rewrite is None:
-                source = spark.createDataFrame(source, schema=schema).coalesce(1)
+        # what is left to Spark needs a DataFrame; a MoR upsert writes a
+        # checked Arrow source as it is
+        to_spark = rewrite is None and not (arrow and mode == "mor")
+        if to_spark and isinstance(source, pa.Table):
+            source = spark.createDataFrame(source, schema=schema).coalesce(1)
+        if mode == "mor":
+            return self._merge_mor(snap, source, join_cols)
         if rewrite is None:
             rewrite = self._merge_rows_spark(
                 spark, snap, source, join_cols, candidates
@@ -1865,11 +1876,13 @@ class Table:
     ) -> tuple[list[DataFile], list[DataFile], int] | None:
         """The driver's twin of ``_merge_rows_spark`` for an Arrow source
         in the table schema, or None when it is not eligible: the
-        candidates' manifest bytes plus the source exceed one target
-        file, a pending delete applies to a candidate, a non-key column
-        type has no Arrow equality, or the Arrow writer cannot reproduce
-        the Spark writer's files of the output
-        (``_arrow_partition_values``).
+        candidates' decoded rows plus the source exceed
+        ``DRIVER_MERGE_BYTES``, a pending delete applies to a candidate,
+        a non-key column type has no Arrow equality, or the Arrow writer
+        cannot reproduce the Spark writer's files of the output
+        (``_arrow_partition_values``). Candidates larger on disk than
+        the budget are not read; otherwise the reads stop, and the merge
+        goes to Spark, once their decoded rows pass it.
 
         Only the key columns and row indexes are joined (Acero rejects
         list payload columns). Taking rows by index reproduces Spark's
@@ -1878,13 +1891,19 @@ class Table:
         schema = source.schema
         non_keys = [c for c in schema.names if c not in join_cols]
         ops = _delete_ops(snap.delete_predicates, snap.delete_files)
+        budget = DRIVER_MERGE_BYTES - source.nbytes
         if (
-            sum(f.bytes for f in candidates) + source.nbytes > TARGET_FILE_BYTES
+            sum(f.bytes for f in candidates) > budget
             or any(_op_applies(f, o) for f in candidates for o in ops)
             or not all(_has_equal_kernel(schema.field(c).type) for c in non_keys)
         ):
             return None
-        reads = [_read_arrow_file(self.root, f, schema) for f in candidates]
+        reads = []
+        for f in candidates:
+            reads.append(_read_arrow_file(self.root, f, schema))
+            budget -= reads[-1].nbytes
+            if budget < 0:
+                return None
         target = pa.concat_tables([schema.empty_table(), *reads])
         file_of = np.repeat(np.arange(len(reads)), [r.num_rows for r in reads])
 
@@ -1928,30 +1947,24 @@ class Table:
         """Bloom probe payload for equality-delete ops: per-key (h1, h2)
         hashes let ``_op_applies`` test each delete key against a
         candidate file's bloom. Only computed for small key sets
-        (≤ PROBE_CAP total rows) so the manifest op stays O(small);
-        larger deletes fall back to key-range pruning alone. Keys are
+        (≤ PROBE_CAP total rows) of integer or string keys so the
+        manifest op stays O(small) and matches the blooms' hash; other
+        deletes fall back to key-range pruning alone. Keys are
         read back from the just-written key files — a driver-side read
         of O(keys) rows, same order as the commit metadata itself."""
         probes: dict[str, list[list[int]]] = {}
         if sum(e.rows for e in key_entries) > bloom_mod.PROBE_CAP:
             return probes
         for e in key_entries:
-            tbl = pq.read_table(
-                os.path.join(self.root, e.path), columns=list(key_cols)
+            hashes = bloom_mod.probe_hashes_for_keys(
+                pq.read_table(os.path.join(self.root, e.path), columns=list(key_cols))
             )
-            tuples = [
-                t
-                for t in zip(*[tbl.column(c).to_pylist() for c in key_cols])
-                if all(v is not None for v in t)
-            ]
-            hashes = bloom_mod.probe_hashes_for_keys(tuples)
             if hashes is not None:
                 probes[e.path] = hashes
         return probes
 
     def _merge_mor(
         self,
-        spark: SparkSession,
         snap: Snapshot,
         source: DataFrame | pa.Table,
         join_cols: list[str],
@@ -1969,14 +1982,13 @@ class Table:
         keeps the stricter abort-on-conflict posture.
         """
         if isinstance(source, pa.Table):
-            n_src = source.num_rows
-            entries = self._write_rows(source, snap)
-            key_entries = self._write_rows(source.select(join_cols), snap, spec=[])
+            src, n_src = source, source.num_rows
         else:
             src = source.select(*_schema(snap).names).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
-            try:
+        try:
+            if not isinstance(src, pa.Table):
                 n_src, n_keys = src.agg(
                     F.count("*"),
                     F.count_distinct(F.struct(*[F.col(c) for c in join_cols])),
@@ -1985,11 +1997,10 @@ class Table:
                     raise ValueError(
                         f"duplicate join keys in upsert source on {join_cols}"
                     )
-                entries = self._write_data_files(src, _spec(snap), snap)
-                key_entries = self._write_data_files(
-                    src.select(*join_cols), [], snap
-                )
-            finally:
+            entries = self._write_rows(src, snap)
+            key_entries = self._write_rows(src.select(join_cols), snap, spec=[])
+        finally:
+            if not isinstance(src, pa.Table):
                 src.unpersist()
         probes = self._key_probe_hashes(key_entries, join_cols)
 

@@ -20,6 +20,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from iceberg_loader_spark.tables import ConcurrentModification, Warehouse
 from iceberg_loader_spark.tables import table as table_module
@@ -320,6 +321,38 @@ def test_unknown_join_column_rejected(spark, tmp_path, mode):
             t.merge(spark, source, ["k", "nope"], mode=mode)
 
 
+@pytest.mark.parametrize("budget", ["below-disk", "below-decoded"])
+def test_driver_merge_bytes_bound(spark, tmp_path, monkeypatch, budget):
+    """Candidates plus source past ``DRIVER_MERGE_BYTES`` decoded take the
+    Spark path: turned away from their size on disk before any read, or
+    while reading once their decoded rows pass the budget."""
+    wh = Warehouse(str(tmp_path))
+    batches = [[_row(k, 0, k, s=f"s{k:06d}") for k in range(0, 4000, 2)]]
+    arrow_t, spark_t = _twins(wh, "t", ["day(ts)"], {}, batches, 1)
+    files = arrow_t.snapshot().files
+    disk = sum(f.bytes for f in files)
+    schema = pa.schema(ARROW_FULL)
+    decoded = sum(
+        table_module._read_arrow_file(arrow_t.root, f, schema).nbytes for f in files
+    )
+    assert disk < decoded
+    source = [_row(2, 0, 30), _row(5, 0, 31)]
+    src_bytes = pa.Table.from_pylist(source, ARROW_FULL).nbytes
+    limit = disk // 2 if budget == "below-disk" else (disk + decoded) // 2
+    monkeypatch.setattr(table_module, "DRIVER_MERGE_BYTES", src_bytes + limit)
+    read = []
+    orig = table_module._read_arrow_file
+    monkeypatch.setattr(
+        table_module,
+        "_read_arrow_file",
+        lambda root, f, schema: read.append(f.rows) or orig(root, f, schema),
+    )
+    a, s, used_spark = _merge_both(spark, arrow_t, spark_t, source, ["k"])
+    assert used_spark
+    assert read == ([] if budget == "below-disk" else [2000])
+    _assert_same(spark, arrow_t, spark_t, a, s)
+
+
 def test_pending_delete_takes_spark_path(spark, tmp_path):
     """A merge-on-read delete pending on a candidate: the Arrow path is
     not eligible, and the merge gives the Spark path's result."""
@@ -396,3 +429,49 @@ def test_mor_merge_of_arrow_source_matches_spark(spark, tmp_path):
         "k"
     ].to_pylist() == [None, 3, 5, 30]
     assert _scan(spark, arrow_t) == _scan(spark, spark_t)
+
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize(
+    "key_type, keys",
+    [
+        (T.BooleanType(), [True, False]),
+        (
+            T.TimestampNTZType(),
+            [DAY0 + dt.timedelta(seconds=0.5), DAY0 + dt.timedelta(seconds=1.25)],
+        ),
+    ],
+    ids=["boolean", "timestamp-ntz"],
+)
+def test_bloom_on_key_without_string_twin(spark, tmp_path, mode, key_type, keys):
+    """``write.bloom.keys`` on a key whose Python ``str`` differs from
+    Spark's CAST(x AS STRING): the keys are not probed against the file
+    blooms, so the file holding the updated key is still rewritten (CoW)
+    or still filtered by the key file (MoR)."""
+    wh = Warehouse(str(tmp_path))
+    schema = T.StructType(
+        [T.StructField("b", key_type), T.StructField("v", T.LongType())]
+    )
+    rows = to_arrow_schema(schema)
+    tables = [
+        Table.create(wh, f"db.{side}", schema, properties={"write.bloom.keys": "b"})
+        for side in ("a", "s")
+    ]
+    for t in tables:
+        for k in keys:
+            t.append(pa.Table.from_pylist([{"b": k, "v": 1}], rows))
+    source = pa.Table.from_pylist([{"b": keys[0], "v": 2}], rows)
+    with _spark_merges() as calls:
+        a = tables[0].merge(spark, source, ["b"], mode=mode)
+    s = tables[1].merge(
+        spark, spark.createDataFrame(source, schema=schema), ["b"], mode=mode
+    )
+    assert not calls
+    if mode == "cow":
+        keys_ = ("updated-records", "inserted-records", "rewritten-files")
+        assert [a.summary[k] for k in keys_] == [s.summary[k] for k in keys_]
+        assert [a.summary[k] for k in keys_] == [1, 0, 1]
+    for t in tables:
+        got = sorted((r.b, r.v) for r in t.scan(spark).collect())
+        assert got == sorted([(keys[0], 2), (keys[1], 1)])
