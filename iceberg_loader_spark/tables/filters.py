@@ -6,9 +6,11 @@ The reference accepts PyIceberg row-filter strings like
 ``tests/test_iceberg_loader.py:119-122``). We accept the same surface:
 conjunctions of ``col OP literal`` with OP ∈ {==, !=, <, <=, >, >=, IN}.
 
-Two consumers:
+Three consumers:
 
 * :func:`to_spark_sql` — rewrite to Spark SQL for the row-level filter.
+* :func:`to_arrow_expr` — the same filter as a pyarrow expression, for
+  the driver's reads, when Arrow evaluates it exactly as Spark does.
 * :func:`file_may_match` — conservative metadata-only test of one
   manifest entry (partition values + column min/max), used to pick the
   files a DELETE must rewrite. Returning True when unsure is always safe;
@@ -19,6 +21,9 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from iceberg_loader_spark.tables.format import DataFile
 from iceberg_loader_spark.tables.partitioning import (
@@ -62,21 +67,108 @@ def _parse_literal(s: str):
     return s
 
 
-def parse_filter(expr: str) -> list[Term]:
-    """Parse a conjunction of simple terms; raises ValueError otherwise."""
-    terms = []
+def _split_terms(expr: str) -> list[tuple[str, str, str]]:
+    """(column, op, literal text) per conjunct; ValueError otherwise."""
+    out = []
     for part in re.split(r"(?i)\s+and\s+", expr.strip()):
         m = _TERM_RE.match(part)
         if m is None:
             raise ValueError(f"unsupported filter term: {part!r}")
-        col, op, lit = m.group(1), m.group(2).lower(), _parse_literal(m.group(3))
-        terms.append(Term(col, "in" if op == "in" else op, lit))
-    return terms
+        op = m.group(2).lower()
+        out.append((m.group(1), "in" if op == "in" else op, m.group(3)))
+    return out
+
+
+def parse_filter(expr: str) -> list[Term]:
+    """Parse a conjunction of simple terms; raises ValueError otherwise."""
+    return [Term(c, op, _parse_literal(lit)) for c, op, lit in _split_terms(expr)]
 
 
 def to_spark_sql(expr: str) -> str:
     """PyIceberg-style filter → Spark SQL (just `==` → `=`)."""
     return re.sub(r"(?<![=!<>])==", "=", expr)
+
+
+_INT_RE = re.compile(r"[+-]?[0-9]+")
+_FLOAT_RE = re.compile(
+    r"[+-]?(?:[0-9]+\.[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?|[+-]?[0-9]+[eE][+-]?[0-9]+"
+)
+_INT64 = (-(2**63), 2**63 - 1)
+
+
+def _arrow_literal(text: str, t: pa.DataType):
+    """The value Spark compares a column of type ``t`` with for the
+    literal ``text``, when Arrow's comparison of the two is Spark's, else
+    None. Kept: a quoted string (no backslash escape, inner quote or
+    ``==``, which ``to_spark_sql`` would rewrite) against a string
+    column, true/false against a boolean, an int64 integer against an
+    integer or double column, a finite decimal or exponent number
+    against a floating column. Anything else (a bare token such as
+    ``null`` or a column name, a date or timestamp column, a cross-type
+    pair) Spark coerces or resolves in ways Arrow does not follow."""
+    text = text.strip()
+    if len(text) >= 2 and text[0] == text[-1] and text[0] in "'\"":
+        inner = text[1:-1]
+        ok = "\\" not in inner and text[0] not in inner and "==" not in inner
+        return inner if ok and pa.types.is_string(t) else None
+    if text.lower() in ("true", "false"):
+        return text.lower() == "true" if pa.types.is_boolean(t) else None
+    if _INT_RE.fullmatch(text):
+        v = int(text)
+        ok = _INT64[0] <= v <= _INT64[1] and (
+            pa.types.is_integer(t) or pa.types.is_float64(t)
+        )
+        return v if ok else None
+    if _FLOAT_RE.fullmatch(text) and pa.types.is_floating(t):
+        v = float(text)
+        return v if abs(v) != float("inf") else None
+    return None
+
+
+def to_arrow_expr(expr: str, schema: pa.Schema) -> pc.Expression | None:
+    """``expr`` over rows of ``schema`` as a pyarrow expression that is
+    true, false or null exactly where Spark's ``to_spark_sql(expr)`` is,
+    or None when that cannot be promised: a parse error, a column not in
+    ``schema`` (Spark resolves names case-insensitively), or a literal
+    ``_arrow_literal`` rejects. An ``IN`` list becomes an OR of
+    equalities (Spark's, with -0.0 equal to 0.0), and ``>``/``>=`` on a
+    floating column also hold for NaN, which Spark orders above every
+    number."""
+    try:
+        terms = _split_terms(expr)
+    except ValueError:
+        return None
+    out = None
+    for col, op, text in terms:
+        if col not in schema.names or col.lower() in ("null", "true", "false"):
+            return None
+        t = schema.field(col).type
+        if op == "in":
+            if not (text.startswith("(") and text.endswith(")")):
+                return None
+            values = [_arrow_literal(p, t) for p in text[1:-1].split(",")]
+        else:
+            values = [_arrow_literal(text, t)]
+        if any(v is None for v in values):
+            return None
+        field = pc.field(col)
+        if op in ("in", "=="):
+            term = None
+            for v in values:
+                eq = field == pc.scalar(v)
+                term = eq if term is None else term | eq
+        else:
+            term = {
+                "!=": field != pc.scalar(values[0]),
+                "<": field < pc.scalar(values[0]),
+                "<=": field <= pc.scalar(values[0]),
+                ">": field > pc.scalar(values[0]),
+                ">=": field >= pc.scalar(values[0]),
+            }[op]
+            if op in (">", ">=") and pa.types.is_floating(t):
+                term = term | pc.is_nan(field)
+        out = term if out is None else out & term
+    return out
 
 
 _TS_STAT_RE = re.compile(r"^\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}\.\d{6}$")

@@ -27,13 +27,14 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from iceberg_loader_spark.sources.tables import ensure_compat
 from iceberg_loader_spark.tables.format import (
     ConcurrentModification,
     DataFile,
     Snapshot,
     new_snapshot,
 )
-from iceberg_loader_spark.tables.table import Table, _sort_order, _spec
+from iceberg_loader_spark.tables.table import Table, _schema, _sort_order, _spec
 
 log = logging.getLogger(__name__)
 
@@ -189,45 +190,21 @@ def _zorder_column(
     return z.alias("_zvalue")
 
 
-def rewrite_data_files(
+def _rewrite_spark(
     table: Table,
     spark: SparkSession,
-    target_file_mb: int = 512,
-    sort_by: list[str] | None = None,
-    target_files: int | None = None,
-    zorder_by: list[str] | None = None,
-) -> dict:
-    """A35: compaction — coalesce small files into ~target-size files.
-
-    ``sort_by``: cluster rows by these columns during the rewrite
-    (Iceberg's sort-order rewrite): a range repartition + within-file
-    sort gives each output file a tight, near-disjoint min/max range on
-    the sort columns, so metadata pruning on them approaches
-    one-file-per-predicate at scan time — the single biggest pruning
-    lever at 100 TB. Linear sort only prunes on the LEADING column(s).
-
-    ``zorder_by``: multi-dimensional clustering (Iceberg/Delta Z-order):
-    rows are range-partitioned and sorted by the Morton interleave of
-    per-column bucket ids, so every listed column gets partial per-file
-    min/max locality — point/range predicates on ANY of them prune to
-    ~n_files^((d-1)/d). Numeric columns, unpartitioned tables (partition
-    values already dominate file boundaries otherwise).
-    """
-    if sort_by and zorder_by:
-        raise ValueError("sort_by and zorder_by are mutually exclusive")
-    snap = table.snapshot()
-    if not sort_by and not zorder_by:
-        # a standing write.sort-order keeps its clustering through
-        # compaction without the caller restating it
-        sort_by = _sort_order(snap)
-    if not snap.files:
-        return {"rewritten": 0, "added": 0}
-    total_bytes = sum(f.bytes for f in snap.files)
-    target = target_files or max(
-        1, round(total_bytes / (target_file_mb * 1024 * 1024))
+    snap: Snapshot,
+    spec: list,
+    target: int,
+    sort_by: list[str] | None,
+    zorder_by: list[str] | None,
+) -> list[DataFile]:
+    """``rewrite_data_files``' data path in Spark: ``snap``'s rows,
+    pending deletes applied, clustered and written as new data files."""
+    ensure_compat(spark)
+    df = table._read_files_mor(
+        spark, snap.files, _schema(snap), snap.delete_predicates, snap.delete_files
     )
-    spec = _spec(snap)
-    df = table.scan(spark, version=snap.version)
     if zorder_by:
         if spec:
             raise ValueError(
@@ -308,9 +285,65 @@ def rewrite_data_files(
     # INSIDE that method, after its repartition — a pre-sort here would be
     # destroyed. Within each partition the rows are then sort-clustered,
     # giving tight per-file min/max on the sort columns.
-    entries = table._write_data_files(
+    return table._write_data_files(
         df, spec, snap, sort_within=sort_by if spec else None
     )
+
+
+def rewrite_data_files(
+    table: Table,
+    spark: SparkSession,
+    target_file_mb: int = 512,
+    sort_by: list[str] | None = None,
+    target_files: int | None = None,
+    zorder_by: list[str] | None = None,
+) -> dict:
+    """A35: compaction — coalesce small files into ~target-size files.
+
+    ``sort_by``: cluster rows by these columns during the rewrite
+    (Iceberg's sort-order rewrite): a range repartition + within-file
+    sort gives each output file a tight, near-disjoint min/max range on
+    the sort columns, so metadata pruning on them approaches
+    one-file-per-predicate at scan time — the single biggest pruning
+    lever at 100 TB. Linear sort only prunes on the LEADING column(s).
+
+    ``zorder_by``: multi-dimensional clustering (Iceberg/Delta Z-order):
+    rows are range-partitioned and sorted by the Morton interleave of
+    per-column bucket ids, so every listed column gets partial per-file
+    min/max locality — point/range predicates on ANY of them prune to
+    ~n_files^((d-1)/d). Numeric columns, unpartitioned tables (partition
+    values already dominate file boundaries otherwise).
+
+    Where the Spark path writes one file per partition value (a
+    partitioned table, or an unpartitioned one compacted into one
+    target file) and ``zorder_by`` is not given, a small input is
+    rewritten on the driver instead (``Table._rewrite_rows_arrow``:
+    ``Table._read_arrow`` with the pending deletes applied, then the
+    Arrow writer), with no Spark job; it must fit ``DRIVER_MERGE_BYTES``
+    and meet the Arrow writer's eligibility. Either way the input is
+    read from the one snapshot resolved here.
+    """
+    if sort_by and zorder_by:
+        raise ValueError("sort_by and zorder_by are mutually exclusive")
+    snap = table.snapshot()
+    if not sort_by and not zorder_by:
+        # a standing write.sort-order keeps its clustering through
+        # compaction without the caller restating it
+        sort_by = _sort_order(snap)
+    if not snap.files:
+        return {"rewritten": 0, "added": 0}
+    total_bytes = sum(f.bytes for f in snap.files)
+    target = target_files or max(
+        1, round(total_bytes / (target_file_mb * 1024 * 1024))
+    )
+    spec = _spec(snap)
+    entries = None
+    # the driver writes what the Spark path writes as one file per
+    # partition value: a partitioned table, or one target file
+    if not zorder_by and (spec or target == 1):
+        entries = table._rewrite_rows_arrow(snap.files, snap, spec, sort_within=sort_by)
+    if entries is None:
+        entries = _rewrite_spark(table, spark, snap, spec, target, sort_by, zorder_by)
     # Only the files we actually scanned are replaced. A writer that
     # commits between the scan and the commit (or during a conflict
     # retry) must have its files carried over, or its rows are lost —

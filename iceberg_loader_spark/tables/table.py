@@ -22,7 +22,10 @@ Spark-first execution shape:
   a partition and rewriting a table. An Arrow-table merge source whose
   candidates' decoded rows and its own fit ``DRIVER_MERGE_BYTES`` is
   merged on the driver in Arrow and written by the Arrow writer
-  (``_merge_rows_arrow``).
+  (``_merge_rows_arrow``); small CoW deletes and compactions are
+  rewritten on the driver the same way (``_rewrite_rows_arrow``), all
+  reading through ``_read_arrow``, the pyarrow twin of the
+  merge-on-read scan.
 
 Reference parity: write modes and their semantics mirror
 ``/root/reference src/iceberg_loader/core/strategies.py:28-99``; the
@@ -35,6 +38,7 @@ import itertools
 import json
 import os
 import re
+import unicodedata
 import urllib.parse
 import uuid
 from dataclasses import replace
@@ -55,6 +59,7 @@ from iceberg_loader_spark.tables import bloom as bloom_mod
 from iceberg_loader_spark.tables.filters import (
     prune_files,
     split_delete_candidates,
+    to_arrow_expr,
     to_spark_sql,
 )
 from iceberg_loader_spark.tables.format import (
@@ -80,12 +85,13 @@ from iceberg_loader_spark.tables.partitioning import (
 # sizing, so a flush of at most this much reaches the table as Arrow
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
-# the most decoded Arrow bytes (the candidate files' rows plus the
-# source) a CoW merge reads on the driver; past it the merge runs in
-# Spark. The bound is on driver memory, not speed: the driver's merge
-# peaks at about 5.5 times its decoded bytes in Arrow memory (the
-# reads, their concatenation, the output and the writer's buffers),
-# and on 4 cores it still beat the Spark merge at 180 MB decoded.
+# the most decoded Arrow bytes a rewrite reads on the driver (a CoW
+# merge's candidate rows plus its source, a CoW delete's candidates, a
+# compaction's input); past it the rewrite runs in Spark. The bound is
+# on driver memory, not speed: the driver's merge peaks at about 5.5
+# times its decoded bytes in Arrow memory (the reads, their
+# concatenation, the output and the writer's buffers), and on 4 cores
+# it still beat the Spark merge at 180 MB decoded.
 DRIVER_MERGE_BYTES = 64 * 1024 * 1024
 
 
@@ -188,6 +194,7 @@ _POS_DELETE_SCHEMA = T.StructType(
         T.StructField("pos", T.LongType()),
     ]
 )
+_POS_DELETE_ARROW = to_arrow_schema(_POS_DELETE_SCHEMA)
 
 
 def _stamp_sequence(entries, version: int) -> None:
@@ -491,9 +498,9 @@ def _dictionary_columns(rows) -> list[str]:
 def open_parquet_writer(path: str, sample, codec: str) -> pq.ParquetWriter:
     """The one pyarrow data-file writer (the driver's Arrow writer and
     the sparkberg connector's tasks): ``codec`` is the table's Spark
-    codec name, the dictionary rule is applied to ``sample`` (the rows,
-    or a streaming writer's first batch), and no Arrow schema is
-    embedded in the footer."""
+    codec name, written at parquet-mr's level, the dictionary rule is
+    applied to ``sample`` (the rows, or a streaming writer's first
+    batch), and no Arrow schema is embedded in the footer."""
     compression = _pyarrow_codec(codec)
     if compression is None:
         raise ValueError(
@@ -504,6 +511,10 @@ def open_parquet_writer(path: str, sample, codec: str) -> pq.ParquetWriter:
         path,
         sample.schema,
         compression=compression,
+        # parquet-mr's zstd level: pyarrow's default 1 wrote a compacted
+        # day(ts) table 6 % larger than Spark's files (gzip's defaults
+        # write within 1 % of each other)
+        compression_level=3 if compression == "zstd" else None,
         use_dictionary=_dictionary_columns(sample),
         store_schema=False,
     )
@@ -636,20 +647,59 @@ def _key_range_op(source: pa.Table, join_cols: list[str], snap: Snapshot):
     return op
 
 
-def _read_arrow_file(root: str, f: DataFile, schema: pa.Schema) -> pa.Table:
-    """One data file read by pyarrow in the table's schema: columns cast
-    to their current type, columns added after the file was written
-    filled with nulls, as the scan does."""
-    rows = pq.ParquetFile(os.path.join(root, f.path)).read()
+def _read_columns(path: str, schema: pa.Schema) -> pa.Table:
+    """A parquet file's ``schema`` columns read by pyarrow: cast to their
+    current type, columns added after the file was written filled with
+    nulls, as the scan does."""
+    pf = pq.ParquetFile(path)
+    present = set(pf.schema_arrow.names)
+    rows = pf.read(columns=[n for n in schema.names if n in present])
     return pa.table(
         [
             rows[fld.name].cast(fld.type)
-            if fld.name in rows.column_names
-            else pa.nulls(rows.num_rows, fld.type)
+            if fld.name in present
+            else pa.nulls(pf.metadata.num_rows, fld.type)
             for fld in schema
         ],
         schema=schema,
     )
+
+
+def _indexed(rows: pa.Table, keys: list[str], name: str) -> pa.Table:
+    """``rows``' key columns plus their row index as column ``name``:
+    what the driver joins (Acero rejects list payload columns)."""
+    index = pa.array(np.arange(rows.num_rows, dtype=np.int64))
+    return rows.select(keys).append_column(name, index)
+
+
+def _read_arrow_file(root: str, f: DataFile, schema: pa.Schema) -> pa.Table:
+    """One data file read by pyarrow in the table's ``schema``."""
+    return _read_columns(os.path.join(root, f.path), schema)
+
+
+# characters java.net.URI keeps in a path: Spark's _metadata.file_path
+# percent-encodes every other ASCII character (a Hive-escaped "%3A"
+# reads back as "%253A") and keeps non-ASCII ones that are neither
+# spaces nor controls
+_URI_PATH_CHARS = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789"
+    "-_.!~*'();:@&=+$,/"
+)
+
+
+def _lineage_path(root: str, f: DataFile) -> str:
+    """``_with_lineage``'s file column for ``f``: ``_LINEAGE_RE``'s match
+    in the file URI Spark reports, or "" when the pattern does not
+    match."""
+    uri = "file:" + "".join(
+        c
+        if c in _URI_PATH_CHARS
+        or (ord(c) > 127 and unicodedata.category(c) not in ("Zs", "Zl", "Zp", "Cc"))
+        else "".join(f"%{b:02X}" for b in c.encode())
+        for c in os.path.abspath(os.path.join(root, f.path))
+    )
+    m = re.search(_LINEAGE_RE, uri)
+    return m.group(1) if m else ""
 
 
 class _NothingToCommit(Exception):
@@ -863,6 +913,127 @@ class Table:
                 df = df.drop(_LINEAGE_FILE, _LINEAGE_POS)
             out = df if out is None else out.unionByName(df)
         return out
+
+    def _read_arrow(
+        self, files: list[DataFile], snap: Snapshot, budget: int
+    ) -> pa.Table | None:
+        """The driver's twin of ``_read_files_mor``: ``files`` read by
+        pyarrow in ``snap``'s schema with its pending merge-on-read
+        deletes applied, or None when that is not exact or not cheap.
+
+        Files group by era as in the Spark read. In an era, positional
+        deletes drop raw row indexes of the files whose lineage path
+        (``_lineage_path``) they name, equality deletes are a left-anti
+        join on the key columns (null keys never match), and predicate
+        deletes keep the rows where ``to_arrow_expr`` is false or null.
+
+        None for a UTC timestamp column (Spark stores INT96), an
+        applicable delete without an Arrow twin (a predicate
+        ``to_arrow_expr`` rejects, a float or nested equality key), and
+        ``files`` larger than ``budget`` bytes on disk or, once read,
+        decoded."""
+        spark_schema = _schema(snap)
+        if _has_utc_timestamp(spark_schema) or sum(f.bytes for f in files) > budget:
+            return None
+        schema = to_arrow_schema(spark_schema)
+        ops = _delete_ops(snap.delete_predicates, snap.delete_files)
+        eras: dict[tuple, list[DataFile]] = {}
+        for f in files:
+            k = tuple(i for i, o in enumerate(ops) if _op_applies(f, o))
+            eras.setdefault(k, []).append(f)
+        twins = {
+            i: self._arrow_delete(ops[i], schema)
+            for i in set(itertools.chain.from_iterable(eras))
+        }
+        if any(twin is None for twin in twins.values()):
+            return None
+        out = [schema.empty_table()]
+        for k, era in eras.items():
+            reads = []
+            for f in era:
+                reads.append(_read_arrow_file(self.root, f, schema))
+                budget -= reads[-1].nbytes
+                if budget < 0:
+                    return None
+            rows = pa.concat_tables([schema.empty_table(), *reads])
+            dropped = np.zeros(rows.num_rows, dtype=bool)
+            if any(ops[i]["kind"] == "pos" for i in k):
+                # each file's lineage path, first row and row count
+                counts = np.array([r.num_rows for r in reads], dtype=np.int64)
+                lineage = pa.table(
+                    {
+                        "file_path": [_lineage_path(self.root, f) for f in era],
+                        "__ils_off": np.cumsum(counts) - counts,
+                        "__ils_n": counts,
+                    }
+                )
+            for i in k:
+                twin = twins[i]
+                if ops[i]["kind"] == "eq":
+                    keys = twin.column_names
+                    hit = _indexed(rows, keys, "__ils_t").join(
+                        twin, keys, join_type="left semi"
+                    )
+                    dropped[hit["__ils_t"].to_numpy()] = True
+                elif ops[i]["kind"] == "pos":
+                    hit = twin.join(lineage, "file_path", join_type="inner")
+                    pos = hit["pos"].to_numpy()
+                    ok = (pos >= 0) & (pos < hit["__ils_n"].to_numpy())
+                    dropped[(hit["__ils_off"].to_numpy() + pos)[ok]] = True
+            rows = rows.filter(pa.array(~dropped))
+            for i in k:
+                if ops[i]["kind"] == "pred":
+                    rows = rows.filter(~twins[i] | twins[i].is_null())
+            out.append(rows)
+        return pa.concat_tables(out)
+
+    def _arrow_delete(self, op: dict, schema: pa.Schema):
+        """A delete op's Arrow twin for ``_read_arrow``: the predicate's
+        ``to_arrow_expr``, an equality-delete file's key rows, or a
+        positional delete file's non-null (file_path, pos) rows; None
+        when there is none."""
+        if op["kind"] == "pred":
+            return to_arrow_expr(op["where"], schema)
+        path = os.path.join(self.root, op["path"])
+        if op["kind"] == "pos":
+            return _read_columns(path, _POS_DELETE_ARROW).drop_null()
+        keys = list(op["equality_cols"])
+        if not all(c in schema.names for c in keys) or not _arrow_keys(schema, keys):
+            return None
+        return _read_columns(path, pa.schema([schema.field(c) for c in keys]))
+
+    def _rewrite_rows_arrow(
+        self,
+        files: list[DataFile],
+        snap: Snapshot,
+        spec: list[PartitionField],
+        where: str | None = None,
+        sort_within: list[str] | None | object = "__table_default__",
+    ) -> list[DataFile] | None:
+        """Rewrite ``files`` of ``snap`` on the driver, less the rows
+        ``where`` matches when given, as one file per partition value
+        (``_write_arrow_files``), or None when the Spark path must run:
+        ``where`` has no ``to_arrow_expr`` twin, ``_read_arrow`` declines
+        under ``DRIVER_MERGE_BYTES``, ``_arrow_partition_values`` rejects
+        the output, or a ``void`` field would be sorted (Spark's write
+        loses that sort)."""
+        schema = to_arrow_schema(_schema(snap))
+        e = to_arrow_expr(where, schema) if where is not None else None
+        if where is not None and e is None:
+            return None
+        if sort_within == "__table_default__":
+            sort_within = _sort_order(snap)
+        if sort_within and any(pf.transform == "void" for pf in spec):
+            return None
+        rows = self._read_arrow(files, snap, DRIVER_MERGE_BYTES)
+        if rows is None:
+            return None
+        if e is not None:
+            rows = rows.filter(~e | e.is_null())
+        values = _arrow_partition_values(rows, snap, spec)
+        if values is None:
+            return None
+        return self._write_arrow_files(rows, spec, snap, values, sort_within)
 
     def _row_changing_snapshots(self, from_version: int, to_version: int):
         """Snapshots in (from_version, to_version], oldest first, minus
@@ -1177,15 +1348,23 @@ class Table:
         return entries
 
     def _write_arrow_files(
-        self, rows: pa.Table, spec: list[PartitionField], snap: Snapshot, values
+        self,
+        rows: pa.Table,
+        spec: list[PartitionField],
+        snap: Snapshot,
+        values,
+        sort_within: list[str] | None | object = "__table_default__",
     ) -> list[DataFile]:
         """The driver's twin of ``_write_data_files`` for an Arrow table
         whose partition ``values`` (one array per spec field) have an
         exact Arrow twin: one sort by partition values, then the
-        ``write.sort-order`` columns (ascending, nulls first, as
-        ``sortWithinPartitions``), one file per partition-value run, in
-        the Spark writer's directory layout. Entries come from the
-        writers' returned metadata: no Spark job, no footer read."""
+        ``sort_within`` columns (ascending, nulls first, as
+        ``sortWithinPartitions``; the ``write.sort-order`` by default),
+        one file per partition-value run, in the Spark writer's directory
+        layout. Entries come from the writers' returned metadata: no
+        Spark job, no footer read."""
+        if sort_within == "__table_default__":
+            sort_within = _sort_order(snap)
         staging_rel = new_data_dir()
         staging_abs = os.path.join(self.root, staging_rel)
         names = [f"_p_{pf.name}" for pf in spec]
@@ -1193,7 +1372,7 @@ class Table:
         # table sort column: sort by the ones present, as the Spark writer
         keys = pa.table(
             dict(zip(names, values))
-            | {c: rows[c] for c in _sort_order(snap) or [] if c in rows.column_names}
+            | {c: rows[c] for c in sort_within or [] if c in rows.column_names}
         )
         if keys.num_columns:
             order = pc.sort_indices(
@@ -1428,6 +1607,11 @@ class Table:
         predicates. Metadata-proof fully-matching files are still dropped
         outright, so partition-aligned deletes stay pure-metadata AND
         instant in either mode.
+
+        A CoW rewrite runs on the driver (``_rewrite_rows_arrow``) when
+        the Spark writer would make one file per partition value (a
+        partitioned table, or a single candidate) and the candidates
+        fit ``DRIVER_MERGE_BYTES``, else in Spark.
         """
         if mode not in ("cow", "mor", "mor-pos"):
             raise ValueError(f"unknown delete mode: {mode!r}")
@@ -1445,19 +1629,28 @@ class Table:
             where, snap.files, spec
         )
         sql_pred = to_spark_sql(where)
-        new_entries: list[DataFile] = []
+        new_entries: list[DataFile] | None = []
         deleted_rows = sum(f.rows for f in dropped)
         rewritten = []
         if candidates:
-            cdf = self._read_files_mor(
-                spark,
-                candidates,
-                _schema(snap),
-                snap.delete_predicates,
-                snap.delete_files,
+            # the Spark writer makes one file per partition value, or one
+            # per input split when unpartitioned: the driver writes the
+            # former, and a single candidate's one split
+            new_entries = (
+                self._rewrite_rows_arrow(candidates, snap, spec, where)
+                if spec or len(candidates) == 1
+                else None
             )
-            keep = cdf.filter(~F.expr(sql_pred) | F.expr(sql_pred).isNull())
-            new_entries = self._write_data_files(keep, spec, snap)
+            if new_entries is None:
+                cdf = self._read_files_mor(
+                    spark,
+                    candidates,
+                    _schema(snap),
+                    snap.delete_predicates,
+                    snap.delete_files,
+                )
+                keep = cdf.filter(~F.expr(sql_pred) | F.expr(sql_pred).isNull())
+                new_entries = self._write_data_files(keep, spec, snap)
             kept_rows = sum(e.rows for e in new_entries)
             deleted_rows += sum(f.rows for f in candidates) - kept_rows
             rewritten = candidates
@@ -1876,48 +2069,45 @@ class Table:
     ) -> tuple[list[DataFile], list[DataFile], int] | None:
         """The driver's twin of ``_merge_rows_spark`` for an Arrow source
         in the table schema, or None when it is not eligible: the
-        candidates' decoded rows plus the source exceed
-        ``DRIVER_MERGE_BYTES``, a pending delete applies to a candidate,
-        a non-key column type has no Arrow equality, or the Arrow writer
-        cannot reproduce the Spark writer's files of the output
-        (``_arrow_partition_values``). Candidates larger on disk than
-        the budget are not read; otherwise the reads stop, and the merge
-        goes to Spark, once their decoded rows pass it.
+        candidates larger on disk than ``DRIVER_MERGE_BYTES`` less the
+        source, a non-key column type without Arrow equality, a rewrite
+        ``_read_arrow`` declines under that budget, or output the Arrow
+        writer cannot reproduce (``_arrow_partition_values``).
 
-        Only the key columns and row indexes are joined (Acero rejects
-        list payload columns). Taking rows by index reproduces Spark's
-        outer join: each matched target row takes its source row, also
-        when the target holds a key twice, and null keys never match."""
+        The files to rewrite are the candidates holding a source key in
+        a raw row, as the Spark merge's key semi-join finds them, from
+        their key columns alone; their rows are then read with pending
+        deletes applied. Only the key columns and row indexes are
+        joined. Taking rows by index reproduces Spark's outer join: each
+        matched target row takes its source row, also when the target
+        holds a key twice, and null keys never match."""
         schema = source.schema
         non_keys = [c for c in schema.names if c not in join_cols]
-        ops = _delete_ops(snap.delete_predicates, snap.delete_files)
         budget = DRIVER_MERGE_BYTES - source.nbytes
-        if (
-            sum(f.bytes for f in candidates) > budget
-            or any(_op_applies(f, o) for f in candidates for o in ops)
-            or not all(_has_equal_kernel(schema.field(c).type) for c in non_keys)
+        if sum(f.bytes for f in candidates) > budget or not all(
+            _has_equal_kernel(schema.field(c).type) for c in non_keys
         ):
             return None
-        reads = []
-        for f in candidates:
-            reads.append(_read_arrow_file(self.root, f, schema))
-            budget -= reads[-1].nbytes
-            if budget < 0:
-                return None
-        target = pa.concat_tables([schema.empty_table(), *reads])
-        file_of = np.repeat(np.arange(len(reads)), [r.num_rows for r in reads])
-
-        def indexed(rows: pa.Table, name: str) -> pa.Table:
-            index = pa.array(np.arange(rows.num_rows, dtype=np.int64))
-            return rows.select(join_cols).append_column(name, index)
-
-        pairs = indexed(target, "__ils_t").join(
-            indexed(source, "__ils_s"), join_cols, join_type="inner"
+        key_schema = pa.schema([schema.field(c) for c in join_cols])
+        keys = [
+            _read_columns(os.path.join(self.root, f.path), key_schema)
+            for f in candidates
+        ]
+        file_of = np.repeat(np.arange(len(keys)), [r.num_rows for r in keys])
+        found = _indexed(
+            pa.concat_tables([key_schema.empty_table(), *keys]), join_cols, "__ils_t"
+        ).join(source.select(join_cols), join_cols, join_type="left semi")
+        hit = np.unique(file_of[found["__ils_t"].to_numpy()])
+        affected = [candidates[i] for i in hit]
+        target = self._read_arrow(affected, snap, budget)
+        if target is None:
+            return None
+        pairs = _indexed(target, join_cols, "__ils_t").join(
+            _indexed(source, join_cols, "__ils_s"), join_cols, join_type="inner"
         )
         t_rows = pairs["__ils_t"].to_numpy()
         s_rows = pairs["__ils_s"].to_numpy()
-        hit = np.unique(file_of[t_rows])  # the candidates holding a key
-        kept = np.isin(file_of, hit)
+        kept = np.ones(target.num_rows, dtype=bool)
         kept[t_rows] = False
         inserted = np.ones(source.num_rows, dtype=bool)
         inserted[s_rows] = False
@@ -1939,7 +2129,7 @@ class Table:
             same = pc.and_(same, _null_safe_equal(matched[c], updates[c]))
         updated_rows = pc.sum(pc.invert(same)).as_py() or 0
         entries = self._write_arrow_files(out, spec, snap, values)
-        return [candidates[i] for i in hit], entries, updated_rows
+        return affected, entries, updated_rows
 
     def _key_probe_hashes(
         self, key_entries: list[DataFile], key_cols: list[str]

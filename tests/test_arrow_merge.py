@@ -353,17 +353,27 @@ def test_driver_merge_bytes_bound(spark, tmp_path, monkeypatch, budget):
     _assert_same(spark, arrow_t, spark_t, a, s)
 
 
-def test_pending_delete_takes_spark_path(spark, tmp_path):
-    """A merge-on-read delete pending on a candidate: the Arrow path is
-    not eligible, and the merge gives the Spark path's result."""
+@pytest.mark.parametrize("kind", ["pred", "eq", "pos"])
+def test_pending_delete_merges_on_driver(spark, tmp_path, kind):
+    """A merge-on-read delete pending on the candidates, of each kind:
+    the merge reads them through ``_read_arrow`` on the driver and gives
+    the Spark path's result. Key 2's row is deleted, so its source row
+    is an insert, yet its file is rewritten, as Spark's key semi-join on
+    the raw rows finds it."""
     wh = Warehouse(str(tmp_path))
     batches = [[_row(k, k % 2, k) for k in range(8)]]
     arrow_t, spark_t = _twins(wh, "t", ["day(ts)"], {}, batches, 1)
     for t in (arrow_t, spark_t):
-        t.delete_where(spark, "v == 2", mode="mor")
+        if kind == "pred":
+            t.delete_where(spark, "v == 2", mode="mor")
+        elif kind == "pos":
+            t.delete_where(spark, "v == 2", mode="mor-pos")
+        else:
+            t.delete_by_keys(spark, spark.createDataFrame([(2,)], "k bigint"), ["k"])
     source = [_row(2, 0, 30), _row(4, 0, 31), _row(50, 1, 32)]
     a, s, used_spark = _merge_both(spark, arrow_t, spark_t, source, ["k"])
-    assert used_spark
+    assert not used_spark
+    assert a.summary["rewritten-files"] == 1
     _assert_same(spark, arrow_t, spark_t, a, s)
 
 
