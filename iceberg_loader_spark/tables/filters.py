@@ -102,10 +102,11 @@ def _arrow_literal(text: str, t: pa.DataType):
     None. Kept: a quoted string (no backslash escape, inner quote or
     ``==``, which ``to_spark_sql`` would rewrite) against a string
     column, true/false against a boolean, an int64 integer against an
-    integer or double column, a finite decimal or exponent number
-    against a floating column. Anything else (a bare token such as
-    ``null`` or a column name, a date or timestamp column, a cross-type
-    pair) Spark coerces or resolves in ways Arrow does not follow."""
+    integer column or (as the double Spark casts it to) a double one, a
+    finite decimal or exponent number against a floating column.
+    Anything else (a bare token such as ``null`` or a column name, a
+    date or timestamp column, a cross-type pair) Spark coerces or
+    resolves in ways Arrow does not follow."""
     text = text.strip()
     if len(text) >= 2 and text[0] == text[-1] and text[0] in "'\"":
         inner = text[1:-1]
@@ -115,10 +116,13 @@ def _arrow_literal(text: str, t: pa.DataType):
         return text.lower() == "true" if pa.types.is_boolean(t) else None
     if _INT_RE.fullmatch(text):
         v = int(text)
-        ok = _INT64[0] <= v <= _INT64[1] and (
-            pa.types.is_integer(t) or pa.types.is_float64(t)
-        )
-        return v if ok else None
+        if not _INT64[0] <= v <= _INT64[1]:
+            return None
+        if pa.types.is_float64(t):
+            # Spark casts the BIGINT to DOUBLE, rounding to nearest as
+            # Python's float() does; Arrow's own cast rejects |v| > 2^53
+            return float(v)
+        return v if pa.types.is_integer(t) else None
     if _FLOAT_RE.fullmatch(text) and pa.types.is_floating(t):
         v = float(text)
         return v if abs(v) != float("inf") else None

@@ -326,6 +326,11 @@ def rewrite_data_files(
     if sort_by and zorder_by:
         raise ValueError("sort_by and zorder_by are mutually exclusive")
     snap = table.snapshot()
+    # checked here for both data paths: the Spark sort would raise, the
+    # driver's would skip an unknown column
+    unknown = [c for c in sort_by or [] if c not in _schema(snap).names]
+    if unknown:
+        raise ValueError(f"sort_by references unknown columns: {unknown}")
     if not sort_by and not zorder_by:
         # a standing write.sort-order keeps its clustering through
         # compaction without the caller restating it
@@ -341,7 +346,7 @@ def rewrite_data_files(
     # the driver writes what the Spark path writes as one file per
     # partition value: a partitioned table, or one target file
     if not zorder_by and (spec or target == 1):
-        entries = table._rewrite_rows_arrow(snap.files, snap, spec, sort_within=sort_by)
+        entries = table._rewrite_rows_arrow(snap.files, snap, spec, sort_by)
     if entries is None:
         entries = _rewrite_spark(table, spark, snap, spec, target, sort_by, zorder_by)
     # Only the files we actually scanned are replaced. A writer that

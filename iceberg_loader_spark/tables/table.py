@@ -562,7 +562,10 @@ def _has_utc_timestamp(t: T.DataType) -> bool:
 
 
 def _arrow_partition_values(
-    rows: pa.Table, snap: Snapshot, spec: list[PartitionField]
+    rows: pa.Table,
+    snap: Snapshot,
+    spec: list[PartitionField],
+    sort_within: list[str] | None,
 ) -> list | None:
     """Each ``spec`` field's partition values when the driver's Arrow writer
     reproduces the Spark writer's files exactly (same rows, partition
@@ -570,14 +573,14 @@ def _arrow_partition_values(
     an empty table, a codec pyarrow cannot write, a UTC timestamp column
     anywhere in the schema (Spark writes INT96 without stats), a NaN in a
     float column (parquet-mr records NaN as a bound), a ``void`` field
-    under ``write.sort-order`` (Spark's planner folds the constant
+    under a ``sort_within`` sort (Spark's planner folds the constant
     partition column and its write loses the sort), and a transform
     without an Arrow twin (``arrow_values``)."""
     if (
         rows.num_rows == 0
         or _pyarrow_codec(_codec(snap)) is None
         or _has_utc_timestamp(_schema(snap))
-        or (_sort_order(snap) and any(pf.transform == "void" for pf in spec))
+        or (sort_within and any(pf.transform == "void" for pf in spec))
     ):
         return None
     for col in rows.columns:
@@ -1007,30 +1010,25 @@ class Table:
         files: list[DataFile],
         snap: Snapshot,
         spec: list[PartitionField],
+        sort_within: list[str] | None,
         where: str | None = None,
-        sort_within: list[str] | None | object = "__table_default__",
     ) -> list[DataFile] | None:
         """Rewrite ``files`` of ``snap`` on the driver, less the rows
         ``where`` matches when given, as one file per partition value
-        (``_write_arrow_files``), or None when the Spark path must run:
-        ``where`` has no ``to_arrow_expr`` twin, ``_read_arrow`` declines
-        under ``DRIVER_MERGE_BYTES``, ``_arrow_partition_values`` rejects
-        the output, or a ``void`` field would be sorted (Spark's write
-        loses that sort)."""
+        sorted by ``sort_within`` (``_write_arrow_files``), or None when
+        the Spark path must run: ``where`` has no ``to_arrow_expr`` twin,
+        ``_read_arrow`` declines under ``DRIVER_MERGE_BYTES``, or
+        ``_arrow_partition_values`` rejects the output."""
         schema = to_arrow_schema(_schema(snap))
         e = to_arrow_expr(where, schema) if where is not None else None
         if where is not None and e is None:
-            return None
-        if sort_within == "__table_default__":
-            sort_within = _sort_order(snap)
-        if sort_within and any(pf.transform == "void" for pf in spec):
             return None
         rows = self._read_arrow(files, snap, DRIVER_MERGE_BYTES)
         if rows is None:
             return None
         if e is not None:
             rows = rows.filter(~e | e.is_null())
-        values = _arrow_partition_values(rows, snap, spec)
+        values = _arrow_partition_values(rows, snap, spec, sort_within)
         if values is None:
             return None
         return self._write_arrow_files(rows, spec, snap, values, sort_within)
@@ -1353,18 +1351,15 @@ class Table:
         spec: list[PartitionField],
         snap: Snapshot,
         values,
-        sort_within: list[str] | None | object = "__table_default__",
+        sort_within: list[str] | None,
     ) -> list[DataFile]:
         """The driver's twin of ``_write_data_files`` for an Arrow table
         whose partition ``values`` (one array per spec field) have an
         exact Arrow twin: one sort by partition values, then the
         ``sort_within`` columns (ascending, nulls first, as
-        ``sortWithinPartitions``; the ``write.sort-order`` by default),
-        one file per partition-value run, in the Spark writer's directory
-        layout. Entries come from the writers' returned metadata: no
-        Spark job, no footer read."""
-        if sort_within == "__table_default__":
-            sort_within = _sort_order(snap)
+        ``sortWithinPartitions``), one file per partition-value run, in
+        the Spark writer's directory layout. Entries come from the
+        writers' returned metadata: no Spark job, no footer read."""
         staging_rel = new_data_dir()
         staging_abs = os.path.join(self.root, staging_rel)
         names = [f"_p_{pf.name}" for pf in spec]
@@ -1428,9 +1423,10 @@ class Table:
             schema = _schema(snap)
             schema = T.StructType([schema[c] for c in rows.column_names])
             rows = rows.cast(to_arrow_schema(schema))
-            values = _arrow_partition_values(rows, snap, spec)
+            sort_within = _sort_order(snap)
+            values = _arrow_partition_values(rows, snap, spec, sort_within)
             if values is not None:
-                return self._write_arrow_files(rows, spec, snap, values)
+                return self._write_arrow_files(rows, spec, snap, values, sort_within)
             spark = SparkSession.builder.getOrCreate()
             rows = spark.createDataFrame(rows, schema=schema).coalesce(1)
         return self._write_data_files(rows, spec, snap)
@@ -1637,7 +1633,9 @@ class Table:
             # per input split when unpartitioned: the driver writes the
             # former, and a single candidate's one split
             new_entries = (
-                self._rewrite_rows_arrow(candidates, snap, spec, where)
+                self._rewrite_rows_arrow(
+                    candidates, snap, spec, _sort_order(snap), where
+                )
                 if spec or len(candidates) == 1
                 else None
             )
@@ -2089,10 +2087,7 @@ class Table:
         ):
             return None
         key_schema = pa.schema([schema.field(c) for c in join_cols])
-        keys = [
-            _read_columns(os.path.join(self.root, f.path), key_schema)
-            for f in candidates
-        ]
+        keys = [_read_arrow_file(self.root, f, key_schema) for f in candidates]
         file_of = np.repeat(np.arange(len(keys)), [r.num_rows for r in keys])
         found = _indexed(
             pa.concat_tables([key_schema.empty_table(), *keys]), join_cols, "__ils_t"
@@ -2119,8 +2114,8 @@ class Table:
                 source.filter(pa.array(inserted)),
             ]
         )
-        spec = _spec(snap)
-        values = _arrow_partition_values(out, snap, spec)
+        spec, sort_within = _spec(snap), _sort_order(snap)
+        values = _arrow_partition_values(out, snap, spec, sort_within)
         if values is None:
             return None
         matched = target.take(pa.array(t_rows))
@@ -2128,7 +2123,7 @@ class Table:
         for c in non_keys:
             same = pc.and_(same, _null_safe_equal(matched[c], updates[c]))
         updated_rows = pc.sum(pc.invert(same)).as_py() or 0
-        entries = self._write_arrow_files(out, spec, snap, values)
+        entries = self._write_arrow_files(out, spec, snap, values, sort_within)
         return affected, entries, updated_rows
 
     def _key_probe_hashes(

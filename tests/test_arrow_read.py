@@ -177,6 +177,7 @@ PREDICATES = [
     "x > 1",
     "x == 0",
     "x < 1.5",
+    "x < 10000000000000000",  # past 2^53: Spark casts the BIGINT to DOUBLE
     "k IN (1, 3, 5)",
     "v >= 0 and s == 'é'",
     "k != 4",
@@ -342,6 +343,24 @@ def test_to_arrow_expr_rejects_what_spark_reads_differently(where):
     assert to_arrow_expr(where, ARROW) is None
 
 
+def test_wide_integer_literal_on_double_column(spark, tmp_path):
+    """An integer literal past 2^53 against a double column compares as
+    the double Spark casts it to (9007199254740993 rounds to 2^53), so a
+    driver compaction applies such pending deletes as the scan does."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", SCHEMA, [parse_partition_transform("day(ts)")])
+    xs = [1.5, 2e16, 2.0**53, math.nan, None]
+    t.append(pa.Table.from_pylist([_row(k, x=x) for k, x in enumerate(xs)], ARROW))
+    t.delete_where(spark, "x > 10000000000000000", mode="mor")
+    t.delete_where(spark, "x == 9007199254740993", mode="mor")
+    before = _scan(spark, t)
+    assert sorted(r.k for r in t.scan(spark).collect()) == [0, 4]
+    with _spark_rewrites() as calls:
+        maintenance.rewrite_data_files(t, spark)
+    assert not calls
+    assert _scan(spark, t) == before
+
+
 # ---- compaction on the driver against the Spark path -----------------------
 
 _HISTORY = [
@@ -442,6 +461,20 @@ def test_compaction_bytes_match_spark_writer(spark, tmp_path, monkeypatch):
     arrow_bytes = sum(f.bytes for f in a_files)
     spark_bytes = sum(f.bytes for f in s_files)
     assert arrow_bytes <= 1.02 * spark_bytes, (arrow_bytes, spark_bytes)
+
+
+def test_unknown_sort_by_rejected(spark, tmp_path, monkeypatch):
+    """Both data paths reject a ``sort_by`` column the table lacks."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", SCHEMA)
+    for k in range(2):
+        t.append(pa.Table.from_pylist([_row(k)], ARROW))
+    version = t.snapshot().version
+    for budget in (table_module.DRIVER_MERGE_BYTES, 0):
+        monkeypatch.setattr(table_module, "DRIVER_MERGE_BYTES", budget)
+        with pytest.raises(ValueError, match=r"unknown columns: \['nope'\]"):
+            maintenance.rewrite_data_files(t, spark, sort_by=["k", "nope"])
+    assert t.snapshot().version == version
 
 
 def _compacts_in_spark(spark, t: Table, **kwargs) -> None:
