@@ -12,11 +12,13 @@ Layout of one table::
 
 Commit protocol (single atomic step): write ``v{N}.json``, then publish by
 writing ``_current`` via temp-file + ``os.replace`` (atomic on POSIX).
-Concurrent writers race on the version number: a committer that finds
-``v{N}.json`` already existing re-reads ``_current`` and retries on top of
-the new state, up to ``commit.retry.num-retries`` times — the same
-optimistic-concurrency contract as Iceberg's metastore commit (reference
-pins 10 retries, ``core/config.py:15-17``).
+A writer commits on the parent snapshot it already read; the manifest is
+delta-encoded against that in-memory parent. Concurrent writers race on
+the version number: a committer that finds the table moved past its
+parent, or ``v{N}.json`` already existing, re-reads the head and retries
+on top of the new state, up to ``commit.retry.num-retries`` times — the
+same optimistic-concurrency contract as Iceberg's metastore commit
+(reference pins 10 retries, ``core/config.py:15-17``).
 
 Manifest contents are deliberately metadata-only-planning friendly: each
 file entry carries row count, byte size, its partition-value tuple, and
@@ -120,6 +122,11 @@ class Snapshot:
     # lower-sequence data files against the key rows; the MoR upsert
     # (merge(mode='mor')) commits one of these plus the new data files
     delete_files: list = field(default_factory=list)
+    # delta hops below this snapshot's manifest (0 when self-contained),
+    # as resolution walked them or the commit wrote them: the
+    # full-manifest rule of the next commit. In memory only, never in
+    # to_json.
+    chain_length: int = field(default=0, compare=False, repr=False)
 
     @property
     def total_rows(self) -> int:
@@ -357,29 +364,23 @@ class TableMetadata:
     def load_snapshot(self, version: int | None = None) -> Snapshot:
         if version is None:
             version = self.current_version()
-        return Snapshot.from_json(self._resolve_manifest(version))
+        return self._resolve(self.backend.read_manifest(version))
 
-    def _resolve_manifest(self, version: int) -> dict:
-        """Read a manifest, reconstructing the full file list from the
-        delta encoding (base + added/removed) when present."""
-        return self._resolve_payload(self.backend.read_manifest(version))
-
-    def _resolve_payload(self, payload: dict) -> dict:
-        """Full form of an already-read manifest payload (reads only the
-        delta chain below it)."""
-        if "files_base" not in payload:
-            return payload
-        base = self._resolve_manifest(payload["files_base"])
-        removed = set(payload.get("files_removed", []))
-        files = [
-            f for f in base.get("files", []) if f["path"] not in removed
-        ] + payload.get("files_added", [])
-        full = dict(payload)
-        full.pop("files_base", None)
-        full.pop("files_removed", None)
-        full.pop("files_added", None)
-        full["files"] = files
-        return full
+    def _resolve(self, payload: dict, base: Snapshot | None = None) -> Snapshot:
+        """The snapshot of a read manifest, its file list rebuilt from the
+        delta encoding (base + added/removed) when present. ``base`` is
+        the resolved snapshot at ``files_base`` when the caller holds it;
+        otherwise the chain below is read."""
+        snap = Snapshot.from_json(payload)
+        if "files_base" in payload:
+            if base is None or base.version != payload["files_base"]:
+                base = self._resolve(self.backend.read_manifest(payload["files_base"]))
+            removed = set(payload.get("files_removed", []))
+            snap.files = [f for f in base.files if f.path not in removed] + [
+                DataFile.from_json(f) for f in payload.get("files_added", [])
+            ]
+            snap.chain_length = base.chain_length + 1
+        return snap
 
     def delete_snapshot_manifest(self, version: int) -> None:
         self.backend.delete_manifest(version)
@@ -388,7 +389,13 @@ class TableMetadata:
         return self.backend.list_versions()
 
     def snapshots(self) -> list[Snapshot]:
-        return [self.load_snapshot(v) for v in self.list_versions()]
+        """Every version, oldest first: a delta on the previous version
+        resolves against it, so a history walk reads each manifest once."""
+        out: list[Snapshot] = []
+        for v in self.list_versions():
+            payload = self.backend.read_manifest(v)
+            out.append(self._resolve(payload, out[-1] if out else None))
+        return out
 
     def snapshot_as_of(self, timestamp_ms: int) -> Snapshot:
         """Newest snapshot committed at or before ``timestamp_ms``."""
@@ -399,23 +406,26 @@ class TableMetadata:
 
     # ---- commits ---------------------------------------------------------
 
-    def commit(self, snapshot: Snapshot, expected_parent: int | None) -> Snapshot:
+    def commit(
+        self, snapshot: Snapshot, expected_parent: Snapshot | None
+    ) -> Snapshot:
         """Atomically publish ``snapshot``.
 
-        ``expected_parent`` is the version the writer based its changes on
-        (None for table creation). Raises :class:`CommitConflict` if the
-        table has advanced past it.
+        ``expected_parent`` is the snapshot the writer based its changes
+        on (None for table creation). Raises :class:`CommitConflict` if the
+        table has advanced past it. The manifest is delta-encoded against
+        it in memory, so a commit that does not conflict reads no
+        manifest.
         """
+        parent_version = None if expected_parent is None else expected_parent.version
         current = self.current_version() if self.exists() else None
-        if current != expected_parent:
+        if current != parent_version:
             raise CommitConflict(
-                f"table at v{current}, writer expected v{expected_parent}"
+                f"table at v{current}, writer expected v{parent_version}"
             )
+        payload = self._encode_manifest(snapshot, expected_parent)
         try:
-            self.backend.write_manifest_exclusive(
-                snapshot.version,
-                self._encode_manifest(snapshot, expected_parent),
-            )
+            self.backend.write_manifest_exclusive(snapshot.version, payload)
         except CommitConflict:
             # A manifest already exists at our target version. Either a
             # concurrent writer beat us (it will/did publish — normal
@@ -427,53 +437,39 @@ class TableMetadata:
             self._recover_orphan(snapshot.version)
             raise
         self.backend.publish_current(snapshot.version)
+        snapshot.chain_length = (
+            expected_parent.chain_length + 1 if "files_base" in payload else 0
+        )
         return snapshot
 
     def _encode_manifest(
-        self, snapshot: Snapshot, parent_version: int | None
+        self, snapshot: Snapshot, parent: Snapshot | None
     ) -> dict:
-        """Delta-encode the file list against the parent manifest when
+        """Delta-encode the file list against the parent snapshot when
         the change set is small: commit metadata becomes O(changed
         files), not O(table) — the property that keeps commit cost flat
         at 100 TB file counts. Falls back to a self-contained manifest
-        when the parent is unreadable, the chain is
-        ``MANIFEST_FULL_EVERY`` deep, or the delta wouldn't pay
+        at table creation, when the parent's resolved chain is
+        ``MANIFEST_FULL_EVERY`` deep, or when the delta wouldn't pay
         (overwrite/compaction/rollback churn most of the file set)."""
         payload = snapshot.to_json()
-        if parent_version is None:
+        if parent is None or parent.chain_length + 1 >= self.MANIFEST_FULL_EVERY:
             return payload
-        try:
-            parent_raw = self.backend.read_manifest(parent_version)
-            parent_full = self._resolve_payload(parent_raw)
-        except Exception:
-            return payload
-        depth = parent_raw.get("files_delta_depth", 0)
-        if depth + 1 >= self.MANIFEST_FULL_EVERY:
-            return payload
-        parent_by_path = {
-            f["path"]: f for f in parent_full.get("files", [])
-        }
-        cur = payload["files"]
-        cur_paths = {f["path"] for f in cur}
-        added = [
-            f
-            for f in cur
-            if parent_by_path.get(f["path"]) != f  # new OR changed entry
+        parent_by_path = {f.path: f for f in parent.files}
+        cur_paths = {f.path for f in snapshot.files}
+        added = [  # new OR changed entries
+            f.to_json()
+            for f in snapshot.files
+            if parent_by_path.get(f.path) != f
         ]
-        removed = [
-            p for p in parent_by_path if p not in cur_paths
-        ] + [
-            f["path"]
-            for f in cur
-            if f["path"] in parent_by_path
-            and parent_by_path[f["path"]] != f
+        removed = [p for p in parent_by_path if p not in cur_paths] + [
+            f["path"] for f in added if f["path"] in parent_by_path
         ]
-        if 2 * (len(added) + len(removed)) > max(1, len(cur)):
+        if 2 * (len(added) + len(removed)) > max(1, len(snapshot.files)):
             return payload
         delta = dict(payload)
         del delta["files"]
-        delta["files_base"] = parent_version
-        delta["files_delta_depth"] = depth + 1
+        delta["files_base"] = parent.version
         delta["files_added"] = added
         delta["files_removed"] = removed
         return delta

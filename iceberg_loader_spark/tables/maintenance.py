@@ -100,21 +100,14 @@ def expire_snapshots(
         survivors = [s for s in snapshots if s not in expired]
         # Delta-encoded manifests may chain through versions being
         # expired: materialize any surviving manifest whose base is about
-        # to disappear BEFORE deleting (ascending order so multi-hop
-        # chains resolve while their bases still exist; the replace is
-        # atomic, so concurrent readers see old-delta or new-full, both
-        # resolving to identical content).
+        # to disappear BEFORE deleting, from the snapshot history already
+        # resolved (the replace is atomic, so concurrent readers see
+        # old-delta or new-full, both resolving to identical content).
         expired_versions = {s.version for s in expired}
-        for s in sorted(survivors, key=lambda x: x.version):
+        for s in survivors:
             raw = table.meta.backend.read_manifest(s.version)
             if raw.get("files_base") in expired_versions:
-                full = table.meta._resolve_manifest(s.version)
-                # now self-contained: drop the stale delta depth so the
-                # next commit restarts its chain budget at 1 instead of
-                # inheriting the squashed chain's depth (same contract
-                # as rewrite_manifests)
-                full.pop("files_delta_depth", None)
-                table.meta.backend.write_manifest_replace(s.version, full)
+                table.meta.backend.write_manifest_replace(s.version, s.to_json())
         live_paths = (
             {f.path for s in survivors for f in s.files}
             | {d["path"] for s in survivors for d in s.delete_files}
@@ -392,25 +385,27 @@ def rewrite_data_files(
             for d in parent.delete_files
             if (d["path"], d["sequence"]) not in materialized_dels
         ]
+        files = carried + entries
         return new_snapshot(
             parent,
             "replace",
             parent.schema_json,
             parent.partition_spec,
-            carried + entries,
+            files,
             parent.properties,
             {
                 "rewritten-files": len(parent.files) - len(carried),
                 "added-files": len(entries),
                 "materialized-delete-predicates": len(materialized),
                 "materialized-delete-files": len(materialized_dels),
-                "total-records": parent.total_rows,
+                # the rewrite dropped the rows the materialized deletes hid
+                "total-records": sum(f.rows for f in files),
             },
             delete_predicates=remaining_preds,
             delete_files=remaining_dels,
         )
 
-    table._commit_with_retry(build)
+    table._commit_with_retry(build, snap)
     return {"rewritten": len(snap.files), "added": len(entries)}
 
 
@@ -467,17 +462,9 @@ def remove_orphan_files(table: Table, older_than_ms: int | None = None) -> dict:
 def manifest_chain_length(table: Table, version: int | None = None) -> int:
     """Number of EXTRA manifest reads a scan of ``version`` performs to
     reconstruct its file list — the length of the delta chain
-    ``TableMetadata._resolve_manifest`` walks below the head. 0 means the
+    ``TableMetadata.load_snapshot`` walks below the head. 0 means the
     manifest is self-contained (one metadata read per scan)."""
-    meta = table.meta
-    if version is None:
-        version = meta.current_version()
-    payload = meta.backend.read_manifest(version)
-    n = 0
-    while "files_base" in payload:
-        n += 1
-        payload = meta.backend.read_manifest(payload["files_base"])
-    return n
+    return table.snapshot(version).chain_length
 
 
 def rewrite_manifests(table: Table, include_branches: bool = True) -> dict:
@@ -486,7 +473,7 @@ def rewrite_manifests(table: Table, include_branches: bool = True) -> dict:
     procedure (SURVEY.md §2 A35; Iceberg ``CALL
     cat.system.rewrite_manifests``). Metadata-only: ZERO data files move.
 
-    Commits delta-encode their file list against the parent manifest
+    Commits delta-encode their file list against the parent snapshot
     (``TableMetadata._encode_manifest``) so commit cost stays O(changed
     files) at 100 TB file counts — but every scan of the head then walks
     the chain (up to ``MANIFEST_FULL_EVERY − 1`` extra metadata reads)
@@ -496,10 +483,9 @@ def rewrite_manifests(table: Table, include_branches: bool = True) -> dict:
     and (from a main handle, when ``include_branches``) of every branch
     head, via the same atomic ``write_manifest_replace`` swap expiry
     uses: concurrent readers see old-delta or new-full, both resolving
-    to identical content — crash-safe and idempotent. ``files_delta_depth``
-    is stripped from the materialized head so the NEXT commit restarts
-    the delta chain at depth 1 instead of inheriting the squashed
-    chain's depth budget.
+    to identical content — crash-safe and idempotent. The full-manifest
+    rule counts the parent's resolved chain, so the NEXT commit on the
+    squashed head restarts the delta chain at length 1.
 
     Older (time-travel) manifests are left delta-encoded on purpose:
     scans read the head; expiry owns historical truncation.
@@ -515,14 +501,12 @@ def rewrite_manifests(table: Table, include_branches: bool = True) -> dict:
             pass
     report: dict = {"refs": len(refs), "rewritten": 0, "chains": {}}
     for ref_name, handle in refs:
-        head = handle.meta.current_version()
-        before = manifest_chain_length(handle, head)
+        head = handle.snapshot()
+        before = head.chain_length
         if before > 0:
-            full = handle.meta._resolve_manifest(head)
-            full.pop("files_delta_depth", None)
-            handle.meta.backend.write_manifest_replace(head, full)
+            handle.meta.backend.write_manifest_replace(head.version, head.to_json())
             report["rewritten"] += 1
-        after = manifest_chain_length(handle, head)
+        after = manifest_chain_length(handle, head.version)
         report["chains"][ref_name] = {"before": before, "after": after}
     return report
 
@@ -570,7 +554,9 @@ def convert_equality_deletes(
     from iceberg_loader_spark.tables.table import (
         _LINEAGE_FILE,
         _LINEAGE_POS,
+        _lineage_path,
         _op_applies,
+        _pos_delete_ops,
         _with_lineage,
     )
 
@@ -640,20 +626,12 @@ def convert_equality_deletes(
         finally:
             merged.unpersist()
     max_seq = max(d["sequence"] for d in eq_ops)
-    cand_paths = sorted(scanned_paths)
-
-    def _entry_paths(e) -> list[str] | None:
-        # scanned (applicable) files over-approximate the referenced set;
-        # over-inclusion only costs a no-op anti-join, never correctness
-        ps = e.stats.get("file_path")
-        sub = (
-            [p for p in cand_paths if ps[0] <= p <= ps[1]]
-            if ps and ps[0] is not None
-            else cand_paths
-        )
-        return sub if 0 < len(sub) <= table._POS_PATHS_CAP else None
-
-    entry_paths = {e.path: _entry_paths(e) for e in entries}
+    # scanned (applicable) files over-approximate the referenced set
+    refs = {
+        _lineage_path(table.root, f): f.path
+        for f in snap.files
+        if f.path in scanned_paths
+    }
     eq_key = {(d["path"], d["sequence"]) for d in eq_ops}
 
     def build(parent: Snapshot) -> Snapshot:
@@ -678,26 +656,7 @@ def convert_equality_deletes(
                 )
         kept_dels = [
             d for d in parent.delete_files if d.get("kind") == "pos"
-        ] + [
-            {
-                "path": e.path,
-                "kind": "pos",
-                "sequence": max_seq,
-                "rows": e.rows,
-                "bytes": e.bytes,
-                "stats": {
-                    c: e.stats[c]
-                    for c in ("file_path", "pos")
-                    if e.stats.get(c) is not None
-                },
-                **(
-                    {"paths": entry_paths[e.path]}
-                    if entry_paths[e.path] is not None
-                    else {}
-                ),
-            }
-            for e in entries
-        ]
+        ] + _pos_delete_ops(entries, max_seq, refs)
         return new_snapshot(
             parent,
             "convert-eq-deletes",
@@ -715,7 +674,7 @@ def convert_equality_deletes(
             delete_files=kept_dels,
         )
 
-    table._commit_with_retry(build)
+    table._commit_with_retry(build, snap)
     return {
         "converted": len(eq_ops),
         "position_files": len(entries),
@@ -774,7 +733,11 @@ def rewrite_delete_files(
     """
     from pyspark.sql import functions as F
 
-    from iceberg_loader_spark.tables.table import _POS_DELETE_SCHEMA
+    from iceberg_loader_spark.tables.table import (
+        _POS_DELETE_SCHEMA,
+        _lineage_path,
+        _pos_delete_ops,
+    )
 
     snap = table.snapshot()
     pos_ops = [d for d in snap.delete_files if d.get("kind") == "pos"]
@@ -783,8 +746,10 @@ def rewrite_delete_files(
     rows_before = sum(d.get("rows", 0) for d in pos_ops)
     paths = [os.path.join(table.root, d["path"]) for d in pos_ops]
     dels = spark.read.schema(_POS_DELETE_SCHEMA).parquet(*paths)
+    # delete rows name files by the lineage path Spark reported
+    lineage = {f.path: _lineage_path(table.root, f) for f in snap.files}
     live = spark.createDataFrame(
-        [(f.path,) for f in snap.files], "file_path string"
+        [(p,) for p in lineage.values()], "file_path string"
     )
     est_bytes = sum(d.get("bytes", 0) for d in pos_ops)
     n_shards = shards or max(
@@ -801,38 +766,17 @@ def rewrite_delete_files(
     entries = [e for e in entries if e.rows > 0]  # dangling-only shards
     rows_after = sum(e.rows for e in entries)
     max_seq = max(d["sequence"] for d in pos_ops)
-    live_paths = {f.path for f in snap.files}
     # "paths" (the exact referenced-file set) can only be reconstructed
     # when EVERY merged op recorded one — an op past _POS_PATHS_CAP has
     # no list, and attaching the remaining ops' union as "exact" would
     # wrongly exempt the unlisted files from the anti-join. Fall back to
-    # the per-shard file_path range check in that case.
-    all_have_paths = all(d.get("paths") is not None for d in pos_ops)
-    ref_paths = sorted(
-        {
-            p
-            for d in pos_ops
-            for p in d.get("paths", [])
-            if p in live_paths
-        }
-    )
-
-    def _entry_paths(e) -> list[str] | None:
-        """Exact referenced set for one output shard: ref_paths narrowed
-        to the shard's own file_path footer range (disjoint-ish under
-        range partitioning; over-inclusion at a split path is a no-op
-        anti-join, under-inclusion is impossible since footer min/max
-        bound every path the shard names)."""
-        if not all_have_paths:
-            return None
-        ps = e.stats.get("file_path")
-        if ps and ps[0] is not None:
-            sub = [p for p in ref_paths if ps[0] <= p <= ps[1]]
-        else:
-            sub = ref_paths
-        return sub if 0 < len(sub) <= table._POS_PATHS_CAP else None
-
-    entry_paths = {e.path: _entry_paths(e) for e in entries}
+    # the per-shard file_path range check in that case. Each shard's
+    # list is narrowed to its own footer range, which bounds every path
+    # the shard names.
+    refs = None
+    if all(d.get("paths") is not None for d in pos_ops):
+        named = {p for d in pos_ops for p in d["paths"]}
+        refs = {lin: p for p, lin in lineage.items() if p in named}
     merged_key = {(d["path"], d["sequence"]) for d in pos_ops}
 
     def build(parent: Snapshot) -> Snapshot:
@@ -848,26 +792,7 @@ def rewrite_delete_files(
             )
         kept_dels = [
             d for d in parent.delete_files if d.get("kind") != "pos"
-        ] + [
-            {
-                "path": e.path,
-                "kind": "pos",
-                "sequence": max_seq,
-                "rows": e.rows,
-                "bytes": e.bytes,
-                "stats": {
-                    c: e.stats[c]
-                    for c in ("file_path", "pos")
-                    if e.stats.get(c) is not None
-                },
-                **(
-                    {"paths": entry_paths[e.path]}
-                    if entry_paths[e.path] is not None
-                    else {}
-                ),
-            }
-            for e in entries
-        ]
+        ] + _pos_delete_ops(entries, max_seq, refs)
         return new_snapshot(
             parent,
             "rewrite-deletes",
@@ -885,7 +810,7 @@ def rewrite_delete_files(
             delete_files=kept_dels,
         )
 
-    table._commit_with_retry(build)
+    table._commit_with_retry(build, snap)
     return {
         "merged": len(pos_ops),
         "files_after": len(entries),

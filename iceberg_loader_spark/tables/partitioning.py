@@ -177,7 +177,11 @@ def arrow_values(
         if field.transform == "year":
             values = pc.year(column).cast(pa.string())
         else:
-            values = pc.strftime(column, _TIME_FORMATS[field.transform])
+            # format each distinct truncated value once, not every row
+            floored = pc.floor_temporal(column, unit=field.transform)
+            distinct = floored.unique()
+            formatted = pc.strftime(distinct, _TIME_FORMATS[field.transform])
+            values = formatted.take(pc.index_in(floored, distinct))
     elif field.transform == "truncate":
         if not _as_text(t):
             return None

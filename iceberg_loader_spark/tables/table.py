@@ -107,10 +107,13 @@ def _delete_ops(preds: list[dict], eq_dels: list[dict]) -> list[dict]:
     return ops
 
 
-def _op_applies(f: DataFile, o: dict) -> bool:
+def _op_applies(f: DataFile, o: dict, root: str | None = None) -> bool:
     """Does a merge-on-read delete op apply to this data file?
 
     Sequence rule first (a delete only covers strictly older files).
+    A positional delete without a "paths" list is checked on the file's
+    lineage path, which needs the table ``root``; without it the op
+    applies.
     For equality-delete files carrying key min/max stats, a file whose
     own footer stats are provably DISJOINT from the delete's key range
     skips the anti-join entirely — the same metadata pruning Iceberg's
@@ -123,13 +126,14 @@ def _op_applies(f: DataFile, o: dict) -> bool:
         # A positional delete covers exactly the data files whose rows it
         # names. "paths" is the exact referenced set when small; past the
         # cap, the delete file's own footer stats on file_path give a
-        # lexical range check (delete files sort by path at write).
+        # lexical range check on the lineage paths its rows hold (delete
+        # files sort by path at write).
         paths = o.get("paths")
         if paths is not None:
             return f.path in set(paths)
         ps = (o.get("stats") or {}).get("file_path")
-        if ps and ps[0] is not None:
-            return ps[0] <= f.path <= ps[1]
+        if ps and ps[0] is not None and root is not None:
+            return ps[0] <= _lineage_path(root, f) <= ps[1]
         return True
     if o["kind"] != "eq":
         return True
@@ -234,6 +238,44 @@ def _eq_delete_ops(
         }
         for e in key_entries
     ]
+
+
+#: max referenced data paths stored on a positional delete op
+_POS_PATHS_CAP = 1000
+
+
+def _pos_delete_ops(
+    entries: list[DataFile], sequence: int, ref_paths: dict[str, str] | None
+) -> list[dict]:
+    """Positional-delete records for freshly written (file_path, pos)
+    files, at the sequence they apply below. ``ref_paths`` maps the
+    lineage path (``_lineage_path``, what a delete row names) of each
+    data file the deletes may reference to its table path, or is None
+    when that set is unknown. A record's "paths" is that set narrowed to
+    its file's own file_path footer range, when non-empty and within
+    ``_POS_PATHS_CAP``; over-inclusion only costs a no-op anti-join."""
+    ops = []
+    for e in entries:
+        stats = {
+            c: e.stats[c] for c in ("file_path", "pos") if e.stats.get(c) is not None
+        }
+        op = {
+            "path": e.path,
+            "kind": "pos",
+            "sequence": sequence,
+            "rows": e.rows,
+            "bytes": e.bytes,
+            "stats": stats,
+        }
+        if ref_paths is not None:
+            lo, hi = stats.get("file_path", [None, None])
+            paths = [
+                p for lin, p in ref_paths.items() if lo is None or lo <= lin <= hi
+            ]
+            if 0 < len(paths) <= _POS_PATHS_CAP:
+                op["paths"] = paths
+        ops.append(op)
+    return ops
 
 
 # ---- what a write derives from the head snapshot it resolved once --------
@@ -870,7 +912,7 @@ class Table:
         groups: dict[tuple, list[DataFile]] = {}
         for f in files:
             k = tuple(
-                i for i, o in enumerate(ops) if _op_applies(f, o)
+                i for i, o in enumerate(ops) if _op_applies(f, o, self.root)
             )
             groups.setdefault(k, []).append(f)
         out: DataFrame | None = None
@@ -942,7 +984,7 @@ class Table:
         ops = _delete_ops(snap.delete_predicates, snap.delete_files)
         eras: dict[tuple, list[DataFile]] = {}
         for f in files:
-            k = tuple(i for i, o in enumerate(ops) if _op_applies(f, o))
+            k = tuple(i for i, o in enumerate(ops) if _op_applies(f, o, self.root))
             eras.setdefault(k, []).append(f)
         twins = {
             i: self._arrow_delete(ops[i], schema)
@@ -1535,18 +1577,22 @@ class Table:
                 f"snapshot"
             )
 
-    def _commit_with_retry(self, build) -> Snapshot:
+    def _commit_with_retry(self, build, head: Snapshot | None = None) -> Snapshot:
         """Optimistic-commit loop (reference: 10 retries, core/config.py:15-17).
 
-        Every attempt re-reads the head as its parent and re-invokes
-        ``build(parent_snapshot) -> Snapshot`` against it; the retry
-        budget is that parent's ``commit.retry.num-retries``.
+        Each attempt invokes ``build(parent) -> Snapshot`` and commits it
+        on ``parent``. The first attempt builds on ``head``, the snapshot
+        the operation already resolved, when given; the head is re-read
+        only after a :class:`CommitConflict` (Iceberg's commit against
+        its base metadata, refreshed on conflict). A conflict on the
+        pre-resolved head is not a retry: the budget is the parent's
+        ``commit.retry.num-retries`` on freshly read parents.
         """
-        for attempt in itertools.count():
-            parent = self.snapshot()
+        for attempt in itertools.count(0 if head is None else -1):
+            parent = head if attempt < 0 else self.snapshot()
             snap = build(parent)
             try:
-                return self.meta.commit(snap, expected_parent=parent.version)
+                return self.meta.commit(snap, expected_parent=parent)
             except CommitConflict:  # another writer won; rebase
                 retries = parent.properties.get(
                     "commit.retry.num-retries",
@@ -1573,14 +1619,14 @@ class Table:
         """
         head = self.snapshot()
         entries = self._write_rows(df, head)
-        return self._commit_with_retry(_append_build(entries, extra_properties))
+        return self._commit_with_retry(_append_build(entries, extra_properties), head)
 
     def overwrite(self, df: DataFrame | pa.Table) -> Snapshot:
         """A8 (first flush): replace all table data with df's rows (a
         DataFrame or an Arrow table, as in ``append``)."""
         head = self.snapshot()
         entries = self._write_rows(df, head)
-        return self._commit_with_retry(_overwrite_build(entries))
+        return self._commit_with_retry(_overwrite_build(entries), head)
 
     def delete_where(
         self, spark: SparkSession, where: str, mode: str = "cow"
@@ -1686,7 +1732,7 @@ class Table:
                 },
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, snap)
 
     def _delete_where_mor(self, spark: SparkSession, where: str) -> Snapshot:
         """Merge-on-read DELETE: record the predicate, rewrite nothing.
@@ -1739,9 +1785,7 @@ class Table:
                 + [{"where": where, "sequence": seqv}],
             )
 
-        return self._commit_with_retry(build)
-
-    _POS_PATHS_CAP = 1000  # max referenced data paths stored on a pos op
+        return self._commit_with_retry(build, snap)
 
     def _delete_where_mor_pos(self, spark: SparkSession, where: str) -> Snapshot:
         """Merge-on-read DELETE with POSITION delete files (Iceberg v2's
@@ -1804,6 +1848,7 @@ class Table:
                     f"cannot be recorded; use mode='mor' or 'cow'"
                 )
         cand_paths = [f.path for f in candidates]
+        refs = {_lineage_path(self.root, f): f.path for f in candidates}
         dropped_paths = {f.path for f in dropped}
 
         def build(parent: Snapshot) -> Snapshot:
@@ -1815,28 +1860,10 @@ class Table:
                     f"file(s) rewritten concurrently (positions would "
                     f"dangle and rows resurrect)"
                 )
-            v = parent.version + 1
             kept = [f for f in parent.files if f.path not in dropped_paths]
-            dels = parent.delete_files + [
-                {
-                    "path": e.path,
-                    "kind": "pos",
-                    "sequence": v,
-                    "rows": e.rows,
-                    "bytes": e.bytes,
-                    "stats": {
-                        c: e.stats[c]
-                        for c in ("file_path", "pos")
-                        if e.stats.get(c) is not None
-                    },
-                    **(
-                        {"paths": cand_paths}
-                        if len(cand_paths) <= self._POS_PATHS_CAP
-                        else {}
-                    ),
-                }
-                for e in pos_entries
-            ]
+            dels = parent.delete_files + _pos_delete_ops(
+                pos_entries, parent.version + 1, refs
+            )
             return new_snapshot(
                 parent,
                 "delete",
@@ -1854,7 +1881,7 @@ class Table:
                 delete_files=dels,
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, snap)
 
     def merge(
         self,
@@ -1915,13 +1942,8 @@ class Table:
             rewrite = self._merge_rows_spark(
                 spark, snap, source, join_cols, candidates
             )
-        affected, new_entries, updated_rows = rewrite
+        affected, new_entries, updated_rows, inserted_rows = rewrite
         affected_rel = {f.path for f in affected}
-        inserted_rows = (
-            sum(e.rows for e in new_entries)
-            - sum(f.rows for f in affected)
-        )
-
         scanned_paths = {f.path for f in snap.files}
 
         def build(parent: Snapshot) -> Snapshot:
@@ -1929,24 +1951,24 @@ class Table:
             # the key semi-join never saw → duplicate keys after merge;
             # fail validation like Iceberg rather than commit (ADVICE r1)
             self._validate_cow_input(parent, scanned_paths, "merge")
-            remaining = [f for f in parent.files if f.path not in affected_rel]
+            files = [f for f in parent.files if f.path not in affected_rel] + new_entries
             _stamp_sequence(new_entries, parent.version + 1)
             return new_snapshot(
                 parent,
                 "merge",
                 parent.schema_json,
                 parent.partition_spec,
-                remaining + new_entries,
+                files,
                 parent.properties,
                 {
                     "updated-records": updated_rows,
                     "inserted-records": inserted_rows,
                     "rewritten-files": len(affected),
-                    "total-records": parent.total_rows + inserted_rows,
+                    "total-records": sum(f.rows for f in files),
                 },
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, snap)
 
     def _merge_rows_spark(
         self,
@@ -1955,10 +1977,11 @@ class Table:
         source: DataFrame,
         join_cols: list[str],
         candidates: list[DataFile],
-    ) -> tuple[list[DataFile], list[DataFile], int]:
+    ) -> tuple[list[DataFile], list[DataFile], int, int]:
         """The CoW merge's data path in Spark: the files among
         ``candidates`` that hold a source key, the entries of their
-        rewrite plus the inserted rows, and the updated-row count."""
+        rewrite plus the inserted rows, and the updated and inserted
+        row counts."""
         schema = _schema(snap)
         spec = _spec(snap)
         cols = [f.name for f in schema.fields]
@@ -2005,7 +2028,7 @@ class Table:
                 affected_rel.add(rel)
         affected = [f for f in candidates if f.path in affected_rel]
 
-        updated_rows = 0
+        updated_rows, inserted_rows = 0, n_src
         new_entries: list[DataFile] = []
         if affected:
             # read through the MoR filter: a pending delete predicate must
@@ -2036,10 +2059,16 @@ class Table:
                     for c in non_keys
                 ],
             ).select(*cols)
+            changed = F.lit(False)
             if non_keys:
                 t_struct = F.struct(*[F.col(f"t.{c}") for c in non_keys])
                 s_struct = F.struct(*[F.col(f"s.{c}") for c in non_keys])
-                updated_rows = joined.filter(matched & ~t_struct.eqNullSafe(s_struct)).count()
+                changed = ~t_struct.eqNullSafe(s_struct)
+            # one row per live target row (source keys are unique), and
+            # the matched rows whose values change
+            n_target, updated_rows = joined.agg(
+                F.count("*"), F.count(F.when(matched & changed, 1))
+            ).first()
             inserts = src.join(
                 joined.select(*[F.col(f"t.{k}").alias(k) for k in join_cols]),
                 join_cols,
@@ -2051,12 +2080,14 @@ class Table:
             finally:
                 joined.unpersist()
                 src.unpersist()
+            # the written rows are the live target rows plus the inserts
+            inserted_rows = sum(e.rows for e in new_entries) - n_target
         else:
             try:
                 new_entries = self._write_data_files(src, spec, snap)
             finally:
                 src.unpersist()
-        return affected, new_entries, updated_rows
+        return affected, new_entries, updated_rows, inserted_rows
 
     def _merge_rows_arrow(
         self,
@@ -2064,7 +2095,7 @@ class Table:
         source: pa.Table,
         join_cols: list[str],
         candidates: list[DataFile],
-    ) -> tuple[list[DataFile], list[DataFile], int] | None:
+    ) -> tuple[list[DataFile], list[DataFile], int, int] | None:
         """The driver's twin of ``_merge_rows_spark`` for an Arrow source
         in the table schema, or None when it is not eligible: the
         candidates larger on disk than ``DRIVER_MERGE_BYTES`` less the
@@ -2124,7 +2155,7 @@ class Table:
             same = pc.and_(same, _null_safe_equal(matched[c], updates[c]))
         updated_rows = pc.sum(pc.invert(same)).as_py() or 0
         entries = self._write_arrow_files(out, spec, snap, values, sort_within)
-        return affected, entries, updated_rows
+        return affected, entries, updated_rows, int(inserted.sum())
 
     def _key_probe_hashes(
         self, key_entries: list[DataFile], key_cols: list[str]
@@ -2211,7 +2242,7 @@ class Table:
                 delete_files=dels,
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, snap)
 
     def delete_by_keys(
         self, spark: SparkSession, keys: DataFrame, key_cols: list[str]
@@ -2250,7 +2281,7 @@ class Table:
                 delete_files=dels,
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, head)
 
     def set_partition_spec(self, spec: list[PartitionField]) -> Snapshot:
         """Partition-spec evolution (Iceberg's ``ADD/REPLACE PARTITION
@@ -2259,7 +2290,8 @@ class Table:
         correctly because pruning reads each file's own partition dict
         (a file without a value for a pruned key is simply not pruned by
         it) — same contract as Iceberg spec evolution."""
-        validate_spec(spec, self.schema())
+        head = self.snapshot()
+        validate_spec(spec, _schema(head))
 
         def build(parent: Snapshot) -> Snapshot:
             return new_snapshot(
@@ -2272,7 +2304,7 @@ class Table:
                 {"partition-spec": [pf.to_json() for pf in spec]},
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, head)
 
     def rollback(self, version: int) -> Snapshot:
         """Roll the table back to a previous snapshot's state (Iceberg's
@@ -2314,7 +2346,8 @@ class Table:
         """
         if not name or "/" in name or name != name.strip():
             raise ValueError(f"invalid tag name: {name!r}")
-        target = self.snapshot(version).version  # validates existence
+        head = self.snapshot()
+        target = head.version if version is None else self.snapshot(version).version
 
         def build(parent: Snapshot) -> Snapshot:
             props = {**parent.properties, self._TAG_PREFIX + name: str(target)}
@@ -2328,11 +2361,12 @@ class Table:
                 {"tag": name, "tag-version": target},
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, head)
 
     def remove_tag(self, name: str) -> Snapshot:
         key = self._TAG_PREFIX + name
-        if key not in self.properties():
+        head = self.snapshot()
+        if key not in head.properties:
             raise KeyError(f"no such tag: {name}")
 
         def build(parent: Snapshot) -> Snapshot:
@@ -2347,7 +2381,7 @@ class Table:
                 {"tag-removed": name},
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, head)
 
     def tags(self) -> dict[str, int]:
         return {
@@ -2522,7 +2556,8 @@ class Table:
         if name is None or fork_v < 0:
             raise ValueError("not a branch table")
         head = shadow.snapshot()
-        main_v = self.meta.current_version()
+        parent = self.snapshot()
+        main_v = parent.version
         resume_from = fork_v
         if main_v != fork_v:
             # RESUME path: a crashed (or duplicated) fast-forward may have
@@ -2552,8 +2587,8 @@ class Table:
                 if k not in self._BRANCH_PROPS
             }
             try:
-                self.meta.commit(
-                    replace(s, properties=clean), expected_parent=v - 1
+                parent = self.meta.commit(
+                    replace(s, properties=clean), expected_parent=parent
                 )
             except CommitConflict as e:
                 raise ConcurrentModification(
@@ -2564,7 +2599,7 @@ class Table:
             self._shadow_dir_checked(self.BRANCH_DIR, name),
             ignore_errors=True,
         )
-        return self.snapshot()
+        return parent
 
     def abort_branch(self, shadow: "Table") -> dict:
         """Discard a branch: delete data files it added since the fork
@@ -2776,7 +2811,8 @@ class Table:
                     f"table instead"
                 )
         sh = shadow.snapshot()
-        fork_paths = {f.path for f in self.snapshot(fork_v).files}
+        fork = self.snapshot(fork_v)
+        fork_paths = {f.path for f in fork.files}
         staged = [f for f in sh.files if f.path not in fork_paths]
         staged_rows = sum(f.rows for f in staged)
 
@@ -2802,7 +2838,7 @@ class Table:
                 },
             )
 
-        snap = self._commit_with_retry(build)
+        snap = self._commit_with_retry(build, fork)
         shutil.rmtree(
             os.path.join(self.root, self.WAP_DIR, wap_id), ignore_errors=True
         )
@@ -2948,7 +2984,7 @@ class Table:
             )
 
         try:
-            return self._commit_with_retry(build)
+            return self._commit_with_retry(build, head)
         except _NothingToCommit as done:
             return done.snapshot
 
@@ -2995,7 +3031,7 @@ class Table:
                 {"dropped-columns": sorted(drop)},
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, head)
 
     # type promotions Spark's parquet reader widens transparently
     _PROMOTIONS = {
@@ -3008,7 +3044,8 @@ class Table:
         metadata-only — old files keep their narrow physical type and
         Spark's parquet reader up-casts them at scan; new writes use the
         wide type. Only lossless promotions are allowed."""
-        schema = self.schema()
+        head = self.snapshot()
+        schema = _schema(head)
         field = next((f for f in schema.fields if f.name == col), None)
         if field is None:
             raise ValueError(f"no such column: {col}")
@@ -3037,4 +3074,4 @@ class Table:
                 {"promoted-column": col, "to-type": new_type.simpleString()},
             )
 
-        return self._commit_with_retry(build)
+        return self._commit_with_retry(build, head)

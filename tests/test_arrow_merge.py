@@ -487,3 +487,21 @@ def test_bloom_on_key_without_string_twin(spark, tmp_path, mode, key_type, keys)
     for t in tables:
         got = sorted((r.b, r.v) for r in t.scan(spark).collect())
         assert got == sorted([(keys[0], 2), (keys[1], 1)])
+
+
+def test_inserted_records_count_pending_deleted_keys(spark, tmp_path):
+    """A source row whose target row a pending merge-on-read delete
+    removed is an insert: 4 rows, ``v == 2`` deleted, then an upsert of
+    keys 2 and 9 reports 2 inserted records on both paths, and
+    total-records counts the rewritten snapshot's rows."""
+    wh = Warehouse(str(tmp_path))
+    arrow_t, spark_t = _twins(wh, "t", ["day(ts)"], {}, [[_row(k, 0, k) for k in range(4)]], 1)
+    for t in (arrow_t, spark_t):
+        t.delete_where(spark, "v == 2", mode="mor")
+    source = [_row(2, 0, 20), _row(9, 0, 90)]
+    a, s, used_spark = _merge_both(spark, arrow_t, spark_t, source, ["k"])
+    assert not used_spark
+    for snap in (a, s):
+        assert snap.summary["inserted-records"] == 2
+        assert snap.summary["total-records"] == sum(f.rows for f in snap.files) == 5
+    _assert_same(spark, arrow_t, spark_t, a, s)

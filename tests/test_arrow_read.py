@@ -599,3 +599,23 @@ def test_cow_delete_on_driver_matches_spark(spark, tmp_path, monkeypatch, spec, 
     assert a.summary["rewritten-files"] > 0
     assert _files(arrow_t) == _files(spark_t)
     assert _scan(spark, arrow_t) == _scan(spark, spark_t)
+
+
+def test_compaction_total_records_counts_live_rows(spark, tmp_path, monkeypatch):
+    """Compaction materializes the pending deletes, so total-records is
+    the rows left: 30 rows less a predicate, a positional and an
+    equality delete leave 10, on the driver path and on the Spark path."""
+    wh = Warehouse(str(tmp_path))
+    for name, budget in (("a", table_module.DRIVER_MERGE_BYTES), ("s", 0)):
+        monkeypatch.setattr(table_module, "DRIVER_MERGE_BYTES", budget)
+        t = Table.create(wh, f"db.{name}", SCHEMA, [parse_partition_transform("day(ts)")])
+        t.append(pa.Table.from_pylist([_row(k, k % 3, k) for k in range(30)], ARROW))
+        t.delete_where(spark, "v >= 20", mode="mor")
+        t.delete_where(spark, "v < 5", mode="mor-pos")
+        keys = spark.createDataFrame([(k,) for k in range(5, 10)], "k bigint")
+        t.delete_by_keys(spark, keys, ["k"])
+        with _spark_rewrites() as calls:
+            maintenance.rewrite_data_files(t, spark)
+        assert bool(calls) == (budget == 0)
+        assert t.snapshot().summary["total-records"] == 10
+        assert sorted(r.k for r in t.scan(spark).collect()) == list(range(10, 20))

@@ -352,3 +352,33 @@ def test_spark_codec_names_write_through_loader_and_connector(spark, tmp_path, c
         for f in t.snapshot().files:
             md = pq.ParquetFile(os.path.join(t.root, f.path)).metadata
             assert md.row_group(0).column(0).compression == _PARQUET_CODECS[codec]
+
+
+@pytest.mark.parametrize("transform", ["month", "day", "hour"])
+def test_time_partition_values_before_epoch_and_null(spark, tmp_path, transform):
+    """The Arrow writer formats each distinct truncated value once; the
+    values match the Spark writer's for pre-epoch instants, a
+    four-digit year below 1000 and nulls."""
+    stamps = [
+        dt.datetime(1969, 12, 31, 23, 59, 59, 999999),
+        dt.datetime(1969, 1, 1, 0, 0, 0, 1),
+        dt.datetime(999, 3, 4, 5, 6, 7),
+        dt.datetime(1900, 1, 1),
+        dt.datetime(1970, 1, 1),
+        dt.datetime(2024, 3, 1, 5),
+        None,
+    ]
+    rows = [
+        {
+            "rid": k,
+            "ts": stamps[k % len(stamps)],
+            "d": stamps[(k + 3) % len(stamps)] and stamps[(k + 3) % len(stamps)].date(),
+        }
+        for k in range(3 * len(stamps))
+    ]
+    spec = [PartitionField(transform, "ts"), PartitionField(transform, "d")]
+    arrow_t, spark_t, a, s, used_spark = _write_both(
+        spark, Warehouse(str(tmp_path)), pa.Table.from_pylist(rows, ARROW), spec, {}
+    )
+    assert not used_spark
+    _assert_same(spark, arrow_t, spark_t, a, s, None)

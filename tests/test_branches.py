@@ -217,7 +217,7 @@ def test_fast_forward_resumes_after_partial_replay(spark, tmp_path):
     clean = {
         k: v for k, v in s.properties.items() if not k.startswith("branch.")
     }
-    t.meta.commit(_replace(s, properties=clean), expected_parent=fork_v)
+    t.meta.commit(_replace(s, properties=clean), expected_parent=t.snapshot(fork_v))
 
     main = wh.load_table("db.b")
     main.fast_forward_branch(t.branch("exp"))  # must RESUME, not raise

@@ -41,9 +41,9 @@ def _inject_before_commit(t: Table, concurrent_action):
     commit loop — the window snapshot validation must cover."""
     orig = t._commit_with_retry
 
-    def wrapper(build):
+    def wrapper(*args):
         concurrent_action()
-        return orig(build)
+        return orig(*args)
 
     t._commit_with_retry = wrapper
 
@@ -196,7 +196,7 @@ def _race_writer(root: str, wid: int, n_commits: int) -> None:
                 parent.properties,
             )
             try:
-                meta.commit(snap, expected_parent=parent.version)
+                meta.commit(snap, expected_parent=parent)
                 break
             except CommitConflict:
                 time.sleep(0.001)
@@ -277,7 +277,7 @@ def test_partial_orphan_manifest_is_left_alone(tmp_path):
         t.snapshot(), "append", _schema().jsonValue(), [], [], {}
     )
     with pytest.raises(CommitConflict):
-        t.meta.commit(snap, expected_parent=1)
+        t.meta.commit(snap, expected_parent=t.snapshot(1))
     assert t.meta.current_version() == 1
 
 
@@ -443,3 +443,42 @@ def test_append_keeps_concurrently_added_column(spark, tmp_path):
         (1, None),
         (2, "x"),
     ]
+
+
+# ---------------------------------------------------------------------------
+# the operation's own head and the retry budget
+# ---------------------------------------------------------------------------
+
+
+def test_stale_head_conflict_is_not_a_retry(spark, tmp_path):
+    """A write commits first on the head it resolved. An append landing
+    between that read and the commit is not a retry: with
+    ``commit.retry.num-retries`` 0 the write still commits on the
+    re-read head, and a conflict on that re-read head then raises."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(
+        wh, "db.t", _schema(), properties={"commit.retry.num-retries": "0"}
+    )
+
+    def rival(v):
+        return lambda: wh.load_table("db.t").append(
+            spark.createDataFrame([(v,)], _schema())
+        )
+
+    _inject_before_commit(t, rival(2))
+    t.append(spark.createDataFrame([(1,)], _schema()))
+    assert sorted(r.id for r in t.scan(spark).collect()) == [1, 2]
+
+    t = wh.load_table("db.t")
+    orig = t.meta.commit
+    rivals = [rival(3), rival(4)]
+
+    def racing(*args, **kwargs):
+        if rivals:
+            rivals.pop(0)()
+        return orig(*args, **kwargs)
+
+    t.meta.commit = racing
+    with pytest.raises(CommitConflict):
+        t.append(spark.createDataFrame([(5,)], _schema()))
+    assert sorted(r.id for r in t.scan(spark).collect()) == [1, 2, 3, 4]

@@ -73,7 +73,7 @@ def test_table_round_trip_over_http(spark, server, tmp_path):
         t2.snapshot(2), "append", _schema().jsonValue(), [], [], {}
     )
     with pytest.raises(CommitConflict):
-        t2.meta.commit(dup, expected_parent=2)
+        t2.meta.commit(dup, expected_parent=t2.snapshot(2))
 
 
 def test_threaded_commit_race_over_http(server, tmp_path):
@@ -110,7 +110,7 @@ def test_threaded_commit_race_over_http(server, tmp_path):
                         parent.properties,
                     )
                     try:
-                        meta.commit(snap, expected_parent=parent.version)
+                        meta.commit(snap, expected_parent=parent)
                         break
                     except CommitConflict:
                         time.sleep(0.001)

@@ -196,10 +196,10 @@ def test_rewrite_delete_files_aborts_on_concurrent_mor_delete(
 
     orig = t._commit_with_retry
 
-    def inject(build):
+    def inject(*args):
         # partial on BOTH files -> a second pos file lands mid-merge
         wh.load_table("db.t").delete_where(spark, "v >= 5", mode="mor-pos")
-        return orig(build)
+        return orig(*args)
 
     t._commit_with_retry = inject
     with _pt.raises(ConcurrentModification):
@@ -226,12 +226,12 @@ def test_rewrite_delete_files_survives_concurrent_append_and_expire(
 
     orig = t._commit_with_retry
 
-    def inject(build):
+    def inject(*args):
         wh.load_table("db.t").append(
             spark.createDataFrame([(90, 9)], "id bigint, v bigint")
         )
         expire_snapshots(wh.load_table("db.t"), keep_last=1)
-        return orig(build)
+        return orig(*args)
 
     t._commit_with_retry = inject
     res = rewrite_delete_files(t, spark)
@@ -359,11 +359,11 @@ def test_convert_equality_deletes_aborts_on_concurrent_eq_delete(
 
     orig = t._commit_with_retry
 
-    def inject(build):
+    def inject(*args):
         wh.load_table("db.t").delete_by_keys(
             spark, spark.createDataFrame([(2,)], "v bigint"), ["v"]
         )
-        return orig(build)
+        return orig(*args)
 
     t._commit_with_retry = inject
     with _pt.raises(ConcurrentModification):

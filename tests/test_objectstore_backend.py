@@ -100,10 +100,10 @@ def test_stale_parent_commit_conflicts_on_object_store(tmp_path):
     wh = _warehouse(tmp_path, store)
     t = Table.create(wh, "db.t", _schema())
     snap = new_snapshot(t.snapshot(), "append", _schema().jsonValue(), [], [], {})
-    t.meta.commit(snap, expected_parent=1)
+    t.meta.commit(snap, expected_parent=t.snapshot(1))
     dup = new_snapshot(t.snapshot(1), "append", _schema().jsonValue(), [], [], {})
     with pytest.raises(CommitConflict):
-        t.meta.commit(dup, expected_parent=1)
+        t.meta.commit(dup, expected_parent=t.snapshot(1))
 
 
 def test_orphan_recovery_on_object_store(tmp_path):
@@ -133,7 +133,7 @@ def test_orphan_recovery_on_object_store(tmp_path):
         parent.properties,
     )
     with pytest.raises(CommitConflict):
-        t.meta.commit(mine, expected_parent=parent.version)
+        t.meta.commit(mine, expected_parent=parent)
     assert t.meta.current_version() == orphan.version
     # and a rebased commit on top now succeeds
     parent2 = t.snapshot()
@@ -145,7 +145,7 @@ def test_orphan_recovery_on_object_store(tmp_path):
         parent2.files + [DataFile(path="data/mine.parquet", rows=1, bytes=1)],
         parent2.properties,
     )
-    t.meta.commit(mine2, expected_parent=parent2.version)
+    t.meta.commit(mine2, expected_parent=parent2)
     assert t.meta.current_version() == orphan.version + 1
 
 
@@ -173,7 +173,7 @@ def test_threaded_commit_race_on_object_store(tmp_path):
                         parent.properties,
                     )
                     try:
-                        meta.commit(snap, expected_parent=parent.version)
+                        meta.commit(snap, expected_parent=parent)
                         break
                     except CommitConflict:
                         time.sleep(0.001)
@@ -204,7 +204,7 @@ def test_expiry_works_through_backend(tmp_path):
     s1 = new_snapshot(None, "create", {"t": 1}, [], [], {})
     meta.commit(s1, expected_parent=None)
     s2 = new_snapshot(s1, "append", {"t": 1}, [], [], {})
-    meta.commit(s2, expected_parent=1)
+    meta.commit(s2, expected_parent=s1)
     meta.delete_snapshot_manifest(1)
     assert meta.list_versions() == [2]
     with pytest.raises(FileNotFoundError):
@@ -230,9 +230,9 @@ def test_cow_validation_and_compaction_on_object_store(spark, tmp_path):
     # concurrent append between candidate selection and commit -> abort
     orig = t._commit_with_retry
 
-    def inject(build):
+    def inject(*args):
         wh.load_table("db.t").append(spark.createDataFrame([(9,)], _schema()))
-        return orig(build)
+        return orig(*args)
 
     t._commit_with_retry = inject
     with pytest.raises(ConcurrentModification):

@@ -304,11 +304,11 @@ def test_idempotent_sink_concurrent_replay_commits_once(
     orig = Table._commit_with_retry
     fired = []
 
-    def racing(self, build):
+    def racing(self, *args):
         if not fired:
             fired.append(True)
             rival(batch, 1)
-        return orig(self, build)
+        return orig(self, *args)
 
     monkeypatch.setattr(Table, "_commit_with_retry", racing)
     sink(batch, 1)

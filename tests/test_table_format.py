@@ -25,10 +25,10 @@ def test_create_and_conflict(tmp_path):
         Table.create(wh, "db.t", _schema())
     # a commit based on a stale parent raises CommitConflict
     stale = new_snapshot(t.snapshot(), "append", _schema().jsonValue(), [], [], {})
-    t.meta.commit(stale, expected_parent=1)
+    t.meta.commit(stale, expected_parent=t.snapshot(1))
     dup = new_snapshot(t.snapshot(None), "append", _schema().jsonValue(), [], [], {})
     with pytest.raises(CommitConflict):
-        t.meta.commit(dup, expected_parent=1)
+        t.meta.commit(dup, expected_parent=t.snapshot(1))
 
 
 def test_time_travel_and_as_of(spark, tmp_path):
@@ -764,9 +764,9 @@ def test_partitions_metadata_table(spark, tmp_path):
 
 
 def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
-    """Metadata-read budget: a write resolves the head once, and its
-    commit re-reads only the parent. A change that adds a
-    ``load_snapshot`` call to one of these paths fails here."""
+    """Metadata-read budget: a write resolves the head once and commits
+    on it without re-reading it. A change that adds a ``load_snapshot``
+    call to one of these paths fails here."""
     from datetime import datetime
 
     from iceberg_loader_spark.tables.format import TableMetadata
@@ -805,7 +805,7 @@ def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
         op()
         return len(calls)
 
-    assert reads(lambda: loader.load_data(rows(20), "db.t", cfg)) <= 3
+    assert reads(lambda: loader.load_data(rows(20), "db.t", cfg)) <= 2
     # that steady small flush ran no Spark job: one target file's rows go
     # from the driver's Arrow table straight to parquet
     sc = spark.sparkContext
@@ -829,15 +829,15 @@ def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
         assert spark_jobs(
             f"small-{mode}-upsert", lambda: loader.load_data(upsert_rows, "db.t", upsert)
         ) == []
-    assert reads(lambda: t.append(new_rows)) <= 2
-    assert reads(lambda: t.merge(spark, updates, ["id"])) <= 2
+    assert reads(lambda: t.append(new_rows)) <= 1
+    assert reads(lambda: t.merge(spark, updates, ["id"])) <= 1
     # a small table compacts on the driver, its MoR key file applied
     jobs = []
     compact = lambda: jobs.extend(  # noqa: E731
         spark_jobs("small-compaction", lambda: rewrite_data_files(t, spark))
     )
     assert t.snapshot().delete_files
-    assert reads(compact) <= 2
+    assert reads(compact) <= 1
     assert jobs == []
     monkeypatch.undo()
     assert t.scan(spark).count() == 67
@@ -886,3 +886,93 @@ def test_positional_delete_refuses_file_outside_layout(spark, tmp_path):
         t.delete_where(spark, "id = 2", mode="mor-pos")
     assert t.snapshot().version == head
     assert sorted(r.id for r in t.scan(spark).collect()) == [1, 2, 3]
+
+
+def _space_partitioned(spark, tmp_path):
+    """An identity(g) table whose "a b" partition directory Spark reports
+    URI-encoded (``_metadata.file_path`` holds ``a%20b``), one file per
+    partition value."""
+    from iceberg_loader_spark.tables.partitioning import PartitionField
+
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("g", T.StringType())]
+    )
+    t = Table.create(
+        Warehouse(str(tmp_path)),
+        "db.t",
+        schema,
+        partition_spec=[PartitionField("identity", "g")],
+    )
+    rows = [(1, "a b"), (2, "a b"), (3, "zz"), (4, "zz")]
+    t.append(spark.createDataFrame(rows, schema))
+    return t
+
+
+def test_rewrite_delete_files_keeps_positions_on_encoded_paths(spark, tmp_path):
+    """The merged positional deletes keep naming the "a b" file: the
+    live-file semi-join compares the file_path Spark wrote, not the raw
+    table path."""
+    from iceberg_loader_spark.tables.maintenance import rewrite_delete_files
+
+    t = _space_partitioned(spark, tmp_path)
+    t.delete_where(spark, "id = 1 or id = 3", mode="mor-pos")
+    assert sorted(r.id for r in t.scan(spark).collect()) == [2, 4]
+    res = rewrite_delete_files(t, spark)
+    assert res["positions_removed"] == 0
+    assert sorted(r.id for r in t.scan(spark).collect()) == [2, 4]
+
+
+def test_convert_equality_deletes_on_encoded_paths(spark, tmp_path):
+    """Converted positions on the "a b" file still apply: each delete
+    file's "paths" is narrowed by comparing lineage paths with its
+    file_path footer range."""
+    from iceberg_loader_spark.tables.maintenance import convert_equality_deletes
+
+    t = _space_partitioned(spark, tmp_path)
+    t.delete_by_keys(spark, spark.createDataFrame([(1,), (3,)], "id long"), ["id"])
+    assert sorted(r.id for r in t.scan(spark).collect()) == [2, 4]
+    res = convert_equality_deletes(t, spark)
+    assert res["positions"] == 2
+    assert sorted(r.id for r in t.scan(spark).collect()) == [2, 4]
+    (op,) = t.snapshot().delete_files
+    assert sorted(op["paths"]) == sorted(f.path for f in t.snapshot().files)
+
+
+def test_commit_reads_no_manifest_without_conflict(tmp_path, monkeypatch):
+    """A commit on the head it was given delta-encodes against that
+    in-memory parent: no manifest is read, and the delta resolves to the
+    committed file list."""
+    from iceberg_loader_spark.tables.format import DataFile, LocalFSBackend
+
+    t = Table.create(Warehouse(str(tmp_path)), "db.t", _schema())
+    for i in range(5):
+        head = t.snapshot()
+        files = head.files + [DataFile(path=f"data/f{i}.parquet", rows=1, bytes=1)]
+        t.meta.commit(
+            new_snapshot(head, "append", head.schema_json, [], files, {}),
+            expected_parent=head,
+        )
+    head = t.snapshot()
+    assert head.chain_length == 4  # v2, with one file, went self-contained
+    reads = []
+    orig = LocalFSBackend.read_manifest
+
+    def counting(self, version):
+        reads.append(version)
+        return orig(self, version)
+
+    monkeypatch.setattr(LocalFSBackend, "read_manifest", counting)
+    files = head.files[1:] + [DataFile(path="data/f5.parquet", rows=1, bytes=1)]
+    snap = t.meta.commit(
+        new_snapshot(head, "append", head.schema_json, [], files, {}),
+        expected_parent=head,
+    )
+    assert reads == []
+    assert snap.chain_length == 5
+    monkeypatch.undo()
+    raw = t.meta.backend.read_manifest(snap.version)
+    assert raw["files_base"] == head.version
+    assert raw["files_removed"] == ["data/f0.parquet"]
+    assert [f["path"] for f in raw["files_added"]] == ["data/f5.parquet"]
+    assert "files_delta_depth" not in raw and "chain_length" not in raw
+    assert t.snapshot().files == files
