@@ -19,6 +19,11 @@ core/schema.py:114-142) → evolve schema if enabled (:52-78) → cast to
 table schema with NULL fallback (utils/arrow.py:105-134) → strategy
 write. The overwrite/delete strategies clear only on the FIRST flush of a
 call; later flushes append (core/strategies.py:42-48, 62-66).
+
+A flush reads the table's head once, in the schema evolution, and the
+write commits on that snapshot. The flush hands the table its Arrow
+table: how it is written (on the driver or by Spark, in how many files)
+is the table's decision (``tables/table.py``).
 """
 
 from __future__ import annotations
@@ -37,12 +42,9 @@ from iceberg_loader_spark.sources.normalize import (
     create_record_batches_from_dicts,
 )
 from iceberg_loader_spark.sources.tables import ensure_compat
-from iceberg_loader_spark.tables import table as table_module
 from iceberg_loader_spark.tables.catalog import Warehouse
-from iceberg_loader_spark.tables.partitioning import (
-    TIME_TRANSFORMS,
-    PartitionField,
-)
+from iceberg_loader_spark.tables.format import Snapshot
+from iceberg_loader_spark.tables.partitioning import TIME_TRANSFORMS
 from iceberg_loader_spark.tables.table import Table
 from iceberg_loader_spark.types import (
     arrow_schema_to_spark,
@@ -199,7 +201,6 @@ class _LoadState:
     # ---- flush pipeline --------------------------------------------------
 
     def flush(self, buffer: list[pa.RecordBatch]) -> None:
-        spark = self.loader.spark
         data = self._concat(buffer)
         data = _normalize_arrow_types(data)
         if self.cfg.load_timestamp:
@@ -210,29 +211,19 @@ class _LoadState:
                 pa.field(self.cfg.load_ts_col, pa.timestamp("us"), nullable=True), col
             )
         self._ensure_table(data)
-        table_schema = self._evolve(data)
+        head = self._evolve(data)
         arrow_target = pa.schema(
             [
                 pa.field(f.name, spark_to_arrow(f.dataType), nullable=True)
-                for f in table_schema.fields
+                for f in T.StructType.fromJson(head.schema_json).fields
             ]
         )
         data = cast_to_schema(data, arrow_target)
-        rows = data.num_rows
-        # size the write: ~TARGET_FILE_BYTES in-memory bytes per output
-        # file, so small flushes produce one file (per partition value)
-        # instead of one near-empty file per core. A flush that fits one
-        # target file goes to the table as the Arrow table itself, which
-        # the table writes (and upserts) on the driver when its Arrow
-        # path can; larger flushes keep Spark's parallel write.
-        target_parts = max(1, -(-data.nbytes // table_module.TARGET_FILE_BYTES))
-        if target_parts > 1:
-            data = spark.createDataFrame(data, schema=table_schema)
-            if target_parts < data.rdd.getNumPartitions():
-                data = data.coalesce(target_parts)
-        snap = self._write(data)
+        # the write commits on the evolved head; the table sizes its
+        # files (Table._write_rows)
+        snap = self._write(data, head)
         self.snapshot_id = snap.snapshot_id
-        self.rows_loaded += rows
+        self.rows_loaded += data.num_rows
         self.is_first_write = False
 
     def _concat(self, buffer: list[pa.RecordBatch]) -> pa.Table:
@@ -252,10 +243,6 @@ class _LoadState:
             union = pa.schema(fields)
             return pa.concat_tables([cast_to_schema(t, union) for t in tables])
 
-    def _partition_spec(self, data: pa.Table) -> list[PartitionField]:
-        pf = self.cfg.partition_field
-        return [pf] if pf is not None else []
-
     def _ensure_table(self, data: pa.Table) -> None:
         if self.table is not None:
             return
@@ -264,13 +251,12 @@ class _LoadState:
             self.table = wh.load_table(self.identifier)
             return
         schema = arrow_schema_to_spark(data.schema)
-        spec = self._partition_spec(data)
+        pf = self.cfg.partition_field
+        spec = [] if pf is None else [pf]
         # string→timestamp promotion for time transforms on string columns
         # (reference core/schema.py:114-142)
-        if spec:
-            pf = spec[0]
-            by_name = {f.name: f for f in schema.fields}
-            src = by_name.get(pf.source)
+        if pf is not None:
+            src = {f.name: f for f in schema.fields}.get(pf.source)
             if (
                 pf.transform in TIME_TRANSFORMS
                 and src is not None
@@ -293,31 +279,26 @@ class _LoadState:
         )
         self.new_table_created = True
 
-    def _evolve(self, data: pa.Table) -> T.StructType:
+    def _evolve(self, data: pa.Table) -> Snapshot:
         """Add the flush's missing columns in at most one commit; return
-        the schema the flush is cast to.
+        the head the flush is cast to and written on.
 
         The audit column is force-evolved even when schema evolution is
         off (reference core/loader.py:156-160, "step 1.5") — otherwise
         cast_to_schema silently drops it on pre-existing tables created
         without it. It goes first, ahead of any new data columns."""
-        snap = self.table.snapshot()
-        have = set(T.StructType.fromJson(snap.schema_json).names)
         wanted = []
         if self.cfg.load_timestamp:
             wanted.append(data.schema.field(self.cfg.load_ts_col))
         if self.cfg.schema_evolution:
             wanted.extend(data.schema)
-        new = {
+        fields = {
             f.name: T.StructField(f.name, arrow_to_spark(f.type), True)
             for f in wanted
-            if f.name not in have
         }
-        if new:
-            snap = self.table.add_columns(list(new.values()))
-        return T.StructType.fromJson(snap.schema_json)
+        return self.table.add_columns(list(fields.values()))
 
-    def _write(self, data: DataFrame | pa.Table):
+    def _write(self, data: pa.Table, head: Snapshot) -> Snapshot:
         spark = self.loader.spark
         cfg = self.cfg
         t = self.table
@@ -325,17 +306,17 @@ class _LoadState:
         # (reference core/strategies.py:84-99)
         if cfg.join_cols:
             return t.merge(
-                spark, data, list(cfg.join_cols), mode=cfg.row_level_mode
+                spark, data, list(cfg.join_cols), mode=cfg.row_level_mode, head=head
             )
         if cfg.replace_filter:
             if self.is_first_write:
-                t.delete_where(
-                    spark, cfg.replace_filter, mode=cfg.row_level_mode
+                head = t.delete_where(
+                    spark, cfg.replace_filter, mode=cfg.row_level_mode, head=head
                 )
-            return t.append(data)
+            return t.append(data, head=head)
         if cfg.write_mode == "overwrite" and self.is_first_write:
-            return t.overwrite(data)
-        return t.append(data)
+            return t.overwrite(data, head=head)
+        return t.append(data, head=head)
 
     # ---- result ----------------------------------------------------------
 

@@ -66,6 +66,8 @@ import uuid
 from dataclasses import dataclass
 from typing import Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -388,6 +390,7 @@ class SparkbergWriter(DataSourceArrowWriter):
         rel = f"{self._staging_rel}/task-{uuid.uuid4().hex}.parquet"
         abs_path = os.path.join(self._root, rel)
         rows = 0
+        nan_cols: set[str] = set()
         try:
             for b in iterator:
                 if b.num_rows == 0:
@@ -396,6 +399,11 @@ class SparkbergWriter(DataSourceArrowWriter):
                     writer = open_parquet_writer(abs_path, b, self._codec)
                 writer.write_batch(b)
                 rows += b.num_rows
+                nan_cols.update(
+                    n
+                    for n, c in zip(b.schema.names, b.columns)
+                    if pa.types.is_floating(c.type) and pc.any(pc.is_nan(c)).as_py()
+                )
         finally:
             if writer is not None:
                 writer.close()
@@ -405,6 +413,10 @@ class SparkbergWriter(DataSourceArrowWriter):
         entry = data_file_entry(
             writer.writer.metadata, rel, os.path.getsize(abs_path)
         )
+        # pyarrow leaves NaN out of a float column's bounds; parquet-mr,
+        # Spark's writer, records it as the max, where Spark orders it
+        for name in nan_cols & entry.stats.keys():
+            entry.stats[name][1] = float("nan")
         return _WriteMessage(entries=(entry,))
 
     def commit(self, messages) -> None:

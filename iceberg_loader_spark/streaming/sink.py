@@ -81,7 +81,7 @@ class IdempotentTableSink:
         entries = table._write_data_files(batch_df, _spec(head), head)
         try:
             table._commit_with_retry(
-                _marked_append_build(entries, self.marker_prop, batch_id)
+                _marked_append_build(entries, self.marker_prop, batch_id), head
             )
         except _NothingToCommit as done:
             discard_files(table.root, [e.path for e in entries])

@@ -194,14 +194,26 @@ def _normalize_dt_literal(v, bound):
     return v
 
 
+def spark_order(v):
+    """``v``'s sort key in Spark's order, where a float NaN equals NaN
+    and sorts above every number: a NaN bound compares as such."""
+    return (1, 0) if isinstance(v, float) and v != v else (0, v)
+
+
+def _ordered(term: Term, lo, hi):
+    """The term's value (a tuple of them for IN) and the bounds as
+    ``spark_order`` keys, date-ish literals padded to the bounds' format;
+    a None bound stays None."""
+    bound = lo if lo is not None else hi
+    key = lambda x: spark_order(_normalize_dt_literal(x, bound))  # noqa: E731
+    v = term.value
+    v = tuple(map(key, v)) if term.op == "in" and isinstance(v, tuple) else key(v)
+    return (v, *(None if b is None else spark_order(b) for b in (lo, hi)))
+
+
 def _term_may_match_range(term: Term, lo, hi) -> bool:
     """May a value in [lo, hi] satisfy the term? (None bound = unknown)"""
-    v = term.value
-    bound = lo if lo is not None else hi
-    if term.op == "in" and isinstance(v, tuple):
-        v = tuple(_normalize_dt_literal(x, bound) for x in v)
-    else:
-        v = _normalize_dt_literal(v, bound)
+    v, lo, hi = _ordered(term, lo, hi)
     try:
         if term.op == "==":
             return (lo is None or lo <= v) and (hi is None or v <= hi)
@@ -213,7 +225,7 @@ def _term_may_match_range(term: Term, lo, hi) -> bool:
             return hi is None or hi > v
         if term.op == ">=":
             return hi is None or hi >= v
-        if term.op == "in":
+        if term.op == "in" and isinstance(term.value, tuple):
             return any(
                 (lo is None or lo <= x) and (hi is None or x <= hi) for x in v
             )
@@ -262,14 +274,11 @@ def file_fully_matches(terms: list[Term], f: DataFile) -> bool:
         stat = f.stats.get(term.col)
         if stat is None:
             return False
-        lo, hi = stat
-        v = term.value
-        if term.op == "in" and isinstance(v, tuple):
-            vs = tuple(_normalize_dt_literal(x, lo) for x in v)
-            if not (lo == hi and lo in vs):
+        v, lo, hi = _ordered(term, *stat)
+        if term.op == "in" and isinstance(term.value, tuple):
+            if not (lo == hi and lo in v):
                 return False
             continue
-        v = _normalize_dt_literal(v, lo)
         try:
             if term.op == "==":
                 if not (lo == hi == v):

@@ -125,8 +125,10 @@ class Snapshot:
     # delta hops below this snapshot's manifest (0 when self-contained),
     # as resolution walked them or the commit wrote them: the
     # full-manifest rule of the next commit. In memory only, never in
-    # to_json.
+    # to_json, as is files_base: the version its delta manifest is
+    # encoded against (None when self-contained).
     chain_length: int = field(default=0, compare=False, repr=False)
+    files_base: int | None = field(default=None, compare=False, repr=False)
 
     @property
     def total_rows(self) -> int:
@@ -380,6 +382,7 @@ class TableMetadata:
                 DataFile.from_json(f) for f in payload.get("files_added", [])
             ]
             snap.chain_length = base.chain_length + 1
+            snap.files_base = base.version
         return snap
 
     def delete_snapshot_manifest(self, version: int) -> None:
@@ -437,8 +440,9 @@ class TableMetadata:
             self._recover_orphan(snapshot.version)
             raise
         self.backend.publish_current(snapshot.version)
+        snapshot.files_base = payload.get("files_base")
         snapshot.chain_length = (
-            expected_parent.chain_length + 1 if "files_base" in payload else 0
+            0 if snapshot.files_base is None else expected_parent.chain_length + 1
         )
         return snapshot
 

@@ -34,7 +34,14 @@ from iceberg_loader_spark.tables.format import (
     Snapshot,
     new_snapshot,
 )
-from iceberg_loader_spark.tables.table import Table, _schema, _sort_order, _spec
+from iceberg_loader_spark.tables.table import (
+    Table,
+    _schema,
+    _sort_order,
+    _spec,
+    discard_files,
+    live_paths,
+)
 
 log = logging.getLogger(__name__)
 
@@ -89,7 +96,8 @@ def expire_snapshots(
 
         # tagged versions are retention-pinned (Iceberg tag refs): a tag
         # in the CURRENT properties protects its target from expiry
-        tagged = set(table.tags().values())
+        current = next(s for s in snapshots if s.version == current_version)
+        tagged = set(table.tags(current).values())
         expired = [
             s
             for s in snapshots
@@ -97,38 +105,23 @@ def expire_snapshots(
             and s.version != current_version
             and s.version not in tagged
         ]
-        survivors = [s for s in snapshots if s not in expired]
+        expired_versions = {s.version for s in expired}
+        survivors = [s for s in snapshots if s.version not in expired_versions]
         # Delta-encoded manifests may chain through versions being
         # expired: materialize any surviving manifest whose base is about
         # to disappear BEFORE deleting, from the snapshot history already
         # resolved (the replace is atomic, so concurrent readers see
         # old-delta or new-full, both resolving to identical content).
-        expired_versions = {s.version for s in expired}
         for s in survivors:
-            raw = table.meta.backend.read_manifest(s.version)
-            if raw.get("files_base") in expired_versions:
+            if s.files_base in expired_versions:
                 table.meta.backend.write_manifest_replace(s.version, s.to_json())
-        live_paths = (
-            {f.path for s in survivors for f in s.files}
-            | {d["path"] for s in survivors for d in s.delete_files}
-            # a live WAP stage / branch chain may be the ONLY reference
-            # to a file an expired MAIN snapshot also carried (e.g. a
-            # branch forked at a version being expired): expiry must not
-            # break the shadow chain's scans
-            | _shadow_live_paths(table)
-        )
-        dead_paths = (
-            {f.path for s in expired for f in s.files}
-            | {d["path"] for s in expired for d in s.delete_files}
-        ) - live_paths
+        # a live WAP stage / branch chain may be the ONLY reference to a
+        # file an expired MAIN snapshot also carried (e.g. a branch forked
+        # at a version being expired): expiry must not break its scans
+        dead = live_paths(expired) - live_paths(survivors) - _shadow_live_paths(table)
         for s in expired:
             table.meta.delete_snapshot_manifest(s.version)
-        deleted = 0
-        for rel in dead_paths:
-            p = os.path.join(table.root, rel)
-            if os.path.isfile(p):
-                os.remove(p)
-                deleted += 1
+        deleted = discard_files(table.root, dead)
         return {
             "expired": len(expired),
             "remaining": len(survivors),
@@ -423,11 +416,7 @@ def remove_orphan_files(table: Table, older_than_ms: int | None = None) -> dict:
 
     if older_than_ms is None:
         older_than_ms = int(_time.time() * 1000) - 3 * 3600 * 1000
-    live = {
-        f.path for snap in table.history() for f in snap.files
-    } | {
-        d["path"] for snap in table.history() for d in snap.delete_files
-    }
+    live = live_paths(table.history())
     # in-flight write-audit-publish stages AND live branches reference
     # staged files only from their shadow metadata chains — treat every
     # file any shadow snapshot references as live too (a branch can
@@ -490,7 +479,8 @@ def rewrite_manifests(table: Table, include_branches: bool = True) -> dict:
     Older (time-travel) manifests are left delta-encoded on purpose:
     scans read the head; expiry owns historical truncation.
 
-    Returns per-ref before/after chain lengths and the rewrite count.
+    Returns per-ref before/after chain lengths (after is 0: each head
+    is self-contained once rewritten) and the rewrite count.
     """
     refs: list[tuple[str, Table]] = [("main", table)]
     if include_branches:
@@ -506,8 +496,7 @@ def rewrite_manifests(table: Table, include_branches: bool = True) -> dict:
         if before > 0:
             handle.meta.backend.write_manifest_replace(head.version, head.to_json())
             report["rewritten"] += 1
-        after = manifest_chain_length(handle, head.version)
-        report["chains"][ref_name] = {"before": before, "after": after}
+        report["chains"][ref_name] = {"before": before, "after": 0}
     return report
 
 

@@ -58,6 +58,7 @@ from iceberg_loader_spark.sources.tables import ensure_compat
 from iceberg_loader_spark.tables import bloom as bloom_mod
 from iceberg_loader_spark.tables.filters import (
     prune_files,
+    spark_order,
     split_delete_candidates,
     to_arrow_expr,
     to_spark_sql,
@@ -81,8 +82,9 @@ from iceberg_loader_spark.tables.partitioning import (
 )
 
 
-# in-memory Arrow bytes per output data file: a loader flush's write
-# sizing, so a flush of at most this much reaches the table as Arrow
+# in-memory Arrow bytes per output data file: an Arrow table of at most
+# this much is written as one file per partition value (on the driver
+# when the Arrow writer can), a larger one in that many Spark partitions
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 # the most decoded Arrow bytes a rewrite reads on the driver (a CoW
@@ -183,6 +185,13 @@ _LINEAGE_RE = rf"({DATA_DIR}/(?:ds-)?[0-9a-f]{{32}}/.*)$"
 def new_data_dir() -> str:
     """Root-relative directory for one write's new data files."""
     return f"{DATA_DIR}/{uuid.uuid4().hex}"
+
+
+def _kept_by(where: str):
+    """The rows a delete predicate is false or null on, as a coalesce
+    Spark keeps from the parquet reader: its row-group filter trusts
+    pyarrow's float bounds, which leave NaN out."""
+    return F.coalesce(~F.expr(to_spark_sql(where)), F.lit(True))
 
 
 def _with_lineage(df: DataFrame) -> DataFrame:
@@ -482,7 +491,10 @@ def data_file_entry(
             if prev is None:
                 stats[name] = [lo, hi]
             else:
-                stats[name] = [min(prev[0], lo), max(prev[1], hi)]
+                stats[name] = [
+                    min(prev[0], lo, key=spark_order),
+                    max(prev[1], hi, key=spark_order),
+                ]
     return DataFile(
         path=rel_path.replace(os.sep, "/"),
         rows=md.num_rows,
@@ -500,14 +512,25 @@ def entry_from_footer(
     return data_file_entry(md, rel_path, os.path.getsize(abs_path), partition)
 
 
-def discard_files(root: str, paths) -> None:
-    """Best-effort removal of freshly written files no commit references
-    (a skipped replay's or a refused write's output)."""
+def discard_files(root: str, paths) -> int:
+    """Best-effort removal of files no commit references (a skipped
+    replay's or a refused write's output, expired or aborted files);
+    returns how many were removed."""
+    removed = 0
     for rel in paths:
         try:
             os.unlink(os.path.join(root, rel))
+            removed += 1
         except OSError:
             pass
+    return removed
+
+
+def live_paths(snaps) -> set[str]:
+    """Every data and delete file path the snapshots reference."""
+    return {f.path for s in snaps for f in s.files} | {
+        d["path"] for s in snaps for d in s.delete_files
+    }
 
 
 def _dictionary_columns(rows) -> list[str]:
@@ -591,6 +614,14 @@ def _float_bounds(entry: DataFile, rows: pa.Table) -> None:
             bounds[0] = -0.0 if pc.any(pc.less(signs, 0)).as_py() else 0.0
         if bounds[1] == 0:
             bounds[1] = 0.0 if pc.any(pc.greater(signs, 0)).as_py() else -0.0
+
+
+def _arrow_to_spark(rows: pa.Table, schema: T.StructType) -> DataFrame:
+    """An Arrow table in the table ``schema`` as a DataFrame of one
+    partition per ``TARGET_FILE_BYTES`` of its in-memory bytes."""
+    spark = SparkSession.builder.getOrCreate()
+    parts = max(1, -(-rows.nbytes // TARGET_FILE_BYTES))
+    return spark.createDataFrame(rows, schema=schema).coalesce(parts)
 
 
 def _has_utc_timestamp(t: T.DataType) -> bool:
@@ -930,8 +961,7 @@ class Table:
                 df = _with_lineage(df)
             for o in (ops[i] for i in k):
                 if o["kind"] == "pred":
-                    e = F.expr(to_spark_sql(o["where"]))
-                    df = df.filter(~e | e.isNull())
+                    df = df.filter(_kept_by(o["where"]))
                 elif o["kind"] == "pos":
                     dels = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
                         os.path.join(self.root, o["path"])
@@ -1456,21 +1486,24 @@ class Table:
         self, rows, snap: Snapshot, spec: list[PartitionField] | None = None
     ) -> list[DataFile]:
         """Write a DataFrame, or an Arrow table (cast to the table schema
-        of its columns) as one target file per partition value, into new
-        data files. ``spec`` defaults to the table's. An Arrow table goes
+        of its columns), into new data files. ``spec`` defaults to the
+        table's. An Arrow table that fits ``TARGET_FILE_BYTES`` goes
         through the driver's Arrow writer whenever that reproduces the
-        Spark writer's files, else through Spark."""
+        Spark writer's files; anything else is written by Spark, an Arrow
+        table in one partition per target file (``_arrow_to_spark``)."""
         spec = _spec(snap) if spec is None else spec
         if isinstance(rows, pa.Table):
             schema = _schema(snap)
             schema = T.StructType([schema[c] for c in rows.column_names])
             rows = rows.cast(to_arrow_schema(schema))
-            sort_within = _sort_order(snap)
-            values = _arrow_partition_values(rows, snap, spec, sort_within)
-            if values is not None:
-                return self._write_arrow_files(rows, spec, snap, values, sort_within)
-            spark = SparkSession.builder.getOrCreate()
-            rows = spark.createDataFrame(rows, schema=schema).coalesce(1)
+            if rows.nbytes <= TARGET_FILE_BYTES:
+                sort_within = _sort_order(snap)
+                values = _arrow_partition_values(rows, snap, spec, sort_within)
+                if values is not None:
+                    return self._write_arrow_files(
+                        rows, spec, snap, values, sort_within
+                    )
+            rows = _arrow_to_spark(rows, schema)
         return self._write_data_files(rows, spec, snap)
 
     def _attach_blooms(
@@ -1607,29 +1640,39 @@ class Table:
         self,
         df: DataFrame | pa.Table,
         extra_properties: dict[str, str] | None = None,
+        *,
+        head: Snapshot | None = None,
     ) -> Snapshot:
         """A7: append — new snapshot = parent files + new files.
 
-        ``df`` is a DataFrame or an Arrow table; an Arrow table is
-        written as one file per partition value (``_write_rows``).
+        ``df`` is a DataFrame or an Arrow table (``_write_rows``).
         ``extra_properties`` are merged into the snapshot's table
         properties ATOMICALLY with the data commit — the hook idempotent
         consumers (the exactly-once streaming sink) use to record their
-        progress marker in the same transaction as the rows.
+        progress marker in the same transaction as the rows. ``head``,
+        here and in ``overwrite``, ``delete_where`` and ``merge``, is
+        the head the caller holds, which the write commits on.
         """
-        head = self.snapshot()
+        head = self.snapshot() if head is None else head
         entries = self._write_rows(df, head)
         return self._commit_with_retry(_append_build(entries, extra_properties), head)
 
-    def overwrite(self, df: DataFrame | pa.Table) -> Snapshot:
+    def overwrite(
+        self, df: DataFrame | pa.Table, *, head: Snapshot | None = None
+    ) -> Snapshot:
         """A8 (first flush): replace all table data with df's rows (a
         DataFrame or an Arrow table, as in ``append``)."""
-        head = self.snapshot()
+        head = self.snapshot() if head is None else head
         entries = self._write_rows(df, head)
         return self._commit_with_retry(_overwrite_build(entries), head)
 
     def delete_where(
-        self, spark: SparkSession, where: str, mode: str = "cow"
+        self,
+        spark: SparkSession,
+        where: str,
+        mode: str = "cow",
+        *,
+        head: Snapshot | None = None,
     ) -> Snapshot:
         """A9/A14: row-filter DELETE.
 
@@ -1658,11 +1701,11 @@ class Table:
         if mode not in ("cow", "mor", "mor-pos"):
             raise ValueError(f"unknown delete mode: {mode!r}")
         ensure_compat(spark)
+        snap = self.snapshot() if head is None else head
         if mode == "mor":
-            return self._delete_where_mor(spark, where)
+            return self._delete_where_mor(where, snap)
         if mode == "mor-pos":
-            return self._delete_where_mor_pos(spark, where)
-        snap = self.snapshot()
+            return self._delete_where_mor_pos(spark, where, snap)
         spec = _spec(snap)
         # three-way split: metadata-proof full matches are dropped without
         # any rewrite (the partition-aligned fast path); only partial
@@ -1670,7 +1713,6 @@ class Table:
         dropped, candidates, _clean = split_delete_candidates(
             where, snap.files, spec
         )
-        sql_pred = to_spark_sql(where)
         new_entries: list[DataFile] | None = []
         deleted_rows = sum(f.rows for f in dropped)
         rewritten = []
@@ -1693,7 +1735,7 @@ class Table:
                     snap.delete_predicates,
                     snap.delete_files,
                 )
-                keep = cdf.filter(~F.expr(sql_pred) | F.expr(sql_pred).isNull())
+                keep = cdf.filter(_kept_by(where))
                 new_entries = self._write_data_files(keep, spec, snap)
             kept_rows = sum(e.rows for e in new_entries)
             deleted_rows += sum(f.rows for f in candidates) - kept_rows
@@ -1734,7 +1776,7 @@ class Table:
 
         return self._commit_with_retry(build, snap)
 
-    def _delete_where_mor(self, spark: SparkSession, where: str) -> Snapshot:
+    def _delete_where_mor(self, where: str, snap: Snapshot) -> Snapshot:
         """Merge-on-read DELETE: record the predicate, rewrite nothing.
 
         The commit is pure metadata — the predicate plus the new
@@ -1744,7 +1786,6 @@ class Table:
         the common prune case costs nothing at scan time either.
         """
         to_spark_sql(where)  # validate the predicate parses NOW, not at scan
-        snap = self.snapshot()
         spec = _spec(snap)
         scanned_paths = {f.path for f in snap.files}
 
@@ -1787,7 +1828,9 @@ class Table:
 
         return self._commit_with_retry(build, snap)
 
-    def _delete_where_mor_pos(self, spark: SparkSession, where: str) -> Snapshot:
+    def _delete_where_mor_pos(
+        self, spark: SparkSession, where: str, snap: Snapshot
+    ) -> Snapshot:
         """Merge-on-read DELETE with POSITION delete files (Iceberg v2's
         second delete shape): the predicate is evaluated ONCE, now, and
         the matching rows' (file_path, pos) pairs land in one delete
@@ -1811,7 +1854,6 @@ class Table:
         re-applied): a position for an already-hidden row is a no-op in
         the anti-join, never a correctness issue.
         """
-        snap = self.snapshot()
         sql_pred = to_spark_sql(where)  # validates the predicate parses
         dropped, candidates, _clean = split_delete_candidates(
             where, snap.files, _spec(snap)
@@ -1889,6 +1931,8 @@ class Table:
         source: DataFrame | pa.Table,
         join_cols: list[str],
         mode: str = "cow",
+        *,
+        head: Snapshot | None = None,
     ) -> Snapshot:
         """A10: upsert/MERGE with PyIceberg-parity semantics.
 
@@ -1910,12 +1954,13 @@ class Table:
         keys Arrow joins as Spark does is checked for duplicate keys in
         Arrow, prunes the CoW candidates by its key range and blooms, and
         is merged on the driver when that is eligible
-        (``_merge_rows_arrow``); anything else takes the Spark path.
+        (``_merge_rows_arrow``), else by Spark on those candidates; any
+        other source is merged by Spark on every file.
         """
         if mode not in ("cow", "mor"):
             raise ValueError(f"unknown merge mode: {mode!r}")
         ensure_compat(spark)
-        snap = self.snapshot()
+        snap = self.snapshot() if head is None else head
         schema = _schema(snap)
         missing = [c for c in join_cols if c not in schema.names]
         if missing:
@@ -1935,7 +1980,7 @@ class Table:
         # checked Arrow source as it is
         to_spark = rewrite is None and not (arrow and mode == "mor")
         if to_spark and isinstance(source, pa.Table):
-            source = spark.createDataFrame(source, schema=schema).coalesce(1)
+            source = _arrow_to_spark(source, schema)
         if mode == "mor":
             return self._merge_mor(snap, source, join_cols)
         if rewrite is None:
@@ -2326,6 +2371,7 @@ class Table:
                     "total-records": target.total_rows,
                 },
                 delete_predicates=target.delete_predicates,
+                delete_files=target.delete_files,
             )
 
         return self._commit_with_retry(build)
@@ -2383,10 +2429,12 @@ class Table:
 
         return self._commit_with_retry(build, head)
 
-    def tags(self) -> dict[str, int]:
+    def tags(self, snap: Snapshot | None = None) -> dict[str, int]:
+        """Tag name → version, as of ``snap`` (default: the head)."""
+        props = (self.snapshot() if snap is None else snap).properties
         return {
             k[len(self._TAG_PREFIX):]: int(v)
-            for k, v in self.properties().items()
+            for k, v in props.items()
             if k.startswith(self._TAG_PREFIX)
         }
 
@@ -2483,10 +2531,7 @@ class Table:
             backend = LocalFSBackend(self.root, meta_dir=d)
             if not backend.exists():
                 continue
-            meta = TableMetadata(self.root, backend=backend)
-            for snap in meta.snapshots():
-                live |= {f.path for f in snap.files}
-                live |= {df["path"] for df in snap.delete_files}
+            live |= live_paths(TableMetadata(self.root, backend=backend).snapshots())
         return live
 
     def create_branch(self, name: str) -> "Table":
@@ -2620,25 +2665,10 @@ class Table:
         if name is None or fork_v < 0:
             raise ValueError("not a branch table")
         branch_dir = self._shadow_dir_checked(self.BRANCH_DIR, name)
-        fork_snap = self.snapshot(fork_v)
-        protected = (
-            {f.path for f in fork_snap.files}
-            | {df["path"] for df in fork_snap.delete_files}
-            | self._all_chain_live_paths(exclude_meta_dirs={branch_dir})
+        protected = live_paths([self.snapshot(fork_v)]) | self._all_chain_live_paths(
+            exclude_meta_dirs={branch_dir}
         )
-        removed = 0
-        seen: set[str] = set()
-        for s in shadow.history():
-            for path in [f.path for f in s.files] + [
-                df["path"] for df in s.delete_files
-            ]:
-                if path in protected or path in seen:
-                    continue
-                seen.add(path)
-                p = os.path.join(self.root, path)
-                if os.path.isfile(p):
-                    os.remove(p)
-                    removed += 1
+        removed = discard_files(self.root, live_paths(shadow.history()) - protected)
         shutil.rmtree(branch_dir, ignore_errors=True)
         return {"removed_files": removed}
 
@@ -2858,18 +2888,10 @@ class Table:
         # same protection as abort_branch: a path referenced by MAIN or
         # any other chain (e.g. a crashed publish already landed it, or a
         # branch forked after the stage's files were published) is live
-        protected = {
-            f.path for f in self.snapshot(fork_v).files
-        } | self._all_chain_live_paths(exclude_meta_dirs={wap_dir})
-        removed = 0
-        for s in shadow.history():
-            for f in s.files:
-                if f.path in protected:
-                    continue
-                p = os.path.join(self.root, f.path)
-                if os.path.isfile(p):
-                    os.remove(p)
-                    removed += 1
+        protected = live_paths([self.snapshot(fork_v)]) | self._all_chain_live_paths(
+            exclude_meta_dirs={wap_dir}
+        )
+        removed = discard_files(self.root, live_paths(shadow.history()) - protected)
         shutil.rmtree(wap_dir, ignore_errors=True)
         return {"removed_files": removed}
 

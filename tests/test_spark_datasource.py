@@ -47,6 +47,26 @@ def test_write_autocreate_and_read_roundtrip(spark, wh):
     assert _rows(t.scan(spark)) == _rows(df)
 
 
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_connector_records_nan_as_float_max(spark, wh, mode):
+    """The connector's files record a NaN as the column's max, as Spark's
+    writer does, so a delete whose range the NaN row fails does not
+    prove the file fully matching and drop the NaN row with it; nor does
+    the Spark read that applies the delete."""
+    import math
+
+    root = wh.table_root("db.ds_nan")
+    schema = T.StructType([T.StructField("x", T.DoubleType())])
+    df = spark.createDataFrame([(1.0,), (float("nan"),)], schema).coalesce(1)
+    df.write.format("sparkberg").mode("append").save(root)
+    t = wh.load_table("db.ds_nan")
+    [f] = t.snapshot().files
+    assert f.stats["x"][0] == 1.0 and math.isnan(f.stats["x"][1])
+    t.delete_where(spark, "x < 5", mode=mode)
+    [row] = t.scan(spark).collect()
+    assert math.isnan(row.x)
+
+
 def test_append_then_overwrite_modes(spark, wh):
     root = wh.table_root("db.ds_modes")
     one = spark.range(5).select(F.col("id").alias("k"))

@@ -246,6 +246,48 @@ def test_rollback_restores_previous_state(spark, tmp_path):
         t.scan_incremental(spark, good)
 
 
+def test_rollback_restores_delete_files(spark, tmp_path):
+    """A rollback restores the target's equality-delete files along with
+    its data files: rolling back past a key delete shows the key again,
+    and rolling back past the compaction that applied one keeps the key
+    deleted."""
+    from iceberg_loader_spark.tables.maintenance import rewrite_data_files
+
+    t = Table.create(Warehouse(str(tmp_path)), "db.t", _schema())
+    t.append(spark.createDataFrame([(1,), (2,), (3,)], _schema()))
+    before = t.meta.current_version()
+    t.delete_by_keys(spark, spark.createDataFrame([(2,)], _schema()), ["id"])
+    deleted = t.meta.current_version()
+
+    def ids():
+        return sorted(r.id for r in t.scan(spark).collect())
+
+    assert ids() == [1, 3]
+    t.rollback(before)
+    assert ids() == [1, 2, 3]
+    t.rollback(deleted)
+    rewrite_data_files(t, spark)
+    assert not t.snapshot().delete_files
+    t.rollback(deleted)
+    assert ids() == [1, 3]
+
+
+def test_scan_keeps_nan_above_float_bounds(spark, tmp_path):
+    """Spark orders NaN above every number and its writer records a NaN
+    as a float column's max: a range filter the NaN row meets keeps the
+    file, one it fails prunes it."""
+    import math
+
+    schema = T.StructType([T.StructField("x", T.DoubleType())])
+    t = Table.create(Warehouse(str(tmp_path)), "db.t", schema)
+    t.append(spark.createDataFrame([(1.0,), (float("nan"),)], schema).coalesce(1))
+    [f] = t.snapshot().files
+    assert f.stats["x"][0] == 1.0 and math.isnan(f.stats["x"][1])
+    for where, want in (("x > 5", 1), ("x >= 1", 2), ("x < 0", 0), ("x == 0", 0)):
+        assert prune_files(where, [f], [])[0] == ([f] if want else []), where
+        assert t.scan(spark, where=where).count() == want, where
+
+
 def test_changes_cdc_across_mixed_operations(spark, tmp_path):
     """Table.changes: append -> delete -> merge produce the expected
     insert/delete rows per commit, compaction contributes nothing, and
@@ -765,12 +807,17 @@ def test_partitions_metadata_table(spark, tmp_path):
 
 def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
     """Metadata-read budget: a write resolves the head once and commits
-    on it without re-reading it. A change that adds a ``load_snapshot``
-    call to one of these paths fails here."""
+    on it without re-reading it, a loader flush's schema evolution being
+    that one read, and expiry resolves only the history. A change that
+    adds a ``load_snapshot`` call to one of these paths fails here."""
     from datetime import datetime
 
+    from iceberg_loader_spark.tables import table as table_module
     from iceberg_loader_spark.tables.format import TableMetadata
-    from iceberg_loader_spark.tables.maintenance import rewrite_data_files
+    from iceberg_loader_spark.tables.maintenance import (
+        expire_snapshots,
+        rewrite_data_files,
+    )
 
     def rows(lo):
         return [
@@ -805,7 +852,7 @@ def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
         op()
         return len(calls)
 
-    assert reads(lambda: loader.load_data(rows(20), "db.t", cfg)) <= 2
+    assert reads(lambda: loader.load_data(rows(20), "db.t", cfg)) <= 1
     # that steady small flush ran no Spark job: one target file's rows go
     # from the driver's Arrow table straight to parquet
     sc = spark.sparkContext
@@ -826,9 +873,16 @@ def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
             partition_by="day(ts)", join_cols=("id",), row_level_mode=mode
         )
         upsert_rows = rows(lo)[:5]
+        calls.clear()
         assert spark_jobs(
             f"small-{mode}-upsert", lambda: loader.load_data(upsert_rows, "db.t", upsert)
         ) == []
+        assert len(calls) <= 1
+    # a replace-strategy call's first flush deletes, then appends on the
+    # delete's snapshot: 20 new rows, then the same 20 replaced
+    replace = LoaderConfig(partition_by="day(ts)", replace_filter="id >= 200")
+    for _ in range(2):
+        assert reads(lambda: loader.load_data(rows(200), "db.t", replace)) <= 1
     assert reads(lambda: t.append(new_rows)) <= 1
     assert reads(lambda: t.merge(spark, updates, ["id"])) <= 1
     # a small table compacts on the driver, its MoR key file applied
@@ -839,8 +893,36 @@ def test_metadata_read_budget_per_write(spark, tmp_path, monkeypatch):
     assert t.snapshot().delete_files
     assert reads(compact) <= 1
     assert jobs == []
+    # past TARGET_FILE_BYTES the table writes a flush through Spark, and
+    # merges a loader upsert there on the files its key range may hit
+    merged_on = []
+    merge_spark = Table._merge_rows_spark
+
+    def spy(self, spark, snap, source, join_cols, candidates):
+        merged_on.append((len(snap.files), candidates))
+        return merge_spark(self, spark, snap, source, join_cols, candidates)
+
+    with monkeypatch.context() as m:
+        m.setattr(table_module, "TARGET_FILE_BYTES", 256)
+        m.setattr(table_module, "DRIVER_MERGE_BYTES", 0)
+        m.setattr(Table, "_merge_rows_spark", spy)
+        calls.clear()
+        assert spark_jobs("large-flush", lambda: loader.load_data(rows(300), "db.t", cfg))
+        assert len(calls) <= 1
+        upsert = LoaderConfig(partition_by="day(ts)", join_cols=("id",))
+        assert reads(lambda: loader.load_data(rows(310), "db.t", upsert)) <= 1
+    [(n_files, candidates)] = merged_on
+    assert 0 < len(candidates) < n_files
+    assert all(f.stats["id"][1] >= 310 for f in candidates)
+    # expiry takes the head's tags from the history it resolves: the
+    # tagged first load survives it
+    t.set_tag("first", 2)
+    expired = {}
+    assert reads(lambda: expired.update(expire_snapshots(t, keep_last=2))) == 0
+    assert expired["expired"] > 0 and "error" not in expired
     monkeypatch.undo()
-    assert t.scan(spark).count() == 67
+    assert t.scan(spark, tag="first").count() == 20
+    assert t.scan(spark).count() == 117
 
 
 def test_scan_rejects_conflicting_snapshot_selectors(spark, tmp_path):
