@@ -36,10 +36,14 @@ import pyarrow as pa
 
 log = logging.getLogger(__name__)
 
+# the encoder ``json.dumps`` would build for these arguments on every
+# call, built once
+_encode_json = json.JSONEncoder(ensure_ascii=False, separators=(",", ":")).encode
+
 
 def json_serialize(value) -> str:
     """Compact JSON — byte-exact with the reference (arrow.py:12)."""
-    return json.dumps(value, ensure_ascii=False, separators=(",", ":"))
+    return _encode_json(value)
 
 
 def _normalize_value(v, stringify_scalars: bool = False):

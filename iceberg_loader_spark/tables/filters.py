@@ -67,7 +67,7 @@ def _parse_literal(s: str):
     return s
 
 
-def _split_terms(expr: str) -> list[tuple[str, str, str]]:
+def split_terms(expr: str) -> list[tuple[str, str, str]]:
     """(column, op, literal text) per conjunct; ValueError otherwise."""
     out = []
     for part in re.split(r"(?i)\s+and\s+", expr.strip()):
@@ -81,7 +81,7 @@ def _split_terms(expr: str) -> list[tuple[str, str, str]]:
 
 def parse_filter(expr: str) -> list[Term]:
     """Parse a conjunction of simple terms; raises ValueError otherwise."""
-    return [Term(c, op, _parse_literal(lit)) for c, op, lit in _split_terms(expr)]
+    return [Term(c, op, _parse_literal(lit)) for c, op, lit in split_terms(expr)]
 
 
 def to_spark_sql(expr: str) -> str:
@@ -139,7 +139,7 @@ def to_arrow_expr(expr: str, schema: pa.Schema) -> pc.Expression | None:
     floating column also hold for NaN, which Spark orders above every
     number."""
     try:
-        terms = _split_terms(expr)
+        terms = split_terms(expr)
     except ValueError:
         return None
     out = None

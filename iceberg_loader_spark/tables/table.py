@@ -6,7 +6,10 @@ Spark-first execution shape:
   table schema; Catalyst keeps its vectorized reader, filter pushdown and
   row-group pruning. File-level pruning happens before Spark ever sees the
   plan, from manifest partition values + min/max stats (metadata-only, no
-  listing).
+  listing). A filtered scan whose kept files fit ``DRIVER_MERGE_BYTES``
+  is read on the driver instead (``_read_arrow``) and handed to Spark
+  as a local relation, so a point or small range read runs no parquet
+  job.
 * **Append** — executors write parquet into a fresh per-commit directory
   (`new_data_dir()`: `data/<uuid>/…`, optionally `partitionBy` the derived
   transform columns); the driver then reads ONLY footers to build manifest
@@ -57,9 +60,11 @@ from pyspark.storagelevel import StorageLevel
 from iceberg_loader_spark.sources.tables import ensure_compat
 from iceberg_loader_spark.tables import bloom as bloom_mod
 from iceberg_loader_spark.tables.filters import (
+    parse_filter,
     prune_files,
     spark_order,
     split_delete_candidates,
+    split_terms,
     to_arrow_expr,
     to_spark_sql,
 )
@@ -192,6 +197,32 @@ def _kept_by(where: str):
     Spark keeps from the parquet reader: its row-group filter trusts
     pyarrow's float bounds, which leave NaN out."""
     return F.coalesce(~F.expr(to_spark_sql(where)), F.lit(True))
+
+
+def _matched_by(where: str, schema: T.StructType):
+    """The rows a scan filter is true on. Its terms on a float column
+    are each a ``coalesce(term, false)``, which Spark keeps from the
+    parquet reader, as ``_kept_by`` does; the other terms are pushed
+    down. A filter outside the term grammar is one term on every
+    column."""
+    floats = {
+        f.name.lower()
+        for f in schema.fields
+        if isinstance(f.dataType, (T.FloatType, T.DoubleType))
+    }
+    try:
+        parse_filter(where)
+        terms = [(c, f"{c} {op} {lit}") for c, op, lit in split_terms(where)]
+    except ValueError:
+        terms = [(None, where)]
+    out = None
+    for col, sql in terms:
+        term = F.expr(to_spark_sql(sql))
+        on_float = bool(floats) if col is None else col.lower() in floats
+        if on_float:
+            term = F.coalesce(term, F.lit(False))
+        out = term if out is None else out & term
+    return out
 
 
 def _with_lineage(df: DataFrame) -> DataFrame:
@@ -481,7 +512,10 @@ def data_file_entry(
             if st is None or not st.has_min_max:
                 stats[name] = None  # a chunk without stats → unusable
                 continue
-            lo, hi = _stat_value(st.min), _stat_value(st.max)
+            try:
+                lo, hi = _stat_value(st.min), _stat_value(st.max)
+            except pa.ArrowNotImplementedError:  # a decimal stored as an integer
+                lo = hi = None
             if lo is None or hi is None:
                 stats[name] = None
                 continue
@@ -616,12 +650,35 @@ def _float_bounds(entry: DataFile, rows: pa.Table) -> None:
             bounds[1] = 0.0 if pc.any(pc.greater(signs, 0)).as_py() else -0.0
 
 
+def _local_frame(spark: SparkSession, rows: pa.Table, schema: T.StructType) -> DataFrame:
+    """An Arrow table in the table ``schema`` as a DataFrame over a local
+    relation. Empty record batches are dropped first: PySpark's
+    ``createDataFrame`` stops at an empty batch that is not the first,
+    so batches [2, 0, 1] gave 2 rows."""
+    batches = [b for b in rows.to_batches() if b.num_rows]
+    return spark.createDataFrame(pa.Table.from_batches(batches, rows.schema), schema=schema)
+
+
 def _arrow_to_spark(rows: pa.Table, schema: T.StructType) -> DataFrame:
     """An Arrow table in the table ``schema`` as a DataFrame of one
     partition per ``TARGET_FILE_BYTES`` of its in-memory bytes."""
     spark = SparkSession.builder.getOrCreate()
     parts = max(1, -(-rows.nbytes // TARGET_FILE_BYTES))
-    return spark.createDataFrame(rows, schema=schema).coalesce(parts)
+    return _local_frame(spark, rows, schema).coalesce(parts)
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, element and map value nullable: the schema
+    Spark's parquet scan gives a table schema."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def _has_utc_timestamp(t: T.DataType) -> bool:
@@ -872,18 +929,27 @@ class Table:
 
         ``where`` is optional; when given it is BOTH used to drop files
         whose metadata proves they can't match AND applied as a row filter
-        (so semantics never depend on pruning quality). ``tag`` reads the
-        snapshot a named tag points at; at most one of ``version``,
-        ``tag`` and ``as_of_timestamp_ms`` may be given.
+        (so semantics never depend on pruning quality). A filtered scan
+        is read on the driver when ``to_arrow_expr`` gives the filter a
+        twin and ``_read_arrow`` reads the kept files within
+        ``DRIVER_MERGE_BYTES``; every other scan is a lazy parquet scan.
+        ``tag`` reads the snapshot a named tag points at; at most one of
+        ``version``, ``tag`` and ``as_of_timestamp_ms`` may be given.
         """
         ensure_compat(spark)
         snap = self.resolve_ref(version, tag, as_of_timestamp_ms)
         files, _ = prune_files(where, snap.files, _spec(snap))
+        schema = _schema(snap)
+        if where:
+            e = to_arrow_expr(where, to_arrow_schema(schema))
+            rows = None if e is None else self._read_arrow(files, snap, DRIVER_MERGE_BYTES)
+            if rows is not None:
+                return _local_frame(spark, rows.filter(e), _nullable(schema))
         df = self._read_files_mor(
-            spark, files, _schema(snap), snap.delete_predicates, snap.delete_files
+            spark, files, schema, snap.delete_predicates, snap.delete_files
         )
         if where:
-            df = df.filter(F.expr(to_spark_sql(where)))
+            df = df.filter(_matched_by(where, schema))
         return df
 
     def resolve_ref(

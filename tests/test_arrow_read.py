@@ -619,3 +619,208 @@ def test_compaction_total_records_counts_live_rows(spark, tmp_path, monkeypatch)
         assert bool(calls) == (budget == 0)
         assert t.snapshot().summary["total-records"] == 10
         assert sorted(r.k for r in t.scan(spark).collect()) == list(range(10, 20))
+
+
+# ---- the driver scan against the Spark scan --------------------------------
+
+# scan filters: every one has an Arrow twin; "k == 42" matches no row
+SCAN_FILTERS = PREDICATES + ["k == 42"]
+
+
+def _scan_both(spark, t: Table, where: str, **ref):
+    """One filtered scan both ways: (rows on the driver path, rows on the
+    Spark path forced by ``DRIVER_MERGE_BYTES = 0``, whether the first
+    scan read on the driver, whether both frames have one schema)."""
+    calls = []
+    frame, budget = table_module._local_frame, table_module.DRIVER_MERGE_BYTES
+    table_module._local_frame = lambda *a: calls.append(a) or frame(*a)
+    try:
+        driver = t.scan(spark, where=where, **ref)
+        took_driver = bool(calls)
+        table_module.DRIVER_MERGE_BYTES = 0
+        forced = t.scan(spark, where=where, **ref)
+    finally:
+        table_module._local_frame, table_module.DRIVER_MERGE_BYTES = frame, budget
+    return driver.collect(), forced.collect(), took_driver, driver.schema == forced.schema
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.too_slow,
+        HealthCheck.data_too_large,
+    ],
+)
+@given(
+    case=_histories(),
+    which=st.integers(0, len(SCAN_FILTERS) + len(LATE_PREDICATES) - 1),
+    ref=st.sampled_from(["head", "version", "tag", "as_of"]),
+    pick=st.integers(0, 2**16),
+)
+def test_driver_scan_matches_spark_scan(spark, tmp_path, case, which, ref, pick):
+    """A filtered scan whose pruned files fit ``DRIVER_MERGE_BYTES`` reads
+    on the driver and returns the Spark scan's rows, under every delete
+    kind and every way of naming a snapshot."""
+    spec, steps = case
+    wh = Warehouse(str(tmp_path / os.urandom(4).hex()))
+    t = Table.create(wh, "db.t", SCHEMA, [parse_partition_transform(p) for p in spec])
+    for step in steps:
+        try:
+            _apply(spark, t, step)
+        except ValueError as e:
+            assert "positional delete refused" in str(e)
+    history = t.history()
+    snap = history[pick % len(history)]
+    kwargs = {
+        "head": {},
+        "version": {"version": snap.version},
+        "tag": {"tag": "pinned"},
+        "as_of": {"as_of_timestamp_ms": snap.timestamp_ms},
+    }[ref]
+    if ref == "tag":
+        t.set_tag("pinned", snap.version)
+    fields = (t.snapshot() if ref == "head" else snap).schema_json["fields"]
+    late = "late" in {f["name"] for f in fields}
+    filters = SCAN_FILTERS + (LATE_PREDICATES if late else [])
+    where = filters[which % len(filters)]
+    driver, forced, took_driver, same_schema = _scan_both(spark, t, where, **kwargs)
+    assert took_driver and same_schema
+    assert _rows(r.asDict() for r in driver) == _rows(r.asDict() for r in forced)
+
+
+def test_driver_scan_listed_cases(spark, tmp_path):
+    """Fixed cases of the property above: NaN rows under ``>``/``>=``
+    (Spark orders NaN above every number), an empty result, a predicate,
+    a positional and an equality delete pending, and a point read that
+    runs no Spark job."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", SCHEMA, [parse_partition_transform("day(ts)")])
+    xs = [math.nan, -0.0, 0.0, 1.5, 7.0, None]
+    for day in range(3):
+        t.append(
+            pa.Table.from_pylist(
+                [_row(10 * day + k, day, k % 4, x=xs[k % 6]) for k in range(10)], ARROW
+            )
+        )
+    t.delete_where(spark, "v == 3", mode="mor")
+    t.delete_where(spark, "k == 5", mode="mor-pos")
+    t.merge(spark, pa.Table.from_pylist([_row(21, 2, 9)], ARROW), ["k"], mode="mor")
+    for where, want in (
+        ("x > 5", [0, 4, 6, 10, 14, 16, 20, 24, 26]),
+        ("x >= 1.5 and k < 10", [0, 4, 6, 9]),
+        ("k == 42", []),
+        ("k == 21", [21]),
+        ("x == 0 and v == 3", []),
+    ):
+        driver, forced, took_driver, same_schema = _scan_both(spark, t, where)
+        assert took_driver and same_schema, where
+        assert sorted(r.k for r in driver) == want, where
+        assert _rows(r.asDict() for r in driver) == _rows(r.asDict() for r in forced)
+    [row] = t.scan(spark, where="k == 21").collect()
+    assert row.v == 9
+    sc = spark.sparkContext
+    sc.setJobGroup("driver-point-read", "driver-point-read")
+    try:
+        assert [r.k for r in t.scan(spark, where="k == 4").collect()] == [4]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("driver-point-read") == []
+
+
+def test_scans_without_a_driver_twin_take_spark(spark, tmp_path, monkeypatch):
+    """An unfiltered scan, a filter without an Arrow twin, a pending
+    delete without one and pruned files over ``DRIVER_MERGE_BYTES`` keep
+    the lazy parquet scan."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", SCHEMA)
+    t.append(pa.Table.from_pylist([_row(k, v=k) for k in range(4)], ARROW))
+    calls = []
+    frame = table_module._local_frame
+    monkeypatch.setattr(table_module, "_local_frame", lambda *a: calls.append(a) or frame(*a))
+    assert t.scan(spark).count() == 4
+    assert sorted(r.k for r in t.scan(spark, where="k == v").collect()) == [0, 1, 2, 3]
+    assert t.scan(spark, where="ts > '2024-05-01'").count() == 3
+    monkeypatch.setattr(
+        table_module, "DRIVER_MERGE_BYTES", sum(f.bytes for f in t.snapshot().files) - 1
+    )
+    assert t.scan(spark, where="k >= 1").count() == 3
+    monkeypatch.setattr(table_module, "DRIVER_MERGE_BYTES", 1 << 30)
+    t.delete_where(spark, "s == null", mode="mor")
+    assert t.scan(spark, where="k >= 1").count() == 3
+    assert calls == []
+
+
+TYPED = T.StructType(
+    [
+        T.StructField("k", T.LongType(), False),
+        T.StructField("ks", T.ArrayType(T.LongType(), False), False),
+        T.StructField("m", T.MapType(T.StringType(), T.LongType())),
+        T.StructField("tss", T.ArrayType(T.TimestampNTZType())),
+        T.StructField(
+            "st",
+            T.StructType(
+                [
+                    T.StructField("a", T.StructType([T.StructField("b", T.StringType())])),
+                    T.StructField("c", T.ArrayType(T.IntegerType())),
+                ]
+            ),
+        ),
+        T.StructField("dec", T.DecimalType(10, 2)),
+        T.StructField("d", T.DateType()),
+        T.StructField("bin", T.BinaryType()),
+    ]
+)
+
+
+def _typed_row(k):
+    import decimal
+
+    if k % 4 == 3:
+        return (k, [k], None, None, None, None, None, None)
+    return (
+        k,
+        [k, -k],
+        {"a": k, "b": None} if k % 2 else {},
+        [DAY0 + dt.timedelta(hours=k), None][: 1 + k % 2],
+        ({"b": f"s{k}"} if k % 2 else None, [k, None]),
+        decimal.Decimal(k) / 4,
+        (DAY0 + dt.timedelta(days=k)).date(),
+        bytes([k, 0, 255]),
+    )
+
+
+def _canonical(rows) -> list:
+    return sorted(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=repr) for r in rows
+    )
+
+
+@pytest.mark.parametrize(
+    "where, on_driver",
+    [
+        ("k >= 1", True),
+        ("k IN (0, 2, 5)", True),
+        ("dec > 1", False),  # decimal literal: no Arrow twin
+        ("d == '2024-05-03'", False),  # temporal
+        ("bin != 'x'", False),  # cross-type
+    ],
+)
+def test_driver_scan_type_coverage(spark, tmp_path, where, on_driver):
+    """Map, array of timestamp_ntz, nested struct, decimal, date and
+    binary columns read on the driver give the Spark scan's rows, and
+    non-nullable columns read as nullable as in Spark's parquet scan; a
+    filter on a column without an Arrow twin takes the Spark path. The
+    decimal, stored as an integer, has no usable footer stats."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", TYPED)
+    for lo in (0, 4):
+        t.append(spark.createDataFrame([_typed_row(k) for k in range(lo, lo + 4)], TYPED))
+    assert all("dec" not in f.stats and "k" in f.stats for f in t.snapshot().files)
+    t.delete_where(spark, "k == 6", mode="mor")
+    driver, forced, took_driver, same_schema = _scan_both(spark, t, where)
+    assert took_driver == on_driver
+    assert same_schema
+    assert _canonical(driver) == _canonical(forced)
+    assert len(forced) > 0

@@ -281,6 +281,30 @@ def test_codec_without_pyarrow_writer_takes_spark_writer(tmp_path, monkeypatch):
     assert len(calls) == 1
 
 
+def test_empty_record_batches_keep_every_row(spark, tmp_path):
+    """An Arrow table of record batches [2, 0, 1] with a NaN, which sends
+    it to the Spark writer, keeps all its rows through append and merge:
+    PySpark's ``createDataFrame`` stops at an empty batch that is not the
+    first, so the batches reach it without the empty one."""
+    rows = _plain_rows(3)
+    rows[0]["x"] = math.nan
+
+    def batched(rows):
+        return pa.Table.from_batches(
+            [pa.RecordBatch.from_pylist(rows[a:b], ARROW) for a, b in ((0, 2), (2, 2), (2, 3))]
+        )
+
+    t = Table.create(Warehouse(str(tmp_path)), "db.t", SCHEMA)
+    with _spark_writes() as calls:
+        t.append(batched(rows))
+    assert calls
+    assert sorted(r.rid for r in t.scan(spark).collect()) == [0, 1, 2]
+    updates = [{**r, "rid": r["rid"] + 1, "n": -1} for r in rows]
+    t.merge(spark, batched(updates), ["rid"])
+    got = {r.rid: r.n for r in t.scan(spark).collect()}
+    assert got == {0: 0, 1: -1, 2: -1, 3: -1}
+
+
 def _events(n=1000):
     types = ["click", "view", "buy"]
     return [

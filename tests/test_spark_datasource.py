@@ -67,6 +67,31 @@ def test_connector_records_nan_as_float_max(spark, wh, mode):
     assert math.isnan(row.x)
 
 
+@pytest.mark.parametrize("budget", [None, 0], ids=["driver", "spark"])
+def test_scan_filter_keeps_nan_rows_of_connector_file(spark, wh, monkeypatch, budget):
+    """A scan filter the NaN row meets keeps it on both read paths: the
+    Spark one (forced by ``DRIVER_MERGE_BYTES = 0``) does not push a
+    float term into the parquet reader, whose row-group filter trusts
+    pyarrow's footer max 1.0; the other terms are still pushed."""
+    import math
+
+    from iceberg_loader_spark.tables import table as table_module
+
+    if budget is not None:
+        monkeypatch.setattr(table_module, "DRIVER_MERGE_BYTES", budget)
+    root = wh.table_root("db.ds_nan_scan")
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("x", T.DoubleType())])
+    df = spark.createDataFrame([(1, 1.0), (2, float("nan"))], schema).coalesce(1)
+    df.write.format("sparkberg").mode("append").save(root)
+    t = wh.load_table("db.ds_nan_scan")
+    for where in ("x > 5", "x >= 1 and k >= 2", "x != 1.0"):
+        [row] = t.scan(spark, where=where).collect()
+        assert row.k == 2 and math.isnan(row.x), where
+    plan = t.scan(spark, where="x > 5 and k >= 2")._jdf.queryExecution().executedPlan()
+    if budget == 0:
+        assert "PushedFilters: [IsNotNull(k), GreaterThanOrEqual(k,2)]" in plan.toString()
+
+
 def test_append_then_overwrite_modes(spark, wh):
     root = wh.table_root("db.ds_modes")
     one = spark.range(5).select(F.col("id").alias("k"))
