@@ -129,6 +129,26 @@ def _arrow_literal(text: str, t: pa.DataType):
     return None
 
 
+def pushable_float_term(op: str, text: str) -> bool:
+    """Whether the parquet reader may skip row groups by Spark's term
+    ``col op text`` (``split_terms``'s triple) on a floating ``col``.
+    It trusts the footer bounds pyarrow writes, which leave NaN out, and
+    orders -0.0 below 0.0, which Spark holds equal (a dictionary of
+    -0.0 has no 0.0). So only ``<``, ``<=``, ``==`` and ``IN`` against
+    nonzero numbers: NaN, which Spark orders above every number, meets
+    none of them, and the sign of a zero decides none of them. A quoted
+    literal may cast to NaN or zero."""
+    if op == "in":
+        if not (text.startswith("(") and text.endswith(")")):
+            return False
+        values = [p.strip() for p in text[1:-1].split(",")]
+    else:
+        values = [text]
+    return op in ("<", "<=", "==", "in") and all(
+        (_INT_RE.fullmatch(v) or _FLOAT_RE.fullmatch(v)) and float(v) != 0 for v in values
+    )
+
+
 def to_arrow_expr(expr: str, schema: pa.Schema) -> pc.Expression | None:
     """``expr`` over rows of ``schema`` as a pyarrow expression that is
     true, false or null exactly where Spark's ``to_spark_sql(expr)`` is,

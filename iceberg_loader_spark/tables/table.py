@@ -6,10 +6,9 @@ Spark-first execution shape:
   table schema; Catalyst keeps its vectorized reader, filter pushdown and
   row-group pruning. File-level pruning happens before Spark ever sees the
   plan, from manifest partition values + min/max stats (metadata-only, no
-  listing). A filtered scan whose kept files fit ``DRIVER_MERGE_BYTES``
-  is read on the driver instead (``_read_arrow``) and handed to Spark
-  as a local relation, so a point or small range read runs no parquet
-  job.
+  listing). A filtered scan of few pruned bytes that keeps few rows is
+  read on the driver instead (``_read_arrow``) and handed to Spark as a
+  local relation, so a point or small range read runs no parquet job.
 * **Append** — executors write parquet into a fresh per-commit directory
   (`new_data_dir()`: `data/<uuid>/…`, optionally `partitionBy` the derived
   transform columns); the driver then reads ONLY footers to build manifest
@@ -62,6 +61,7 @@ from iceberg_loader_spark.tables import bloom as bloom_mod
 from iceberg_loader_spark.tables.filters import (
     parse_filter,
     prune_files,
+    pushable_float_term,
     spark_order,
     split_delete_candidates,
     split_terms,
@@ -100,6 +100,19 @@ TARGET_FILE_BYTES = 128 * 1024 * 1024
 # concatenation, the output and the writer's buffers), and on 4 cores
 # it still beat the Spark merge at 180 MB decoded.
 DRIVER_MERGE_BYTES = 64 * 1024 * 1024
+
+# a filtered scan reads on the driver only within bounds measured on 4
+# cores to cost no more CPU than the parquet job it saves (rows of a
+# long, a double and a 17-character string; rows of 12 columns, 211
+# bytes). It reads at most DRIVER_SCAN_READ_BYTES of pruned files, on
+# disk and decoded, before it knows what the filter keeps: a scan that
+# then goes to Spark has wasted that read, about 6 ms of CPU per decoded
+# MiB. It keeps the rows on the driver when they come to at most
+# DRIVER_SCAN_KEPT_BYTES in Arrow: counting them as a local relation
+# cost as much as the parquet job at about 200 KB (5,000 narrow or 1,000
+# wide rows) and four times as much at 100,000 narrow rows.
+DRIVER_SCAN_READ_BYTES = 1024 * 1024
+DRIVER_SCAN_KEPT_BYTES = 128 * 1024
 
 
 def _delete_ops(preds: list[dict], eq_dels: list[dict]) -> list[dict]:
@@ -199,27 +212,27 @@ def _kept_by(where: str):
     return F.coalesce(~F.expr(to_spark_sql(where)), F.lit(True))
 
 
+_FLOATS = (T.FloatType, T.DoubleType)
+
+
 def _matched_by(where: str, schema: T.StructType):
     """The rows a scan filter is true on. Its terms on a float column
-    are each a ``coalesce(term, false)``, which Spark keeps from the
-    parquet reader, as ``_kept_by`` does; the other terms are pushed
-    down. A filter outside the term grammar is one term on every
-    column."""
-    floats = {
-        f.name.lower()
-        for f in schema.fields
-        if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-    }
+    that ``pushable_float_term`` rejects are each a
+    ``coalesce(term, false)``, which Spark keeps from the parquet
+    reader, as ``_kept_by`` does; the other terms are pushed down. A
+    filter outside the term grammar (one on a nested field among them)
+    is one term, kept back when a float is anywhere in ``schema``."""
     try:
         parse_filter(where)
-        terms = [(c, f"{c} {op} {lit}") for c, op, lit in split_terms(where)]
+        terms = split_terms(where)
     except ValueError:
-        terms = [(None, where)]
+        term = F.expr(to_spark_sql(where))
+        return F.coalesce(term, F.lit(False)) if _has(schema, _FLOATS) else term
+    floats = {f.name.lower() for f in schema.fields if isinstance(f.dataType, _FLOATS)}
     out = None
-    for col, sql in terms:
-        term = F.expr(to_spark_sql(sql))
-        on_float = bool(floats) if col is None else col.lower() in floats
-        if on_float:
+    for col, op, lit in terms:
+        term = F.expr(to_spark_sql(f"{col} {op} {lit}"))
+        if col.lower() in floats and not pushable_float_term(op, lit):
             term = F.coalesce(term, F.lit(False))
         out = term if out is None else out & term
     return out
@@ -681,14 +694,15 @@ def _nullable(t: T.DataType) -> T.DataType:
     return t
 
 
-def _has_utc_timestamp(t: T.DataType) -> bool:
+def _has(t: T.DataType, leaf) -> bool:
+    """Whether ``t`` is, or holds at any depth, a type in ``leaf``."""
     if isinstance(t, T.StructType):
-        return any(_has_utc_timestamp(f.dataType) for f in t.fields)
+        return any(_has(f.dataType, leaf) for f in t.fields)
     if isinstance(t, T.ArrayType):
-        return _has_utc_timestamp(t.elementType)
+        return _has(t.elementType, leaf)
     if isinstance(t, T.MapType):
-        return _has_utc_timestamp(t.keyType) or _has_utc_timestamp(t.valueType)
-    return isinstance(t, T.TimestampType)
+        return _has(t.keyType, leaf) or _has(t.valueType, leaf)
+    return isinstance(t, leaf)
 
 
 def _arrow_partition_values(
@@ -709,7 +723,7 @@ def _arrow_partition_values(
     if (
         rows.num_rows == 0
         or _pyarrow_codec(_codec(snap)) is None
-        or _has_utc_timestamp(_schema(snap))
+        or _has(_schema(snap), T.TimestampType)
         or (sort_within and any(pf.transform == "void" for pf in spec))
     ):
         return None
@@ -931,8 +945,10 @@ class Table:
         whose metadata proves they can't match AND applied as a row filter
         (so semantics never depend on pruning quality). A filtered scan
         is read on the driver when ``to_arrow_expr`` gives the filter a
-        twin and ``_read_arrow`` reads the kept files within
-        ``DRIVER_MERGE_BYTES``; every other scan is a lazy parquet scan.
+        twin, ``_read_arrow`` reads the pruned files within
+        ``DRIVER_SCAN_READ_BYTES`` and the rows the twin keeps fit
+        ``DRIVER_SCAN_KEPT_BYTES``; every other scan is a lazy parquet
+        scan.
         ``tag`` reads the snapshot a named tag points at; at most one of
         ``version``, ``tag`` and ``as_of_timestamp_ms`` may be given.
         """
@@ -942,9 +958,10 @@ class Table:
         schema = _schema(snap)
         if where:
             e = to_arrow_expr(where, to_arrow_schema(schema))
-            rows = None if e is None else self._read_arrow(files, snap, DRIVER_MERGE_BYTES)
-            if rows is not None:
-                return _local_frame(spark, rows.filter(e), _nullable(schema))
+            rows = None if e is None else self._read_arrow(files, snap, DRIVER_SCAN_READ_BYTES)
+            rows = None if rows is None else rows.filter(e)
+            if rows is not None and rows.nbytes <= DRIVER_SCAN_KEPT_BYTES:
+                return _local_frame(spark, rows, _nullable(schema))
         df = self._read_files_mor(
             spark, files, schema, snap.delete_predicates, snap.delete_files
         )
@@ -1074,7 +1091,7 @@ class Table:
         ``files`` larger than ``budget`` bytes on disk or, once read,
         decoded."""
         spark_schema = _schema(snap)
-        if _has_utc_timestamp(spark_schema) or sum(f.bytes for f in files) > budget:
+        if _has(spark_schema, T.TimestampType) or sum(f.bytes for f in files) > budget:
             return None
         schema = to_arrow_schema(spark_schema)
         ops = _delete_ops(snap.delete_predicates, snap.delete_files)

@@ -629,18 +629,18 @@ SCAN_FILTERS = PREDICATES + ["k == 42"]
 
 def _scan_both(spark, t: Table, where: str, **ref):
     """One filtered scan both ways: (rows on the driver path, rows on the
-    Spark path forced by ``DRIVER_MERGE_BYTES = 0``, whether the first
+    Spark path forced by ``DRIVER_SCAN_READ_BYTES = 0``, whether the first
     scan read on the driver, whether both frames have one schema)."""
     calls = []
-    frame, budget = table_module._local_frame, table_module.DRIVER_MERGE_BYTES
+    frame, budget = table_module._local_frame, table_module.DRIVER_SCAN_READ_BYTES
     table_module._local_frame = lambda *a: calls.append(a) or frame(*a)
     try:
         driver = t.scan(spark, where=where, **ref)
         took_driver = bool(calls)
-        table_module.DRIVER_MERGE_BYTES = 0
+        table_module.DRIVER_SCAN_READ_BYTES = 0
         forced = t.scan(spark, where=where, **ref)
     finally:
-        table_module._local_frame, table_module.DRIVER_MERGE_BYTES = frame, budget
+        table_module._local_frame, table_module.DRIVER_SCAN_READ_BYTES = frame, budget
     return driver.collect(), forced.collect(), took_driver, driver.schema == forced.schema
 
 
@@ -660,7 +660,7 @@ def _scan_both(spark, t: Table, where: str, **ref):
     pick=st.integers(0, 2**16),
 )
 def test_driver_scan_matches_spark_scan(spark, tmp_path, case, which, ref, pick):
-    """A filtered scan whose pruned files fit ``DRIVER_MERGE_BYTES`` reads
+    """A filtered scan whose pruned files fit ``DRIVER_SCAN_READ_BYTES`` reads
     on the driver and returns the Spark scan's rows, under every delete
     kind and every way of naming a snapshot."""
     spec, steps = case
@@ -729,10 +729,23 @@ def test_driver_scan_listed_cases(spark, tmp_path):
     assert sc.statusTracker().getJobIdsForGroup("driver-point-read") == []
 
 
+def test_scan_keeps_negative_zero_under_a_zero_literal(spark, tmp_path):
+    """A float term against zero is not pushed into the parquet reader,
+    which orders -0.0 below 0.0: its dictionary filter dropped the row
+    group of a -0.0 file under ``x == 0`` on the Spark path."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", SCHEMA)
+    t.append(pa.Table.from_pylist([_row(1, x=-0.0), _row(2, x=None)], ARROW))
+    for where in ("x == 0", "x <= 0", "x IN (0, 7)"):
+        driver, forced, took_driver, _ = _scan_both(spark, t, where)
+        assert took_driver, where
+        assert [r.k for r in driver] == [r.k for r in forced] == [1], where
+
+
 def test_scans_without_a_driver_twin_take_spark(spark, tmp_path, monkeypatch):
     """An unfiltered scan, a filter without an Arrow twin, a pending
-    delete without one and pruned files over ``DRIVER_MERGE_BYTES`` keep
-    the lazy parquet scan."""
+    delete without one, pruned files over ``DRIVER_SCAN_READ_BYTES`` and
+    kept rows over ``DRIVER_SCAN_KEPT_BYTES`` keep the lazy parquet scan."""
     wh = Warehouse(str(tmp_path))
     t = Table.create(wh, "db.t", SCHEMA)
     t.append(pa.Table.from_pylist([_row(k, v=k) for k in range(4)], ARROW))
@@ -743,10 +756,13 @@ def test_scans_without_a_driver_twin_take_spark(spark, tmp_path, monkeypatch):
     assert sorted(r.k for r in t.scan(spark, where="k == v").collect()) == [0, 1, 2, 3]
     assert t.scan(spark, where="ts > '2024-05-01'").count() == 3
     monkeypatch.setattr(
-        table_module, "DRIVER_MERGE_BYTES", sum(f.bytes for f in t.snapshot().files) - 1
+        table_module, "DRIVER_SCAN_READ_BYTES", sum(f.bytes for f in t.snapshot().files) - 1
     )
     assert t.scan(spark, where="k >= 1").count() == 3
-    monkeypatch.setattr(table_module, "DRIVER_MERGE_BYTES", 1 << 30)
+    monkeypatch.setattr(table_module, "DRIVER_SCAN_READ_BYTES", 1 << 30)
+    monkeypatch.setattr(table_module, "DRIVER_SCAN_KEPT_BYTES", 0)
+    assert t.scan(spark, where="k >= 1").count() == 3
+    monkeypatch.setattr(table_module, "DRIVER_SCAN_KEPT_BYTES", 1 << 30)
     t.delete_where(spark, "s == null", mode="mor")
     assert t.scan(spark, where="k >= 1").count() == 3
     assert calls == []

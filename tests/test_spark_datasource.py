@@ -70,26 +70,48 @@ def test_connector_records_nan_as_float_max(spark, wh, mode):
 @pytest.mark.parametrize("budget", [None, 0], ids=["driver", "spark"])
 def test_scan_filter_keeps_nan_rows_of_connector_file(spark, wh, monkeypatch, budget):
     """A scan filter the NaN row meets keeps it on both read paths: the
-    Spark one (forced by ``DRIVER_MERGE_BYTES = 0``) does not push a
-    float term into the parquet reader, whose row-group filter trusts
-    pyarrow's footer max 1.0; the other terms are still pushed."""
+    Spark one (forced by ``DRIVER_SCAN_READ_BYTES = 0``) does not push a
+    float term NaN may meet into the parquet reader, whose row-group
+    filter trusts pyarrow's footer max 1.0; the other terms, float ones
+    NaN cannot meet among them, are still pushed."""
     import math
 
     from iceberg_loader_spark.tables import table as table_module
 
     if budget is not None:
-        monkeypatch.setattr(table_module, "DRIVER_MERGE_BYTES", budget)
+        monkeypatch.setattr(table_module, "DRIVER_SCAN_READ_BYTES", budget)
     root = wh.table_root("db.ds_nan_scan")
     schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("x", T.DoubleType())])
     df = spark.createDataFrame([(1, 1.0), (2, float("nan"))], schema).coalesce(1)
     df.write.format("sparkberg").mode("append").save(root)
     t = wh.load_table("db.ds_nan_scan")
-    for where in ("x > 5", "x >= 1 and k >= 2", "x != 1.0"):
+    for where in ("x > 5", "x >= 1 and k >= 2", "x != 1.0", "x == 'NaN'"):
         [row] = t.scan(spark, where=where).collect()
         assert row.k == 2 and math.isnan(row.x), where
-    plan = t.scan(spark, where="x > 5 and k >= 2")._jdf.queryExecution().executedPlan()
+    assert t.scan(spark, where="x > 5 and x < 7").collect() == []
+    plan = t.scan(spark, where="x > 5 and x < 7 and k >= 2")._jdf.queryExecution()
     if budget == 0:
-        assert "PushedFilters: [IsNotNull(k), GreaterThanOrEqual(k,2)]" in plan.toString()
+        pushed = plan.executedPlan().toString().split("PushedFilters: [")[1].split("]")[0]
+        assert "GreaterThanOrEqual(k,2)" in pushed and "LessThan(x,7.0)" in pushed
+        assert "GreaterThan(x" not in pushed
+
+
+def test_scan_filter_keeps_nan_rows_of_nested_connector_file(spark, wh):
+    """The same for a float nested in a struct: a filter on ``st.x`` is
+    outside the term grammar, so it reads through Spark and is not
+    pushed into the parquet reader, which pushes nested predicates."""
+    import math
+
+    root = wh.table_root("db.ds_nested_nan_scan")
+    inner = T.StructType([T.StructField("x", T.DoubleType())])
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("st", inner)])
+    df = spark.createDataFrame([(1, (1.0,)), (2, (float("nan"),))], schema).coalesce(1)
+    df.write.format("sparkberg").mode("append").save(root)
+    scan = wh.load_table("db.ds_nested_nan_scan").scan(spark, where="st.x > 5")
+    [row] = scan.collect()
+    assert row.k == 2 and math.isnan(row.st.x)
+    plan = scan._jdf.queryExecution().executedPlan().toString()
+    assert "st.x" not in plan.split("PushedFilters: [")[1].split("]")[0]
 
 
 def test_append_then_overwrite_modes(spark, wh):

@@ -8,7 +8,12 @@ from pyspark.sql import types as T
 from iceberg_loader_spark.config import LoaderConfig
 from iceberg_loader_spark.loader import SparkLoader
 from iceberg_loader_spark.tables import Warehouse
-from iceberg_loader_spark.tables.filters import parse_filter, prune_files
+from iceberg_loader_spark.tables.filters import (
+    parse_filter,
+    prune_files,
+    pushable_float_term,
+    split_terms,
+)
 from iceberg_loader_spark.tables.format import CommitConflict, new_snapshot
 from iceberg_loader_spark.tables.table import Table
 
@@ -105,6 +110,28 @@ def test_filter_parser():
         parse_filter("a ==")
     with pytest.raises(ValueError):
         parse_filter("a == 1 OR b == 2")  # disjunctions unsupported
+
+
+def test_pushable_float_term():
+    """Only <, <=, == and IN against nonzero numbers: NaN, which Spark
+    orders above every number, meets none of them, and a zero literal
+    meets a -0.0 that a footer bound keeps the sign of; a quoted
+    literal may cast to NaN."""
+    terms = split_terms("x < 5 and x <= -1.5e3 and x == 2 and x in (1, 2.5)")
+    assert all(pushable_float_term(op, lit) for _, op, lit in terms)
+    for where in (
+        "x > 5",
+        "x >= 5",
+        "x != 5",
+        "x == 'NaN'",
+        "x <= 'NaN'",
+        "x in (1, 'NaN')",
+        "x == 0",
+        "x <= -0.0",
+        "x in (1, .0)",
+    ):
+        [(_, op, lit)] = split_terms(where)
+        assert not pushable_float_term(op, lit), where
 
 
 def test_stats_recorded_in_manifest(spark, tmp_path):
