@@ -67,7 +67,6 @@ from dataclasses import dataclass
 from typing import Iterator
 
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -380,6 +379,7 @@ class SparkbergWriter(DataSourceArrowWriter):
     def write(self, iterator) -> _WriteMessage:
         from iceberg_loader_spark.tables.table import (
             data_file_entry,
+            nan_columns,
             open_parquet_writer,
         )
 
@@ -399,11 +399,7 @@ class SparkbergWriter(DataSourceArrowWriter):
                     writer = open_parquet_writer(abs_path, b, self._codec)
                 writer.write_batch(b)
                 rows += b.num_rows
-                nan_cols.update(
-                    n
-                    for n, c in zip(b.schema.names, b.columns)
-                    if pa.types.is_floating(c.type) and pc.any(pc.is_nan(c)).as_py()
-                )
+                nan_cols |= nan_columns(b)
         finally:
             if writer is not None:
                 writer.close()
@@ -411,12 +407,8 @@ class SparkbergWriter(DataSourceArrowWriter):
             return _WriteMessage(entries=())
         # the closed writer's metadata IS the footer it just wrote
         entry = data_file_entry(
-            writer.writer.metadata, rel, os.path.getsize(abs_path)
+            writer.writer.metadata, rel, os.path.getsize(abs_path), nan_cols=nan_cols
         )
-        # pyarrow leaves NaN out of a float column's bounds; parquet-mr,
-        # Spark's writer, records it as the max, where Spark orders it
-        for name in nan_cols & entry.stats.keys():
-            entry.stats[name][1] = float("nan")
         return _WriteMessage(entries=(entry,))
 
     def commit(self, messages) -> None:

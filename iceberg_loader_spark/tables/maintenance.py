@@ -36,6 +36,7 @@ from iceberg_loader_spark.tables.format import (
 )
 from iceberg_loader_spark.tables.table import (
     Table,
+    _delete_ops,
     _schema,
     _sort_order,
     _spec,
@@ -188,9 +189,7 @@ def _rewrite_spark(
     """``rewrite_data_files``' data path in Spark: ``snap``'s rows,
     pending deletes applied, clustered and written as new data files."""
     ensure_compat(spark)
-    df = table._read_files_mor(
-        spark, snap.files, _schema(snap), snap.delete_predicates, snap.delete_files
-    )
+    df = table._read_files_mor(spark, snap.files, _schema(snap), _delete_ops(snap))
     if zorder_by:
         if spec:
             raise ValueError(

@@ -115,13 +115,13 @@ DRIVER_SCAN_READ_BYTES = 1024 * 1024
 DRIVER_SCAN_KEPT_BYTES = 128 * 1024
 
 
-def _delete_ops(preds: list[dict], eq_dels: list[dict]) -> list[dict]:
+def _delete_ops(snap: Snapshot) -> list[dict]:
     """A snapshot's pending merge-on-read deletes as ``_op_applies`` ops,
     oldest first. Entries from delete_files default to equality;
     positional delete ops carry their own "kind": "pos" marker, which
     ``**d`` preserves."""
-    ops = [{"kind": "pred", **p} for p in (preds or [])] + [
-        {"kind": "eq", **d} for d in (eq_dels or [])
+    ops = [{"kind": "pred", **p} for p in snap.delete_predicates] + [
+        {"kind": "eq", **d} for d in snap.delete_files
     ]
     ops.sort(key=lambda o: o["sequence"])
     return ops
@@ -406,7 +406,15 @@ def _bloom_keys(snap: Snapshot) -> list[str] | None:
 # Operations that change bytes or metadata but never rows: the append-log
 # walk (Table.appended_files) and the changelog (Table.changes) skip them.
 ROW_PRESERVING_OPS = frozenset(
-    {"create", "replace", "evolve-schema", "evolve-partition", "set-ref"}
+    {
+        "create",
+        "replace",
+        "evolve-schema",
+        "evolve-partition",
+        "set-ref",
+        "convert-eq-deletes",
+        "rewrite-deletes",
+    }
 )
 
 
@@ -503,8 +511,21 @@ def _stat_value(v):
 _MANIFEST_DISTRIBUTE_MIN = 16
 
 
+def nan_columns(rows) -> set[str]:
+    """The float columns of ``rows`` (a table or batch) holding a NaN."""
+    return {
+        name
+        for name, col in zip(rows.schema.names, rows.columns)
+        if pa.types.is_floating(col.type) and pc.any(pc.is_nan(col)).as_py()
+    }
+
+
 def data_file_entry(
-    md: pq.FileMetaData, rel_path: str, size: int, partition: dict | None = None
+    md: pq.FileMetaData,
+    rel_path: str,
+    size: int,
+    partition: dict | None = None,
+    nan_cols: set[str] = frozenset(),
 ) -> DataFile:
     """One written parquet file's metadata -> its manifest entry: row
     count, byte size, and the per-column min/max fold across row groups
@@ -512,7 +533,10 @@ def data_file_entry(
     range would wrongly prune files). ``md`` is either a footer read
     (``entry_from_footer``) or the metadata the pyarrow writer returns on
     close (the sparkberg connector's tasks), so manifest stats are
-    identical regardless of which writer produced the file."""
+    identical regardless of which writer produced the file. pyarrow
+    leaves NaN out of a float column's max; parquet-mr, Spark's writer,
+    records it there, where Spark orders it, and so does the entry for
+    each of ``nan_cols`` (``nan_columns`` of the rows)."""
     stats: dict[str, list] = {}
     for rg_i in range(md.num_row_groups):
         rg = md.row_group(rg_i)
@@ -547,16 +571,27 @@ def data_file_entry(
         rows=md.num_rows,
         bytes=size,
         partition=partition or {},
-        stats={k: v for k, v in stats.items() if v is not None},
+        stats={
+            k: [v[0], float("nan")] if k in nan_cols else v
+            for k, v in stats.items()
+            if v is not None
+        },
     )
 
 
 def entry_from_footer(
     abs_path: str, rel_path: str, partition: dict | None = None
 ) -> DataFile:
-    """Footer-read ONE written parquet file into its manifest entry."""
-    md = pq.ParquetFile(abs_path).metadata
-    return data_file_entry(md, rel_path, os.path.getsize(abs_path), partition)
+    """Footer-read ONE written parquet file into its manifest entry. The
+    float columns of a file parquet-mr did not write are read for NaN."""
+    f = pq.ParquetFile(abs_path)
+    nan_cols = set()
+    if not f.metadata.created_by.startswith("parquet-mr"):
+        floats = [c.name for c in f.schema_arrow if pa.types.is_floating(c.type)]
+        nan_cols = nan_columns(f.read(columns=floats))
+    return data_file_entry(
+        f.metadata, rel_path, os.path.getsize(abs_path), partition, nan_cols
+    )
 
 
 def discard_files(root: str, paths) -> int:
@@ -768,6 +803,19 @@ def _check_unique_keys(source: pa.Table, join_cols: list[str]) -> None:
         raise ValueError(f"duplicate join keys in upsert source on {join_cols}")
 
 
+def _count_unique_keys(source: DataFrame, join_cols: list[str]) -> int:
+    """Spark's twin of ``_check_unique_keys``, which returns the source's
+    row count: one aggregate counts the rows and the distinct key
+    structs (a struct of null fields is itself non-null, so null keys
+    still count)."""
+    n, n_keys = source.agg(
+        F.count("*"), F.count_distinct(F.struct(*[F.col(c) for c in join_cols]))
+    ).first()
+    if n != n_keys:
+        raise ValueError(f"duplicate join keys in upsert source on {join_cols}")
+    return n
+
+
 def _key_range_op(source: pa.Table, join_cols: list[str], snap: Snapshot):
     """A synthetic equality-delete op over the source's keys, so that
     ``_op_applies`` keeps only the files that may hold one: the keys'
@@ -962,9 +1010,7 @@ class Table:
             rows = None if rows is None else rows.filter(e)
             if rows is not None and rows.nbytes <= DRIVER_SCAN_KEPT_BYTES:
                 return _local_frame(spark, rows, _nullable(schema))
-        df = self._read_files_mor(
-            spark, files, schema, snap.delete_predicates, snap.delete_files
-        )
+        df = self._read_files_mor(spark, files, schema, _delete_ops(snap))
         if where:
             df = df.filter(_matched_by(where, schema))
         return df
@@ -992,19 +1038,19 @@ class Table:
         spark: SparkSession,
         files: list[DataFile],
         schema: T.StructType,
-        preds: list[dict],
-        eq_dels: list[dict] | None = None,
+        ops: list[dict],
         with_lineage: bool = False,
     ) -> DataFrame:
-        """Read data files with pending merge-on-read deletes applied —
-        both predicate deletes (row filters) and equality-delete files
-        (anti-joins on key columns, Iceberg v2's delete-file shape).
+        """Read data files with the merge-on-read delete ``ops``
+        (``_delete_ops``) applied — predicate deletes (row filters),
+        equality-delete files (anti-joins on key columns, Iceberg v2's
+        delete-file shape) and positional ones (``_by_delete``).
 
         A delete applies to files whose sequence is LOWER than its own,
         so files group by "era": with deletes sorted by sequence, each
         file's applicable set is a suffix of the list — one parquet read
         per era with its filters/anti-joins, unioned. Time travel is
-        automatic (callers pass the target snapshot's delete lists).
+        automatic (callers pass the target snapshot's ops).
 
         Scale: predicate deletes are ordinary Catalyst filters pushed
         into the era's parquet scan (no shuffle); an equality-delete
@@ -1012,7 +1058,6 @@ class Table:
         key file is small — exactly the read-time cost Iceberg v2 pays.
         Compaction (`rewrite_data_files`) materializes + clears both
         kinds so neither list grows unboundedly."""
-        ops = _delete_ops(preds, eq_dels)
         if not files:
             df = spark.createDataFrame([], schema)
             if with_lineage:
@@ -1042,35 +1087,43 @@ class Table:
             )
             if need_lineage:
                 df = _with_lineage(df)
-            for o in (ops[i] for i in k):
-                if o["kind"] == "pred":
-                    df = df.filter(_kept_by(o["where"]))
-                elif o["kind"] == "pos":
-                    dels = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
-                        os.path.join(self.root, o["path"])
-                    )
-                    df = df.join(
-                        dels,
-                        (F.col(_LINEAGE_FILE) == dels["file_path"])
-                        & (F.col(_LINEAGE_POS) == dels["pos"]),
-                        how="left_anti",
-                    )
-                else:
-                    kcols = o["equality_cols"]
-                    kset = set(kcols)
-                    kschema = T.StructType(
-                        [f for f in schema.fields if f.name in kset]
-                    )
-                    keys = spark.read.schema(kschema).parquet(
-                        os.path.join(self.root, o["path"])
-                    )
-                    # plain-equality anti join (NULL keys never match) —
-                    # the same null semantics the CoW merge join uses
-                    df = df.join(keys, on=list(kcols), how="left_anti")
+            for i in k:
+                df = self._by_delete(spark, df, ops[i], schema, "left_anti")
             if need_lineage and not with_lineage:
                 df = df.drop(_LINEAGE_FILE, _LINEAGE_POS)
             out = df if out is None else out.unionByName(df)
         return out
+
+    def _by_delete(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        op: dict,
+        schema: T.StructType,
+        how: str,
+    ) -> DataFrame:
+        """The rows of ``df`` that one merge-on-read delete ``op`` keeps
+        (``how="left_anti"``) or hides (``"left_semi"``), in Spark: a
+        predicate is the ``_kept_by`` filter or the ``_matched_by`` one,
+        an equality-delete file a join on its key columns (null keys
+        never match, as in the CoW merge join), a positional one a join
+        on the lineage columns ``df`` carries. ``_arrow_delete`` is the
+        driver's twin."""
+        if op["kind"] == "pred":
+            if how == "left_anti":
+                return df.filter(_kept_by(op["where"]))
+            return df.filter(_matched_by(op["where"], schema))
+        path = os.path.join(self.root, op["path"])
+        if op["kind"] == "pos":
+            dels = spark.read.schema(_POS_DELETE_SCHEMA).parquet(path)
+            on = (F.col(_LINEAGE_FILE) == dels["file_path"]) & (
+                F.col(_LINEAGE_POS) == dels["pos"]
+            )
+            return df.join(dels, on, how=how)
+        kcols = op["equality_cols"]
+        kschema = T.StructType([f for f in schema.fields if f.name in set(kcols)])
+        keys = spark.read.schema(kschema).parquet(path)
+        return df.join(keys, on=list(kcols), how=how)
 
     def _read_arrow(
         self, files: list[DataFile], snap: Snapshot, budget: int
@@ -1094,7 +1147,7 @@ class Table:
         if _has(spark_schema, T.TimestampType) or sum(f.bytes for f in files) > budget:
             return None
         schema = to_arrow_schema(spark_schema)
-        ops = _delete_ops(snap.delete_predicates, snap.delete_files)
+        ops = _delete_ops(snap)
         eras: dict[tuple, list[DataFile]] = {}
         for f in files:
             k = tuple(i for i, o in enumerate(ops) if _op_applies(f, o, self.root))
@@ -1278,134 +1331,84 @@ class Table:
 
         Works for EVERY operation (append/overwrite/delete/merge/
         rollback): each commit's change set is the multiset difference
-        between the rows of its added and removed files, so rows a
-        copy-on-write rewrite merely carried over cancel out exactly.
-        Row-preserving snapshots (``ROW_PRESERVING_OPS``) are skipped
-        outright — no bytes read.
+        between the rows it shows and the rows it hides, so rows a
+        copy-on-write rewrite merely carried over, and updates that
+        change nothing, cancel out exactly. It shows the rows of its
+        added files, and hides those of its removed files. A
+        merge-on-read delete it records (matched by kind, sequence and
+        predicate or path) hides the rows of the files it kept that the
+        delete hides (``_by_delete``); one it drops, as a rollback may,
+        shows them again. Row-preserving snapshots
+        (``ROW_PRESERVING_OPS``) are skipped outright — no bytes read.
 
         Scale: cost is proportional to the CHURNED files per commit
-        (added + removed), never the table; the only shuffle is the
-        per-commit ``exceptAll`` over those files' rows. Consumers that
-        only ever append should prefer :meth:`scan_incremental`, which
-        reads the delta files with no diff shuffle at all.
+        (added + removed) plus the kept files each recorded or dropped
+        delete applies to (``_op_applies``), never the rest of the
+        table; the only shuffle is the per-commit ``exceptAll``.
+        Consumers that only ever append should prefer
+        :meth:`scan_incremental`, which reads the delta files with no
+        diff shuffle at all.
         """
         ensure_compat(spark)
         to_snap = self.snapshot(to_version)
-        schema = T.StructType.fromJson(to_snap.schema_json)
+        schema = _schema(to_snap)
+
+        def key(o: dict) -> tuple:
+            return o["kind"], o["sequence"], o.get("where") or o["path"]
 
         out: DataFrame | None = None
         for snap in self._row_changing_snapshots(from_version, to_snap.version):
             v = snap.version
             parent = self._parent_of(snap)
             parent_files = parent.files if parent else []
-            parent_preds = parent.delete_predicates if parent else []
-            parent_dels = parent.delete_files if parent else []
+            parent_ops = _delete_ops(parent) if parent else []
+            snap_ops = _delete_ops(snap)
             snap_paths = {f.path for f in snap.files}
             parent_paths = {f.path for f in parent_files}
             added = [f for f in snap.files if f.path not in parent_paths]
             removed = [f for f in parent_files if f.path not in snap_paths]
-            step_schema = T.StructType.fromJson(snap.schema_json)
-
-            # merge-on-read delete: the commit may change no files, but
-            # each newly recorded predicate hides rows of every lower-
-            # sequence parent file — surface those as 'delete' rows (read
-            # cost: the applicable files, i.e. exactly the churn).
-            new_preds = snap.delete_predicates[len(parent_preds):]
-            new_eqdels = snap.delete_files[len(parent_dels):]
-            mor_dels: DataFrame | None = None
-            for pi, pred in enumerate(new_preds):
-                # only files SURVIVING the commit: rows of files the MoR
-                # delete dropped outright (metadata-proof full matches)
-                # are emitted by the removed-files diff below — counting
-                # them here would double-report
-                applicable = [
-                    f for f in snap.files if f.sequence < pred["sequence"]
-                ]
-                # rows visible before this predicate: parent's predicates
-                # plus any earlier predicate recorded in the same range
-                visible = self._read_files_mor(
-                    spark,
-                    applicable,
-                    step_schema,
-                    parent_preds + new_preds[:pi],
-                    parent_dels,
-                )
-                e = F.expr(to_spark_sql(pred["where"]))
-                hit = visible.filter(e)
-                mor_dels = (
-                    hit if mor_dels is None else mor_dels.unionByName(hit)
-                )
-            for di, d in enumerate(new_eqdels):
-                # rows a delete FILE hides: lower-sequence surviving
-                # files, semi-joined on the key columns (equality — the
-                # MoR upsert's 'old row versions') or on row lineage
-                # (positional) — cost ∝ applicable files either way
-                applicable = [
-                    f for f in snap.files if f.sequence < d["sequence"]
-                ]
-                is_pos = d.get("kind") == "pos"
-                visible = self._read_files_mor(
-                    spark,
-                    applicable,
-                    step_schema,
-                    parent_preds + new_preds,
-                    parent_dels + new_eqdels[:di],
-                    with_lineage=is_pos,
-                )
-                if is_pos:
-                    pos = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
-                        os.path.join(self.root, d["path"])
-                    )
-                    hit = visible.join(
-                        pos,
-                        (F.col(_LINEAGE_FILE) == pos["file_path"])
-                        & (F.col(_LINEAGE_POS) == pos["pos"]),
-                        how="left_semi",
-                    ).drop(_LINEAGE_FILE, _LINEAGE_POS)
-                else:
-                    kset = set(d["equality_cols"])
-                    kschema = T.StructType(
-                        [f for f in step_schema.fields if f.name in kset]
-                    )
-                    keys = spark.read.schema(kschema).parquet(
-                        os.path.join(self.root, d["path"])
-                    )
-                    hit = visible.join(
-                        keys, on=list(d["equality_cols"]), how="left_semi"
-                    )
-                mor_dels = (
-                    hit if mor_dels is None else mor_dels.unionByName(hit)
-                )
-            if mor_dels is not None:
-                step = mor_dels.withColumn(
-                    "_change_type", F.lit("delete")
-                ).withColumn("_commit_version", F.lit(v))
-                out = (
-                    step
-                    if out is None
-                    else out.unionByName(step, allowMissingColumns=True)
-                )
-
-            if not added and not removed:
-                continue
+            kept = [f for f in snap.files if f.path in parent_paths]
+            step_schema = _schema(snap)
             # read both sides with THIS snapshot's schema: parquet fills
             # columns added by later evolution with NULLs, so the diff
-            # stays column-aligned across an evolving range.
-            # Each side is read through ITS snapshot's MoR predicates so
-            # already-hidden rows never resurface in the diff; files a
-            # MoR delete dropped outright (metadata-proof full matches)
-            # carry their predicate in snap.delete_predicates, so their
-            # rows land in the removed side pre-filtered consistently.
-            a = self._read_files_mor(
-                spark,
-                added,
-                step_schema,
-                snap.delete_predicates,
-                snap.delete_files,
-            )
-            r = self._read_files_mor(
-                spark, removed, step_schema, parent_preds, parent_dels
-            )
+            # stays column-aligned across an evolving range. Each side
+            # is read through ITS snapshot's deletes so already-hidden
+            # rows never resurface in the diff.
+            sides = {
+                "insert": self._read_files_mor(spark, added, step_schema, snap_ops),
+                "delete": self._read_files_mor(spark, removed, step_schema, parent_ops),
+            }
+            changed = bool(added or removed)
+            # a delete the commit recorded deletes the rows it hides among
+            # the kept files' rows the parent's deletes and the earlier
+            # recorded ones leave; a delete it dropped inserts again the
+            # rows it hid among those the snapshot's deletes and the
+            # earlier dropped ones leave
+            for change, base, other in (
+                ("delete", parent_ops, snap_ops),
+                ("insert", snap_ops, parent_ops),
+            ):
+                keys = {key(o) for o in base}
+                new = [o for o in other if key(o) not in keys]
+                for i, o in enumerate(new):
+                    files = [f for f in kept if _op_applies(f, o, self.root)]
+                    if not files:
+                        continue
+                    visible = self._read_files_mor(
+                        spark,
+                        files,
+                        step_schema,
+                        base + new[:i],
+                        with_lineage=o["kind"] == "pos",
+                    )
+                    hit = self._by_delete(spark, visible, o, step_schema, "left_semi")
+                    sides[change] = sides[change].unionByName(
+                        hit.drop(_LINEAGE_FILE, _LINEAGE_POS)
+                    )
+                    changed = True
+            if not changed:
+                continue
+            a, r = sides["insert"], sides["delete"]
             ins = (
                 a.exceptAll(r)
                 .withColumn("_change_type", F.lit("insert"))
@@ -1812,11 +1815,7 @@ class Table:
             )
             if new_entries is None:
                 cdf = self._read_files_mor(
-                    spark,
-                    candidates,
-                    _schema(snap),
-                    snap.delete_predicates,
-                    snap.delete_files,
+                    spark, candidates, _schema(snap), _delete_ops(snap)
                 )
                 keep = cdf.filter(_kept_by(where))
                 new_entries = self._write_data_files(keep, spec, snap)
@@ -2117,20 +2116,14 @@ class Table:
 
         # The source feeds FOUR consumers (dup check, file-location
         # semi-join, the CoW outer join, the insert anti-join) — persist
-        # it so its upstream pipeline runs once, and fold the dup check
-        # into one aggregate over the persisted frame (count vs distinct
-        # key count), which doubles as the eager cache populator.
+        # it so its upstream pipeline runs once; the dup check's one
+        # aggregate doubles as the eager cache populator.
         src = source.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
-        # (struct wrapper: a struct holding NULL fields is itself non-NULL,
-        # so NULL join keys still count — same grouping the old
-        # groupBy-based check applied)
-        n_src, n_keys = src.agg(
-            F.count("*"),
-            F.count_distinct(F.struct(*[F.col(c) for c in join_cols])),
-        ).first()
-        if n_src != n_keys:
+        try:
+            n_src = _count_unique_keys(src, join_cols)
+        except ValueError:
             src.unpersist()
-            raise ValueError(f"duplicate join keys in upsert source on {join_cols}")
+            raise
 
         # locate affected files via key semi-join (metadata → file level)
         affected_rel: set[str] = set()
@@ -2161,13 +2154,7 @@ class Table:
         if affected:
             # read through the MoR filter: a pending delete predicate must
             # not be resurrected by the rewrite
-            tdf = self._read_files_mor(
-                spark,
-                affected,
-                schema,
-                snap.delete_predicates,
-                snap.delete_files,
-            )
+            tdf = self._read_files_mor(spark, affected, schema, _delete_ops(snap))
             s = src.withColumn("_m", F.lit(1))
             # The outer join feeds TWO actions (updated-rows audit count +
             # the rewrite itself) and tdf feeds a third (insert anti-join);
@@ -2333,14 +2320,7 @@ class Table:
             )
         try:
             if not isinstance(src, pa.Table):
-                n_src, n_keys = src.agg(
-                    F.count("*"),
-                    F.count_distinct(F.struct(*[F.col(c) for c in join_cols])),
-                ).first()
-                if n_src != n_keys:
-                    raise ValueError(
-                        f"duplicate join keys in upsert source on {join_cols}"
-                    )
+                n_src = _count_unique_keys(src, join_cols)
             entries = self._write_rows(src, snap)
             key_entries = self._write_rows(src.select(join_cols), snap, spec=[])
         finally:

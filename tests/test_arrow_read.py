@@ -36,6 +36,7 @@ from iceberg_loader_spark.tables.partitioning import parse_partition_transform
 from iceberg_loader_spark.tables.table import (
     Table,
     _append_build,
+    _delete_ops,
     _schema,
     entry_from_footer,
 )
@@ -255,9 +256,7 @@ def test_read_arrow_matches_read_files_mor(spark, tmp_path, case, subset):
     snap = t.snapshot()
     files = [f for i, f in enumerate(snap.files) if not subset >> (i % 16) & 1]
     got = t._read_arrow(files, snap, 1 << 40)
-    want = t._read_files_mor(
-        spark, files, _schema(snap), snap.delete_predicates, snap.delete_files
-    ).collect()
+    want = t._read_files_mor(spark, files, _schema(snap), _delete_ops(snap)).collect()
     assert got is not None
     assert _rows(got.to_pylist()) == _rows(r.asDict() for r in want)
 
@@ -292,7 +291,7 @@ def test_read_arrow_listed_deletes(spark, tmp_path):
     assert any(d.get("kind") == "pos" for d in snap.delete_files)
     got = t._read_arrow(snap.files, snap, 1 << 30)
     want = t._read_files_mor(
-        spark, snap.files, _schema(snap), snap.delete_predicates, snap.delete_files
+        spark, snap.files, _schema(snap), _delete_ops(snap)
     ).collect()
     assert _rows(got.to_pylist()) == _rows(r.asDict() for r in want)
     assert 51 not in got["k"].to_pylist()

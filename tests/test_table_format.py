@@ -1085,3 +1085,120 @@ def test_commit_reads_no_manifest_without_conflict(tmp_path, monkeypatch):
     assert [f["path"] for f in raw["files_added"]] == ["data/f5.parquet"]
     assert "files_delta_depth" not in raw and "chain_length" not in raw
     assert t.snapshot().files == files
+
+
+def _changed_ids(spark, t, since):
+    return sorted((r._change_type, r.id) for r in t.changes(spark, since).collect())
+
+
+def test_changes_shows_rows_of_rolled_back_mor_deletes(spark, tmp_path):
+    """A rollback past merge-on-read deletes drops them: the changelog
+    inserts again the rows they hid, for a key delete alone and for a key
+    delete with a predicate delete."""
+    t = Table.create(Warehouse(str(tmp_path)), "db.t", _schema())
+    t.append(spark.createDataFrame([(1,), (2,), (3,)], _schema()))
+    before = t.meta.current_version()
+    t.delete_by_keys(spark, spark.createDataFrame([(2,)], _schema()), ["id"])
+    deleted = t.meta.current_version()
+    t.rollback(before)
+    assert _changed_ids(spark, t, deleted) == [("insert", 2)]
+
+    t.delete_by_keys(spark, spark.createDataFrame([(2,)], _schema()), ["id"])
+    t.delete_where(spark, "id == 3", mode="mor")
+    deleted = t.meta.current_version()
+    assert sorted(r.id for r in t.scan(spark).collect()) == [1]
+    t.rollback(before)
+    assert _changed_ids(spark, t, deleted) == [("insert", 2), ("insert", 3)]
+
+
+def test_changes_reports_nan_row_a_mor_delete_hides(spark, tmp_path):
+    """A connector file holding x = [1.0, NaN] keeps NaN as its max, so
+    the merge-on-read delete ``x > 5`` hides the NaN row; the changelog
+    reports that row deleted, as the scan hides it (its footer max, 1.0,
+    must not drop the row group under a pushed-down ``x > 5``)."""
+    import math
+
+    import pyarrow as pa
+
+    from iceberg_loader_spark.sources.spark_datasource import SparkbergWriter
+
+    wh = Warehouse(str(tmp_path))
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("x", T.DoubleType())]
+    )
+    w = SparkbergWriter(schema, {"path": wh.table_root("db.t")}, False)
+    batch = pa.RecordBatch.from_pylist(
+        [{"id": 1, "x": 1.0}, {"id": 2, "x": math.nan}],
+        schema=pa.schema([("id", pa.int64()), ("x", pa.float64())]),
+    )
+    w.commit([w.write(iter([batch]))])
+    t = wh.load_table("db.t")
+    before = t.meta.current_version()
+    t.delete_where(spark, "x > 5", mode="mor")
+    assert [r.id for r in t.scan(spark).collect()] == [1]
+    assert _changed_ids(spark, t, before) == [("delete", 2)]
+
+
+def test_append_tail_skips_delete_file_maintenance(spark, tmp_path):
+    """Converting equality deletes and rewriting positional ones change
+    no rows: the append-only tail, the incremental scan and the
+    changelog pass over both."""
+    from iceberg_loader_spark.tables.maintenance import (
+        convert_equality_deletes,
+        rewrite_delete_files,
+    )
+
+    t = Table.create(Warehouse(str(tmp_path)), "db.t", _schema())
+    t.append(spark.createDataFrame([(1,), (2,), (3,)], _schema()))
+    t.merge(spark, spark.createDataFrame([(2,)], _schema()), ["id"], mode="mor")
+    merged = t.meta.current_version()
+    convert_equality_deletes(t, spark)
+    rewrite_delete_files(t, spark)
+    ops = [t.snapshot(v).operation for v in (merged + 1, merged + 2)]
+    assert ops == ["convert-eq-deletes", "rewrite-deletes"]
+    t.append(spark.createDataFrame([(4,)], _schema()))
+    head = t.snapshot()
+    new = [f for f in head.files if f.sequence == head.version]
+    assert t.appended_files(merged, head.version) == new
+    assert [r.id for r in t.scan_incremental(spark, merged).collect()] == [4]
+    assert _changed_ids(spark, t, merged) == [("insert", 4)]
+
+
+def test_imported_file_records_nan_as_float_max(spark, tmp_path, monkeypatch):
+    """pyarrow leaves NaN out of a footer's max: a file parquet-mr did not
+    write has its float columns read for NaN, so ``x > 5`` keeps its NaN
+    row on both scan paths. A Spark-written file's footer is trusted and
+    its rows are not read."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_loader_spark.tables import table as table_module
+    from iceberg_loader_spark.tables.table import _append_build, entry_from_footer
+
+    schema = T.StructType(
+        [T.StructField("id", T.LongType()), T.StructField("x", T.DoubleType())]
+    )
+    t = Table.create(Warehouse(str(tmp_path)), "db.t", schema)
+    rel = "imported/part-0.parquet"
+    os.makedirs(os.path.join(t.root, "imported"))
+    pq.write_table(
+        pa.table({"id": [1, 2], "x": [1.0, math.nan]}), os.path.join(t.root, rel)
+    )
+    entry = entry_from_footer(os.path.join(t.root, rel), rel)
+    assert entry.stats["x"][0] == 1.0 and math.isnan(entry.stats["x"][1])
+    t._commit_with_retry(_append_build([entry]))
+    assert [r.id for r in t.scan(spark, where="x > 5").collect()] == [2]
+    monkeypatch.setattr(table_module, "DRIVER_SCAN_READ_BYTES", 0)
+    assert [r.id for r in t.scan(spark, where="x > 5").collect()] == [2]
+
+    t.append(spark.createDataFrame([(3, math.nan)], schema).coalesce(1))
+    f = t.snapshot().files[-1]
+
+    def no_read(*_a, **_k):
+        raise AssertionError("read the rows of a Spark-written file")
+
+    monkeypatch.setattr(pq.ParquetFile, "read", no_read)
+    footer = entry_from_footer(os.path.join(t.root, f.path), f.path)
+    assert footer.stats["id"] == [3, 3] and math.isnan(footer.stats["x"][1])
