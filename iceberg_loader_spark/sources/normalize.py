@@ -36,22 +36,24 @@ import pyarrow as pa
 
 log = logging.getLogger(__name__)
 
-# the encoder ``json.dumps`` would build for these arguments on every
-# call, built once
-_encode_json = json.JSONEncoder(ensure_ascii=False, separators=(",", ":")).encode
+_JSON = json.JSONEncoder(ensure_ascii=False, separators=(",", ":"))
 
 
-def json_serialize(value) -> str:
-    """Compact JSON — byte-exact with the reference (arrow.py:12)."""
-    return _encode_json(value)
-
-
-def _normalize_value(v, stringify_scalars: bool = False):
-    if isinstance(v, (dict, list)):
-        return json_serialize(v)
-    if stringify_scalars and v is not None:
-        return str(v)  # reference contract: every scalar → str (arrow.py:61)
-    return v
+def _json_encoder():
+    """Compact JSON for dict and list values, byte-exact with the
+    reference's ``json.dumps(..., ensure_ascii=False,
+    separators=(',', ':'))`` (arrow.py:12): the C encoder
+    ``JSONEncoder.encode`` builds on every call, built once. Make one per
+    call and never share it between threads: its circular-reference
+    markers are state."""
+    make = json.encoder.c_make_encoder
+    if make is None:
+        return _JSON.encode
+    encode = make(
+        {}, _JSON.default, json.encoder.encode_basestring, None,
+        _JSON.key_separator, _JSON.item_separator, False, False, True,
+    )
+    return lambda value: "".join(encode(value, 0))
 
 
 def create_arrow_table_from_data(
@@ -74,11 +76,15 @@ def create_arrow_table_from_data(
             if k not in seen:
                 seen.add(k)
                 keys.append(k)
+    encode = _json_encoder()
     arrays, fields = [], []
     for k in keys:
-        values = [
-            _normalize_value(row.get(k), stringify_scalars) for row in data
-        ]
+        values = [row.get(k) for row in data]
+        if any(issubclass(t, (dict, list)) for t in set(map(type, values))):
+            values = [encode(v) if isinstance(v, (dict, list)) else v for v in values]
+        if stringify_scalars:
+            # reference contract: every scalar → str (arrow.py:61)
+            values = [None if v is None else str(v) for v in values]
         try:
             arr = pa.array(values)
         except (pa.ArrowInvalid, pa.ArrowTypeError):

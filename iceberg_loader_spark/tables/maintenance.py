@@ -603,14 +603,9 @@ def convert_equality_deletes(
                     if n_shards > 1
                     else merged.coalesce(1)
                 )
-                entries = [
-                    e
-                    for e in table._write_data_files(
-                        out, [], snap,
-                        sort_within=["file_path", "pos"],
-                    )
-                    if e.rows > 0
-                ]
+                entries = table._write_data_files(
+                    out, [], snap, sort_within=["file_path", "pos"]
+                )
         finally:
             merged.unpersist()
     max_seq = max(d["sequence"] for d in eq_ops)
@@ -751,7 +746,6 @@ def rewrite_delete_files(
     entries = table._write_data_files(
         merged, [], snap, sort_within=["file_path", "pos"]
     )
-    entries = [e for e in entries if e.rows > 0]  # dangling-only shards
     rows_after = sum(e.rows for e in entries)
     max_seq = max(d["sequence"] for d in pos_ops)
     # "paths" (the exact referenced-file set) can only be reconstructed

@@ -767,6 +767,64 @@ def test_scans_without_a_driver_twin_take_spark(spark, tmp_path, monkeypatch):
     assert calls == []
 
 
+def _spark_work(spark, action) -> tuple[int, int]:
+    """(jobs, tasks) that ``action()`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = os.urandom(8).hex()
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(s).numCompletedTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+        if tracker.getStageInfo(s) is not None
+    )
+    return len(jobs), tasks
+
+
+def test_small_scans_are_one_task(spark, tmp_path, monkeypatch):
+    """A Spark scan of pruned files within ``DRIVER_SCAN_READ_BYTES``, and
+    a driver scan of more than one row, is one partition, so a count over
+    it is one job of one task; it returns the rows of the scan that keeps
+    its input's partitioning (the bound set to 0, or
+    ``partitioned_scans``). A one-row driver scan is left as it is: its
+    collect runs no job."""
+    wh = Warehouse(str(tmp_path))
+    t = Table.create(wh, "db.t", SCHEMA)
+    for part in range(4):
+        t.append(pa.Table.from_pylist([_row(10 * part + k, v=k) for k in range(10)], ARROW))
+    t.delete_where(spark, "v == 3", mode="mor")
+    wide = t.scan(spark)
+    with table_module.partitioned_scans():
+        spread = t.scan(spark)
+        spread_driver = t.scan(spark, where="k < 25")
+    monkeypatch.setattr(table_module, "DRIVER_SCAN_READ_BYTES", 0)
+    forced = t.scan(spark)
+    monkeypatch.undo()
+    assert wide.rdd.getNumPartitions() == 1
+    assert forced.rdd.getNumPartitions() == spread.rdd.getNumPartitions() == 4
+    want = _rows(r.asDict() for r in forced.collect())
+    assert _rows(r.asDict() for r in wide.collect()) == want
+    assert len(want) == 36
+    assert _spark_work(spark, wide.count) == (1, 1)
+
+    driver = t.scan(spark, where="k < 25")
+    assert driver.rdd.getNumPartitions() == 1 < spread_driver.rdd.getNumPartitions()
+    got = _rows(r.asDict() for r in driver.collect())
+    assert got == _rows(r.asDict() for r in spread_driver.collect())
+    assert len(got) == 22
+    assert _spark_work(spark, driver.count) == (1, 1)
+    point = t.scan(spark, where="k == 4")
+    assert point.rdd.getNumPartitions() == 1
+    assert _spark_work(spark, point.collect) == (0, 0)
+
+
 TYPED = T.StructType(
     [
         T.StructField("k", T.LongType(), False),

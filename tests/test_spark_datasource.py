@@ -96,6 +96,23 @@ def test_scan_filter_keeps_nan_rows_of_connector_file(spark, wh, monkeypatch, bu
         assert "GreaterThan(x" not in pushed
 
 
+def test_incremental_scan_keeps_nan_rows_of_connector_file(spark, wh):
+    """The incremental scan filters as ``Table.scan`` does: a float term
+    the NaN row meets is not pushed into the parquet reader, whose
+    row-group filter trusts pyarrow's footer max 1.0."""
+    import math
+
+    root = wh.table_root("db.ds_nan_incremental")
+    schema = T.StructType([T.StructField("k", T.LongType()), T.StructField("x", T.DoubleType())])
+    df = spark.createDataFrame([(1, 1.0), (2, float("nan"))], schema).coalesce(1)
+    df.write.format("sparkberg").mode("append").save(root)
+    t = wh.load_table("db.ds_nan_incremental")
+    base = t.history()[0].version
+    assert [r.k for r in t.scan(spark, where="x > 5").collect()] == [2]
+    [row] = t.scan_incremental(spark, base, where="x > 5").collect()
+    assert row.k == 2 and math.isnan(row.x)
+
+
 def test_scan_filter_keeps_nan_rows_of_nested_connector_file(spark, wh):
     """The same for a float nested in a struct: a filter on ``st.x`` is
     outside the term grammar, so it reads through Spark and is not

@@ -423,10 +423,12 @@ def test_partition_spec_evolution(spark, tmp_path):
     )
     wh = Warehouse(str(tmp_path))
     t = Table.create(wh, "db.t", schema)
+    # one old file whose ts range covers the pruned day: only its
+    # missing partition value could drop it
     t.append(
         spark.createDataFrame(
-            [(1, datetime(2023, 1, 1)), (2, datetime(2023, 1, 2))], schema
-        )
+            [(1, datetime(2023, 1, 1)), (2, datetime(2023, 3, 2))], schema
+        ).coalesce(1)
     )
     t = wh.load_table("db.t")
     base = t.meta.current_version()
@@ -1162,6 +1164,23 @@ def test_append_tail_skips_delete_file_maintenance(spark, tmp_path):
     assert t.appended_files(merged, head.version) == new
     assert [r.id for r in t.scan_incremental(spark, merged).collect()] == [4]
     assert _changed_ids(spark, t, merged) == [("insert", 4)]
+
+
+def test_spark_write_commits_no_empty_file(spark, tmp_path):
+    """Spark's task 0 writes a file even when its partition is empty: a
+    one-row DataFrame of several partitions commits one file, and the
+    empty one is not left in the table's directory either."""
+    t = Table.create(Warehouse(str(tmp_path)), "db.t", _schema())
+    df = spark.createDataFrame([(4,)], _schema()).repartition(4)
+    t.append(df)
+    [f] = t.snapshot().files
+    assert f.rows == 1
+    written = [
+        fn for _, _, fns in os.walk(os.path.join(t.root, "data")) for fn in fns
+        if fn.endswith(".parquet")
+    ]
+    assert written == [os.path.basename(f.path)]
+    assert [r.id for r in t.scan(spark).collect()] == [4]
 
 
 def test_imported_file_records_nan_as_float_max(spark, tmp_path, monkeypatch):

@@ -10,7 +10,11 @@ is caught mechanically, query by query, without running any data.
 Materialization (`localCheckpoint`/`persist`) is disabled while
 fingerprinting: it truncates lineage (the plan would show an opaque scan)
 and eagerly executes; with it off the fingerprint covers the whole
-declarative pipeline.
+declarative pipeline. So is ``Table.scan``'s one-task rule for small
+inputs (``tables.table.partitioned_scans``): every table of the smoke
+data fits its bound, and a one-task scan plans no Exchange for the
+aggregates above it, which at scale, where scans exceed the bound, run
+a shuffle.
 
 Usage: python tools/plan_fingerprint.py                 # full regenerate
        python tools/plan_fingerprint.py --only k1,k2    # merge just k1,k2
@@ -68,12 +72,13 @@ def compute_all(
 ) -> dict[str, dict[str, int]]:
     from iceberg_loader_spark.operators import all_queries
     from iceberg_loader_spark.tables.materialize import no_materialize
+    from iceberg_loader_spark.tables.table import partitioned_scans
 
     # fingerprints must be session-state-independent: Catalyst substitutes
     # any CacheManager entry (e.g. a persist()'d frame a previous caller
     # left behind) into matching plan subtrees, changing explain output
     spark.catalog.clearCache()
-    with no_materialize():
+    with no_materialize(), partitioned_scans():
         out = {}
         for name, fn in sorted(all_queries().items()):
             if only is not None and name not in only:
